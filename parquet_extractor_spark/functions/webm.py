@@ -166,11 +166,13 @@ def parse_webm_metadata(data: bytes | None) -> dict | None:
         # (int(NaN) raises) or overflow the LongType column downstream
         # (a garbage f64 can be 1e300): the spec's Duration is a
         # non-negative finite float, so anything else parses as
-        # absent. Found by the r12 garbage-fuzz property test.
+        # absent. Found by the r12 garbage-fuzz property test. A
+        # finite Duration times the TimecodeScale can still overflow
+        # to inf (inf // 1e6 is NaN), so the product is checked too.
         if math.isfinite(duration_ticks) and duration_ticks >= 0:
-            ms = int(duration_ticks * timecode_scale_ns // 1_000_000)
-            if ms <= 2 ** 63 - 1:
-                duration_ms = ms
+            ms = duration_ticks * timecode_scale_ns // 1_000_000
+            if math.isfinite(ms) and ms <= 2 ** 63 - 1:
+                duration_ms = int(ms)
     return {
         "container": "webm",
         "brand": doc_type,

@@ -115,11 +115,14 @@ ORDER BY doc_id
 LANGUAGE_ID_SQL = _language_id_oracle()
 
 
-def quality_columns() -> dict[str, F.Column]:
+def quality_columns(tokens: Column | None = None) -> dict[str, F.Column]:
     """The quality heuristics as named, unrounded column expressions
     over a ``text`` column — shared by the batch query and the
-    streaming curation gate (same formula, one definition)."""
-    tokens = tokenize("text")
+    streaming curation gate (same formula, one definition). ``tokens``
+    is ``tokenize("text")`` unless a caller passes an already-staged
+    token column."""
+    if tokens is None:
+        tokens = tokenize("text")
     n_chars = F.length("text")
     n_tokens = F.size(tokens)
     all_stop = F.array(

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from parquet_extractor_spark.operators.quality import quality_scores
 from parquet_extractor_spark.operators.textprep import doc_chunks
 from parquet_extractor_spark.sinks.dataset import write_dataset
-from parquet_extractor_spark.sources.tables import load_table
+from parquet_extractor_spark.sources.tables import load_table, spread
 
 MIN_QUALITY = 0.3
 
@@ -374,6 +374,82 @@ def datacard(spark: SparkSession, sf_dir: str) -> dict:
 # ── observable funnel report over the composed pipeline ──────────────
 
 
+def _gate_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The five curation gates as one row per document:
+    (doc_id, source, n, f_q, f_c, f_e, f_n, f_x) — token count, then
+    heuristic quality ≥ MIN_QUALITY, classifier keep, exact-dedup
+    survivor, near-dup component canonical, and n-gram contaminated
+    (f_x True means the doc drops).
+
+    Shared scan: the corpus is read and tokenized once (the benchmark
+    slice, 1/BENCH_MOD of it, once more for its gram set), and each
+    flag comes from its operator's own expression (quality_columns,
+    CLS_LOGIT_SQL, word_ngrams at DECONTAM_NGRAM), so no gate formula
+    is restated here. The dedup gates are left joins to the shared
+    tiers, unique per doc_id, so cardinality holds; the tiers grow
+    with the corpus, so there is no broadcast hint and AQE picks the
+    join. Decontamination probes each doc's distinct grams against
+    the benchmark slice's distinct gram set, collected into one array
+    and broadcast as a 1-row frame. That array is bounded by the
+    benchmark, a fixed artifact (the argument the Bloom tier makes),
+    not by the corpus; the probe costs O(benchmark grams) per doc.
+    """
+    from parquet_extractor_spark.functions.text import tokenize, word_ngrams
+    from parquet_extractor_spark.operators.contamination import (
+        BENCH_MOD,
+        DECONTAM_NGRAM,
+    )
+    from parquet_extractor_spark.operators.dedup import (
+        _components_tier,
+        _exact_keep_tier,
+    )
+    from parquet_extractor_spark.operators.quality import (
+        CLS_LOGIT_SQL,
+        quality_columns,
+    )
+
+    def gram_set(toks):
+        return F.array_distinct(word_ngrams(toks, DECONTAM_NGRAM))
+
+    raw = load_table(spark, sf_dir, "documents")
+    docs = spread(raw).select(
+        "doc_id", "source", "text", tokenize("text").alias("toks")
+    ).withColumn("grams", gram_set(F.col("toks")))
+    in_bench = (F.col("doc_id") % BENCH_MOD) == 0
+    # the benchmark slice (1/BENCH_MOD of the docs) skips spread's
+    # round-robin shuffle: its filter is pushed below it anyway
+    bench = (
+        raw.filter(in_bench)
+        .select(F.explode(gram_set(tokenize("text"))).alias("g"))
+        .agg(F.collect_set("g").alias("bench_g"))
+    )
+    exact_keep = _exact_keep_tier(spark, sf_dir).withColumn(
+        "f_e", F.lit(True)
+    )
+    canon_keep = (
+        _components_tier(spark, sf_dir)
+        .filter(F.col("doc_id") == F.col("component"))
+        .select("doc_id", F.lit(True).alias("f_n"))
+    )
+    quality = quality_columns(F.col("toks"))["quality_score"]
+    hit = F.coalesce(F.arrays_overlap("grams", "bench_g"), F.lit(False))
+    return (
+        docs.crossJoin(F.broadcast(bench))
+        .join(exact_keep, "doc_id", "left")
+        .join(canon_keep, "doc_id", "left")
+        .select(
+            "doc_id",
+            "source",
+            F.size("toks").cast("bigint").alias("n"),
+            (F.round(quality, 2) >= MIN_QUALITY).alias("f_q"),
+            (F.expr(CLS_LOGIT_SQL) > 0).alias("f_c"),
+            F.coalesce("f_e", F.lit(False)).alias("f_e"),
+            F.coalesce("f_n", F.lit(False)).alias("f_n"),
+            (~in_bench & hit).alias("f_x"),
+        )
+    )
+
+
 def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage-by-stage survivor accounting for the curate() chain — the
     report a data engineer reads before shipping a corpus ("quality
@@ -383,86 +459,24 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     classifier gate → exact dedup → near-dup components → n-gram
     decontamination, each reporting surviving docs, surviving tokens
     and the retained fraction of the raw corpus. Stage predicates are
-    the SAME operators curate() composes (shared tier store, so a
-    sweep computes the dedup tiers once).
+    the same gates curate() composes (_gate_flags; shared tier store,
+    so a sweep computes the dedup tiers once).
 
-    Plan shape (r07 rewrite): each gate is evaluated ONCE and left-
-    joined onto the token frame as a boolean flag (every gate frame
-    is unique per doc_id, so the joins preserve cardinality), then
-    ALL six cumulative stage counts come out of ONE conditional
-    aggregate over the flags, unpivoted with ``stack``. The previous
-    union-of-cumulative-aggregates form re-executed each gate's full
-    lineage once per downstream stage (Spark does not share subplans
-    across union branches) — 13 scans and 34 broadcast joins for a
-    6-row report; this form is 5 gate evaluations + 1 pass + a 1-row
-    agg, and no shuffle carries more than doc_id keys.
+    Plan shape: one shared scan of documents yields all five gate
+    flags per doc (_gate_flags), and all six cumulative stage counts
+    come out of ONE conditional aggregate over the flags, unpivoted
+    with ``stack``. With the dedup tiers warm, building the frame runs
+    no Spark job; the 1-row benchmark gram set broadcast in
+    _gate_flags is bounded by the fixed benchmark slice, not by the
+    corpus.
     Output: (stage_idx, stage, n_docs, n_tokens, retained_frac).
     """
-    from parquet_extractor_spark.functions.text import tokenize
-    from parquet_extractor_spark.operators.contamination import (
-        ngram_decontamination,
-    )
-    from parquet_extractor_spark.operators.dedup import (
-        _components_tier,
-        _exact_keep_tier,
-    )
-    from parquet_extractor_spark.operators.quality import (
-        quality_classifier_scores,
-    )
-
-    toks = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.size(tokenize("text")).cast("bigint").alias("n")
-    )
-
-    # localCheckpoint each gate's doc_id frame (r13; the r12
-    # ivf_pq_recall_eval lesson, guide §3.3 "materialise an
-    # intermediate to truncate the plan"): composed inline, the report
-    # plan embeds five full gate pipelines (classifier scoring, bloom
-    # decontamination, quality heuristics…) and every downstream
-    # DataFrame op re-analyzes that tree — the r12 verdict found the
-    # query driver-bound (8-core ≈ 32-core). Materialized, the report
-    # is five doc_id-keyed joins onto LogicalRDDs. O(docs) rows of
-    # bare ids per gate — state the gates compute anyway; blocks are
-    # released by the caller's release_cached between queries.
-    quality_keep = (
-        quality_scores(spark, sf_dir)
-        .filter(F.col("quality_score") >= MIN_QUALITY)
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    cls_keep = (
-        quality_classifier_scores(spark, sf_dir)
-        .filter(F.col("keep"))
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    exact_keep = _exact_keep_tier(spark, sf_dir).localCheckpoint()
-    canon_keep = (
-        _components_tier(spark, sf_dir)
-        .filter(F.col("doc_id") == F.col("component"))
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    contaminated = (
-        ngram_decontamination(spark, sf_dir)
-        .select("doc_id")
-        .localCheckpoint()
-    )
-
-    flags = (
-        toks.join(
-            quality_keep.withColumn("f_q", F.lit(True)), "doc_id", "left"
-        )
-        .join(cls_keep.withColumn("f_c", F.lit(True)), "doc_id", "left")
-        .join(exact_keep.withColumn("f_e", F.lit(True)), "doc_id", "left")
-        .join(canon_keep.withColumn("f_n", F.lit(True)), "doc_id", "left")
-        .join(contaminated.withColumn("f_x", F.lit(True)), "doc_id", "left")
-    )
-    s1 = F.coalesce(F.col("f_q"), F.lit(False))
-    s2 = s1 & F.coalesce(F.col("f_c"), F.lit(False))
-    s3 = s2 & F.coalesce(F.col("f_e"), F.lit(False))
-    s4 = s3 & F.coalesce(F.col("f_n"), F.lit(False))
-    s5 = s4 & F.col("f_x").isNull()  # anti: contaminated docs drop
+    flags = _gate_flags(spark, sf_dir)
+    s1 = F.col("f_q")
+    s2 = s1 & F.col("f_c")
+    s3 = s2 & F.col("f_e")
+    s4 = s3 & F.col("f_n")
+    s5 = s4 & ~F.col("f_x")
     names = [
         "raw",
         "quality_gate",
@@ -565,7 +579,7 @@ def release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SHIPPING artifact at the end of the curation chain: the
     documents that survive ALL five gates (heuristic quality,
     model-based classifier, exact dedup, near-dup canonical,
-    n-gram decontamination — the same tiers curate()/curation_funnel
+    n-gram decontamination — the same gates curate()/curation_funnel
     compose), assigned to train/val/test and accounted per
     (split, source) with each cell's token share of its split. This
     is the table a release note prints and a trainer's data loader
@@ -579,85 +593,32 @@ def release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     leak-free, and the leakage_safe_split operator covers the
     pre-dedup case.
 
-    Plan shape: five doc_id-keyed semi/anti joins onto the token
-    frame (each gate evaluated once — the r07 funnel lesson), one
-    (split, source) partial+final agg, and a 3-row split-total join
-    for the share column. Output ≤ |splits|×|sources| rows at any
-    corpus size.
+    Plan shape: the funnel's shared-scan gate flags (_gate_flags)
+    become a ledger whose n is NULL for a doc any gate drops, and the
+    stream runner's aggregation (manifest_from_ledger) reduces it: one
+    (split, source) partial+final agg, then the split-total window and
+    the sort over the coalesced cells with no further exchange.
+    With the dedup tiers warm, building the frame runs no Spark job;
+    the 1-row benchmark gram set broadcast in _gate_flags is bounded
+    by the fixed benchmark slice, not by the corpus. Output ≤
+    |splits|×|sources| rows at any corpus size.
     """
-    from parquet_extractor_spark.operators.contamination import (
-        ngram_decontamination,
-    )
-    from parquet_extractor_spark.operators.dedup import (
-        _components_tier,
-        _exact_keep_tier,
-    )
-    from parquet_extractor_spark.operators.quality import (
-        quality_classifier_scores,
-    )
-    from parquet_extractor_spark.functions.text import tokenize
     from parquet_extractor_spark.operators.training import _split_column
+    from parquet_extractor_spark.streaming.documents import (
+        manifest_from_ledger,
+    )
 
-    docs = load_table(spark, sf_dir, "documents").select(
+    keep = (
+        F.col("f_q") & F.col("f_c") & F.col("f_e") & F.col("f_n")
+        & ~F.col("f_x")
+    )
+    ledger = _gate_flags(spark, sf_dir).select(
         "doc_id",
         "source",
-        F.size(tokenize("text")).cast("bigint").alias("n"),
+        F.when(keep, F.col("n")).alias("n"),  # NULL: dropped by a gate
+        _split_column().alias("split"),
     )
-    # Same gate materialization as curation_funnel (r13): five
-    # localCheckpointed doc_id frames truncate the five inlined gate
-    # pipelines out of the report plan.
-    quality_keep = (
-        quality_scores(spark, sf_dir)
-        .filter(F.col("quality_score") >= MIN_QUALITY)
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    cls_keep = (
-        quality_classifier_scores(spark, sf_dir)
-        .filter(F.col("keep"))
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    exact_keep = _exact_keep_tier(spark, sf_dir).localCheckpoint()
-    canon_keep = (
-        _components_tier(spark, sf_dir)
-        .filter(F.col("doc_id") == F.col("component"))
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    contaminated = (
-        ngram_decontamination(spark, sf_dir)
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    survivors = (
-        docs.join(quality_keep, "doc_id", "left_semi")
-        .join(cls_keep, "doc_id", "left_semi")
-        .join(exact_keep, "doc_id", "left_semi")
-        .join(canon_keep, "doc_id", "left_semi")
-        .join(contaminated, "doc_id", "left_anti")
-        .select("doc_id", "source", "n", _split_column().alias("split"))
-    )
-    cells = survivors.groupBy("split", "source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n").cast("bigint").alias("n_tokens"),
-    )
-    split_totals = cells.groupBy("split").agg(
-        F.sum("n_tokens").alias("split_tokens")
-    )
-    return (
-        cells.join(F.broadcast(split_totals), "split")
-        .select(
-            "split",
-            "source",
-            "n_docs",
-            "n_tokens",
-            F.floor(
-                F.col("n_tokens") * F.lit(1_000_000) / F.col("split_tokens")
-            ).cast("bigint").alias("split_token_share_micro"),
-        )
-        .orderBy("split", "source")
-    )
+    return manifest_from_ledger(ledger)
 
 
 def _release_manifest_oracle() -> str:

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -725,30 +725,36 @@ def release_manifest_ledger_stream(
 
 def manifest_from_ledger(ledger: DataFrame) -> DataFrame:
     """Aggregate a (doc_id, source, n, split) ledger to the release
-    manifest — the same (split, source) cells + split-token-share
-    arithmetic as ``pipelines.release_manifest``'s final stage, shared
-    by the stream runner so the equivalence test compares identical
-    shapes."""
-    cells = ledger.groupBy("split", "source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n").cast("bigint").alias("n_tokens"),
-    )
-    split_totals = cells.groupBy("split").agg(
-        F.sum("n_tokens").alias("split_tokens")
-    )
-    return (
-        cells.join(F.broadcast(split_totals), "split")
-        .select(
-            "split",
-            "source",
-            "n_docs",
-            "n_tokens",
-            F.floor(
-                F.col("n_tokens") * F.lit(1_000_000) / F.col("split_tokens")
-            ).cast("bigint").alias("split_token_share_micro"),
+    manifest: (split, source) cells plus each cell's token share of
+    its split. ``pipelines.release_manifest`` and the stream runner
+    both end here, so the equivalence test compares one definition.
+    A row whose ``n`` is NULL is a doc the gates dropped and counts
+    toward no cell — the batch manifest passes its whole flag frame
+    that way instead of filtering it, because a filter would be
+    pushed below the gate projection and re-tokenize every doc.
+    The cells (≤ |splits|×|sources| rows at any corpus size) are
+    coalesced to one partition, so the split-total window and the
+    final sort run on it with no further exchange and the cells are
+    computed once."""
+    cells = (
+        ledger.groupBy("split", "source")
+        .agg(
+            F.count("n").alias("n_docs"),
+            F.sum("n").cast("bigint").alias("n_tokens"),
         )
-        .orderBy("split", "source")
+        .filter(F.col("n_docs") > 0)
+        .coalesce(1)
     )
+    split_tokens = F.sum("n_tokens").over(Window.partitionBy("split"))
+    return cells.select(
+        "split",
+        "source",
+        "n_docs",
+        "n_tokens",
+        F.floor(F.col("n_tokens") * F.lit(1_000_000) / split_tokens)
+        .cast("bigint")
+        .alias("split_token_share_micro"),
+    ).orderBy("split", "source")
 
 
 def run_release_manifest_stream(

@@ -67,6 +67,7 @@ from parquet_extractor_spark.artifacts import (
     dir_fingerprint,
     store_root,
 )
+from parquet_extractor_spark.sources.tables import _read_parquet, _scan_stats
 
 _KNOWN: dict[tuple, str] = {}
 # reentrant: a tier builder may itself consume a lower tier (the
@@ -145,7 +146,10 @@ def ensure_tier(
                 except OSError:
                     pass
             _KNOWN[k] = path
-    return spark.read.parquet(path)
+    # fingerprint-keyed schema cache: a warm tier read plans without
+    # the schema-inference job spark.read.parquet launches per call,
+    # and a rewritten tier changes the fingerprint and is re-inferred
+    return _read_parquet(spark, path, _scan_stats(path))
 
 
 def clear_tiers() -> None:

@@ -43,3 +43,26 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture()
+def jobs_in_group(spark):
+    """``run(fn, group)`` calls ``fn()`` in a fresh Spark job group and
+    returns the ids of the jobs it submitted; the group is cleared
+    afterwards so later jobs on this thread stay unattributed."""
+    sc = spark.sparkContext
+
+    def run(fn, group: str) -> list[int]:
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for key in (
+                "spark.jobGroup.id",
+                "spark.job.description",
+                "spark.job.interruptOnCancel",
+            ):
+                sc.setLocalProperty(key, None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

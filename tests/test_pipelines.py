@@ -299,3 +299,124 @@ def test_release_manifest_reconciles_with_funnel(spark, sf_small):
         # floor() per cell loses < 1 micro-unit per source
         assert 1_000_000 - len(rows) <= share <= 1_000_000
     assert set(by_split) <= {"train", "val", "test"}
+
+
+def test_gate_flags_match_standalone_operators(spark, sf_small):
+    """Each fused gate flag is exactly the doc set its standalone
+    operator yields: the shared scan keeps one definition per gate."""
+    from parquet_extractor_spark.operators.contamination import (
+        ngram_decontamination,
+    )
+    from parquet_extractor_spark.operators.dedup import (
+        _components_tier,
+        _exact_keep_tier,
+    )
+    from parquet_extractor_spark.operators.quality import (
+        quality_classifier_scores,
+    )
+    from parquet_extractor_spark.pipelines import MIN_QUALITY, _gate_flags
+
+    def ids(df):
+        return {r.doc_id for r in df.select("doc_id").collect()}
+
+    flags = _gate_flags(spark, sf_small).collect()
+    assert len(flags) == load_table(spark, sf_small, "documents").count()
+    expected = {
+        "f_q": ids(
+            quality_scores(spark, sf_small).filter(
+                F.col("quality_score") >= MIN_QUALITY
+            )
+        ),
+        "f_c": ids(quality_classifier_scores(spark, sf_small).filter("keep")),
+        "f_e": ids(_exact_keep_tier(spark, sf_small)),
+        "f_n": ids(
+            _components_tier(spark, sf_small).filter(
+                F.col("doc_id") == F.col("component")
+            )
+        ),
+        "f_x": ids(ngram_decontamination(spark, sf_small)),
+    }
+    for flag, want in expected.items():
+        assert all(r[flag] is not None for r in flags), flag
+        assert {r.doc_id for r in flags if r[flag]} == want, flag
+
+
+def test_funnel_and_manifest_build_submits_no_spark_job(
+    spark, sf_small, jobs_in_group
+):
+    """With the tiers warm, building either report only composes a
+    plan: every Spark job runs when the caller executes it."""
+    from parquet_extractor_spark.pipelines import (
+        curation_funnel,
+        release_manifest,
+    )
+
+    for fn in (curation_funnel, release_manifest):
+        fn(spark, sf_small).collect()  # warm tiers and read schemas
+        assert jobs_in_group(
+            lambda: fn(spark, sf_small), f"build-{fn.__name__}"
+        ) == []
+
+
+def test_curation_reports_match_oracle_on_degenerate_docs(
+    spark, sf_small, tmp_path, monkeypatch
+):
+    """The fused reports against their DuckDB oracles on degenerate
+    documents: the fixture gains an empty-text doc, an empty-text
+    benchmark doc, and a benchmark doc sharing one 4-gram with a
+    non-benchmark doc, which the arrays_overlap probe must flag. The
+    classifier gate drops every empty doc, so the reports cannot see
+    how the probe treats an empty doc's gram."""
+    import os
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_extractor_spark import tiers
+    from parquet_extractor_spark.operators.contamination import BENCH_MOD
+    from parquet_extractor_spark.pipelines import _gate_flags
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+    )
+    from check_oracle import run_gate
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for name in os.listdir(sf_small):
+        if name != "documents.parquet":
+            os.symlink(os.path.join(sf_small, name), sf / name)
+    docs = pq.read_table(os.path.join(sf_small, "documents.parquet"))
+    top = max(docs.column("doc_id").to_pylist())
+    base = docs.slice(1, 1).to_pylist()[0]
+    assert base["doc_id"] % BENCH_MOD != 0
+    gram = " ".join(base["text"].split()[:4])
+    empty_id = top + 1 if (top + 1) % BENCH_MOD else top + 2
+    bench_ids = [(top // BENCH_MOD + k) * BENCH_MOD for k in (1, 2)]
+    extra = [
+        dict(base, doc_id=empty_id, text="", n_chars=0),
+        dict(base, doc_id=bench_ids[0], text="", n_chars=0),
+        dict(base, doc_id=bench_ids[1], text=gram, n_chars=len(gram)),
+    ]
+    pq.write_table(
+        pa.concat_tables(
+            [docs, pa.Table.from_pylist(extra, schema=docs.schema)]
+        ),
+        sf / "documents.parquet",
+    )
+
+    # private store: the variant's tiers must not land in the shared one
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "store"))
+    tiers.clear_tiers()
+    try:
+        flags = _gate_flags(spark, str(sf)).filter("f_x").collect()
+        assert base["doc_id"] in {r.doc_id for r in flags}
+        failures = run_gate(
+            only=("curation_funnel", "release_manifest"),
+            sf_dir=str(sf),
+            spark=spark,
+        )
+    finally:
+        tiers.clear_tiers()
+    assert failures == []

@@ -11,7 +11,7 @@ must hit).
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from parquet_extractor_spark.functions.png import (
@@ -853,6 +853,11 @@ def test_mp3_parser_never_crashes_on_garbage(data):
             b"\x15\x49\xa9\x66\x8b\x44\x89\x88" + b
         ),
     )
+)
+# a finite Duration whose product with the TimecodeScale overflows
+@example(
+    data=b"\x1aE\xdf\xa3\x87B\x82\x84webm\x18S\x80g\xff"
+    b"\x15I\xa9f\x8bD\x89\x88\x7f" + 7 * b"\x00"
 )
 def test_webm_parser_never_crashes_on_garbage(data):
     from parquet_extractor_spark.functions.webm import (

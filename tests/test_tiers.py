@@ -129,6 +129,36 @@ def test_clear_tiers_forgets(spark, sf_small):
     assert len(calls) == 2
 
 
+def test_warm_tier_read_submits_no_spark_job(spark, sf_small, jobs_in_group):
+    """A warm tier read reuses the fingerprint-keyed schema, so it
+    plans without spark.read.parquet's schema-inference job."""
+    from parquet_extractor_spark.operators.dedup import _exact_keep_tier
+
+    _exact_keep_tier(spark, sf_small).collect()  # build, first read
+    jobs = jobs_in_group(
+        lambda: _exact_keep_tier(spark, sf_small), "warm-tier-read"
+    )
+    assert jobs == []
+
+
+def test_rewritten_tier_reads_its_new_schema(spark, sf_small):
+    """The tier path is stable across a rebuild, so the cached read
+    schema must follow the files, not the path."""
+    a = tiers.ensure_tier(
+        spark, sf_small, "t_schema", lambda: spark.range(2).select("id")
+    )
+    assert a.columns == ["id"]
+    tiers.clear_tiers()  # isolated store: drops the tier on disk too
+    b = tiers.ensure_tier(
+        spark,
+        sf_small,
+        "t_schema",
+        lambda: spark.range(2).select(F.col("id").alias("n")),
+    )
+    assert b.columns == ["n"]
+    assert sorted(r.n for r in b.collect()) == [0, 1]
+
+
 def test_memo_artifact_builds_once_and_isolates_keys(spark, sf_small):
     calls = []
 
