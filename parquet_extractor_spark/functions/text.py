@@ -72,24 +72,6 @@ def zero_pad(col: Column | str, width: int = 4) -> Column:
     return F.when(F.length(s) >= width, s).otherwise(F.lpad(s, width, "0"))
 
 
-def non_ascii_scrub(col: Column | str, replacement: str = "_") -> Column:
-    """Replace non-ASCII chars (api.py:277, api.py:324)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, r"[^\x00-\x7F]", replacement)
-
-
-def control_char_scrub(col: Column | str) -> Column:
-    """Strip control chars except tab/newline/CR (api.py:802)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, r"[\x00-\x08\x0B\x0C\x0E-\x1F]", " ")
-
-
-def truncate(col: Column | str, cap: int) -> Column:
-    """Truncation caps used throughout the reference (SURVEY F12)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.substring(c, 1, cap)
-
-
 def coalesce_content(*cols: Column) -> Column:
     """Attribute-presence coalesce (api.py:290-293): first non-empty
     of several candidate text fields, else a fixed fallback

@@ -141,7 +141,12 @@ def pmi_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability space. pmi = ln(n_ab·N / (n_a·n_b)) over documents.
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
-    n_total = load_table(spark, sf_dir, "documents").count()
+    # in-plan scalar subquery, not an eager build-time count() job
+    n_total = (
+        load_table(spark, sf_dir, "documents")
+        .select(F.count("*").cast("double"))
+        .scalar()
+    )
     capped = docs.select(
         "doc_id",
         F.slice(
@@ -204,7 +209,7 @@ def pmi_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 F.log(
                     F.col("n_ab")
-                    * F.lit(float(n_total))
+                    * n_total
                     / (F.col("n_a") * F.col("n_b"))
                 ),
                 6,

@@ -101,7 +101,13 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops exactly the hottest keys before any shuffle.
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
-    n_docs = load_table(spark, sf_dir, "documents").count()
+    # in-plan scalar subquery: an eager count() would submit a Spark
+    # job while the query is still being built
+    n_docs = (
+        load_table(spark, sf_dir, "documents")
+        .select(F.count("*").cast("double"))
+        .scalar()
+    )
     terms = docs.select(
         "doc_id",
         F.explode(
@@ -121,7 +127,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         tf.join(df_, "term")
         .withColumn(
             "tfidf",
-            F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6),
+            F.round(F.col("tf") * F.log(n_docs / F.col("df")), 6),
         )
     )
     w = Window.partitionBy("doc_id").orderBy(

@@ -1,74 +1,54 @@
 """File-per-row sinks (SURVEY §2.1 S8-S10).
 
 Spark's writers emit ``part-*`` files; the reference needs NAMED
-per-row files (main.py:100-103). So the sink is a ``foreachPartition``
-writer: rendering/writing runs on executors, embarrassingly parallel,
-with three reference behaviors preserved:
+per-row files (main.py:100-103). So a sink job is ONE Spark pass: a
+``foreachPartition`` writer whose Python loop renders and writes each
+row on the executors, with the reference's behaviors kept per row:
 
-- **skip-existing** (api.py:248-254) as a left-anti join against the
-  sink listing — a plan-level operation, not a per-row stat() probe;
-- **single-writer-per-file** via ``repartition(filename)`` — two rows
-  with the same target name land in the same task;
-- **per-row error tolerance** (api.py:344-346) — failures are counted
-  and capped-sampled via accumulators instead of aborting the job.
+- **skip-existing** (api.py:248-254): the writer checks
+  ``os.path.exists`` just before it opens the target, the reference's
+  own rule. A plan-level alternative (count the input, list the sink
+  with ``binaryFile``, left-anti join) costs three extra Spark jobs
+  and re-executes the whole sample plan only to derive ``skipped``.
+- **per-row error tolerance** (api.py:344-346): an unsafe filename or
+  a failed render/write counts the row as failed instead of aborting
+  the job;
+- **counts by accumulator**: written, skipped and failed are summed
+  across tasks, so the result needs no second job. Totals are
+  at-least-once under task retries or speculation.
+
+The PDF sink (``sinks/pdf.py``) runs through the same loop.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 
-def existing_files_df(df: DataFrame, out_dir: str) -> DataFrame:
-    """Listing of already-written outputs as a 1-column DataFrame
-    (filename). Uses Spark's binaryFile source for its distributed
-    listing; returns empty frame if the dir doesn't exist yet."""
-    spark = df.sparkSession
-    if not os.path.isdir(out_dir) or not os.listdir(out_dir):
-        return spark.createDataFrame([], "filename string")
-    listing = spark.read.format("binaryFile").load(out_dir)
-    return listing.select(
-        F.element_at(F.split(F.col("path"), "/"), -1).alias("filename")
-    )
-
-
-def write_files(
-    df: DataFrame,
+def _write_rows(
+    work: DataFrame,
     out_dir: str,
-    filename_col: str = "filename",
-    body_col: str = "body",
-    skip_existing: bool = True,
-    partitions: int | None = None,
+    render: Callable[[Row], bytes],
+    skip_existing: bool,
 ) -> dict:
-    """Write one file per row. Returns {"written": n, "skipped": n,
-    "errors": [...]} mirroring the reference's job result dict
-    (api.py:87-88, api.py:369-372)."""
+    """Write ``render(row)`` to ``out_dir/<row.filename>`` for every
+    row of ``work`` in one ``foreachPartition`` pass. Returns
+    {"written", "skipped", "failed"} counts."""
     os.makedirs(out_dir, exist_ok=True)
-    spark = df.sparkSession
-    work = df.select(
-        F.col(filename_col).alias("filename"), F.col(body_col).alias("body")
-    )
-
-    before = None
-    if skip_existing:
-        existing = existing_files_df(df, out_dir)
-        before = work.count()
-        work = work.join(F.broadcast(existing), "filename", "left_anti")
-
-    if partitions:
-        work = work.repartition(partitions, "filename")
-
-    sc = spark.sparkContext
+    sc = work.sparkSession.sparkContext
     written_acc = sc.accumulator(0)
+    skipped_acc = sc.accumulator(0)
     failed_acc = sc.accumulator(0)
 
     def _write_partition(rows):
         for row in rows:
             try:
                 name = row["filename"]
-                # this sink is also fed by uploaded-parquet extract
+                # sinks are also fed by uploaded-parquet and crawl
                 # jobs: a filename carrying a separator or absolute
                 # path must not escape out_dir
                 if (
@@ -78,20 +58,39 @@ def write_files(
                 ):
                     raise ValueError(f"unsafe filename: {name!r}")
                 path = os.path.join(out_dir, name)
-                with open(path, "w", encoding="utf-8") as fh:
-                    fh.write(row["body"] if row["body"] is not None else "")
+                if skip_existing and os.path.exists(path):
+                    skipped_acc.add(1)
+                    continue
+                data = render(row)
+                with open(path, "wb") as fh:
+                    fh.write(data)
                 written_acc.add(1)
             except Exception:
                 failed_acc.add(1)
 
     work.foreachPartition(_write_partition)
-    written, failed = written_acc.value, failed_acc.value
-    # skipped derived from the accumulators — saves a second count job
-    # over the anti-joined plan. Accumulator totals are at-least-once
-    # under task retries/speculation, so clamp the derived value.
-    skipped = max(0, before - written - failed) if before is not None else 0
     return {
-        "written": written,
-        "skipped": skipped,
-        "failed": failed,
+        "written": written_acc.value,
+        "skipped": skipped_acc.value,
+        "failed": failed_acc.value,
     }
+
+
+def _utf8_body(row: Row) -> bytes:
+    return (row["body"] or "").encode("utf-8")
+
+
+def write_files(
+    df: DataFrame,
+    out_dir: str,
+    filename_col: str = "filename",
+    body_col: str = "body",
+    skip_existing: bool = True,
+) -> dict:
+    """Write one UTF-8 file per row. Returns {"written": n,
+    "skipped": n, "failed": n}, the counts of the reference's job
+    result dict (api.py:87-88, api.py:369-372)."""
+    work = df.select(
+        F.col(filename_col).alias("filename"), F.col(body_col).alias("body")
+    )
+    return _write_rows(work, out_dir, _utf8_body, skip_existing)

@@ -185,3 +185,24 @@ def test_cold_store_mode_routes_and_tags(monkeypatch):
     }
     out = bench._compact(payload)
     assert out["store"] == "cold"
+
+
+def test_ab_bench_gain_rule():
+    """tools/ab_bench.compare: pair wins respect the metric's
+    direction, and the gain rule needs 9 wins in 10 AND a median gap
+    wider than the parent's interquartile range."""
+    sys.path.insert(0, os.path.join(os.path.dirname(bench.__file__), "tools"))
+    from ab_bench import compare
+
+    parent = [1.0, 1.1, 1.2, 1.3, 1.4, 1.5, 1.6, 1.7, 1.8, 1.9]
+    faster = [p + 1.0 for p in parent]
+    c = compare(parent, faster, "higher", bound=0.25)
+    assert c["wins"] == 10 and c["gain"] and not c["regressed"]
+    c = compare(parent, faster, "lower", bound=0.25)
+    assert c["wins"] == 0 and not c["gain"] and c["regressed"]
+    # every pair won, but by less than the parent's spread
+    c = compare(parent, [p + 0.01 for p in parent], "higher")
+    assert c["wins"] == 10 and not c["gain"]
+    # a wide gap with only 8 of 10 pairs won
+    mixed = faster[:8] + [p - 0.1 for p in parent[8:]]
+    assert not compare(parent, mixed, "higher")["gain"]

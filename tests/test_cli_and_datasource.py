@@ -2,10 +2,8 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from parquet_extractor_spark.cli import main as cli_main
-from parquet_extractor_spark.functions.html import unescape_html
 from parquet_extractor_spark.operators.extract import extract_any_parquet
 
 
@@ -63,14 +61,6 @@ def test_cli_analyze(spark, sf_small, capsys):
     assert rc == 0
     stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert stats["document_count"] == 500
-
-
-def test_unescape_html_pandas_udf(spark):
-    df = spark.createDataFrame(
-        [("Tom &amp; Jerry &lt;3",), (None,)], ["t"]
-    )
-    got = [r.u for r in df.select(unescape_html(F.col("t")).alias("u")).collect()]
-    assert got == ["Tom & Jerry <3", None]
 
 
 def test_docs_datasource_parallel_read(spark):

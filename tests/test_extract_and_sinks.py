@@ -1,3 +1,4 @@
+import html
 import os
 
 from pyspark.sql import functions as F
@@ -11,11 +12,13 @@ from parquet_extractor_spark.operators.extract import (
 from parquet_extractor_spark.sinks.markdown import write_files
 from parquet_extractor_spark.sinks.pdf import (
     _chunks,
-    pdf_ready_columns,
+    pdf_ready,
     render_pdf_bytes,
     write_pdfs,
 )
 from parquet_extractor_spark.constants import PDF_CONTENT_CAP, PDF_TITLE_CAP
+from parquet_extractor_spark.functions.text import zero_pad
+from parquet_extractor_spark.sources.tables import load_table
 
 
 def test_sample_is_deterministic_and_exact_n(spark, sf_small):
@@ -76,15 +79,12 @@ def test_markdown_sink_counts_row_errors(spark, tmp_path):
     assert res["failed"] == 1  # per-row tolerance (api.py:344-346)
 
 
-def test_pdf_chunking_caps(spark):
+def test_pdf_chunking_caps():
     # 50k cap and 1000-char chunks (api.py:327, api.py:793)
-    title, content = pdf_ready_columns(
-        F.lit("T" * 200 + "é"), F.lit("x" * (PDF_CONTENT_CAP + 5000))
-    )
-    row = spark.range(1).select(title.alias("t"), content.alias("c")).first()
-    assert len(row.t) == PDF_TITLE_CAP
-    assert len(row.c) == PDF_CONTENT_CAP
-    chunks = _chunks(row.c)
+    title, content = pdf_ready("T" * 200 + "é", "x" * (PDF_CONTENT_CAP + 5000))
+    assert len(title) == PDF_TITLE_CAP
+    assert len(content) == PDF_CONTENT_CAP
+    chunks = _chunks(content)
     assert all(len(c) <= 1000 for c in chunks)
     assert sum(len(c) for c in chunks) == PDF_CONTENT_CAP
 
@@ -210,6 +210,136 @@ def test_markdown_sink_rejects_path_escaping_filenames(spark, tmp_path):
     assert result["failed"] == 3
     assert sorted(os.listdir(out)) == ["ok.md"]
     assert not (tmp_path / "escape.md").exists()
+
+
+def test_pdf_sink_rejects_path_escaping_filenames(spark, tmp_path):
+    """Same guard as the markdown sink: a separator or absolute path
+    in a PDF filename (wiki titles, uploaded frames) fails that row
+    and writes nothing outside out_dir."""
+    out = tmp_path / "out"
+    df = spark.createDataFrame(
+        [
+            ("ok.pdf", "T", 1, "c"),
+            ("../escape.pdf", "T", 2, "c"),
+            (str(tmp_path / "abs.pdf"), "T", 3, "c"),
+            ("a/b.pdf", "T", 4, "c"),
+        ],
+        "filename string, title string, doc_id int, content string",
+    )
+    result = write_pdfs(df, str(out))
+    assert result == {"written": 1, "failed": 3}
+    assert sorted(os.listdir(out)) == ["ok.pdf"]
+    assert sorted(os.listdir(tmp_path)) == ["out"]
+
+
+def test_markdown_sink_is_one_pass(spark, sf_small, tmp_path, jobs_in_group):
+    """A Markdown extract job submits at most 2 Spark jobs: the
+    sample's sort-and-number plan and the writer pass. Skip-existing
+    costs no count, listing or anti-join job."""
+    write_files(extract_files(spark, sf_small, n=15), str(tmp_path / "warm"))
+    out = str(tmp_path / "md")
+    result = {}
+
+    def _job():
+        result.update(write_files(extract_files(spark, sf_small, n=15), out))
+
+    jobs = jobs_in_group(_job, "markdown-sink-jobs")
+    assert result == {"written": 15, "skipped": 0, "failed": 0}
+    assert len(jobs) <= 2
+
+
+def test_pdf_sink_is_one_pass(spark, sf_small, tmp_path, jobs_in_group):
+    """A PDF extract job over the service's ``orderBy.limit`` frame
+    submits one Spark job: the cleanup runs in the render pass."""
+    docs = load_table(spark, sf_small, "documents").orderBy("doc_id").limit(20)
+    work = docs.select(
+        F.concat(zero_pad(F.col("doc_id")), F.lit(".pdf")).alias("filename"),
+        F.concat(F.lit("Document "), F.col("doc_id").cast("string")).alias(
+            "title"
+        ),
+        "doc_id",
+        F.col("text").alias("content"),
+    )
+    write_pdfs(work, str(tmp_path / "warm"))
+    result = {}
+
+    def _job():
+        result.update(write_pdfs(work, str(tmp_path / "pdf")))
+
+    jobs = jobs_in_group(_job, "pdf-sink-jobs")
+    assert result == {"written": 20, "failed": 0}
+    assert len(jobs) <= 1
+
+
+def test_markdown_sink_skips_only_existing_files(spark, sf_small, tmp_path):
+    """Partial skip: pre-created targets are counted as skipped and
+    left byte-for-byte alone; the rest are written."""
+    n, k = 10, 4
+    work = extract_files(spark, sf_small, n=n)
+    names = sorted(r.filename for r in work.select("filename").collect())
+    out = tmp_path / "md"
+    out.mkdir()
+    sentinel = b"sentinel \x00 bytes"
+    for name in names[:k]:
+        (out / name).write_bytes(sentinel)
+
+    result = write_files(work, str(out))
+    assert result == {"written": n - k, "skipped": k, "failed": 0}
+    assert sorted(os.listdir(out)) == names
+    for name in names[:k]:
+        assert (out / name).read_bytes() == sentinel
+    for name in names[k:]:
+        assert (out / name).read_text(encoding="utf-8").startswith("---\n")
+
+
+def ref_pdf_ready(title, content):
+    """The reference's pre-render cleanup, transcribed: content is
+    HTML-unescaped (api.py:312), non-ASCII → space (api.py:324),
+    control chars other than tab/newline/CR → space (api.py:802),
+    capped at 50k AFTER the unescape (api.py:327); the title is
+    non-ASCII → underscore (api.py:277), capped at 80 (api.py:271)."""
+    text = html.unescape(content or "")
+    text = "".join(c if ord(c) < 128 else " " for c in text)
+    text = "".join(
+        " " if ord(c) < 32 and c not in "\t\n\r" else c for c in text
+    )
+    head = "".join(c if ord(c) < 128 else "_" for c in (title or ""))
+    return head[:PDF_TITLE_CAP], text[:PDF_CONTENT_CAP]
+
+
+PDF_CLEANUP_CORPUS = [
+    ("plain", "plain words"),
+    ("Tom &amp; Jerry", "Tom &amp; Jerry &lt;3"),
+    ("caf&eacute;", "caf&eacute; and &#128512; and AT&T & co"),
+    ("Tïtle 漢字 \U0001f600", "naïve 漢字 \U0001f600 résumé"),
+    ("ctl\x01title", "a\x00b\x01c\x08d\te\nf\x0bg\x0ch\ri\x1fj\x7fk"),
+    ("entity control", "&#1;&#x1F;&#0;x"),
+    ("T" * 200 + "é", "x" * (PDF_CONTENT_CAP + 5000)),
+    # over the cap only before the unescape: the cap applies after it
+    ("cap", "x" * (PDF_CONTENT_CAP - 10) + "&amp;" * 5),
+    ("cap2", "&eacute;" * (PDF_CONTENT_CAP // 4)),
+    (None, "no title"),
+    ("no content", None),
+    (None, None),
+    ("", ""),
+]
+
+
+def test_pdf_ready_matches_reference_cleanup():
+    for title, content in PDF_CLEANUP_CORPUS:
+        assert pdf_ready(title, content) == ref_pdf_ready(title, content)
+    # the cap-crossing row keeps its unescaped tail
+    _, capped = pdf_ready("cap", "x" * (PDF_CONTENT_CAP - 10) + "&amp;" * 5)
+    assert capped.endswith("&&&&&") and len(capped) == PDF_CONTENT_CAP - 5
+    assert pdf_ready(None, None) == ("", "")
+
+
+def test_pdf_ready_unescapes_html():
+    got = [
+        pdf_ready(None, t)[1] for t in ["Tom &amp; Jerry &lt;3", None]
+    ]
+    # a NULL content renders as an empty body
+    assert got == ["Tom & Jerry <3", ""]
 
 
 def test_sample_key_large_ids_match_duckdb(spark, duck):

@@ -20,13 +20,14 @@ import re
 
 from pyspark.sql import functions as F
 
+from parquet_extractor_spark.constants import PDF_TITLE_CAP
 from parquet_extractor_spark.functions.text import (
-    non_ascii_scrub,
     sanitize_filename,
     token_count,
     tokenize,
     zero_pad,
 )
+from parquet_extractor_spark.sinks.pdf import pdf_ready
 
 CORPUS = [
     "",
@@ -94,9 +95,11 @@ def test_sanitize_filename_matches_reference(spark):
     assert got == want
 
 
-def test_non_ascii_scrub_matches_reference(spark):
-    got = _column_results(spark, non_ascii_scrub("s"))
-    want = [ref_non_ascii_scrub(s) for s in CORPUS]
+def test_non_ascii_scrub_matches_reference():
+    # the scrub is the PDF sink's title cleanup, which also applies
+    # the title cap (api.py:271)
+    got = [pdf_ready(s, None)[0] for s in CORPUS]
+    want = [ref_non_ascii_scrub(s)[:PDF_TITLE_CAP] for s in CORPUS]
     assert got == want
 
 

@@ -431,3 +431,15 @@ def test_tokenizer_fertility_invariants(spark, sf_small):
             r.compression_micro
             == r.utf8_bytes * 1_000_000 // r.word_tokens
         )
+
+
+def test_tfidf_and_pmi_build_submits_no_spark_job(spark, sf_small, jobs_in_group):
+    """The corpus size N is an in-plan scalar subquery, so building
+    either query only composes a plan."""
+    from parquet_extractor_spark.operators.corpus_index import pmi_top_pairs
+
+    for fn in (tfidf_top_terms, pmi_top_pairs):
+        fn(spark, sf_small).collect()  # warm schema reads
+        assert jobs_in_group(
+            lambda: fn(spark, sf_small), f"build-{fn.__name__}"
+        ) == []
