@@ -20,7 +20,9 @@ plane; the data plane is all Spark.
 
 from __future__ import annotations
 
+import math
 import os
+import re
 import threading
 import traceback
 import uuid
@@ -142,6 +144,56 @@ def resolve_subdir(output_root: str, subdir: str) -> str:
     return target
 
 
+class ParamError(ValueError):
+    """A malformed request parameter; the app answers it with 400."""
+
+
+_INT = re.compile(r"-?[0-9]+")
+
+
+def _as_int(raw: Any) -> int | None:
+    """A JSON integer or a decimal digit string as an int; None for
+    anything else: a bool (Python counts it as an int), a fraction,
+    any other string."""
+    if isinstance(raw, bool):
+        return None
+    if isinstance(raw, int):
+        return raw
+    if isinstance(raw, str) and _INT.fullmatch(raw):
+        return int(raw)
+    return None
+
+
+def int_param(params, key: str, default: int) -> int:
+    """``params[key]`` as an integer, or ParamError."""
+    n = _as_int(params.get(key, default))
+    if n is None:
+        raise ParamError(f"{key} must be an integer")
+    return n
+
+
+def count_param(params, key: str, default: int, cap: int) -> int:
+    """A row count: a positive integer, capped at ``cap``. Zero,
+    negative and fractional counts are errors, not silent
+    truncations."""
+    n = _as_int(params.get(key, default))
+    if n is None or n < 1:
+        raise ParamError(f"{key} must be a positive integer")
+    return min(n, cap)
+
+
+def seconds_param(params, key: str, default: float) -> float:
+    """A finite, non-negative number of seconds, or ParamError."""
+    raw = params.get(key, default)
+    try:
+        x = math.nan if isinstance(raw, bool) else float(raw)
+    except (TypeError, ValueError):
+        x = math.nan
+    if not 0 <= x < math.inf:
+        raise ParamError(f"{key} must be a number >= 0")
+    return x
+
+
 def check_write_access(output_dir: str) -> None:
     """Write-access preflight (api.py:886-897): fail fast before
     launching executors at an unwritable sink."""
@@ -217,6 +269,10 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
     )
 
     app = Flask("parquet_extractor_spark")
+
+    @app.errorhandler(ParamError)
+    def _bad_param(exc: ParamError):
+        return jsonify({"error": str(exc)}), 400
 
     def _subdir_or_400(raw: str):
         try:
@@ -328,19 +384,7 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
             return jsonify({"error": f"unknown query '{name}'"}), 404
         params = request.get_json(silent=True) or {}
         sf_dir = params.get("sf_dir", "/root/testdata/sf0.001")
-        raw = params.get("limit", 20)
-        # strict: a JSON integer (bool is an int subclass — reject) or
-        # a digit string; fractional/negative/zero limits are errors,
-        # not silent truncations
-        if isinstance(raw, bool) or not (
-            isinstance(raw, int)
-            or (isinstance(raw, str) and raw.isdigit())
-        ):
-            return jsonify({"error": "limit must be a positive integer"}), 400
-        limit = int(raw)
-        if limit < 1:
-            return jsonify({"error": "limit must be a positive integer"}), 400
-        limit = min(limit, MAX_QUERY_ROWS)
+        limit = count_param(params, "limit", 20, MAX_QUERY_ROWS)
 
         def _work(job_id: str) -> dict[str, Any]:
             job_log(job_id, f"running {name} at {sf_dir} (limit {limit})")
@@ -378,8 +422,8 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
     def extract_documents():
         params = request.get_json(silent=True) or {}
         sf_dir = params.get("sf_dir", "/root/testdata/sf0.001")
-        n = min(int(params.get("num_docs", 100)), MAX_DOCS)
-        seed = int(params.get("seed", 42))
+        n = count_param(params, "num_docs", 100, MAX_DOCS)
+        seed = int_param(params, "seed", 42)
         out_dir, err = _subdir_or_400(params.get("subdir", "markdown"))
         if err:
             return err
@@ -401,16 +445,14 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
         then the arbitrary-schema extract pipeline over it."""
         if "file" not in request.files:
             return jsonify({"error": "no file provided"}), 400
-        up = request.files["file"]
-        tmp = tempfile.mkdtemp(prefix="upload_")
-        path = _spool(tmp, up, "upload.parquet")
         # default batch 1000 (main.py:205), capped like every job input
-        n = min(int(request.form.get("num_papers", 1000)), MAX_DOCS)
-        seed = int(request.form.get("seed", 42))
+        n = count_param(request.form, "num_papers", 1000, MAX_DOCS)
+        seed = int_param(request.form, "seed", 42)
         out_dir, err = _subdir_or_400(request.form.get("subdir", "parquet_md"))
         if err:
-            shutil.rmtree(tmp, ignore_errors=True)
             return err
+        tmp = tempfile.mkdtemp(prefix="upload_")
+        path = _spool(tmp, request.files["file"], "upload.parquet")
 
         def _work(job_id: str) -> dict[str, Any]:
             try:
@@ -436,7 +478,7 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
         corpus source)."""
         params = request.get_json(silent=True) or {}
         sf_dir = params.get("sf_dir", "/root/testdata/sf0.001")
-        limit = min(int(params.get("limit", 100)), MAX_DOCS)
+        limit = count_param(params, "limit", 100, MAX_DOCS)
         out_dir, err = _subdir_or_400(params.get("subdir", "pdf"))
         if err:
             return err
@@ -660,8 +702,8 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
         503 instead of launching a doomed job."""
         params = request.get_json(silent=True) or {}
         categories = params.get("categories") or WIKI_CRAWL_CATEGORIES
-        limit = min(int(params.get("limit", 200)), MAX_CRAWL_ARTICLES)
-        delay_s = float(params.get("delay_s", 1.0))
+        limit = count_param(params, "limit", 200, MAX_CRAWL_ARTICLES)
+        delay_s = seconds_param(params, "delay_s", 1.0)
         out_dir, err = _subdir_or_400(params.get("subdir", "wiki_pdf"))
         if err:
             return err

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from parquet_extractor_spark.operators.quality import quality_columns
+from parquet_extractor_spark.streaming import drain, epoch_sink
 
 MIN_QUALITY = 0.3  # same gate as pipelines.MIN_QUALITY
 
@@ -95,12 +96,11 @@ def run_curate_stream(
     sf_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    timeout_s: int = 120,
     classifier: bool = False,
 ) -> DataFrame:
-    """Drain the documents source once (availableNow) through the
-    curation stream into a lang-partitioned parquet dataset; returns
-    the written dataset re-read as a batch frame.
+    """Drain the documents source once through the curation stream
+    into a lang-partitioned parquet dataset; returns the written
+    dataset re-read as a batch frame.
 
     The sink is idempotent under batch replay: foreachBatch is
     at-least-once, so each epoch writes to its own ``epoch=N``
@@ -125,20 +125,11 @@ def run_curate_stream(
             .parquet(os.path.join(out_dir, f"epoch={epoch}"))
         )
 
-    query = (
-        stream.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "curate_docs")
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(_sink),
+        checkpoint_dir,
+        "curate_docs",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"curate stream did not drain within {timeout_s}s; "
-            "partial output discarded"
-        )
     return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
@@ -194,7 +185,6 @@ def run_near_dup_stream(
     sf_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Drain the documents source once through the near-dup candidate
     stream (probing a static index of the same corpus) and return the
@@ -216,20 +206,7 @@ def run_near_dup_stream(
             os.path.join(out_dir, f"epoch={epoch}")
         )
 
-    query = (
-        stream.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "near_dup")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"near-dup stream did not drain within {timeout_s}s; "
-            "partial output discarded"
-        )
+    drain(stream.writeStream.foreachBatch(_sink), checkpoint_dir, "near_dup")
     return (
         spark.read.option("basePath", out_dir)
         .parquet(out_dir)
@@ -405,8 +382,6 @@ def run_pack_nosplit_stream(
     checkpoint_dir: str,
     glob: str = "documents.parquet",
     max_files_per_trigger: int | None = None,
-    table_name: str = "docs_pack_nosplit_stream",
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Drain a documents directory through the stateful packer.
     ``max_files_per_trigger=1`` forces one micro-batch per file (in
@@ -418,18 +393,15 @@ def run_pack_nosplit_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = pack_nosplit_stream(reader.parquet(src_dir))
-    query = (
+    name = "docs_pack_nosplit_stream"
+    drain(
         stream.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("update")
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, table_name)
-        )
-        .trigger(availableNow=True)
-        .start()
+        .queryName(name)
+        .outputMode("update"),
+        checkpoint_dir,
+        name,
     )
-    query.awaitTermination(timeout_s)
-    return spark.table(table_name)
+    return spark.table(name)
 
 
 # ── stateful streaming KMV sketch maintenance ────────────────────────
@@ -513,8 +485,6 @@ def run_kmv_sketch_stream(
     checkpoint_dir: str,
     glob: str = "documents.parquet",
     max_files_per_trigger: int | None = None,
-    table_name: str = "docs_kmv_sketch_stream",
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Drain a documents directory through the sketch maintainer;
     the FINAL row per source (max n_batches) carries the drained
@@ -526,18 +496,15 @@ def run_kmv_sketch_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = kmv_sketch_stream(reader.parquet(src_dir))
-    query = (
+    name = "docs_kmv_sketch_stream"
+    drain(
         stream.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("update")
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, table_name)
-        )
-        .trigger(availableNow=True)
-        .start()
+        .queryName(name)
+        .outputMode("update"),
+        checkpoint_dir,
+        name,
     )
-    query.awaitTermination(timeout_s)
-    return spark.table(table_name)
+    return spark.table(name)
 
 
 # ── incremental novelty (streaming twin of ngram_novelty_profile) ────
@@ -570,7 +537,6 @@ def run_novelty_stream(
     checkpoint_dir: str,
     state_table_dir: str,
     out_dir: str,
-    timeout_s: int = 120,
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Incremental corpus-novelty tracking: the streaming form of
@@ -637,19 +603,7 @@ def run_novelty_stream(
         novel.unpersist()
         grams.unpersist()
 
-    query = (
-        stream.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "novelty")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"novelty stream did not drain within {timeout_s}s"
-        )
+    drain(stream.writeStream.foreachBatch(_sink), checkpoint_dir, "novelty")
     return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
@@ -762,10 +716,9 @@ def run_release_manifest_stream(
     sf_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    timeout_s: int = 120,
 ) -> DataFrame:
-    """Drain the documents source once (availableNow) through the
-    release-ledger stream into per-epoch parquet directories (the
+    """Drain the documents source once through the release-ledger
+    stream into per-epoch parquet directories (the
     idempotent at-least-once sink every streaming module here uses:
     a replayed epoch overwrites its own output), then aggregate the
     landed ledger to the manifest. Returns the manifest frame."""
@@ -774,26 +727,11 @@ def run_release_manifest_stream(
         read_documents_stream(spark, sf_dir), spark, sf_dir
     )
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
-
-    query = (
-        ledger.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "release_manifest"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        ledger.writeStream.foreachBatch(epoch_sink(out_dir)),
+        checkpoint_dir,
+        "release_manifest",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"release-manifest stream did not drain within {timeout_s}s; "
-            "partial output discarded"
-        )
     landed = spark.read.option("basePath", out_dir).parquet(out_dir)
     return manifest_from_ledger(
         landed.select("doc_id", "source", "n", "split")

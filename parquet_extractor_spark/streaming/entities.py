@@ -44,8 +44,6 @@ mechanics; the snapshot sink already supports per-file manifests).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,6 +53,7 @@ from parquet_extractor_spark.operators.entities import (
     hash_prefix_grams,
     verify_candidate_pairs,
 )
+from parquet_extractor_spark.streaming import drain
 
 STATE_SCHEMA = (
     "rec_id BIGINT, name STRING, cluster BIGINT, "
@@ -327,7 +326,6 @@ def run_customer_er_stream(
     source_dir: str,
     checkpoint_dir: str,
     state_table_dir: str,
-    timeout_s: int = 180,
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain a customer-arrivals landing directory (parquet files of
@@ -363,20 +361,11 @@ def run_customer_er_stream(
             new_state, state_table_dir, mode="overwrite", tag=tag
         )
 
-    query = (
-        stream.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "customer_er"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(_sink),
+        checkpoint_dir,
+        "customer_er",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"customer ER stream did not drain within {timeout_s}s"
-        )
     return read_snapshot(spark, state_table_dir)
 
 
@@ -385,7 +374,6 @@ def run_entity_resolution_stream(
     source_dir: str,
     checkpoint_dir: str,
     state_table_dir: str,
-    timeout_s: int = 180,
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain a records landing directory (parquet files of
@@ -422,18 +410,9 @@ def run_entity_resolution_stream(
             new_state, state_table_dir, mode="overwrite", tag=tag
         )
 
-    query = (
-        stream.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "entity_resolution"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(_sink),
+        checkpoint_dir,
+        "entity_resolution",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"entity resolution stream did not drain within {timeout_s}s"
-        )
     return read_snapshot(spark, state_table_dir)

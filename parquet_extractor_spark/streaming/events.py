@@ -4,8 +4,8 @@ The reference is strictly batch; this is the driver-mandated streaming
 extension. The same hourly aggregation as
 ``operators.relational.events_hourly`` expressed incrementally:
 file-source stream → watermark → tumbling window → stateful agg.
-``run_events_hourly_stream`` uses the availableNow trigger so a test
-(or a backfill) drains the source exactly once and stops — the
+``run_events_hourly_stream`` drains the source exactly once and stops
+(``streaming.drain``), so a test or a backfill sees a final answer — the
 batch/stream results must be identical, which is the correctness
 contract Structured Streaming gives us for free.
 
@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from parquet_extractor_spark.streaming import drain
 
 # Physical schema of events.parquet (file streams require an explicit
 # schema). ts arrives either as TIMESTAMP (micros fixtures) or as a
@@ -111,23 +113,20 @@ def run_events_hourly_stream(
     spark: SparkSession,
     sf_dir: str,
     checkpoint_dir: str,
-    table_name: str = "events_hourly_stream",
-    timeout_s: int = 120,
 ) -> DataFrame:
-    """Drain the events source once (availableNow) into an in-memory
-    sink table; returns the result DataFrame. Complete output mode:
+    """Drain the events source once into an in-memory sink table;
+    returns the result DataFrame. Complete output mode:
     file sources never drop the final windows behind the watermark."""
     stream = hourly_agg(read_events_stream(spark, sf_dir))
-    query = (
+    name = "events_hourly_stream"
+    drain(
         stream.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, table_name))
-        .trigger(availableNow=True)
-        .start()
+        .queryName(name)
+        .outputMode("complete"),
+        checkpoint_dir,
+        name,
     )
-    query.awaitTermination(timeout_s)
-    return spark.table(table_name)
+    return spark.table(name)
 
 
 def run_sessionization_stream(
@@ -135,8 +134,6 @@ def run_sessionization_stream(
     sf_dir: str,
     checkpoint_dir: str,
     gap: str = "30 minutes",
-    table_name: str = "events_sessions_stream",
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Session windows per user (stateful op beyond tumbling windows):
     events within `gap` of each other merge into one session. Uses the
@@ -157,16 +154,15 @@ def run_sessionization_stream(
             "total_value",
         )
     )
-    query = (
+    name = "events_sessions_stream"
+    drain(
         stream.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, table_name))
-        .trigger(availableNow=True)
-        .start()
+        .queryName(name)
+        .outputMode("complete"),
+        checkpoint_dir,
+        name,
     )
-    query.awaitTermination(timeout_s)
-    return spark.table(table_name)
+    return spark.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -206,8 +202,6 @@ def run_user_totals_stream(
     spark: SparkSession,
     sf_dir: str,
     checkpoint_dir: str,
-    table_name: str = "events_user_totals_stream",
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Drain the events source through the custom stateful operator.
 
@@ -225,16 +219,15 @@ def run_user_totals_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    query = (
+    name = "events_user_totals_stream"
+    drain(
         stream.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, table_name))
-        .trigger(availableNow=True)
-        .start()
+        .queryName(name)
+        .outputMode("update"),
+        checkpoint_dir,
+        name,
     )
-    query.awaitTermination(timeout_s)
-    return spark.table(table_name)
+    return spark.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -246,16 +239,15 @@ def run_stream_to_dataset(
     sf_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Production sink pattern: foreachBatch bridges the stream to the
     batch writer, so every micro-batch lands in the same partitioned
     parquet dataset (sinks.dataset.write_dataset) with exactly-once
     semantics per batch id from the checkpoint.
 
-    Here: hourly per-type aggregates appended per micro-batch. With
-    availableNow the file source drains once; on a live stream the
-    same code upserts continuously. Returns the written dataset.
+    Here: hourly per-type aggregates appended per micro-batch. The
+    file source drains once; on a live stream the same code upserts
+    continuously. Returns the written dataset.
     """
     from parquet_extractor_spark.sinks.dataset import write_dataset
 
@@ -270,14 +262,11 @@ def run_stream_to_dataset(
             mode="append",
         )
 
-    query = (
-        hourly.writeStream.foreachBatch(_sink)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "to_dataset"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        hourly.writeStream.foreachBatch(_sink).outputMode("complete"),
+        checkpoint_dir,
+        "to_dataset",
     )
-    query.awaitTermination(timeout_s)
     return spark.read.parquet(out_dir)
 
 
@@ -290,8 +279,6 @@ def run_view_purchase_join_stream(
     sf_dir: str,
     checkpoint_dir: str,
     window: str = "30 minutes",
-    table_name: str = "view_purchase_join_stream",
-    timeout_s: int = 180,
 ) -> DataFrame:
     """Stream-stream interval join: each purchase joined to the same
     user's view events from the preceding `window`.
@@ -339,16 +326,15 @@ def run_view_purchase_join_stream(
         "view_event_id",
         F.unix_timestamp("view_ts").alias("view_epoch"),
     )
-    query = (
+    name = "view_purchase_join_stream"
+    drain(
         joined.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, table_name))
-        .trigger(availableNow=True)
-        .start()
+        .queryName(name)
+        .outputMode("append"),
+        checkpoint_dir,
+        name,
     )
-    query.awaitTermination(timeout_s)
-    return spark.table(table_name)
+    return spark.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -368,8 +354,6 @@ def run_enriched_stream(
     spark: SparkSession,
     sf_dir: str,
     checkpoint_dir: str,
-    table_name: str = "events_enriched_stream",
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Stream-static join: enrich the events stream with a static
     dimension (event_type → category), then aggregate per category.
@@ -393,16 +377,15 @@ def run_enriched_stream(
             F.round(F.sum("value"), 4).alias("total_value"),
         )
     )
-    query = (
+    name = "events_enriched_stream"
+    drain(
         enriched.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, table_name))
-        .trigger(availableNow=True)
-        .start()
+        .queryName(name)
+        .outputMode("complete"),
+        checkpoint_dir,
+        name,
     )
-    query.awaitTermination(timeout_s)
-    return spark.table(table_name)
+    return spark.table(name)
 
 
 def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -427,22 +410,19 @@ def run_dedup_stream(
     spark: SparkSession,
     sf_dir: str,
     checkpoint_dir: str,
-    table_name: str = "events_dedup_stream",
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Drain the events source once through the streaming dedup into a
     memory sink; append mode (dedup emits rows, not aggregates)."""
     stream = dedup_stream(read_events_stream(spark, sf_dir))
-    query = (
+    name = "events_dedup_stream"
+    drain(
         stream.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, table_name))
-        .trigger(availableNow=True)
-        .start()
+        .queryName(name)
+        .outputMode("append"),
+        checkpoint_dir,
+        name,
     )
-    query.awaitTermination(timeout_s)
-    return spark.table(table_name)
+    return spark.table(name)
 
 
 def daily_volume_agg(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -469,11 +449,9 @@ def run_xmr_control_stream(
     spark: SparkSession,
     sf_dir: str,
     checkpoint_dir: str,
-    table_name: str = "events_xmr_stream",
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Streaming twin of operators.timeseries.events_xmr_control:
-    drain the daily-volume stream (availableNow, complete mode — file
+    drain the daily-volume stream once (complete mode — file
     sources never drop the final windows), then run the SAME
     xmr_control_from_active computation over the drained counts. The
     stream carries only the windowed counts; densification and limits
@@ -483,21 +461,18 @@ def run_xmr_control_stream(
     )
 
     stream = daily_volume_agg(read_events_stream(spark, sf_dir))
-    query = (
+    name = "events_xmr_stream"
+    drain(
         stream.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, table_name)
-        )
-        .trigger(availableNow=True)
-        .start()
+        .queryName(name)
+        .outputMode("complete"),
+        checkpoint_dir,
+        name,
     )
-    query.awaitTermination(timeout_s)
     # localCheckpoint: the memory-sink view is one physical leaf, so
     # the helper's grid↔active self-join cannot be attribute-deduped
     # by the analyzer; checkpointing the (days × types)-bounded
     # aggregate gives it fresh attributes (and is the natural
     # stream→batch hand-off point anyway).
-    drained = spark.table(table_name).localCheckpoint(eager=True)
+    drained = spark.table(name).localCheckpoint(eager=True)
     return xmr_control_from_active(drained)

@@ -25,6 +25,7 @@ from parquet_extractor_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     extract_features,
 )
+from parquet_extractor_spark.streaming import drain, epoch_sink
 
 
 def read_media_stream(spark: SparkSession, media_dir: str) -> DataFrame:
@@ -39,10 +40,9 @@ def run_media_features_stream(
     media_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    timeout_s: int = 120,
 ) -> DataFrame:
-    """Drain the media source once (availableNow) through feature
-    extraction into a kind-partitioned feature table; returns the
+    """Drain the media source once through feature extraction into
+    a kind-partitioned feature table; returns the
     written table re-read as a batch frame (epoch appears as a
     partition column — drop it if unwanted)."""
     feats = extract_features(read_media_stream(spark, media_dir))
@@ -55,19 +55,7 @@ def run_media_features_stream(
             .parquet(os.path.join(out_dir, f"epoch={epoch}"))
         )
 
-    query = (
-        feats.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "media_feats")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"media feature stream did not drain within {timeout_s}s"
-        )
+    drain(feats.writeStream.foreachBatch(_sink), checkpoint_dir, "media_feats")
     return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
@@ -95,7 +83,6 @@ def run_video_metadata_stream(
     media_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Streaming twin of operators.multimodal.video_stream_metadata:
     container-metadata extraction (MP4 box walk / WebM EBML walk —
@@ -111,25 +98,11 @@ def run_video_metadata_stream(
 
     meta = video_stream_metadata(read_video_stream(spark, media_dir))
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        (
-            batch.write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"epoch={epoch}"))
-        )
-
-    query = (
-        meta.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "video_meta")
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        meta.writeStream.foreachBatch(epoch_sink(out_dir)),
+        checkpoint_dir,
+        "video_meta",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"video metadata stream did not drain within {timeout_s}s"
-        )
     return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
@@ -138,7 +111,6 @@ def run_image_metadata_stream(
     media_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Streaming twin of operators.multimodal.image_header_metadata:
     the header-only image pass (PNG IHDR / JPEG SOF walk / GIF
@@ -154,25 +126,11 @@ def run_image_metadata_stream(
 
     meta = image_header_metadata(read_video_stream(spark, media_dir))
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        (
-            batch.write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"epoch={epoch}"))
-        )
-
-    query = (
-        meta.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "image_meta")
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        meta.writeStream.foreachBatch(epoch_sink(out_dir)),
+        checkpoint_dir,
+        "image_meta",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"image metadata stream did not drain within {timeout_s}s"
-        )
     return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
@@ -182,7 +140,6 @@ def run_gif_frames_stream(
     checkpoint_dir: str,
     out_dir: str,
     every_ms: int = 60,
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Streaming twin of operators.multimodal.sample_gif_frames: the
     r06 REAL animated-GIF frame sampler (full-animation decode,
@@ -202,25 +159,11 @@ def run_gif_frames_stream(
         read_media_stream(spark, media_dir), every_ms=every_ms
     )
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        (
-            batch.write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"epoch={epoch}"))
-        )
-
-    query = (
-        frames.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "gif_frames")
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        frames.writeStream.foreachBatch(epoch_sink(out_dir)),
+        checkpoint_dir,
+        "gif_frames",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"gif frame stream did not drain within {timeout_s}s"
-        )
     return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
@@ -257,11 +200,10 @@ def run_phash_stream(
     media_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Streaming twin of ``operators.multimodal.image_phashes``: drain
-    the image landing dir once (availableNow) through the SAME decode
-    → DCT → threshold mapInPandas stage and append (media_id, variant,
+    the image landing dir once through the SAME decode → DCT →
+    threshold mapInPandas stage and append (media_id, variant,
     phash, bands) rows. Hashing is stateless per row, so state is one
     Arrow batch per task; the banded near-dup join then runs as a
     batch (or stream-static join) over the hash table this stream
@@ -271,22 +213,11 @@ def run_phash_stream(
 
     hashes = image_phashes(read_neardup_stream(spark, media_dir))
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
-
-    query = (
-        hashes.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "phash")
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        hashes.writeStream.foreachBatch(epoch_sink(out_dir)),
+        checkpoint_dir,
+        "phash",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(f"phash stream did not drain within {timeout_s}s")
     return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
@@ -295,7 +226,6 @@ def run_audio_fingerprint_stream(
     media_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Streaming twin of ``operators.multimodal.audio_fingerprints``
     — same landing-dir shape as run_phash_stream (the neardup
@@ -307,18 +237,9 @@ def run_audio_fingerprint_stream(
 
     hashes = audio_fingerprints(read_neardup_stream(spark, media_dir))
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
-
-    query = (
-        hashes.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "afp"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        hashes.writeStream.foreachBatch(epoch_sink(out_dir)),
+        checkpoint_dir,
+        "afp",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(f"afp stream did not drain within {timeout_s}s")
     return spark.read.option("basePath", out_dir).parquet(out_dir)

@@ -17,8 +17,6 @@ foreachBatch replay replaces its own output instead of duplicating.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType,
@@ -30,6 +28,7 @@ from pyspark.sql.types import (
 )
 
 from parquet_extractor_spark.sources.pdf import extract_docs_frame
+from parquet_extractor_spark.streaming import drain, epoch_sink
 
 # binaryFile's fixed schema — streaming file sources require one
 # explicitly even when the format defines it.
@@ -61,30 +60,16 @@ def run_pdf_ingest_stream(
     pdf_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    timeout_s: int = 120,
 ) -> DataFrame:
-    """Drain the PDF landing directory once (availableNow) through
-    text extraction into a parquet document table; returns the written
+    """Drain the PDF landing directory once through text extraction
+    into a parquet document table; returns the written
     table re-read as a batch frame (epoch appears as a partition
     column — drop it if unwanted)."""
     docs = extract_docs_frame(read_pdf_stream(spark, pdf_dir))
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
-
-    query = (
-        docs.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "pdf_ingest")
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        docs.writeStream.foreachBatch(epoch_sink(out_dir)),
+        checkpoint_dir,
+        "pdf_ingest",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"pdf ingest stream did not drain within {timeout_s}s"
-        )
     return spark.read.option("basePath", out_dir).parquet(out_dir)

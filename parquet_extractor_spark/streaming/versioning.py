@@ -27,6 +27,7 @@ from parquet_extractor_spark.operators.versioning import (
     snapshot_v2,
 )
 from parquet_extractor_spark.sources.tables import load_table
+from parquet_extractor_spark.streaming import drain, epoch_sink
 from parquet_extractor_spark.streaming.documents import (
     read_documents_stream,
 )
@@ -37,34 +38,19 @@ def run_version_diff_stream(
     sf_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    timeout_s: int = 120,
 ) -> DataFrame:
-    """Drain the documents landing dir once (availableNow) through the
-    v2-snapshot projection and the stream-static classification join;
+    """Drain the documents landing dir once through the v2-snapshot
+    projection and the stream-static classification join;
     returns the written changelog re-read as a batch frame."""
     v1 = snapshot_v1(load_table(spark, sf_dir, "documents"))
     v2_stream = snapshot_v2(read_documents_stream(spark, sf_dir))
     changelog = classify_v2_against_v1(v2_stream, v1)
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
-
-    query = (
-        changelog.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "version_diff"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        changelog.writeStream.foreachBatch(epoch_sink(out_dir)),
+        checkpoint_dir,
+        "version_diff",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"version diff stream did not drain within {timeout_s}s"
-        )
     return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
@@ -73,7 +59,6 @@ def run_versioned_table_stream(
     source_dir: str,
     checkpoint_dir: str,
     table_dir: str,
-    timeout_s: int = 120,
 ) -> list[int]:
     """Continuously commit a document stream into a snapshot-versioned
     table (sinks/versioned.py): each micro-batch becomes ONE append
@@ -93,20 +78,11 @@ def run_versioned_table_stream(
             )
         )
 
-    query = (
-        stream.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "versioned_table"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(_sink),
+        checkpoint_dir,
+        "versioned_table",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"versioned table stream did not drain within {timeout_s}s"
-        )
     return committed
 
 
@@ -115,7 +91,6 @@ def run_contamination_gate_stream(
     sf_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    timeout_s: int = 120,
 ) -> DataFrame:
     """Streaming twin of snapshot_contamination_gate: the delta-screen
     runs as a foreachBatch stage of the rolling crawl ingest (VERDICT
@@ -153,18 +128,9 @@ def run_contamination_gate_stream(
             os.path.join(out_dir, f"epoch={epoch}")
         )
 
-    query = (
-        v2_stream.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "contamination_gate"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        v2_stream.writeStream.foreachBatch(_sink),
+        checkpoint_dir,
+        "contamination_gate",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"contamination gate stream did not drain within {timeout_s}s"
-        )
     return spark.read.option("basePath", out_dir).parquet(out_dir)

@@ -16,8 +16,6 @@ foreachBatch replay replaces its own output instead of duplicating.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType,
@@ -29,6 +27,7 @@ from pyspark.sql.types import (
 )
 
 from parquet_extractor_spark.sources.warc import extract_warc_frame
+from parquet_extractor_spark.streaming import drain, epoch_sink
 
 _BINARY_FILE_SCHEMA = StructType(
     [
@@ -58,32 +57,17 @@ def run_warc_ingest_stream(
     warc_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    timeout_s: int = 120,
 ) -> DataFrame:
-    """Drain the WARC landing directory once (availableNow) through
-    record parsing into a parquet table; returns the written table
+    """Drain the WARC landing directory once through record parsing
+    into a parquet table; returns the written table
     re-read as a batch frame (epoch appears as a partition column)."""
     docs = extract_warc_frame(read_warc_stream(spark, warc_dir))
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
-
-    query = (
-        docs.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "warc_ingest"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        docs.writeStream.foreachBatch(epoch_sink(out_dir)),
+        checkpoint_dir,
+        "warc_ingest",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"warc ingest stream did not drain within {timeout_s}s"
-        )
     return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
@@ -92,7 +76,6 @@ def run_capture_dedup_stream(
     warc_dir: str,
     checkpoint_dir: str,
     table_dir: str,
-    timeout_s: int = 120,
 ) -> list[int]:
     """The streaming crawl-hygiene path end to end: WARC segments
     stream in, each micro-batch is canonicalize-then-deduped AGAINST
@@ -136,18 +119,9 @@ def run_capture_dedup_stream(
             )
         )
 
-    query = (
-        records.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "capture_dedup"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        records.writeStream.foreachBatch(_sink),
+        checkpoint_dir,
+        "capture_dedup",
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"capture dedup stream did not drain within {timeout_s}s"
-        )
     return committed

@@ -239,6 +239,66 @@ def test_query_endpoint_rejects_bad_limit(client):
         assert "limit" in resp.get_json()["error"]
 
 
+_MALFORMED = [
+    ("/api/extract/documents", {"num_docs": "x"}),
+    ("/api/extract/documents", {"num_docs": -5}),
+    ("/api/extract/documents", {"num_docs": 0}),
+    ("/api/extract/documents", {"num_docs": 2.5}),
+    ("/api/extract/documents", {"num_docs": True}),
+    ("/api/extract/documents", {"num_docs": "\u00b2"}),
+    ("/api/extract/documents", {"seed": "x"}),
+    ("/api/extract/documents", {"seed": 1.5}),
+    ("/api/extract/documents", {"seed": False}),
+    ("/api/extract/parquet", {"num_papers": "x"}),
+    ("/api/extract/parquet", {"num_papers": "-5"}),
+    ("/api/extract/parquet", {"num_papers": "0"}),
+    ("/api/extract/parquet", {"num_papers": "2.5"}),
+    ("/api/extract/parquet", {"seed": "x"}),
+    ("/api/extract/pdf", {"limit": "x"}),
+    ("/api/extract/pdf", {"limit": -5}),
+    ("/api/extract/pdf", {"limit": 7.9}),
+    ("/api/extract/pdf", {"limit": True}),
+    ("/api/extract/wiki", {"limit": "x"}),
+    ("/api/extract/wiki", {"limit": -5}),
+    ("/api/extract/wiki", {"delay_s": "x"}),
+    ("/api/extract/wiki", {"delay_s": -1}),
+    ("/api/extract/wiki", {"delay_s": True}),
+    ("/api/extract/wiki", {"delay_s": "nan"}),
+    ("/api/extract/wiki", {"delay_s": "inf"}),
+]
+
+
+@pytest.mark.parametrize(
+    ("route", "body"),
+    _MALFORMED,
+    ids=[
+        f"{route.rsplit('/', 1)[1]}-{key}={value!r}"
+        for route, body in _MALFORMED
+        for key, value in body.items()
+    ],
+)
+def test_malformed_numeric_params_are_rejected(client, route, body):
+    """A malformed, negative or zero count, a non-integer seed and a
+    negative or non-finite delay answer 400 naming the parameter, and
+    no job is registered. The upload route gets a file, so only the
+    parameter can be at fault."""
+    import io
+
+    n_jobs = len(client.get("/api/jobs").get_json())
+    if route == "/api/extract/parquet":
+        resp = client.post(
+            route,
+            data={**body, "file": (io.BytesIO(b"PAR1"), "x.parquet")},
+            content_type="multipart/form-data",
+        )
+    else:
+        resp = client.post(route, json=body)
+    assert resp.status_code == 400, resp.get_json()
+    (key,) = body
+    assert key in resp.get_json()["error"]
+    assert len(client.get("/api/jobs").get_json()) == n_jobs
+
+
 def test_explain_endpoint(client):
     out = client.get("/api/explain/q1_pricing_summary").get_json()
     assert out["query"] == "q1_pricing_summary"

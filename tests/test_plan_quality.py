@@ -330,6 +330,57 @@ def test_no_direct_unpartitioned_windows_in_source():
     )
 
 
+def test_stream_drain_protocol_lives_only_in_drain():
+    """Every availableNow runner goes through streaming.drain, which
+    owns the trigger, the timeout and the stop-and-raise on a missed
+    timeout. A runner that copies the protocol instead can drop the
+    timeout check and return a partial result, so outside ``drain``
+    no package file may mention ``awaitTermination(`` or
+    ``availableNow`` (docstrings included), and ``drain`` holds
+    exactly one call of each."""
+    import ast
+    import os
+    import re
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "parquet_extractor_spark",
+    )
+    home = os.path.join(root, "streaming", "__init__.py")
+    drain = next(
+        node
+        for node in ast.parse(open(home).read()).body
+        if isinstance(node, ast.FunctionDef) and node.name == "drain"
+    )
+    calls = [n for n in ast.walk(drain) if isinstance(n, ast.Call)]
+    assert sum(
+        isinstance(c.func, ast.Attribute)
+        and c.func.attr == "awaitTermination"
+        for c in calls
+    ) == 1
+    assert sum(
+        kw.arg == "availableNow" for c in calls for kw in c.keywords
+    ) == 1
+
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            for lineno, line in enumerate(open(path), start=1):
+                if not re.search(r"awaitTermination\(|availableNow", line):
+                    continue
+                if path == home and (
+                    drain.lineno <= lineno <= drain.end_lineno
+                ):
+                    continue
+                offenders.append(f"{path}:{lineno}")
+    assert not offenders, (
+        f"drain a stream through streaming.drain: {offenders}"
+    )
+
+
 def test_brand_price_rank_assoc_pair_join_is_bucketed(spark, sf_small):
     """The r10 scale contract for the pair generator: the self-join
     must key on (brand, bucket), not brand alone — a brand-only

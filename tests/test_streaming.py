@@ -1,5 +1,6 @@
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from parquet_extractor_spark.operators.relational import events_hourly
@@ -1357,3 +1358,33 @@ def test_customer_er_stream_replay_noop(spark, sf_small, tmp_path):
     rows2 = sorted((r.c_custkey, r.cluster) for r in replay.collect())
     assert rows1 == rows2
     assert len(snapshots(state_dir)) == n_snaps
+
+
+def test_drain_timeout_raises_and_stops_the_query(
+    spark, sf_small, tmp_path, monkeypatch
+):
+    """A drain that misses DRAIN_TIMEOUT_S raises TimeoutError naming
+    the stream and leaves no active query, for a memory sink (which
+    would otherwise hand back a partial table) and for a foreachBatch
+    sink. No drain finishes within a millisecond; PySpark rejects a
+    timeout of 0."""
+    import parquet_extractor_spark.streaming as streaming
+    from parquet_extractor_spark.streaming.pdf import run_pdf_ingest_stream
+
+    monkeypatch.setattr(streaming, "DRAIN_TIMEOUT_S", 0.001)
+
+    with pytest.raises(TimeoutError, match="events_hourly_stream"):
+        run_events_hourly_stream(spark, sf_small, str(tmp_path / "ckpt"))
+    assert spark.streams.active == []
+
+    landing = tmp_path / "pdf_landing"
+    landing.mkdir()
+    (landing / "broken.pdf").write_bytes(b"%PDF-1.4\nnot a real pdf")
+    with pytest.raises(TimeoutError, match="pdf_ingest"):
+        run_pdf_ingest_stream(
+            spark,
+            str(landing),
+            str(tmp_path / "ckpt_pdf"),
+            str(tmp_path / "pdf_out"),
+        )
+    assert spark.streams.active == []
