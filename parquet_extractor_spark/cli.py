@@ -226,10 +226,14 @@ def main(argv: list[str] | None = None) -> int:
         argv = ["parquet", *argv]
     args = build_parser().parse_args(argv)
 
-    from parquet_extractor_spark.session import get_spark
+    from parquet_extractor_spark.session import get_spark, query_scope
 
     spark = get_spark(f"cli-{args.command}")
+    with query_scope(spark):
+        return _run(args, spark)
 
+
+def _run(args: argparse.Namespace, spark) -> int:
     if args.command == "parquet":
         from parquet_extractor_spark.operators.extract import extract_any_parquet
         from parquet_extractor_spark.sinks.markdown import write_files
@@ -307,6 +311,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "export":
+        from parquet_extractor_spark.session import materialize
         from parquet_extractor_spark.sinks.dataset import write_jsonl
         from parquet_extractor_spark.sources.tables import load_table
 
@@ -315,20 +320,16 @@ def main(argv: list[str] | None = None) -> int:
         except (KeyError, ValueError) as exc:
             print(json.dumps({"error": f"unknown table {args.table!r}: {exc}"}))
             return 1
-        docs = docs.persist()
         if args.partition_by and args.partition_by not in docs.columns:
             print(json.dumps({
                 "error": f"table {args.table!r} has no column "
                          f"{args.partition_by!r}; pass --partition-by ''"
             }))
-            docs.unpersist()
             return 1
+        docs = materialize(docs)
         part = [args.partition_by] if args.partition_by else None
-        try:
-            write_jsonl(docs, args.output_dir, partition_by=part)
-            n = docs.count()  # served from the cache, not a re-scan
-        finally:
-            docs.unpersist()
+        write_jsonl(docs, args.output_dir, partition_by=part)
+        n = docs.count()  # served from the cache, not a re-scan
         print(json.dumps({
             "output_dir": args.output_dir,
             "rows": n,

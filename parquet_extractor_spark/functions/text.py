@@ -97,12 +97,14 @@ def char_ngrams(col: Column | str, n: int = 5) -> Column:
 def word_ngrams(tokens: Column, n: int = 3) -> Column:
     """Word n-gram shingles from a token array (``array<string>``),
     joined with a space. Token arrays shorter than ``n`` yield one
-    shingle of all tokens."""
+    shingle of all tokens; an empty array yields none."""
     last = F.greatest(F.size(tokens) - F.lit(n - 1), F.lit(1))
-    return F.transform(
+    grams = F.transform(
         F.sequence(F.lit(1), last),
         lambda i: F.array_join(F.slice(tokens, i, n), " "),
     )
+    empty = F.array().cast("array<string>")
+    return F.when(F.size(tokens) == 0, empty).otherwise(grams)
 
 
 def portable_hash64(col: Column) -> Column:

@@ -37,7 +37,7 @@ from parquet_extractor_spark.constants import (
     MAX_ERRORS,
     MAX_QUERY_ROWS,
 )
-from parquet_extractor_spark.session import release_cached
+from parquet_extractor_spark.session import materialize, query_scope
 
 DEFAULT_PORT = 5000
 
@@ -76,7 +76,9 @@ def submit_job(
     params: dict[str, Any] | None = None,
 ) -> str:
     """Run ``fn(job_id)`` on an InheritableThread under a Spark job
-    group named by the job id. Per-job error capture mirrors
+    group named by the job id, inside one ``query_scope``: the blocks
+    the job cached are released before it reports a terminal status,
+    while sibling jobs run on. Per-job error capture mirrors
     api.py:89-91."""
     job_id = _register_job(job_type, params or {})
 
@@ -88,7 +90,8 @@ def submit_job(
         # happened to finish first, the try arm) AFTER cancel_job set
         # status='cancelled' — only transition while still 'running'.
         try:
-            result = fn(job_id)
+            with query_scope(spark):
+                result = fn(job_id)
             with _jobs_lock:
                 if jobs[job_id]["status"] == "running":
                     jobs[job_id]["status"] = "completed"
@@ -101,19 +104,6 @@ def submit_job(
                 jobs[job_id]["log"].append(traceback.format_exc()[-2000:])
         # no clearJobGroup: the property is thread-local and this
         # worker thread ends here (PySpark 4 removed clearJobGroup).
-        # Long-lived session hygiene: drop cached intermediates the
-        # job left behind (persist + localCheckpoint blocks) — but
-        # ONLY when no sibling job is still running, because
-        # release_cached is session-wide and would hard-invalidate a
-        # concurrent job's checkpointed lineage (session.py WARNING).
-        with _jobs_lock:
-            others_running = any(
-                j["status"] == "running"
-                for jid, j in jobs.items()
-                if jid != job_id
-            )
-        if not others_running:
-            release_cached(spark)
 
     InheritableThread(target=_run).start()
     return job_id
@@ -274,6 +264,13 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
     def _bad_param(exc: ParamError):
         return jsonify({"error": str(exc)}), 400
 
+    def _json_params() -> dict[str, Any]:
+        """The JSON request body: an object, or {} when absent."""
+        params = request.get_json(silent=True)
+        if params is not None and not isinstance(params, dict):
+            raise ParamError("request body must be a JSON object")
+        return params or {}
+
     def _subdir_or_400(raw: str):
         try:
             return resolve_subdir(output_root, raw), None
@@ -351,8 +348,8 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
         from parquet_extractor_spark.plans.explain import formatted_plan
 
         try:
-            df = registry[name](spark, sf_dir)
-            plan = formatted_plan(df)
+            with query_scope(spark):
+                plan = formatted_plan(registry[name](spark, sf_dir))
         except Exception as exc:  # surface builder errors as client errors
             return (
                 jsonify({"error": f"{type(exc).__name__}: {exc}"[:500]}),
@@ -382,7 +379,7 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
         registry = entrymod.queries()
         if name not in registry:
             return jsonify({"error": f"unknown query '{name}'"}), 404
-        params = request.get_json(silent=True) or {}
+        params = _json_params()
         sf_dir = params.get("sf_dir", "/root/testdata/sf0.001")
         limit = count_param(params, "limit", 20, MAX_QUERY_ROWS)
 
@@ -406,7 +403,7 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
 
     @app.post("/api/analyze/corpus")
     def analyze_corpus():
-        params = request.get_json(silent=True) or {}
+        params = _json_params()
         sf_dir = params.get("sf_dir", "/root/testdata/sf0.001")
 
         def _work(job_id: str) -> dict[str, Any]:
@@ -420,7 +417,7 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
 
     @app.post("/api/extract/documents")
     def extract_documents():
-        params = request.get_json(silent=True) or {}
+        params = _json_params()
         sf_dir = params.get("sf_dir", "/root/testdata/sf0.001")
         n = count_param(params, "num_docs", 100, MAX_DOCS)
         seed = int_param(params, "seed", 42)
@@ -476,7 +473,7 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
         """S9 (api.py:193-383): render per-document PDFs from the
         documents table (the wikir→PDF flow, with the table as the
         corpus source)."""
-        params = request.get_json(silent=True) or {}
+        params = _json_params()
         sf_dir = params.get("sf_dir", "/root/testdata/sf0.001")
         limit = count_param(params, "limit", 100, MAX_DOCS)
         out_dir, err = _subdir_or_400(params.get("subdir", "pdf"))
@@ -542,28 +539,23 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
                 name_map = F.create_map(
                     *[F.lit(x) for kv in names.items() for x in kv]
                 )
-                docs = (
-                    read_pdf_docs(spark, tmp)
-                    .withColumn(
+                docs = materialize(
+                    read_pdf_docs(spark, tmp).withColumn(
                         "file_name",
                         F.coalesce(
                             name_map[F.col("file_name")], F.col("file_name")
                         ),
                     )
-                    .persist()
                 )
-                try:
-                    docs.write.mode("overwrite").parquet(out_dir)
-                    ok = docs.where(docs.error.isNull()).count()
-                    bad = docs.where(docs.error.isNotNull()).count()
-                    errors = [
-                        {"file": r.file_name, "error": r.error}
-                        for r in docs.where(docs.error.isNotNull())
-                        .select("file_name", "error")
-                        .collect()
-                    ]
-                finally:
-                    docs.unpersist()
+                docs.write.mode("overwrite").parquet(out_dir)
+                ok = docs.where(docs.error.isNull()).count()
+                bad = docs.where(docs.error.isNotNull()).count()
+                errors = [
+                    {"file": r.file_name, "error": r.error}
+                    for r in docs.where(docs.error.isNotNull())
+                    .select("file_name", "error")
+                    .collect()
+                ]
                 job_log(job_id, f"extracted {ok} PDFs, {bad} errors")
                 return {
                     "output_dir": out_dir,
@@ -621,21 +613,16 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
                 spool_base = F.element_at(
                     F.split(F.col("path"), "/"), -1
                 )
-                recs = (
-                    read_warc_docs(spark, tmp)
-                    .withColumn(
+                recs = materialize(
+                    read_warc_docs(spark, tmp).withColumn(
                         "path",
                         F.coalesce(name_map[spool_base], F.col("path")),
                     )
-                    .persist()
                 )
-                try:
-                    recs.write.mode("overwrite").parquet(out_dir)
-                    ok = recs.where(recs.error.isNull()).count()
-                    bad = recs.where(recs.error.isNotNull()).count()
-                    docs = recs.where(recs.text.isNotNull()).count()
-                finally:
-                    recs.unpersist()
+                recs.write.mode("overwrite").parquet(out_dir)
+                ok = recs.where(recs.error.isNull()).count()
+                bad = recs.where(recs.error.isNotNull()).count()
+                docs = recs.where(recs.text.isNotNull()).count()
                 job_log(
                     job_id,
                     f"parsed {ok} records ({docs} documents), {bad} errors",
@@ -700,7 +687,7 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
         seam comes from create_app's ``wiki_adapters``; without an
         injection and without the live libs installed this returns
         503 instead of launching a doomed job."""
-        params = request.get_json(silent=True) or {}
+        params = _json_params()
         categories = params.get("categories") or WIKI_CRAWL_CATEGORIES
         limit = count_param(params, "limit", 200, MAX_CRAWL_ARTICLES)
         delay_s = seconds_param(params, "delay_s", 1.0)

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from parquet_extractor_spark.functions.text import token_count, tokenize
+from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table, spread
 
 
@@ -909,7 +910,8 @@ def corpus_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(2), F.size("ts")),
+                # NULL (no rows) below two tokens: sequence(2, 0) counts down
+                F.when(F.size("ts") >= 2, F.sequence(F.lit(2), F.size("ts"))),
                 lambda i: F.concat_ws(
                     " ", F.element_at("ts", i - 1), F.element_at("ts", i)
                 ),
@@ -1312,16 +1314,17 @@ def ngram_novelty_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_extractor_spark.functions.text import word_ngrams
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    grams = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(word_ngrams(tokenize("text"), NOVELTY_N))
-        ).alias("gram"),
-        # persist: both the per-doc totals and the first-occurrence
-        # aggregate consume this fan-out; unpersisted, the tokenize +
-        # shingle explode ran twice (r12). Released by the caller's
-        # release_cached.
-    ).persist()
+    # materialize: both the per-doc totals and the first-occurrence
+    # aggregate consume this fan-out; unpersisted, the tokenize +
+    # shingle explode ran twice (r12).
+    grams = materialize(
+        docs.select(
+            "doc_id",
+            F.explode(
+                F.array_distinct(word_ngrams(tokenize("text"), NOVELTY_N))
+            ).alias("gram"),
+        )
+    )
     per_doc_total = grams.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_grams")
     )
@@ -1380,7 +1383,7 @@ WITH toks AS (
 ),
 grams AS (
     SELECT doc_id, unnest(list_distinct(list_transform(
-               range(1, greatest(len(tokens) - {NOVELTY_N - 1}, 1) + 1),
+               range(1, greatest(len(tokens) - {NOVELTY_N - 1}, sign(len(tokens))) + 1),
                i -> array_to_string(tokens[i:i+{NOVELTY_N - 1}], ' '))))
            AS gram
     FROM toks

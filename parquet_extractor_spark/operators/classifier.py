@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from parquet_extractor_spark.functions.text import tokenize
+from parquet_extractor_spark.session import materialize, release
 from parquet_extractor_spark.sources.tables import load_table
 
 LOGREG_ITERS = 3
@@ -110,11 +111,7 @@ def _train(
 def _train_uncached(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple], list[int]]:
-    from pyspark import StorageLevel
-
-    feats = _feature_frame(spark, sf_dir).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    feats = materialize(_feature_frame(spark, sf_dir))
     n_docs = feats.count()
     w = [0] * N_FEATURES  # micro-units
     rows = []
@@ -160,7 +157,7 @@ def _train_uncached(
                 LOGREG_LR * int(stats[f"g{j}"]) / n_docs + 0.5
             )
         rows.append((it, int(stats["loss"]), *w))
-    feats.unpersist()
+    release(feats)
     return rows, w
 
 
@@ -459,10 +456,12 @@ def classifier_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scored frame feeds the percentile cuts, the decile aggregate
     # AND (via by_decile's lineage) the totals — unpersisted, the
     # feature-extraction + logit pipeline executed three times.
-    # Narrow (logit, y) rows; released by release_cached.
-    scores = trained_classifier_scores(spark, sf_dir).select(
-        "logit_micro", F.col("y").cast("bigint").alias("y")
-    ).persist()
+    # Narrow (logit, y) rows.
+    scores = materialize(
+        trained_classifier_scores(spark, sf_dir).select(
+            "logit_micro", F.col("y").cast("bigint").alias("y")
+        )
+    )
     qs = [i / LIFT_DECILES for i in range(1, LIFT_DECILES)]
     cuts = scores.agg(
         *[

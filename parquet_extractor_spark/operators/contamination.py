@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_extractor_spark.functions.text import tokenize, word_ngrams
+from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table, spread
 
 DECONTAM_NGRAM = 4
@@ -51,12 +52,12 @@ def ngram_decontamination(
     ``grams`` lets a caller (decontamination_report) supply an
     already-persisted gram frame instead of rebuilding it."""
     if grams is None:
-        # persist (r13; the r12 multi-reference pattern, guide §5):
+        # materialize (r13; the r12 multi-reference pattern, guide §5):
         # standalone, this frame is referenced THREE times (bench
         # grams, per-doc totals, hit counts) and the tokenize + 4-gram
         # fan-out ran once per reference. decontamination_report
         # already threads its own persisted instance through here.
-        grams = _all_doc_grams(spark, sf_dir).persist()
+        grams = materialize(_all_doc_grams(spark, sf_dir))
     bench = (
         grams.filter((F.col("doc_id") % BENCH_MOD) == 0).select("g").distinct()
     )
@@ -92,7 +93,7 @@ WITH toks AS (
 pos AS (
     SELECT doc_id, tokens,
            unnest(generate_series(
-               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, 1))) AS i
+               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, sign(len(tokens))))) AS i
     FROM toks
 ),
 grams AS (
@@ -319,7 +320,7 @@ WITH toks AS (
 pos AS (
     SELECT doc_id, tokens,
            unnest(generate_series(
-               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, 1))) AS i
+               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, sign(len(tokens))))) AS i
     FROM toks
 ),
 grams AS (
@@ -365,17 +366,12 @@ def decontamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     and fp = flagged_bloom − flagged_exact.
 
     The shared upstream — documents scan + tokenize + 4-gram explode
-    — is built ONCE, persisted (the ngram_jaccard_pairs pattern), and
-    threaded into both tiers via their ``grams`` parameter; without
-    it the explode pipeline ran three times (exact probe, bitset
-    build, Bloom probe). Long-lived drivers release the blocks via
-    session.release_cached between queries.
+    — is built ONCE, materialized (the ngram_jaccard_pairs pattern),
+    and threaded into both tiers via their ``grams`` parameter;
+    without it the explode pipeline ran three times (exact probe,
+    bitset build, Bloom probe).
     """
-    from pyspark import StorageLevel
-
-    grams = _all_doc_grams(spark, sf_dir).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    grams = materialize(_all_doc_grams(spark, sf_dir))
     exact_docs = ngram_decontamination(spark, sf_dir, grams=grams).select(
         "doc_id"
     )
@@ -413,7 +409,7 @@ WITH toks AS (
 pos AS (
     SELECT doc_id, tokens,
            unnest(generate_series(
-               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, 1))) AS i
+               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, sign(len(tokens))))) AS i
     FROM toks
 ),
 grams AS (
@@ -639,7 +635,7 @@ toks AS (
 pos AS (
     SELECT doc_id, source, change_type, tokens,
            unnest(generate_series(
-               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, 1))) AS i
+               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, sign(len(tokens))))) AS i
     FROM toks
 ),
 grams AS (
@@ -656,7 +652,7 @@ btoks AS (
 bpos AS (
     SELECT tokens,
            unnest(generate_series(
-               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, 1))) AS i
+               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, sign(len(tokens))))) AS i
     FROM btoks
 ),
 bench AS (

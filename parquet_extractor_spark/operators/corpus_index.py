@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 from parquet_extractor_spark.functions.windows import bounded_global_window
 
 from parquet_extractor_spark.functions.text import tokenize
+from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table, spread
 
 MIN_TERM_LEN = 4  # stopword-ish guard, same role as textprep's
@@ -66,15 +67,14 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     array is ≤ POSTING_K elements regardless of document frequency.
     Output: (term, n_docs, total_tf, top_postings).
     """
-    # persist: `tf` feeds the per-term stats AND the postings window
-    # (r13; the r12 multi-reference pattern, guide §5) — unpersisted,
-    # the corpus explode + (term, doc) agg executes twice. Postings-
-    # bounded rows; released by the caller's release_cached.
-    tf = (
+    # materialize: `tf` feeds the per-term stats AND the postings
+    # window (r13; the r12 multi-reference pattern, guide §5) —
+    # unpersisted, the corpus explode + (term, doc) agg executes
+    # twice. Postings-bounded rows.
+    tf = materialize(
         _terms(spark, sf_dir)
         .groupBy("term", "doc_id")
         .agg(F.count("*").alias("tf"))
-        .persist()
     )
     stats = tf.groupBy("term").agg(
         F.count("*").alias("n_docs"), F.sum("tf").alias("total_tf")
@@ -147,22 +147,24 @@ def pmi_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.count("*").cast("double"))
         .scalar()
     )
-    capped = docs.select(
-        "doc_id",
-        F.slice(
-            F.array_sort(
-                F.array_distinct(
-                    F.filter(
-                        tokenize("text"),
-                        lambda t: F.length(t) >= MIN_TERM_LEN,
+    capped = materialize(
+        docs.select(
+            "doc_id",
+            F.slice(
+                F.array_sort(
+                    F.array_distinct(
+                        F.filter(
+                            tokenize("text"),
+                            lambda t: F.length(t) >= MIN_TERM_LEN,
+                        )
                     )
-                )
-            ),
-            1,
-            PMI_CAP,
-        ).alias("toks"),
-    ).persist()
-    # ^ persist (r13, guide §5): `capped` feeds the pair fan-out AND
+                ),
+                1,
+                PMI_CAP,
+            ).alias("toks"),
+        )
+    )
+    # ^ materialize (r13, guide §5): `capped` feeds the pair fan-out AND
     # the marginal counts — unpersisted, the tokenize + sort + cap
     # pipeline runs once per reference. PMI_CAP-bounded per doc.
     n = F.size("toks")
@@ -187,11 +189,10 @@ def pmi_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_ab"))
         .filter(F.col("n_ab") >= PMI_MIN_COOC)
     )
-    marg = (
+    marg = materialize(  # joined twice (t1 and t2 sides); |vocab| rows
         capped.select(F.explode("toks").alias("t"))
         .groupBy("t")
         .agg(F.count("*").alias("n_t"))
-        .persist()  # joined twice (t1 and t2 sides); |vocab| rows
     )
     # marg is keyed by the (capped) vocabulary — O(|vocab|) rows. No
     # forced broadcast: at web scale the vocabulary outgrows broadcast

@@ -37,6 +37,7 @@ from parquet_extractor_spark.functions.text import (
     tokenize,
     word_ngrams,
 )
+from parquet_extractor_spark.session import materialize, release
 from parquet_extractor_spark.sources.tables import load_table, spread
 
 # MinHash geometry: 16 hashes in 4 bands of 4 rows — catches
@@ -109,7 +110,7 @@ def _pair_overlap_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_extractor_spark.artifacts import _disabled
     from parquet_extractor_spark.tiers import ensure_tier
 
-    to_unpersist: list[DataFrame] = []
+    to_release: list[DataFrame] = []
 
     def build() -> DataFrame:
         all_sh = _doc_shingles(spark, sf_dir)
@@ -119,15 +120,12 @@ def _pair_overlap_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("df") > MAX_SHINGLE_DF)
             .select("shingle")
         )
-        from pyspark import StorageLevel
-
-        grouped = (
+        grouped = materialize(
             all_sh.join(hot, "shingle", "left_anti")
             .groupBy("shingle")
             .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        to_unpersist.append(grouped)
+        to_release.append(grouped)
         sizes = (
             grouped.select(F.explode("ds").alias("doc_id"))
             .groupBy("doc_id")
@@ -169,17 +167,15 @@ def _pair_overlap_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    try:
-        out = ensure_tier(spark, sf_dir, "pair_overlap", build)
-    finally:
-        # With the tier layer disabled the plan is returned lazily and
-        # the persist must survive for its consumers (the pre-tier
-        # behavior); otherwise the write inside ensure_tier already
-        # materialized it — and a failed build/write must not leak the
-        # MEMORY_AND_DISK postings for the rest of the session.
-        if not _disabled():
-            for df in to_unpersist:
-                df.unpersist()
+    out = ensure_tier(spark, sf_dir, "pair_overlap", build)
+    # With the tier layer disabled the plan is returned lazily and the
+    # postings must survive for its consumers (the pre-tier behavior);
+    # otherwise the write inside ensure_tier already consumed them. A
+    # failed build leaves them to the query scope (or, unscoped, the
+    # release_cached sweep).
+    if not _disabled():
+        for df in to_release:
+            release(df)
     return out
 
 
@@ -251,7 +247,7 @@ WITH toks AS (
 shingled AS (
     SELECT doc_id,
            list_distinct(list_transform(
-               range(1, greatest(len(tokens) - {NGRAM_N - 1}, 1) + 1),
+               range(1, greatest(len(tokens) - {NGRAM_N - 1}, sign(len(tokens))) + 1),
                i -> array_to_string(tokens[i:i+{NGRAM_N - 1}], ' '))) AS shingles
     FROM toks
 ),
@@ -359,7 +355,7 @@ WITH toks AS (
 shingled AS (
     SELECT doc_id,
            list_distinct(list_transform(
-               range(1, greatest(len(tokens) - {NGRAM_N - 1}, 1) + 1),
+               range(1, greatest(len(tokens) - {NGRAM_N - 1}, sign(len(tokens))) + 1),
                i -> array_to_string(tokens[i:i+{NGRAM_N - 1}], ' '))) AS shingles
     FROM toks
 ),
@@ -525,8 +521,8 @@ def cross_source_dedup_candidates(
     # the planner does not recognize the two scans as shareable (no
     # ReusedExchange in the before-plan — r12), so the whole MinHash
     # signature pass ran twice. docs × NUM_BANDS rows of (doc_id,
-    # band, bucket, source); released by the caller's release_cached.
-    buckets = _band_buckets(sig, carry=("source",)).persist()
+    # band, bucket, source).
+    buckets = materialize(_band_buckets(sig, carry=("source",)))
     return (
         band_join(
             buckets,
@@ -719,8 +715,8 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation where EACH round is one distributed join+aggregate and
     only the convergence check (a count) touches the driver. Rounds
     needed = graph diameter (near-dup clusters are shallow; single
-    digits in practice). ``localCheckpoint`` truncates lineage each
-    round so plans don't grow with iteration count — the standard
+    digits in practice). A truncating ``materialize`` cuts the lineage
+    each round so plans don't grow with iteration count — the standard
     guard for iterative DataFrame algorithms. State per round is one
     (doc_id, label) row per document: O(docs), never O(pairs).
     """
@@ -797,25 +793,27 @@ def dedup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered by rank desc then doc_id.
     """
     pairs = _lsh_pairs_tier(spark, sf_dir)
-    # localCheckpoint (eager): the LSH candidate pipeline is the
-    # expensive part, and the unrolled plan below references edges 2x
-    # and deg 3x (plus the n count right here) — without
-    # materialization each reference would re-run the banding
-    # self-join. Same iterative-join guard dedup_components uses.
-    edges = (
+    # Truncated: the PAGERANK_ITERS unrolled rounds below reference
+    # edges 2x and deg 3x each, so the plan grows with the round
+    # count; cutting the lineage keeps every round a join over cached
+    # blocks instead of re-running the LSH banding self-join. Same
+    # iterative-join guard dedup_components uses.
+    edges = materialize(
         pairs.select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        .union(
+        ).union(
             pairs.select(
                 F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
             )
-        )
-        .localCheckpoint()
+        ),
+        truncate=True,
     )
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("degree")
-    ).localCheckpoint()
+    deg = materialize(
+        edges.groupBy(F.col("src").alias("node")).agg(
+            F.count(F.lit(1)).alias("degree")
+        ),
+        truncate=True,
+    )
     n = deg.count()
     if n == 0:
         raise ValueError("pagerank: candidate graph is empty")
@@ -1110,16 +1108,15 @@ def dedup_reduction_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     most once per dataset + code version across every dedup consumer
     (persistent tier store). The two
     per-query intermediates (per_doc token counts, exact survivors)
-    stay persist()ed: per_doc feeds all three stages and the
-    survivor frame feeds two, and both die with this query (released
-    by session.release_cached between queries).
+    are materialized: per_doc feeds all three stages and the
+    survivor frame feeds two, and both die with this query.
     """
-    from pyspark import StorageLevel
-
     docs = load_table(spark, sf_dir, "documents")
-    per_doc = docs.select(
-        "doc_id", F.size(tokenize("text")).cast("bigint").alias("n_tokens")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    per_doc = materialize(
+        docs.select(
+            "doc_id", F.size(tokenize("text")).cast("bigint").alias("n_tokens")
+        )
+    )
     exact_keep = _exact_keep_tier(spark, sf_dir)
     canonical = _components_tier(spark, sf_dir).filter(
         F.col("doc_id") == F.col("component")
@@ -1132,9 +1129,9 @@ def dedup_reduction_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tokens").alias("n_tokens"),
         )
 
-    exact_survivors = per_doc.join(
-        exact_keep, "doc_id", "left_semi"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    exact_survivors = materialize(
+        per_doc.join(exact_keep, "doc_id", "left_semi")
+    )
     raw = stage("1_raw", per_doc)
     exact = stage("2_exact_dedup", exact_survivors)
     near = stage(
@@ -1451,7 +1448,7 @@ WITH toks AS (
 shingled AS (
     SELECT doc_id,
            list_distinct(list_transform(
-               range(1, greatest(len(tokens) - {NGRAM_N - 1}, 1) + 1),
+               range(1, greatest(len(tokens) - {NGRAM_N - 1}, sign(len(tokens))) + 1),
                i -> array_to_string(tokens[i:i+{NGRAM_N - 1}], ' '))) AS shingles
     FROM toks
 ),

@@ -406,7 +406,7 @@ def customer_entity_resolution(
     the blocking key, never O(n²)), connect pairs within edit
     distance CUSTOMER_ER_MAX_DIST, label transitive groups by minimum
     custkey (the dedup_components min-label loop: one join+agg per
-    round, O(nodes) state, localCheckpoint-truncated lineage), and
+    round, O(nodes) state, truncated lineage), and
     reduce each cluster to one golden row.
 
     Emits per cluster: the canonical key/name (minimum member — names

@@ -106,6 +106,7 @@ from parquet_extractor_spark.functions.wav import (  # noqa: E402
     encode_wav,
     is_wav,
 )
+from parquet_extractor_spark.session import materialize  # noqa: E402
 
 MEDIA_SCHEMA = StructType(
     [
@@ -2155,13 +2156,11 @@ def media_neardup_eval(spark, sf_dir: str) -> DataFrame:
     ]
     reports = []
     for name, fn in fams:
-        # localCheckpoint (r13; the r12 multi-reference pattern): the
+        # materialize (r13; the r12 multi-reference pattern): the
         # candidate-pair frame feeds the pair count AND the
         # true-positive semi-join — unmaterialized, each family's
         # banded dedup pipeline ran twice. Fixture-bounded rows.
-        pairs = (
-            fn(spark, "unused").select("id_a", "id_b").localCheckpoint()
-        )
+        pairs = materialize(fn(spark, "unused").select("id_a", "id_b"))
         truth = spark.createDataFrame(
             _planted_pairs(name), "id_a long, id_b long"
         )

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table
 
 _MICRO = 1_000_000
@@ -600,15 +601,15 @@ def lineitem_price_mad_outliers(
     # window AND the deviation join; `dev` feeds the MAD window AND
     # the final aggregate — unpersisted, the fact scan + broadcast
     # join ran three times and the deviation join twice. Narrow
-    # (brand, cents) rows; released by the caller's release_cached.
-    priced = li.join(
-        F.broadcast(part), li.l_partkey == part.p_partkey
-    ).select(
-        "p_brand",
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
-    ).persist()
+    # (brand, cents) rows.
+    priced = materialize(
+        li.join(F.broadcast(part), li.l_partkey == part.p_partkey).select(
+            "p_brand",
+            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
+            .cast("bigint")
+            .alias("cents"),
+        )
+    )
     w = Window.partitionBy("p_brand").orderBy("cents")
     w_b = Window.partitionBy("p_brand")
     med = (
@@ -617,12 +618,14 @@ def lineitem_price_mad_outliers(
         .filter(F.expr("rn = (cnt + 1) div 2"))
         .select("p_brand", F.col("cents").alias("med_cents"))
     )
-    dev = priced.join(F.broadcast(med), "p_brand").select(
-        "p_brand",
-        "cents",
-        "med_cents",
-        F.abs(F.col("cents") - F.col("med_cents")).alias("adev"),
-    ).persist()
+    dev = materialize(
+        priced.join(F.broadcast(med), "p_brand").select(
+            "p_brand",
+            "cents",
+            "med_cents",
+            F.abs(F.col("cents") - F.col("med_cents")).alias("adev"),
+        )
+    )
     w_d = Window.partitionBy("p_brand").orderBy("adev")
     mad = (
         dev.withColumn("rn", F.row_number().over(w_d))

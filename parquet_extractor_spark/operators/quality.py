@@ -20,6 +20,7 @@ from parquet_extractor_spark.functions.text import (
     tokenize,
     word_ngrams,
 )
+from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table, spread
 
 # Tiny per-language stopword lists — n-gram/stopword-heuristic language
@@ -477,7 +478,7 @@ ustat AS (
 ),
 bpos AS (
     SELECT doc_id, tokens,
-           unnest(generate_series(1, greatest(len(tokens) - 1, 1))) AS i
+           unnest(generate_series(1, greatest(len(tokens) - 1, sign(len(tokens))))) AS i
     FROM toks
 ),
 big AS (
@@ -2042,9 +2043,11 @@ def source_quality_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # histogram feeds the score support, the source list AND the grid
     # fill — unpersisted, the corpus scoring pipeline aggregated
     # three times. |sources| × |buckets| rows.
-    hist = scored.groupBy("source", "score").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    ).persist()
+    hist = materialize(
+        scored.groupBy("source", "score").agg(
+            F.count(F.lit(1)).cast("bigint").alias("c")
+        )
+    )
     support = hist.select("score").distinct()
     sources = hist.select("source").distinct()
     grid = support.crossJoin(F.broadcast(sources))

@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 
 from parquet_extractor_spark.functions.windows import bounded_global_window
 
+from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table
 
 
@@ -882,13 +883,11 @@ def part_affinity_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the distinct basket frame feeds FOUR consumers below
     # (total, item, both sides of the pair self-join); unpersisted,
     # each re-ran the lineitem scan + broadcast join + distinct
-    # shuffle (r12). Bounded by orders × brands-per-order; released
-    # by the caller's release_cached between queries.
-    baskets = (
+    # shuffle (r12). Bounded by orders × brands-per-order.
+    baskets = materialize(
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .select("l_orderkey", F.col("p_brand").alias("brand"))
         .distinct()
-        .persist()
     )
     total = baskets.select(
         F.count_distinct("l_orderkey").cast("bigint").alias("total_orders")

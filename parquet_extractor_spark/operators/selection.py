@@ -42,6 +42,7 @@ from parquet_extractor_spark.functions.text import (
     tokenize,
     word_ngrams,
 )
+from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table, spread
 
 # ── DSIR ────────────────────────────────────────────────────────────
@@ -189,19 +190,21 @@ def bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
 
-    # persist both shared frames (r13; the r12 multi-reference
+    # materialize both shared frames (r13; the r12 multi-reference
     # pattern, guide §5): `dl` feeds the corpus stats AND the scoring
     # join, `tf` feeds the per-term df AND the scoring join —
     # unpersisted, each reference re-runs the corpus scan + tokenize
     # (4 tokenize passes for a 2-pass query). dl is (doc_id, len)
-    # rows, tf is query-term hits only; released by release_cached.
-    dl = docs.select(
-        "doc_id", F.size(tokenize("text")).cast("bigint").alias("dl")
-    ).filter(F.col("dl") > 0).persist()
+    # rows, tf is query-term hits only.
+    dl = materialize(
+        docs.select(
+            "doc_id", F.size(tokenize("text")).cast("bigint").alias("dl")
+        ).filter(F.col("dl") > 0)
+    )
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
-    tf = (
+    tf = materialize(
         docs.select(
             "doc_id",
             F.explode(
@@ -210,7 +213,6 @@ def bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
     )
     df_t = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
 
@@ -458,7 +460,7 @@ WITH toks AS (
 spans AS (
     SELECT doc_id,
            list_aggregate(ts[i:i + {SPAN_TOKENS} - 1], 'string_agg', ' ') AS span
-    FROM toks, unnest(range(1, greatest(len(ts) - {SPAN_TOKENS - 1}, 1) + 1))
+    FROM toks, unnest(range(1, greatest(len(ts) - {SPAN_TOKENS - 1}, sign(len(ts))) + 1))
          AS u(i)
 ),
 hashed AS (
@@ -499,14 +501,14 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cutoffs are exact interpolations of integers).
     Output: (doc_id, lang, avg_surprisal_micro, phase 1..4).
     """
-    # persist: the quartile-cutoff aggregate and the phase projection
-    # both consume the scored frame; unpersisted, the whole
+    # materialize: the quartile-cutoff aggregate and the phase
+    # projection both consume the scored frame; unpersisted, the whole
     # lm_bigram_surprisal scoring pipeline ran twice (r12 — the ccnet
     # fix, same upstream). One row per doc.
-    scores = (
-        lm_bigram_surprisal(spark, sf_dir)
-        .select("doc_id", "lang", "avg_surprisal_micro")
-        .persist()
+    scores = materialize(
+        lm_bigram_surprisal(spark, sf_dir).select(
+            "doc_id", "lang", "avg_surprisal_micro"
+        )
     )
     cuts = scores.agg(
         *[
@@ -580,7 +582,11 @@ def span_scrubbed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = docs.select("doc_id", tokenize("text").alias("ts"))
-    occ = (
+    # materialize: the occurrence frame feeds both the duplicate-hash
+    # aggregate and the removal join below; unpersisted, the tokenize
+    # + span fan-out + md5-per-position pipeline ran twice (r12).
+    # Linear in corpus tokens, spills to disk.
+    occ = materialize(
         toks.select(
             "doc_id",
             F.posexplode(word_ngrams(F.col("ts"), SPAN_TOKENS)).alias("p0", "span"),
@@ -591,12 +597,6 @@ def span_scrubbed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             portable_hash64(F.col("span")).alias("span_hash"),
         )
         .withColumn("okey", F.col("doc_id") * F.lit(SPAN_KEY_BASE) + F.col("pos"))
-        # persist: the occurrence frame feeds both the duplicate-hash
-        # aggregate and the removal join below; unpersisted, the
-        # tokenize + span fan-out + md5-per-position pipeline ran
-        # twice (r12). Linear in corpus tokens, spills to disk;
-        # released by the caller's release_cached.
-        .persist()
     )
     dup = (
         occ.groupBy("span_hash")
@@ -646,7 +646,7 @@ occ AS (
            {_PHASH_SQL.format(
                f"list_aggregate(ts[i:i + {SPAN_TOKENS} - 1], 'string_agg', ' ')"
            )} AS span_hash
-    FROM toks, unnest(range(1, greatest(len(ts) - {SPAN_TOKENS - 1}, 1) + 1))
+    FROM toks, unnest(range(1, greatest(len(ts) - {SPAN_TOKENS - 1}, sign(len(ts))) + 1))
          AS u(i)
 ),
 dup AS (
@@ -859,10 +859,8 @@ def surprisal_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quantity is an exact integer fold over it: cb = Σ cnt by bb,
     # n_bigrams = Σ cnt, s_micro = −Σ cnt·lp_micro (identical to the
     # per-row sum — lp_micro is constant within a (bb, pb) group).
-    grp = (
-        bigrams.groupBy("source", "bb", "pb")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
+    grp = materialize(
+        bigrams.groupBy("source", "bb", "pb").agg(F.count(F.lit(1)).alias("cnt"))
     )
     big_counts = grp.groupBy("bb").agg(F.sum("cnt").alias("cb"))
     uni_counts = uni.groupBy("pb").agg(F.count(F.lit(1)).alias("cp"))
@@ -872,10 +870,10 @@ def surprisal_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         * F.lit(1_000_000.0)
     ).cast("bigint")
-    # localCheckpoint the |sources|-row result: the tot/wsum branches
+    # materialize the |sources|-row result: the tot/wsum branches
     # below reference it repeatedly, and each reference re-executed
     # the whole scoring pipeline when it was only lineage.
-    per_src = (
+    per_src = materialize(
         grp.join(F.broadcast(big_counts), "bb")
         .join(F.broadcast(uni_counts), "pb")
         .withColumn("lp_micro", lp_micro)
@@ -889,7 +887,6 @@ def surprisal_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "avg_surprisal_micro", F.expr("s_micro DIV n_bigrams")
         )
-        .localCheckpoint()
     )
     tot = per_src.agg(
         F.sum("s_micro").alias("ts_micro"),
@@ -1083,21 +1080,17 @@ def source_vocab_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     abs_err_micro, k_used) ordered by pair.
     """
     from pyspark.sql.window import Window
-    from pyspark.storagelevel import StorageLevel
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    # persist the distinct bigram vocabulary: the sketch path, the
+    # materialize the distinct bigram vocabulary: the sketch path, the
     # size table and BOTH sides of the exact grading join consume it
     # (4 scans otherwise) — the ngram_jaccard_pairs postings pattern;
-    # bounded by |V_bigram| × |sources|, released by the caller's
-    # release_cached between queries
-    vocab = (
+    # bounded by |V_bigram| × |sources|
+    vocab = materialize(
         docs.select(
             "source",
             F.explode(word_ngrams(tokenize("text"), 2)).alias("tok"),
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ).distinct()
     )
     hashed = vocab.select(
         "source", portable_hash64(F.col("tok")).alias("h")
@@ -1223,7 +1216,7 @@ WITH toks AS (
 vocab AS (
     SELECT DISTINCT source,
            list_aggregate(ts[i:i + 1], 'string_agg', ' ') AS tok
-    FROM toks, unnest(range(1, greatest(len(ts) - 1, 1) + 1)) AS u(i)
+    FROM toks, unnest(range(1, greatest(len(ts) - 1, sign(len(ts))) + 1)) AS u(i)
 ),
 hashed AS (
     SELECT DISTINCT source, {_PHASH_SQL.format('tok')} AS h FROM vocab
@@ -1445,14 +1438,14 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final agg on (lang, bucket).
     Output: (lang, bucket, n_docs, n_bigrams, doc_share) sorted.
     """
-    # persist: the scored frame feeds both the per-language cutoff
+    # materialize: the scored frame feeds both the per-language cutoff
     # aggregate and the bucketing join below; unpersisted, the whole
     # lm_bigram_surprisal scoring pipeline ran twice (r12). One row
-    # per doc; released by the caller's release_cached.
-    scores = (
-        lm_bigram_surprisal(spark, sf_dir)
-        .select("lang", "n_bigrams", "avg_surprisal_micro")
-        .persist()
+    # per doc.
+    scores = materialize(
+        lm_bigram_surprisal(spark, sf_dir).select(
+            "lang", "n_bigrams", "avg_surprisal_micro"
+        )
     )
     cuts = scores.groupBy("lang").agg(
         F.percentile(
@@ -1552,10 +1545,10 @@ def longest_dup_span_pow2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    toks = (
-        spread(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", tokenize("text").alias("toks"))
-        .persist()
+    toks = materialize(
+        spread(load_table(spark, sf_dir, "documents")).select(
+            "doc_id", tokenize("text").alias("toks")
+        )
     )
     # ONE fused pass over all 6 ladder levels (r12): the per-level
     # loop ran explode → hash → count-agg → semi-join per k, and the

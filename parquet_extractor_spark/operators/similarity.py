@@ -45,6 +45,7 @@ from pyspark.sql.window import Window
 
 from parquet_extractor_spark.functions.windows import bounded_global_window
 
+from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table, spread
 
 TOP_K = 5
@@ -725,8 +726,6 @@ def semdedup_verdicts(spark: SparkSession, emb: DataFrame) -> DataFrame:
         .withColumn("c_nrm", _norm(F.col("c_emb")))
     )
 
-    from pyspark import StorageLevel
-
     # repartition before fanning out n×k rows: a freshly-read small
     # parquet table arrives in 1-2 partitions, which would serialize
     # the whole assignment stage on 2 cores (measured 57s vs ~4s at
@@ -748,10 +747,11 @@ def semdedup_verdicts(spark: SparkSession, emb: DataFrame) -> DataFrame:
         / (F.col("nrm") * F.col("c_nrm")),
         9,
     )
-    # persist: the assignment feeds BOTH self-join sides and the final
-    # keep projection — caching evaluates it once instead of three
-    # times, the same shared-subplan persist ngram_jaccard_pairs uses.
-    assigned = (
+    # materialize: the assignment feeds BOTH self-join sides and the
+    # final keep projection — caching evaluates it once instead of
+    # three times, the same shared-subplan persist ngram_jaccard_pairs
+    # uses.
+    assigned = materialize(
         base.crossJoin(F.broadcast(cent))
         .select("vec_id", "embedding", "nrm", "cid", sim.alias("sim"))
         .groupBy("vec_id")
@@ -768,7 +768,6 @@ def semdedup_verdicts(spark: SparkSession, emb: DataFrame) -> DataFrame:
             "nrm",
             (-F.col("m.ncid")).cast("int").alias("cluster"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
     a = assigned.select(
@@ -1349,11 +1348,11 @@ def embedding_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("bigint"),
         lambda acc, v: acc + v,
     )
-    # localCheckpoint: `cent` is referenced by BOTH run halves, so
+    # materialize: `cent` is referenced by BOTH run halves, so
     # unmaterialized the posexplode + two-agg pipeline executes twice
     # (r13; the r12 multi-reference persist pattern, guide §5). The
     # frame is labels × 2 rows.
-    cent = cent.localCheckpoint()
+    cent = materialize(cent)
     a, b = cent.where(F.col("run") == "a"), cent.where(F.col("run") == "b")
     pair = a.alias("a").join(b.alias("b"), "label")
     cos = dot(F.col("a.c"), F.col("b.c")).cast("double") / (
@@ -1379,7 +1378,7 @@ def embedding_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # same double-reference shape as `cent`: labels × 2 rows
-    norms = norms.localCheckpoint()
+    norms = materialize(norms)
     na = norms.where(F.col("run") == "a").select(
         "label", F.col("mn").alias("mean_norm_a_micro")
     )
@@ -3438,7 +3437,7 @@ def ivf_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     production grades on a sampled query set exactly like this
     fixture's N_QUERIES=5)."""
     # Materialize the three tiny tier frames (≤ N_QUERIES × TOP_K rows
-    # each) with localCheckpoint, NOT persist, and not inline:
+    # each) truncated, NOT persisted, and not inline:
     # unmaterialized, the combined report plan embeds the corpus-sized
     # brute pass FOUR times (a hits join and a query-id spine per
     # variant) plus both PQ search plans, whose PQ_M × PQ_K codeword /
@@ -3446,20 +3445,17 @@ def ivf_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-analyze a gigantic tree — r12 measured the composed plan at
     # ~33 s isolated vs ~12 s for its three parts run separately
     # (persist() was worse still: the CacheManager canonicalizes the
-    # giant plan on every subsequent lookup). localCheckpoint truncates
-    # the lineage to a LogicalRDD, so the report is three bounded
-    # equi-joins over ~25-row frames; blocks are released by the
-    # caller's session.release_cached between queries.
-    exact = _exact_l2_topk(spark, sf_dir).localCheckpoint()
+    # giant plan on every subsequent lookup). Truncating cuts the
+    # lineage to a LogicalRDD, so the report is three bounded
+    # equi-joins over ~25-row frames.
+    exact = materialize(_exact_l2_topk(spark, sf_dir), truncate=True)
     out: DataFrame | None = None
     for name, fn in (
         ("bootstrap", ann_ivf_pq),
         ("refined", ann_ivf_pq_refined),
     ):
-        approx = (
-            fn(spark, sf_dir)
-            .select("query_id", "neighbor_id")
-            .localCheckpoint()
+        approx = materialize(
+            fn(spark, sf_dir).select("query_id", "neighbor_id"), truncate=True
         )
         hits = (
             approx.join(exact, ["query_id", "neighbor_id"])

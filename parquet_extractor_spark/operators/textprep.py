@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from parquet_extractor_spark.functions.text import portable_hash64, tokenize
+from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table, spread
 
 CHUNK_TOKENS = 64
@@ -120,8 +121,10 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # executes once per reference — AQE's runtime stage reuse does not
     # cover the two branches because the spread() round-robin exchange
     # canonicalizes differently per subtree instance. Bounded by the
-    # postings count; released by the caller's release_cached.
-    tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf")).persist()
+    # postings count.
+    tf = materialize(
+        terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    )
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
     scored = (
         tf.join(df_, "term")
@@ -423,11 +426,10 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same plan-time-literal hop as kmeans_refine's centroids. At
     100 TB the corpus scan dominates and the 8-round loop still works
     on a table of ~|vocab| rows; per-round state never scales with
-    document count. Only the word table is ``localCheckpoint``-ed
-    (once — blocks released by session.release_cached, like
-    dedup_components'): each round adds ONE codegen replace() to the
-    lineage, so unlike join-iterating algorithms the plan stays flat
-    and re-running k replaces over a vocabulary-sized cached table is
+    document count. Only the word table is materialized, truncated
+    (once, like dedup_components' label rounds): each round adds ONE
+    codegen replace() to the lineage, so unlike join-iterating
+    algorithms the plan stays flat and re-running k replaces over a vocabulary-sized cached table is
     cheaper than a checkpoint job per round (measured: per-round
     checkpoints cost ~15 s flat at ANY sf; lazy rounds run in ~3 s).
 
@@ -466,7 +468,7 @@ def _run_bpe_training(
     kmeans_refine's centroids). Shared by bpe_train_merges (which
     ships the table) and bpe_encode_corpus (which re-enters the
     merges as plan-time literals to segment the corpus)."""
-    words = _bpe_words(spark, sf_dir).localCheckpoint()
+    words = materialize(_bpe_words(spark, sf_dir), truncate=True)
     seq0 = F.concat(
         F.lit("  "),
         F.array_join(

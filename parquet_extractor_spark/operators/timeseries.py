@@ -2505,8 +2505,8 @@ def xmr_control_from_active(active: DataFrame) -> DataFrame:
 
     Callers whose `active` is a leaf the analyzer cannot
     self-join-dedup (the streaming memory sink's MemoryPlan) must
-    break lineage first — run_xmr_control_stream localCheckpoints the
-    drained aggregate (bounded: days × types rows) before calling."""
+    break lineage first — run_xmr_control_stream truncates the drained
+    aggregate (bounded: days × types rows) before calling."""
     grid = (
         active.groupBy("event_type")
         .agg(F.min("day_epoch").alias("d0"), F.max("day_epoch").alias("d1"))

@@ -466,7 +466,7 @@ toks AS (
 shingled AS (
     SELECT side, source, doc_id,
            list_distinct(list_transform(
-               range(1, greatest(len(tokens) - {NGRAM_N - 1}, 1) + 1),
+               range(1, greatest(len(tokens) - {NGRAM_N - 1}, sign(len(tokens))) + 1),
                i -> array_to_string(tokens[i:i+{NGRAM_N - 1}], ' ')))
                AS shingles
     FROM toks

@@ -5,15 +5,32 @@ would ship to a 1000-executor cluster — AQE on (runtime re-planning,
 skew-join splitting, post-shuffle coalescing), Arrow for every
 Python<->JVM hop, and shuffle partitioning left to AQE rather than a
 hard-coded count.
+
+It also owns the session's cached blocks: :func:`materialize` is the
+one caching policy (lazy persist; an eager lineage-truncating
+checkpoint only where cutting the lineage is the point), and
+:func:`query_scope` releases what a query cached when it ends, even
+while other queries share the session. :func:`release_cached` is the
+whole-session sweep for single-tenant drivers.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
+from typing import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# Cached-block bookkeeping for query_scope: the open scopes of each
+# thread, innermost last (each a dict block key -> frame), and how
+# many open scopes, on any thread, hold each block.
+_SCOPES = threading.local()
+_HOLDS: dict[tuple, int] = {}
+_LOCK = threading.Lock()
 
 
 def _local_heap_default() -> str:
@@ -128,33 +145,125 @@ def get_spark(
     return spark
 
 
+def materialize(df: DataFrame, truncate: bool = False) -> DataFrame:
+    """Cache ``df`` for reuse within the current query: the only
+    place in this package that persists or checkpoints a frame.
+
+    Policy. By default the frame is persisted lazily at PySpark's
+    default storage level: a frame that several branches of one plan
+    consume is computed once, by the first action, and an unconsumed
+    frame costs nothing. ``truncate=True`` checkpoints it eagerly
+    instead (one Spark job now) and replaces its lineage with the
+    cached blocks. Truncate only where cutting the lineage is the
+    point: an iterative loop whose plan would otherwise grow each
+    round, a plan so large that re-analysing it dominates, or a view
+    that later code replaces. Reuse alone is never a reason: a
+    truncated frame cannot recompute once its blocks are released (it
+    fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
+
+    Lifetime. Inside :func:`query_scope` the blocks belong to the
+    innermost open scope on this thread and are released when the
+    last scope holding them exits. Outside any scope they live until
+    :func:`release_cached` or LRU eviction.
+    """
+    stack = getattr(_SCOPES, "stack", None)
+    if truncate:
+        df = df.localCheckpoint()
+        if stack:
+            rdd = df._jdf.queryExecution().logical().rdd()
+            _hold(stack[-1], ("rdd", rdd.id()), df)
+        return df
+    if not stack or _hold(stack[-1], ("plan", df.semanticHash()), df):
+        df.persist()
+    return df
+
+
+def _hold(held: dict, key: tuple, df: DataFrame) -> bool:
+    """Count a scope's hold on a block; True when no scope held it yet
+    and ``df`` must be cached now.
+
+    Equal plans share one CacheManager entry, so holds count by plan:
+    a job must not free the entry that a sibling job's already-planned
+    frame still reads (run after the release, that frame rebuilds the
+    cache as an RDD no entry owns)."""
+    with _LOCK:
+        first = key not in _HOLDS
+        if key not in held:
+            _HOLDS[key] = _HOLDS.get(key, 0) + 1
+            held[key] = df
+        return first
+
+
+@contextlib.contextmanager
+def query_scope(spark: SparkSession) -> Iterator[None]:
+    """Release, on exit, every block :func:`materialize` cached inside
+    the block, unless another open scope (a concurrent job on the same
+    session, or an enclosing scope) holds the same block.
+
+    Scopes nest and are per thread. The job service runs each job in
+    one, the CLI each command; a library caller wraps a query and its
+    consumption: ``with query_scope(spark): rows = q(spark,
+    sf_dir).collect()``. Frames returned from the block recompute
+    after it exits, except truncated ones (see :func:`materialize`).
+    """
+    stack = _SCOPES.__dict__.setdefault("stack", [])
+    stack.append({})
+    try:
+        yield
+    finally:
+        for key, df in stack.pop().items():
+            _let_go(spark, key, df)
+
+
+def release(df: DataFrame) -> None:
+    """Free a persisted frame before its scope ends, when the rest of
+    the query no longer reads it (e.g. training data once the model
+    is fitted). Another scope's hold on the same plan keeps it."""
+    stack = getattr(_SCOPES, "stack", None) or []
+    key = ("plan", df.semanticHash())
+    for held in reversed(stack):
+        if key in held:
+            return _let_go(df.sparkSession, key, held.pop(key))
+    if not stack:
+        df.unpersist()
+
+
+def _let_go(spark: SparkSession, key: tuple, df: DataFrame) -> None:
+    with _LOCK:
+        _HOLDS[key] -= 1
+        if _HOLDS[key]:
+            return
+        del _HOLDS[key]
+        if key[0] == "rdd":
+            spark.sparkContext._jsc.sc().unpersistRDD(key[1], False)
+        else:
+            df.unpersist()
+
+
 def release_cached(spark: SparkSession) -> None:
-    """Drop every cached artifact the previous query left behind.
+    """Drop every cached block in the session: a sweep for
+    single-tenant callers only.
 
-    ``spark.catalog.clearCache()`` goes through the CacheManager and
-    unpersists all DataFrame-level ``persist()``/``cache()`` frames;
-    the RDD loop below exists for what the CacheManager does NOT
-    track — RDD-level blocks, i.e. ``localCheckpoint()`` snapshots
-    (dedup.py's iterative label propagation) and any raw RDD persists.
+    ``spark.catalog.clearCache()`` unpersists every CacheManager
+    entry; the RDD loop below frees what the CacheManager does not
+    track: checkpoint blocks, raw RDD persists, and the orphan cache a
+    frame planned against a since-released entry rebuilds when it
+    runs.
 
-    Operators in this package persist shared intermediates for the
-    lifetime of their returned plan (e.g. the grouped postings in
-    ``dedup.ngram_jaccard_pairs``, the per-round label snapshots in
-    ``dedup.dedup_components``) and cannot unpersist them before the
-    caller consumes the DataFrame. Long-lived drivers in this repo —
-    ``bench.py`` between queries, the oracle gate
-    (``tools/check_oracle.py``) between checks, and the job service
-    after each job — call this; a short-lived session can rely on LRU
-    block eviction. Measured effect: without it, ``dedup_canonical``
+    Only a caller that owns the whole session may sweep it: the bench
+    between queries, the oracle gate (``tools/check_oracle.py``)
+    between checks, ``perfbench`` and ``tools/scale_check.py``. It
+    also drops blocks that open :func:`query_scope` blocks still hold,
+    so a concurrent caller (the job service) uses scopes instead.
+    Measured effect of sweeping: without it, ``dedup_canonical``
     degraded 2.6s -> 6.9s by position ~60 of a 140-query sweep (r04
     bench) purely from accumulated blocks.
 
-    WARNING — invalidates prior results, hard: because the RDD loop
-    also drops ``localCheckpoint()`` blocks, a still-referenced
-    DataFrame from a *previous* query whose lineage was truncated by a
-    checkpoint will FAIL on re-execution with "Checkpoint block not
-    found" rather than recompute. Call this only at a boundary where
-    every DataFrame handed out earlier has been fully consumed.
+    WARNING: a still-referenced truncated frame (``materialize(...,
+    truncate=True)``) from an earlier query FAILS on re-execution
+    with "Checkpoint block not found" rather than recomputing. Call
+    this only at a boundary where every DataFrame handed out earlier
+    has been fully consumed.
     """
     import logging
 

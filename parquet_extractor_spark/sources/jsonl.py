@@ -24,6 +24,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from parquet_extractor_spark.session import materialize
+
 CORRUPT_COL = "_corrupt_record"
 
 DOCS_JSONL_SCHEMA = StructType(
@@ -50,12 +52,11 @@ def read_jsonl_docs(
     ``_corrupt_record`` (the column is populated at parse time and
     querying it alone is disallowed on an unpersisted relation).
     """
-    parsed = (
+    parsed = materialize(
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
-        .cache()
     )
     good = (
         parsed.filter(F.col(CORRUPT_COL).isNull())

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from parquet_extractor_spark.operators.quality import quality_columns
+from parquet_extractor_spark.session import materialize, query_scope
 from parquet_extractor_spark.streaming import drain, epoch_sink
 
 MIN_QUALITY = 0.3  # same gate as pipelines.MIN_QUALITY
@@ -579,29 +580,29 @@ def run_novelty_stream(
         tag = f"epoch-{epoch}"
         if any(m.get("tag") == tag for m in snapshots(state_table_dir)):
             return  # replayed epoch: report + state already committed
-        grams = novelty_gram_hashes(batch).persist()
-        n_docs = batch.count()
-        n_grams = grams.count()
-        try:
-            seen = read_snapshot(spark, state_table_dir)
-            novel = grams.join(seen, "gram_hash", "left_anti")
-        except FileNotFoundError:
-            novel = grams
-        novel = novel.persist()
-        n_novel = novel.count()
-        report = spark.createDataFrame(
-            [(n_docs, n_grams, n_novel)],
-            "n_docs BIGINT, batch_grams BIGINT, novel_grams BIGINT",
-        )
-        # report first, tagged state commit last: a crash in between
-        # replays the whole epoch (report overwrite is idempotent); a
-        # commit implies the report already landed
-        report.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
-        commit_snapshot(novel, state_table_dir, mode="append", tag=tag)
-        novel.unpersist()
-        grams.unpersist()
+        # one scope per epoch: its cached blocks go when it commits
+        with query_scope(spark):
+            grams = materialize(novelty_gram_hashes(batch))
+            n_docs = batch.count()
+            n_grams = grams.count()
+            try:
+                seen = read_snapshot(spark, state_table_dir)
+                novel = grams.join(seen, "gram_hash", "left_anti")
+            except FileNotFoundError:
+                novel = grams
+            novel = materialize(novel)
+            n_novel = novel.count()
+            report = spark.createDataFrame(
+                [(n_docs, n_grams, n_novel)],
+                "n_docs BIGINT, batch_grams BIGINT, novel_grams BIGINT",
+            )
+            # report first, tagged state commit last: a crash in between
+            # replays the whole epoch (report overwrite is idempotent); a
+            # commit implies the report already landed
+            report.write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"epoch={epoch}")
+            )
+            commit_snapshot(novel, state_table_dir, mode="append", tag=tag)
 
     drain(stream.writeStream.foreachBatch(_sink), checkpoint_dir, "novelty")
     return spark.read.option("basePath", out_dir).parquet(out_dir)

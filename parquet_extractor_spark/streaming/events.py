@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.streaming import drain
 
 # Physical schema of events.parquet (file streams require an explicit
@@ -469,10 +470,11 @@ def run_xmr_control_stream(
         checkpoint_dir,
         name,
     )
-    # localCheckpoint: the memory-sink view is one physical leaf, so
-    # the helper's grid↔active self-join cannot be attribute-deduped
-    # by the analyzer; checkpointing the (days × types)-bounded
-    # aggregate gives it fresh attributes (and is the natural
-    # stream→batch hand-off point anyway).
-    drained = spark.table(name).localCheckpoint(eager=True)
+    # Truncated: the memory-sink view is one physical leaf, so the
+    # helper's grid↔active self-join cannot be attribute-deduped by
+    # the analyzer; checkpointing the (days × types)-bounded aggregate
+    # gives it fresh attributes. It must be eager: the sink's table
+    # name is fixed, so a later run replaces the view under a lazy
+    # frame.
+    drained = materialize(spark.table(name), truncate=True)
     return xmr_control_from_active(drained)

@@ -299,6 +299,27 @@ def test_malformed_numeric_params_are_rejected(client, route, body):
     assert len(client.get("/api/jobs").get_json()) == n_jobs
 
 
+_JSON_ROUTES = [
+    "/api/query/q1_pricing_summary",
+    "/api/analyze/corpus",
+    "/api/extract/documents",
+    "/api/extract/pdf",
+    "/api/extract/wiki",
+]
+
+
+@pytest.mark.parametrize("body", [[1, 2], "x", 3], ids=["list", "str", "int"])
+@pytest.mark.parametrize("route", _JSON_ROUTES)
+def test_non_object_json_body_is_rejected(client, route, body):
+    """A JSON body that is not an object answers 400, not a 500 from
+    reading parameters off it, and registers no job."""
+    n_jobs = len(client.get("/api/jobs").get_json())
+    resp = client.post(route, json=body)
+    assert resp.status_code == 400, resp.get_data(as_text=True)
+    assert "JSON object" in resp.get_json()["error"]
+    assert len(client.get("/api/jobs").get_json()) == n_jobs
+
+
 def test_explain_endpoint(client):
     out = client.get("/api/explain/q1_pricing_summary").get_json()
     assert out["query"] == "q1_pricing_summary"

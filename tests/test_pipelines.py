@@ -361,12 +361,13 @@ def test_funnel_and_manifest_build_submits_no_spark_job(
 def test_curation_reports_match_oracle_on_degenerate_docs(
     spark, sf_small, tmp_path, monkeypatch
 ):
-    """The fused reports against their DuckDB oracles on degenerate
-    documents: the fixture gains an empty-text doc, an empty-text
-    benchmark doc, and a benchmark doc sharing one 4-gram with a
-    non-benchmark doc, which the arrays_overlap probe must flag. The
-    classifier gate drops every empty doc, so the reports cannot see
-    how the probe treats an empty doc's gram."""
+    """The fused reports and the n-gram queries against their DuckDB
+    oracles on degenerate documents: the fixture gains an empty-text
+    doc, an empty-text benchmark doc, and a benchmark doc sharing one
+    4-gram with a non-benchmark doc, which the arrays_overlap probe
+    must flag. An empty doc has no n-grams, so it shares none with
+    the empty benchmark doc: neither the fused probe nor the
+    standalone decontamination flags it."""
     import os
     import sys
 
@@ -374,7 +375,10 @@ def test_curation_reports_match_oracle_on_degenerate_docs(
     import pyarrow.parquet as pq
 
     from parquet_extractor_spark import tiers
-    from parquet_extractor_spark.operators.contamination import BENCH_MOD
+    from parquet_extractor_spark.operators.contamination import (
+        BENCH_MOD,
+        ngram_decontamination,
+    )
     from parquet_extractor_spark.pipelines import _gate_flags
 
     sys.path.insert(
@@ -412,8 +416,20 @@ def test_curation_reports_match_oracle_on_degenerate_docs(
     try:
         flags = _gate_flags(spark, str(sf)).filter("f_x").collect()
         assert base["doc_id"] in {r.doc_id for r in flags}
+        assert empty_id not in {r.doc_id for r in flags}
+        exact = ngram_decontamination(spark, str(sf)).collect()
+        assert base["doc_id"] in {r.doc_id for r in exact}
+        assert empty_id not in {r.doc_id for r in exact}
         failures = run_gate(
-            only=("curation_funnel", "release_manifest"),
+            only=(
+                "curation_funnel",
+                "release_manifest",
+                "ngram_decontamination",
+                "bloom_decontamination",
+                "decontamination_report",
+                "ngram_novelty_profile",
+                "corpus_novelty_curve",
+            ),
             sf_dir=str(sf),
             spark=spark,
         )

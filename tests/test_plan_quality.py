@@ -381,6 +381,59 @@ def test_stream_drain_protocol_lives_only_in_drain():
     )
 
 
+def test_caching_lives_only_in_materialize():
+    """Every cached frame goes through session.materialize, which owns
+    the storage level, the lazy-persist-or-truncate choice and the
+    registration with the open query scope. A site that persists or
+    checkpoints by hand escapes the scope and holds its blocks until
+    a session-wide sweep, so outside ``materialize`` no package file
+    may mention ``.persist(``, ``.cache(``, ``localCheckpoint(`` or
+    ``StorageLevel`` (docstrings included), and ``materialize`` holds
+    exactly one ``persist`` call and one ``localCheckpoint`` call."""
+    import ast
+    import os
+    import re
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "parquet_extractor_spark",
+    )
+    home = os.path.join(root, "session.py")
+    helper = next(
+        node
+        for node in ast.parse(open(home).read()).body
+        if isinstance(node, ast.FunctionDef) and node.name == "materialize"
+    )
+    called = [
+        n.func.attr
+        for n in ast.walk(helper)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+    ]
+    assert called.count("persist") == 1
+    assert called.count("localCheckpoint") == 1
+
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            for lineno, line in enumerate(open(path), start=1):
+                if not re.search(
+                    r"\.persist\(|\.cache\(|localCheckpoint\(|StorageLevel",
+                    line,
+                ):
+                    continue
+                if path == home and (
+                    helper.lineno <= lineno <= helper.end_lineno
+                ):
+                    continue
+                offenders.append(f"{path}:{lineno}")
+    assert not offenders, (
+        f"cache a frame through session.materialize: {offenders}"
+    )
+
+
 def test_brand_price_rank_assoc_pair_join_is_bucketed(spark, sf_small):
     """The r10 scale contract for the pair generator: the self-join
     must key on (brand, bucket), not brand alone — a brand-only
