@@ -1,56 +1,52 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: every registry query at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 fixture, see SF_DIR), in one SparkSession.
 
-Each query runs SPARK_GRAFT_BENCH_RUNS times (default 3) and reports
-the MEDIAN — bench noise on this host is ±50% across runs (r01
-verdict), so single samples aren't comparable round-to-round.
+One protocol. The bench order is HEADLINE first, then every other
+registry query alphabetically. Each query runs RUNS (3) times through
+a noop sink and reports the MEDIAN; bench noise on a shared host is
+about ±50% across runs, so one sample is not comparable round to
+round. Every sample is kept in the full payload next to the medians.
+Each attempt runs in a cancellable Spark job group with a
+QUERY_TIMEOUT_S wall-clock cap, so one hung plan cannot starve the
+payload. Past BUDGET_S of measured wall the remaining queries drop to
+one run each; past HARD_S they are skipped and listed.
 
-Self-defense against capture truncation (r03-r06: four consecutive
-rounds of driver-side `parsed: null` because the full 176-query JSON
-line is ~5.5 KB and the driver keeps only a ~2 KB stdout tail): the
-FULL payload goes to a tracked file in the repo root —
-BENCH_DRIVER.json for a default run (the per-round driver sweep;
-its committed history is the driver-protocol record), or
-BENCH_LOCAL.json when SPARK_GRAFT_BENCH_CANONICAL=1 marks the
-builder's deliberate warm-store canonical run (r11 verdict item 5:
-the two protocols used to fight over one file) — and stdout's
-LAST line is a size-capped compact payload — same metric/value/unit/
-sf envelope, `queries` trimmed to as many entries (bench order) as
-fit under _COMPACT_LIMIT bytes, with `n`/`omitted` recording the
-trim. Each query attempt runs under a cancellable Spark job group
-with a wall-clock timeout so one hung plan cannot starve the payload.
+Three environment values, nothing else:
 
-Prints a short line then ONE compact JSON line (the parse target):
-  {"metric": "...", "value": N, "n": ...}
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+* ``SPARK_GRAFT_SF_DIR``: the dataset directory.
+* ``SPARK_GRAFT_BENCH_ONLY=a,b``: run only these queries, in bench
+  order. The payload goes to a per-user, per-process temp file, never
+  into the repository.
+* ``SPARK_GRAFT_BENCH_COLD_STORE=1``: disable the persistent
+  artifact/tier store, so every training and tier build is paid
+  inside the timed region. The payload is tagged ``"store": "cold"``;
+  the default is ``"warm"``.
 
-PROTOCOL LABEL (r10 verdict item 2): every payload carries
-``"mode": "inprocess" | "chunked"``. The CANONICAL committed
-protocol is **inprocess** — one JVM sweeping the whole registry,
-which is what the driver's round-to-round trend line measures.
-Chunked runs (SPARK_GRAFT_BENCH_CHUNK=n, fresh-JVM children) are
-side-car diagnostics; their totals are NOT comparable to the trend
-line and the mode field is how a reader tells them apart (r10's
-"441s vs 309s" confusion was two unlabeled protocols in one trend).
-The compact stdout payload also carries ``slowest`` — the ten most
-expensive queries of the run — so driver rounds see the heavy tail
-without reading BENCH_LOCAL.json.
+Any other run writes its full payload to ``BENCH_c{cpus}_{store}.json``
+in the repository root, where ``cpus`` is the session's
+``defaultParallelism``; an 8-core pass and a 32-core pass, or a warm
+and a cold pass, never share a file.
 
-ISOLATION PROTOCOL (the adjudication rule for apparent regressions —
-r08/r09 verdicts accepted it twice): a ~250-query sweep accumulates
-catalog/codegen/GC pressure that inflates IN-SUITE medians up to ~5x
-over a query's true cost (r09: corpus_stats 3.35 s in-suite vs
-0.59 s alone), and driver hosts vary ~1.4-2x uniformly. So before
-bisecting any "regressed" query, re-measure it ALONE on an idle
-host — ``SPARK_GRAFT_BENCH_ONLY=<name> python bench.py`` — and
-compare against its historical band times the host factor (read the
-factor off stable trivial queries in the same sweep). A BENCH_ONLY
-run writes its payload to a temp sidecar, never to the committed
-BENCH_LOCAL.json. In-suite hygiene between queries: release_cached() after
-every query (DataFrame cache + localCheckpoint blocks; r04 measured
-2.6 s -> 6.9 s drift without it) plus a JVM+Python GC breather every
-_GC_EVERY queries (soft-reference/codegen-cache pressure the block
-drops don't touch).
+Stdout ends with two lines: a short summary, then the compact payload
+(the parse target for a caller that keeps only a ~2 KB tail). The
+compact line carries the envelope (metric, value, unit, mode, store,
+cpus, sf), the counts ``n``/``omitted``/errors/skipped, ``slowest``
+(the ten most expensive queries) and the per-query medians of the
+fixed window HEADLINE[:32]. It is never trimmed by size;
+tests/test_bench_harness.py pins its worst case under 1900 bytes.
+
+ISOLATION PROTOCOL (the adjudication rule for apparent regressions):
+a ~250-query sweep accumulates catalog/codegen/GC pressure that
+inflates IN-SUITE medians up to ~5x over a query's true cost (r09:
+corpus_stats 3.35 s in-suite vs 0.59 s alone), and hosts vary
+~1.4-2x uniformly. So before bisecting a "regressed" query, re-measure
+it ALONE on an idle host (``SPARK_GRAFT_BENCH_ONLY=<name> python
+bench.py``) and compare against its historical band times the host
+factor (read the factor off stable trivial queries in the same
+sweep). In-suite hygiene between queries: release_cached() after
+every query (r04 measured 2.6 s -> 6.9 s drift without it) plus a
+JVM+Python GC breather every _GC_EVERY queries (soft-reference and
+codegen-cache pressure that block drops don't touch).
 """
 
 from __future__ import annotations
@@ -59,15 +55,24 @@ import json
 import os
 import statistics
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
+RUNS = 3
 # GC breather cadence (queries between JVM System.gc() calls); a full
 # GC per query would cost more than it saves on a 250-query sweep.
-_GC_EVERY = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_GC_EVERY", "20")))
+_GC_EVERY = 20
+# Wall-clock budget: the caller must always get its JSON line, so past
+# BUDGET_S the remaining queries drop to one run each (still benched,
+# noisier) and past HARD_S they are skipped and listed in the payload.
+BUDGET_S = 540.0
+HARD_S = 900.0
+# Per-attempt cap: >25x the slowest healthy query at sf0.1.
+QUERY_TIMEOUT_S = 120.0
 
 # Legacy curated set (r01-r03), kept for metric continuity: the
 # driver's headline_queries_total compares round-to-round, so the
@@ -217,72 +222,61 @@ def _drain_job_group(spark, group: str, wait_s: float = 30.0) -> bool:
     return False
 
 
-def _bench_set(qs) -> list[str]:
+def _bench_set(qs, only: list[str]) -> list[str]:
     """Registry-complete bench order: curated HEADLINE first, then
-    every remaining registry query alphabetically.
-    SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the run (local iteration);
-    SPARK_GRAFT_BENCH_CURATED=1 runs just the legacy curated set."""
-    out = list(HEADLINE)
-    if not os.environ.get("SPARK_GRAFT_BENCH_CURATED"):
-        out += sorted(k for k in qs if k not in HEADLINE)
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
+    every remaining registry query alphabetically; a non-empty
+    ``only`` keeps just those names, still in bench order."""
+    out = list(HEADLINE) + sorted(k for k in qs if k not in HEADLINE)
     if only:
-        wanted = [w.strip() for w in only.split(",") if w.strip()]
-        out = [n for n in out if n in wanted]
+        out = [n for n in out if n in only]
     return out
 
 
-def _cold_store() -> bool:
-    """SPARK_GRAFT_BENCH_COLD_STORE=1 (r12 verdict item 3): run the
-    whole bench with the persistent artifact/tier store DISABLED, so
-    every query pays its training/tier builds inside the timed region.
-    The payload is tagged "store": "cold" and lands in BENCH_COLD.json
-    — the sidecar number that shows what the warm store is worth;
-    the unlabeled trend line stays the warm-store protocol."""
-    return os.environ.get("SPARK_GRAFT_BENCH_COLD_STORE") == "1"
+def _payload_path(cpus: int, store: str, only: list[str]) -> str:
+    """Where the full payload goes. An ONLY run (isolated re-measure)
+    writes a temp sidecar, never a file in the repository; uid+pid in
+    the name so two users or two concurrent runs never collide on a
+    shared-tmp name and a planted symlink at a predictable path is
+    never followed. Every other run writes one file per
+    (cpus, store)."""
+    if only:
+        return os.path.join(
+            tempfile.gettempdir(),
+            f"spark-graft-bench-only-{os.getuid()}-{os.getpid()}.json",
+        )
+    return os.path.join(REPO, f"BENCH_c{cpus}_{store}.json")
+
+
+def _env() -> tuple[list[str], bool]:
+    """The two run-shaping environment values: the ONLY query list
+    (blank entries dropped) and whether the store is cold. A cold run
+    disables the persistent artifact/tier store for this process."""
+    only = [
+        w.strip()
+        for w in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",")
+        if w.strip()
+    ]
+    cold = os.environ.get("SPARK_GRAFT_BENCH_COLD_STORE") == "1"
+    if cold:
+        os.environ["SPARK_GRAFT_NO_TIER_CACHE"] = "1"
+    return only, cold
 
 
 def main() -> None:
-    if _cold_store():
-        os.environ["SPARK_GRAFT_NO_TIER_CACHE"] = "1"
+    only, cold = _env()
 
     import __spark_entry__ as entrymod
+    from parquet_extractor_spark.session import get_spark, release_cached
+    from parquet_extractor_spark.sources.tables import load_table
 
     qs = entrymod.queries()
-    bench_set = _bench_set(qs)
-
-    # Chunked mode (OPT-IN diagnostic, SPARK_GRAFT_BENCH_CHUNK=n): a
-    # ~250-query sweep in ONE JVM accumulates state that inflates a
-    # handful of late heavy queries up to ~10x over isolation (r10
-    # measured doc_fingerprints 15.9s in-suite vs 1.2s in a fresh
-    # chunk), and the orchestrator runs the set in fresh-JVM child
-    # processes and merges their payloads. It stays OFF by default
-    # because the per-chunk JVM/warmup/tier overhead (~60-120s across
-    # 5 chunks) overflows the driver's hard wall budget and SKIPS
-    # queries — a missing row is worse than an inflated one; the
-    # isolation protocol (header) is the sanctioned adjudication for
-    # individual outliers. Children (and explicit BENCH_ONLY
-    # iteration runs) take the single-session path below.
-    chunk = int(os.environ.get("SPARK_GRAFT_BENCH_CHUNK", "0"))
-    if (
-        chunk > 0
-        and len(bench_set) > chunk
-        and os.environ.get("SPARK_GRAFT_BENCH_CHILD") != "1"
-        and not os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    ):
-        _orchestrate(bench_set, chunk)
-        return
-
-    from parquet_extractor_spark.session import get_spark, release_cached
-
+    bench_set = _bench_set(qs, only)
     spark = get_spark("bench")
 
     # Warm the JVM, codegen, and EVERY table's parquet footers so
     # per-query numbers measure the plans, not session bring-up —
     # otherwise whichever queries run first absorb the one-time costs
     # (count() on parquet is metadata-only, so this stays cheap).
-    from parquet_extractor_spark.sources.tables import load_table
-
     for t in (
         "region nation customer supplier part orders lineitem events "
         "documents embeddings"
@@ -301,21 +295,9 @@ def main() -> None:
         file=sys.stderr,
     )
 
-    # Wall-clock budget: the driver must always get its JSON line, so
-    # past BUDGET_S of measured wall the remaining queries drop to one
-    # run each (still benched, noisier), and past HARD_S they are
-    # skipped and listed in the payload — graceful degradation instead
-    # of a driver-side timeout that records nothing.
-    budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "540"))
-    hard_s = float(os.environ.get("SPARK_GRAFT_BENCH_HARD_S", "900"))
-    # Per-attempt wall-clock cap: one hung plan must not starve the
-    # payload. 120s is >25× the slowest healthy query at sf0.1.
-    query_timeout_s = float(
-        os.environ.get("SPARK_GRAFT_BENCH_QUERY_TIMEOUT_S", "120")
-    )
     bench_t0 = time.time()
-
     timings: dict[str, float] = {}
+    samples_by_query: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
     skipped: list[str] = []
     suspect = False
@@ -323,14 +305,14 @@ def main() -> None:
     for name in bench_set:
         fn = qs[name]
         elapsed = time.time() - bench_t0
-        if elapsed > hard_s:
+        if elapsed > HARD_S:
             skipped.append(name)
             continue
-        runs = 1 if elapsed > budget_s else RUNS
+        runs = 1 if elapsed > BUDGET_S else RUNS
         samples = []
         for _ in range(runs):
             t0 = time.time()
-            res = _attempt(spark, name, fn, SF_DIR, query_timeout_s)
+            res = _attempt(spark, name, fn, SF_DIR, QUERY_TIMEOUT_S)
             if not res.get("ok"):  # error or timeout: drop the query, keep the run
                 errors[name] = res.get("err", "unknown")
                 print(f"# {name}: FAILED {errors[name]}", file=sys.stderr)
@@ -364,13 +346,54 @@ def main() -> None:
             continue
         dt = statistics.median(samples)
         timings[name] = round(dt, 3)
+        samples_by_query[name] = [round(s, 3) for s in samples]
         print(
             f"# {name}: median {dt:.2f}s of "
             f"{[round(s, 2) for s in samples]}",
             file=sys.stderr,
         )
 
-    _emit_payload(timings, errors, skipped, suspect, mode="inprocess")
+    sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
+    try:
+        sf_val = float(sf)
+    except ValueError:
+        sf_val = sf
+    payload = {
+        "metric": "headline_queries_total",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "mode": "inprocess",
+        "store": "cold" if cold else "warm",
+        "cpus": spark.sparkContext.defaultParallelism,
+        "queries": timings,
+        "samples": samples_by_query,
+        "sf": sf_val,
+    }
+    if errors:
+        payload["errors"] = errors
+    if skipped:
+        payload["skipped"] = skipped
+    if suspect:
+        payload["timings_suspect"] = True
+    path = _payload_path(payload["cpus"], payload["store"], only)
+    try:
+        with open(path, "w") as fh:
+            json.dump(payload, fh, indent=1)
+            fh.write("\n")
+    except OSError as exc:
+        print(f"# payload write failed: {exc}", file=sys.stderr)
+    print(
+        json.dumps(
+            {
+                "metric": "headline_queries_total",
+                "value": payload["value"],
+                "n": len(timings),
+                "errors": len(errors),
+                "skipped": len(skipped),
+            }
+        )
+    )
+    print(json.dumps(_compact(payload, os.path.basename(path))))
 
 
 def _warm_trained_artifacts(spark) -> None:
@@ -412,245 +435,24 @@ def _warm_trained_artifacts(spark) -> None:
             print(f"# warm-up {label} skipped: {exc}", file=sys.stderr)
 
 
-def _orchestrate(bench_set: list[str], chunk_size: int) -> None:
-    """Run the bench set in fresh-JVM child processes of
-    ``chunk_size`` queries each and merge their BENCH_LOCAL.json
-    payloads into one (ordered) payload + stdout contract.
-
-    Each child is a plain ``python bench.py`` with
-    SPARK_GRAFT_BENCH_ONLY pinned to its chunk — a brand-new JVM, so
-    codegen/metaspace/listener accumulation resets at every chunk
-    boundary and per-query medians track their isolation values. The
-    global wall budget is threaded through: children receive the
-    REMAINING budget/hard allowance, and once the soft budget is
-    spent later chunks drop to one run per query (same graceful
-    degradation as the single-session path; since r11 the persistent
-    artifact/tier store means children share trained models and tiers
-    instead of rebuilding per chunk).
-
-    Children write their payloads to a TEMP file (threaded through
-    SPARK_GRAFT_BENCH_PAYLOAD, consumed by _child_payload_path), so
-    the git-tracked BENCH_LOCAL.json is only ever written once, at
-    the end, with the merged payload — an orchestrator that dies
-    mid-run leaves the committed artifact untouched (r10 advice)."""
-    import subprocess
-    import tempfile
-
-    budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "540"))
-    hard_s = float(os.environ.get("SPARK_GRAFT_BENCH_HARD_S", "900"))
-    t0 = time.time()
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    skipped: list[str] = []
-    suspect = False
-    chunks = [
-        bench_set[i : i + chunk_size]
-        for i in range(0, len(bench_set), chunk_size)
-    ]
-    child_payload = os.path.join(
-        tempfile.gettempdir(), f"bench-chunk-{os.getpid()}.json"
-    )
-    for idx, chunk in enumerate(chunks):
-        elapsed = time.time() - t0
-        if elapsed > hard_s:
-            skipped += chunk
-            continue
-        env = dict(os.environ)
-        env["SPARK_GRAFT_BENCH_CHILD"] = "1"
-        env["SPARK_GRAFT_BENCH_ONLY"] = ",".join(chunk)
-        env["SPARK_GRAFT_BENCH_PAYLOAD"] = child_payload
-        env["SPARK_GRAFT_BENCH_BUDGET_S"] = str(
-            max(30.0, budget_s - elapsed)
-        )
-        env["SPARK_GRAFT_BENCH_HARD_S"] = str(max(60.0, hard_s - elapsed))
-        if elapsed > budget_s:
-            env["SPARK_GRAFT_BENCH_RUNS"] = "1"
-        print(
-            f"# chunk {idx + 1}/{len(chunks)}: {len(chunk)} queries "
-            f"in a fresh JVM ({elapsed:.0f}s elapsed)",
-            file=sys.stderr,
-        )
-        try:  # a crashed child must not leave a stale payload behind
-            os.remove(child_payload)
-        except OSError:
-            pass
-        try:
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__)],
-                env=env,
-                capture_output=True,
-                text=True,
-                timeout=max(120.0, hard_s - elapsed + 120.0),
-            )
-            sys.stderr.write(proc.stderr)
-        except subprocess.TimeoutExpired:
-            for n in chunk:
-                errors[n] = "chunk subprocess timeout"
-            suspect = True
-            continue
-        try:
-            with open(child_payload) as fh:
-                part = json.load(fh)
-        except (OSError, ValueError):
-            for n in chunk:
-                errors[n] = (
-                    f"chunk produced no payload (rc={proc.returncode})"
-                )
-            continue
-        part_q = part.get("queries", {})
-        timings.update(part_q)
-        errors.update(part.get("errors", {}))
-        skipped += part.get("skipped", [])
-        suspect = suspect or part.get("timings_suspect", False)
-        accounted = (
-            set(part_q) | set(part.get("errors", {}))
-            | set(part.get("skipped", []))
-        )
-        for n in chunk:
-            if n not in accounted:
-                errors[n] = "missing from chunk payload"
-    try:
-        os.remove(child_payload)
-    except OSError:
-        pass
-    # re-impose bench order on the merged timings
-    ordered = {n: timings[n] for n in bench_set if n in timings}
-    _emit_payload(ordered, errors, skipped, suspect, mode="chunked")
-
-
-def _local_json_path() -> str:
-    """Full-payload destination for a top-level run. Two tracked
-    protocols (r11 verdict item 5 — a driver round used to overwrite
-    the canonical warm-host artifact in place):
-
-    * default -> BENCH_DRIVER.json: whatever host/process runs the
-      bench unannounced (the per-round driver sweep) lands here, so
-      its committed history IS the driver-protocol record;
-    * SPARK_GRAFT_BENCH_CANONICAL=1 -> BENCH_LOCAL.json: the
-      builder's deliberate warm-store canonical runs, the trend line
-      SCALE.md adjudicates against.
-    """
-    if _cold_store():
-        name = "BENCH_COLD.json"
-    elif os.environ.get("SPARK_GRAFT_BENCH_CANONICAL") == "1":
-        name = "BENCH_LOCAL.json"
-    else:
-        name = "BENCH_DRIVER.json"
-    return os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), name
-    )
-
-
-def _child_payload_path() -> str:
-    """Where THIS process writes its payload: chunk children get a
-    temp path via SPARK_GRAFT_BENCH_PAYLOAD, and BENCH_ONLY
-    adjudication runs get a temp sidecar — only a full top-level run
-    writes the git-tracked BENCH_LOCAL.json (r10 hygiene: isolated
-    re-measures used to clobber the committed artifact and needed a
-    git checkout afterwards)."""
-    p = os.environ.get("SPARK_GRAFT_BENCH_PAYLOAD")
-    if p:
-        return p
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY"):
-        import tempfile
-
-        try:
-            uid = os.getuid()
-        except AttributeError:
-            uid = 0
-        # uid+pid in the name: two users (or two concurrent
-        # adjudication runs) never collide on a fixed shared-tmp
-        # filename, and a planted symlink at a predictable path is
-        # never followed (r11 advice)
-        return os.path.join(
-            tempfile.gettempdir(),
-            f"spark-graft-bench-only-{uid}-{os.getpid()}.json",
-        )
-    return _local_json_path()
-
-
-def _emit_payload(
-    timings: dict[str, float],
-    errors: dict[str, str],
-    skipped: list[str],
-    suspect: bool,
-    mode: str,
-) -> None:
-    """Write the payload file and print the two stdout lines (short
-    summary + size-capped compact payload, the driver's parse target).
-    Shared by the single-session path and the chunked orchestrator.
-    ``mode`` labels the protocol — "inprocess" (canonical, the
-    driver's trend line) or "chunked" (fresh-JVM diagnostic)."""
-    total = round(sum(timings.values()), 3)
-    sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
-    try:
-        sf_val = float(sf)
-    except ValueError:
-        sf_val = sf
-    payload = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "mode": mode,
-        # "warm" = persistent artifact/tier store enabled (the trend
-        # line); "cold" = SPARK_GRAFT_BENCH_COLD_STORE=1 sidecar, every
-        # training/tier build paid in-region (r12 verdict item 3)
-        "store": "cold" if _cold_store() else "warm",
-        "queries": timings,
-        "sf": sf_val,
-    }
-    if errors:
-        payload["errors"] = errors
-    if skipped:
-        payload["skipped"] = skipped
-    if suspect:
-        payload["timings_suspect"] = True
-    # Self-defense against driver-side capture truncation: persist the
-    # full payload in-repo, print a short summary line, then print the
-    # size-capped compact payload as the LAST stdout line (the
-    # driver's parse target — the full 176-query line was ~5.5 KB and
-    # overflowed its ~2 KB tail buffer in r03-r06).
-    try:
-        with open(_child_payload_path(), "w") as fh:
-            json.dump(payload, fh, indent=1)
-            fh.write("\n")
-    except OSError as exc:
-        print(f"# payload write failed: {exc}", file=sys.stderr)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "n": len(timings),
-                "errors": len(errors),
-                "skipped": len(skipped),
-            }
-        )
-    )
-    print(json.dumps(_compact(payload)))
-
-
-_COMPACT_LIMIT = 1400  # bytes; driver tail buffer observed ~2 KB
-
-
-def _compact(payload: dict) -> dict:
-    """Trim `queries` (bench order, so the curated headline set
-    survives) until the serialized line fits _COMPACT_LIMIT. The
-    envelope keeps the driver contract keys; `n`/`omitted` record the
-    trim; `slowest` carries the ten most expensive queries of the run
-    (the heavy tail the bench-order trim would otherwise hide — r10
-    verdict item 7); full per-query detail lives in
-    BENCH_LOCAL.json."""
+def _compact(payload: dict, full: str) -> dict:
+    """The stdout parse target: the payload envelope, `n`/`omitted`
+    counts, `slowest` (the ten most expensive queries of the run, so
+    the heavy tail outside the window is still seen) and the medians
+    of the window queries that ran. ``full`` names the file holding
+    every query and sample."""
+    queries = payload["queries"]
     out = {
         "metric": payload["metric"],
         "value": payload["value"],
         "unit": payload["unit"],
-        "mode": payload.get("mode", "inprocess"),
-        "store": payload.get("store", "warm"),
+        "mode": "inprocess",
+        "store": payload["store"],
+        "cpus": payload["cpus"],
         "sf": payload["sf"],
-        "n": len(payload["queries"]),
+        "n": len(queries),
         "omitted": 0,
-        "full": os.path.basename(_child_payload_path()),
+        "full": full,
     }
     if "errors" in payload:
         out["errors"] = len(payload["errors"])
@@ -659,16 +461,11 @@ def _compact(payload: dict) -> dict:
     if payload.get("timings_suspect"):
         out["timings_suspect"] = True
     out["slowest"] = dict(
-        sorted(
-            payload["queries"].items(), key=lambda kv: -kv[1]
-        )[:10]
+        sorted(queries.items(), key=lambda kv: -kv[1])[:10]
     )
-    out["queries"] = {}
-    for name, dt in payload["queries"].items():
-        out["queries"][name] = dt
-        if len(json.dumps(out)) > _COMPACT_LIMIT:
-            del out["queries"][name]
-            break
+    # The fixed window: the bench-order HEADLINE prefix through
+    # duplicate_spans.
+    out["queries"] = {n: queries[n] for n in HEADLINE[:32] if n in queries}
     out["omitted"] = out["n"] - len(out["queries"])
     return out
 

@@ -140,12 +140,6 @@ LIMIT 20
 """
 
 
-def tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents + tokens array — shared input for dedup/quality ops."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.withColumn("tokens", tokenize("text"))
-
-
 def source_token_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Source-mix drift: KL divergence of each source's token
     distribution against the corpus-wide distribution — the standard

@@ -129,20 +129,6 @@ def _dot_sql_expr(a: str, b: str) -> str:
     )
 
 
-def _norm_sql_expr(a: str) -> str:
-    """Same fold as _norm."""
-    return (
-        f"sqrt(aggregate({a}, CAST(0.0 AS DOUBLE), "
-        f"(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    )
-
-
-def _cos_lit_sql_expr(a: str, vec: list[float]) -> str:
-    """cosine(col, literal vector) with cosine()'s exact tree."""
-    b = _vec_lit_sql(vec)
-    return f"({_dot_sql_expr(a, b)} / ({_norm_sql_expr(a)} * {_norm_sql_expr(b)}))"
-
-
 def _py_norm(vec: list[float]) -> float:
     """Left-to-right L2 norm in Python floats — bit-identical to the
     JVM/DuckDB fold (IEEE doubles, same order, sqrt correctly

@@ -1,190 +1,180 @@
 """Unit tests for bench.py's harness logic that must not depend on a
-SparkSession: the compact-payload trimmer and the chunked
-orchestrator's merge/accounting (children mocked — no JVMs)."""
+SparkSession: the compact payload, the payload-path rule, the bench
+order and the environment values the harness reads."""
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import __spark_entry__
 import bench
+
+# A caller that keeps only a 2000-char stdout tail must still parse the
+# whole compact line, with room for the summary line's end.
+TAIL_LIMIT = 1900
+# The compact line's fixed query window.
+WINDOW = bench.HEADLINE[:32]
+
+
+def _payload(queries: dict, **extra) -> dict:
+    return {
+        "metric": "headline_queries_total",
+        "value": round(sum(queries.values()), 3),
+        "unit": "sec",
+        "mode": "inprocess",
+        "store": "warm",
+        "cpus": 32,
+        "queries": queries,
+        "sf": 0.1,
+        **extra,
+    }
 
 
 def test_compact_payload_fits_limit_and_records_trim():
-    queries = {f"q{i:03d}": 1.234 for i in range(400)}
-    payload = {
-        "metric": "headline_queries_total",
-        "value": 493.6,
-        "unit": "sec",
-        "mode": "inprocess",
-        "queries": queries,
-        "sf": 0.1,
-    }
-    out = bench._compact(payload)
-    assert len(json.dumps(out)) <= bench._COMPACT_LIMIT
+    queries = {n: 1.234 for n in bench.HEADLINE}
+    queries.update({f"q{i:03d}": 1.234 for i in range(400 - len(queries))})
+    out = bench._compact(_payload(queries), "BENCH_c32_warm.json")
+    assert len(json.dumps(out)) <= TAIL_LIMIT
     assert out["n"] == 400
-    assert out["omitted"] == 400 - len(out["queries"])
-    assert out["omitted"] > 0
+    # the window is carried whole, in bench order; `omitted` counts
+    # the rest, which stays in the full payload
+    assert list(out["queries"]) == WINDOW
+    assert out["omitted"] == 400 - len(WINDOW)
     assert out["mode"] == "inprocess"
-    # bench order preserved: the surviving entries are the head
-    assert list(out["queries"]) == list(queries)[: len(out["queries"])]
+    assert out["full"] == "BENCH_c32_warm.json"
 
 
 def test_compact_payload_carries_heavy_tail():
-    """The ten most expensive queries must reach the driver even when
-    the bench-order trim would drop them (r10 verdict item 7)."""
+    """The ten most expensive queries reach the caller even when they
+    are outside the window (r10 verdict item 7)."""
     queries = {f"q{i:03d}": 0.5 for i in range(400)}
     queries["q399"] = 99.9  # dead last in bench order
     queries["q250"] = 42.0
-    payload = {
-        "metric": "headline_queries_total",
-        "value": 341.4,
-        "unit": "sec",
-        "mode": "inprocess",
-        "queries": queries,
-        "sf": 0.1,
-    }
-    out = bench._compact(payload)
-    assert len(json.dumps(out)) <= bench._COMPACT_LIMIT
+    out = bench._compact(_payload(queries), "BENCH_c32_warm.json")
+    assert len(json.dumps(out)) <= TAIL_LIMIT
     assert list(out["slowest"])[:2] == ["q399", "q250"]
     assert len(out["slowest"]) == 10
     assert out["slowest"]["q399"] == 99.9
 
 
-def test_orchestrator_merges_chunk_payloads(monkeypatch, tmp_path, capsys):
-    """Each mocked child writes its chunk's payload to the TEMP path
-    the orchestrator hands it (SPARK_GRAFT_BENCH_PAYLOAD — never the
-    git-tracked BENCH_LOCAL.json, r10 advice); the orchestrator must
-    merge timings in bench order, propagate errors/skips, flag chunk
-    members missing from a child payload instead of silently dropping
-    them, and label the merged payload mode=chunked."""
-    local = tmp_path / "BENCH_LOCAL.json"
-    monkeypatch.setattr(bench, "_local_json_path", lambda: str(local))
-
-    bench_set = [f"q{i}" for i in range(6)]
-    calls = []
-    child_paths = []
-
-    class FakeProc:
-        returncode = 0
-        stderr = ""
-
-    def fake_run(cmd, env=None, capture_output=True, text=True, timeout=0):
-        chunk = env["SPARK_GRAFT_BENCH_ONLY"].split(",")
-        calls.append(chunk)
-        child_paths.append(env["SPARK_GRAFT_BENCH_PAYLOAD"])
-        # the committed artifact must not exist mid-run (children
-        # never touch it; the orchestrator writes it once at the end)
-        assert not local.exists()
-        part = {
-            "queries": {n: 1.0 for n in chunk if n != "q4"},
-            "sf": 0.1,
-            "mode": "inprocess",
-        }
-        if "q4" in chunk:
-            part["errors"] = {"q4": "boom"}
-        with open(env["SPARK_GRAFT_BENCH_PAYLOAD"], "w") as fh:
-            json.dump(part, fh)
-        return FakeProc()
-
-    import subprocess
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-
-    bench._orchestrate(bench_set, chunk_size=3)
-    captured = capsys.readouterr()
-    payload = json.loads(open(local).read())
-    assert calls == [bench_set[:3], bench_set[3:]]
-    assert all(p != str(local) for p in child_paths)
-    assert list(payload["queries"]) == ["q0", "q1", "q2", "q3", "q5"]
-    assert payload["errors"] == {"q4": "boom"}
-    assert payload["mode"] == "chunked"
-    assert "skipped" not in payload
-    # the child temp payload is cleaned up after the merge
-    assert not os.path.exists(child_paths[0])
-    last = captured.out.strip().splitlines()[-1]
-    compact = json.loads(last)
-    assert compact["n"] == 5 and compact["errors"] == 1
-    assert compact["mode"] == "chunked"
+def test_compact_worst_case_fits_tail_and_keeps_whole_window():
+    """Widest envelope the registry can produce: every query at
+    999.999 s, a cold store, 3-digit error and skip counts, a suspect
+    flag, the ten longest registry names in `slowest` and the longest
+    file name. The line must still fit the tail and carry all 32
+    window names, duplicate_spans (the 32nd) included."""
+    registry = __spark_entry__.queries()
+    longest = sorted(registry, key=len)[-10:]
+    order = bench._bench_set(registry, [])
+    queries = {n: 999.999 for n in order}
+    for n in longest:
+        queries[n] = 1000.0  # strictly slowest
+    payload = _payload(
+        queries,
+        store="cold",
+        errors={f"e{i}": "x" for i in range(999)},
+        skipped=[f"s{i}" for i in range(999)],
+        timings_suspect=True,
+    )
+    full = os.path.basename(bench._payload_path(32, "cold", ["x"]))
+    line = json.dumps(bench._compact(payload, full))
+    assert len(line) <= TAIL_LIMIT, len(line)
+    out = json.loads(line)
+    assert list(out["queries"]) == WINDOW
+    assert WINDOW[-1] == "duplicate_spans"
+    assert set(out["slowest"]) == set(longest)
+    assert out["store"] == "cold" and out["errors"] == 999
 
 
-def test_orchestrator_flags_missing_and_stale_payload(
-    monkeypatch, tmp_path, capsys
-):
-    """A child that crashes before writing a payload must surface
-    every chunk member as an error (the pre-launch payload delete
-    prevents a stale read) — and a PRE-EXISTING committed
-    BENCH_LOCAL.json survives untouched until the final merge write
-    (r10 advice: a dead orchestrator must not leave it deleted)."""
-    local = tmp_path / "BENCH_LOCAL.json"
-    monkeypatch.setattr(bench, "_local_json_path", lambda: str(local))
-    # committed artifact from some previous run
-    with open(local, "w") as fh:
-        json.dump({"queries": {"zz": 9.9}}, fh)
-
-    class FakeProc:
-        returncode = 1
-        stderr = ""
-
-    def fake_run(cmd, env=None, capture_output=True, text=True, timeout=0):
-        # mid-run, the previous committed artifact is still intact
-        assert json.loads(open(local).read())["queries"] == {"zz": 9.9}
-        return FakeProc()  # writes nothing
-
-    import subprocess
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-    bench._orchestrate(["a", "b"], chunk_size=2)
-    capsys.readouterr()
-    payload = json.loads(open(local).read())
-    assert payload["queries"] == {}
-    assert set(payload["errors"]) == {"a", "b"}
-    assert "stale" not in json.dumps(payload)
-
-
-def test_child_payload_path_env_routing(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_PAYLOAD", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_ONLY", raising=False)
-    assert bench._child_payload_path() == bench._local_json_path()
-    # BENCH_ONLY adjudication runs must not clobber the committed
-    # artifact: payload goes to a temp sidecar
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY", "corpus_stats")
-    assert bench._child_payload_path() != bench._local_json_path()
-    # an explicit payload path (chunk children) wins over both
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_PAYLOAD", "/tmp/x.json")
-    assert bench._child_payload_path() == "/tmp/x.json"
+def test_payload_path_one_file_per_cpus_and_store():
+    repo = os.path.dirname(os.path.abspath(bench.__file__))
+    paths = {
+        bench._payload_path(cpus, store, [])
+        for cpus in (8, 32)
+        for store in ("warm", "cold")
+    }
+    assert len(paths) == 4
+    assert bench._payload_path(8, "cold", []) == os.path.join(
+        repo, "BENCH_c8_cold.json"
+    )
+    # an isolated re-measure never writes into the repository
+    only = bench._payload_path(32, "warm", ["corpus_stats"])
+    assert os.path.dirname(only) != repo
+    assert not only.startswith(repo + os.sep)
 
 
 def test_cold_store_mode_routes_and_tags(monkeypatch):
-    """SPARK_GRAFT_BENCH_COLD_STORE=1 (r13): payloads go to
-    BENCH_COLD.json, carry "store": "cold", and the compact line
-    preserves the tag; default runs stay "warm" in BENCH_DRIVER.json."""
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_CANONICAL", raising=False)
+    """SPARK_GRAFT_BENCH_COLD_STORE=1 gives a cold run and disables the
+    persistent store; SPARK_GRAFT_BENCH_ONLY is split on commas with
+    blanks dropped."""
+    # registered so teardown removes what _env sets
+    monkeypatch.setenv("SPARK_GRAFT_NO_TIER_CACHE", "")
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_ONLY", raising=False)
     monkeypatch.delenv("SPARK_GRAFT_BENCH_COLD_STORE", raising=False)
-    assert bench._local_json_path().endswith("BENCH_DRIVER.json")
-    assert not bench._cold_store()
+    assert bench._env() == ([], False)
+    assert os.environ["SPARK_GRAFT_NO_TIER_CACHE"] == ""
 
     monkeypatch.setenv("SPARK_GRAFT_BENCH_COLD_STORE", "1")
-    assert bench._cold_store()
-    assert bench._local_json_path().endswith("BENCH_COLD.json")
-    # cold beats canonical when both are set
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_CANONICAL", "1")
-    assert bench._local_json_path().endswith("BENCH_COLD.json")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY", " a, ,b")
+    assert bench._env() == (["a", "b"], True)
+    assert os.environ["SPARK_GRAFT_NO_TIER_CACHE"] == "1"
 
-    payload = {
-        "metric": "headline_queries_total",
-        "value": 1.0,
-        "unit": "sec",
-        "mode": "inprocess",
-        "store": "cold",
-        "queries": {"q": 1.0},
-        "sf": 0.1,
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_COLD_STORE", "0")
+    monkeypatch.setenv("SPARK_GRAFT_NO_TIER_CACHE", "")
+    assert bench._env() == (["a", "b"], False)
+    assert os.environ["SPARK_GRAFT_NO_TIER_CACHE"] == ""
+
+
+def test_bench_order_headline_then_sorted_registry():
+    registry = __spark_entry__.queries()
+    order = bench._bench_set(registry, [])
+    assert order[: len(bench.HEADLINE)] == bench.HEADLINE
+    rest = order[len(bench.HEADLINE) :]
+    assert rest == sorted(set(registry) - set(bench.HEADLINE))
+    assert set(order) == set(registry)
+    # ONLY keeps bench order, not the order it was given in
+    only = ["zipf_token_stats", "duplicate_spans", "corpus_stats"]
+    assert bench._bench_set(registry, only) == [
+        "corpus_stats",
+        "duplicate_spans",
+        "zipf_token_stats",
+    ]
+
+
+def test_bench_reads_only_three_env_values():
+    """Every environment value bench.py reads is one of the three its
+    header documents; the harness has no other knob."""
+    src = open(bench.__file__).read()
+    read: set[str] = set()
+    for node in ast.walk(ast.parse(src)):
+        key = None
+        if isinstance(node, ast.Call):
+            f = node.func
+            if (
+                isinstance(f, ast.Attribute)
+                and f.attr in ("get", "getenv", "pop")
+                and ast.unparse(f.value) in ("os.environ", "os")
+            ):
+                key = node.args[0]
+        elif (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.ctx, ast.Load)
+            and ast.unparse(node.value) == "os.environ"
+        ):
+            key = node.slice
+        if key is not None:
+            assert isinstance(key, ast.Constant), ast.unparse(node)
+            read.add(key.value)
+    assert read == {
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_BENCH_ONLY",
+        "SPARK_GRAFT_BENCH_COLD_STORE",
     }
-    out = bench._compact(payload)
-    assert out["store"] == "cold"
 
 
 def test_ab_bench_gain_rule():

@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 
 from parquet_extractor_spark.functions.text import (
     char_ngrams,
+    coalesce_content,
     portable_hash64,
     sanitize_filename,
     token_count,
@@ -48,6 +49,16 @@ def test_zero_pad(spark):
     assert _one(spark, zero_pad(F.lit(7))) == "0007"
     # zfill parity: wider values are NOT truncated (unlike bare lpad)
     assert _one(spark, zero_pad(F.lit(12345))) == "12345"
+
+
+def test_coalesce_content_first_non_empty_wins(spark):
+    # api.py:290-293 then api.py:311-319: "" and NULL both count as
+    # absent; the first present field wins, else the fixed fallback
+    null = F.lit(None).cast("string")
+    got = _one(spark, coalesce_content(F.lit(""), null, F.lit("body"), F.lit("x")))
+    assert got == "body"
+    got = _one(spark, coalesce_content(null, F.lit("")))
+    assert got == "No content available"
 
 
 def test_char_ngrams_short_string(spark):

@@ -1,11 +1,13 @@
-"""A/B the per-change benchmark: a parent revision against this checkout.
+"""A/B the per-change benchmark: a parent revision against ``HEAD``.
 
 Usage: python tools/ab_bench.py --parent <rev> --workload <w> --pairs N
            [--first-seed K] [--log runs.jsonl]
 
-Exports the committed files of ``<rev>`` into a temporary directory
-(``git archive``, so nothing is registered in this repository and an
-interrupted run leaves no worktree behind), then runs
+Exports the committed files of ``<rev>`` and of ``HEAD`` into a
+temporary directory (``git archive``, so nothing is registered in this
+repository, an interrupted run leaves no worktree behind, and
+uncommitted edits in this checkout never reach either side; commit
+first), reads ``BENCHMARK.json`` from the parent's export, then runs
 ``perfbench/run.py --workload <w> --seed <s> --trace 0`` for the
 ``run_seconds`` of ``BENCHMARK.json``, once on each side per pair,
 seeds K..K+N-1, alternating which side goes first. Each pair's end-to-end metrics and check status are
@@ -106,17 +108,18 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--log", help="append every run's records to this JSONL file")
     args = ap.parse_args(argv)
 
-    with open(os.path.join(REPO, "BENCHMARK.json")) as fh:
-        spec = json.load(fh)
-    seconds = spec["run_seconds"]
-    metrics = spec["end_to_end"]
     runs: dict[str, list[dict]] = {"parent": [], "change": []}
     tmp = tempfile.mkdtemp(prefix="ab_bench_")
     try:
-        parent_root = os.path.join(tmp, "parent")
-        os.makedirs(parent_root)
-        export_rev(args.parent, parent_root)
-        roots = {"parent": parent_root, "change": REPO}
+        roots = {}
+        for side, rev in (("parent", args.parent), ("change", "HEAD")):
+            roots[side] = os.path.join(tmp, side)
+            os.makedirs(roots[side])
+            export_rev(rev, roots[side])
+        with open(os.path.join(roots["parent"], "BENCHMARK.json")) as fh:
+            spec = json.load(fh)
+        seconds = spec["run_seconds"]
+        metrics = spec["end_to_end"]
         for i in range(args.pairs):
             seed = args.first_seed + i
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
