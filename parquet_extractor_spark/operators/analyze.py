@@ -17,7 +17,7 @@ from pyspark.sql.window import Window
 
 from parquet_extractor_spark.functions.text import token_count, tokenize
 from parquet_extractor_spark.session import materialize
-from parquet_extractor_spark.sources.tables import load_table, spread
+from parquet_extractor_spark.sources.tables import load_table, local_frame, spread
 
 
 def doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1023,7 +1023,8 @@ def parquet_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         (t, os.path.join(sf_dir, f"{t}.parquet"), k)
         for t, k in sorted(FOOTER_KEYS.items())
     ]
-    files = spark.createDataFrame(
+    files = local_frame(
+        spark,
         rows, "table_name string, path string, key string"
     ).repartition(len(rows))
 

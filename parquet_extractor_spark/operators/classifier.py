@@ -46,7 +46,7 @@ from pyspark.sql.window import Window
 
 from parquet_extractor_spark.functions.text import tokenize
 from parquet_extractor_spark.session import materialize, release
-from parquet_extractor_spark.sources.tables import load_table
+from parquet_extractor_spark.sources.tables import load_table, local_frame
 
 LOGREG_ITERS = 3
 LOGREG_LR = 2.0
@@ -169,7 +169,8 @@ def train_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns are the POST-update values the next epoch runs with.
     """
     rows, _w = _train(spark, sf_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "iteration int, loss_micro bigint, w0_micro bigint, "
         "w1_micro bigint, w2_micro bigint, w3_micro bigint",

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from parquet_extractor_spark.sources.tables import local_frame
+
 
 def _host(col: str = "target_uri") -> F.Column:
     # try_parse_url, not parse_url: a crawl always contains junk URIs
@@ -201,7 +203,7 @@ def canonical_url(col: F.Column) -> F.Column:
 # ── planted canonicalization fixture ─────────────────────────────────
 #
 # Spelled once as Python literals and shared by BOTH the Spark query
-# (createDataFrame) and the DuckDB oracle (a generated VALUES clause),
+# (local_frame) and the DuckDB oracle (a generated VALUES clause),
 # so the fixture cannot drift between engines; only the
 # TRANSFORMATION is implemented twice, which is exactly what the
 # driver's hash compare should grade. Groups (by intended canonical):
@@ -256,7 +258,8 @@ def url_canonical_dedup(spark, sf_dir: str) -> DataFrame:
     hash aggregate keyed by canonical URL — partitions bounded by one
     page's capture history, never a global sort."""
     del sf_dir
-    raw = spark.createDataFrame(
+    raw = local_frame(
+        spark,
         URL_FIXTURE_ROWS, "capture_id bigint, uri string, warc_date string"
     )
     canon = raw.withColumn("canonical_url", canonical_url(F.col("uri")))
@@ -419,11 +422,12 @@ def crawl_politeness_audit(spark, sf_dir: str) -> DataFrame:
     100 TB the rule table is per-domain metadata that always
     broadcasts, and nothing shuffles except the per-host reduction."""
     del sf_dir
-    fetches = spark.createDataFrame(
+    fetches = local_frame(
+        spark,
         POLITENESS_FETCH_ROWS,
         "fetch_id bigint, host string, path string, ts_ms bigint",
     )
-    rules = spark.createDataFrame(ROBOTS_RULES, "r_host string, prefix string")
+    rules = local_frame(spark, ROBOTS_RULES, "r_host string, prefix string")
     w = Window.partitionBy("host").orderBy("ts_ms", "fetch_id")
     gaps = fetches.withColumn(
         "gap_ms", F.col("ts_ms") - F.lag("ts_ms").over(w)
@@ -597,7 +601,8 @@ def robots_rules_parsed(spark, sf_dir: str) -> DataFrame:
     """Oracle-paired registry face of ``parse_robots`` over the
     planted robots.txt fixture. ``sf_dir`` unused: planted fixture."""
     del sf_dir
-    robots = spark.createDataFrame(
+    robots = local_frame(
+        spark,
         ROBOTS_FIXTURE_ROWS, "host string, body string"
     )
     return parse_robots(robots).orderBy("host", "rule_type", "value")
@@ -666,11 +671,13 @@ def robots_compliance_audit(spark, sf_dir: str) -> DataFrame:
     prepended — the parse output is per-host metadata, KB-scale, and
     broadcast; the fetch log is scanned once."""
     del sf_dir
-    fetches = spark.createDataFrame(
+    fetches = local_frame(
+        spark,
         POLITENESS_FETCH_ROWS,
         "fetch_id bigint, host string, path string, ts_ms bigint",
     )
-    robots = spark.createDataFrame(
+    robots = local_frame(
+        spark,
         ROBOTS_FIXTURE_ROWS, "host string, body string"
     )
     rules = parse_robots(robots)

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from parquet_extractor_spark.functions.text import char_ngrams, tokenize
-from parquet_extractor_spark.sources.tables import load_table
+from parquet_extractor_spark.sources.tables import load_table, local_frame
 
 ER_JACCARD_T = 0.45
 ER_JACCARD_T_MICRO = 450_000
@@ -84,7 +84,8 @@ ENTITY_ROWS: list[tuple] = [
 
 
 def _entity_records(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         ENTITY_ROWS, schema="rec_id BIGINT, name STRING, city STRING"
     )
 

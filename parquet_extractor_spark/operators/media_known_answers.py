@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from parquet_extractor_spark.sources.tables import local_frame
+
 
 def _md5_int(b: bytes) -> int:
     return int(hashlib.md5(b).hexdigest()[:15], 16)
@@ -482,7 +484,7 @@ def media_known_answer_probes(spark, sf_dir: str) -> DataFrame:
         ]
     )
     rows = [(pid, name, data) for pid, name, data, _, _ in PROBES]
-    df = spark.createDataFrame(rows, schema)
+    df = local_frame(spark, rows, schema)
 
     def _run(batches):
         import pandas as pd

@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from parquet_extractor_spark.sources.tables import local_frame
+
 
 def _md5_int(b: bytes) -> int:
     return int(hashlib.md5(b).hexdigest()[:15], 16)
@@ -1032,7 +1034,7 @@ def media_known_answer_probes_deep(spark, sf_dir: str) -> DataFrame:
         ]
     )
     rows = [(pid, name, data) for pid, name, data, _, _ in DEEP_PROBES]
-    df = spark.createDataFrame(rows, schema)
+    df = local_frame(spark, rows, schema)
 
     def _run(batches):
         import pandas as pd

@@ -48,6 +48,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from parquet_extractor_spark.sources.tables import local_frame
+
 
 def _wav_bytes(
     tag: int,
@@ -244,7 +246,7 @@ def media_malformed_probes(spark, sf_dir: str) -> DataFrame:
             StructField("data", BinaryType(), False),
         ]
     )
-    df = spark.createDataFrame(_build_probes(), schema)
+    df = local_frame(spark, _build_probes(), schema)
 
     def _run(batches):
         import pandas as pd

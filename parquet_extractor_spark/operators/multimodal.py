@@ -107,6 +107,7 @@ from parquet_extractor_spark.functions.wav import (  # noqa: E402
     is_wav,
 )
 from parquet_extractor_spark.session import materialize  # noqa: E402
+from parquet_extractor_spark.sources.tables import local_frame  # noqa: E402
 
 MEDIA_SCHEMA = StructType(
     [
@@ -400,7 +401,7 @@ def synthetic_animated_gifs(spark) -> DataFrame:
         (media_id, "image", "image/gif", None, None, None, data)
         for media_id, data in synthetic_animated_gif_rows()
     ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    return local_frame(spark, rows, MEDIA_SCHEMA).repartition(4, "media_id")
 
 
 def synthetic_apng_rows(n: int = 8, seed: int = 47) -> list[tuple]:
@@ -440,7 +441,7 @@ def synthetic_apngs(spark) -> DataFrame:
         (media_id, "image", "image/apng", None, None, None, data)
         for media_id, data in synthetic_apng_rows()
     ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    return local_frame(spark, rows, MEDIA_SCHEMA).repartition(4, "media_id")
 
 
 def media_apng_frame_checksums(spark, sf_dir: str) -> DataFrame:
@@ -603,7 +604,7 @@ def synthetic_media_rows(n: int = 64, seed: int = 42) -> list[tuple]:
 
 def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
     """Spark DataFrame over the deterministic fixture rows."""
-    return spark.createDataFrame(synthetic_media_rows(n, seed), MEDIA_SCHEMA)
+    return local_frame(spark, synthetic_media_rows(n, seed), MEDIA_SCHEMA)
 
 
 def media_feature_checksums(spark, sf_dir: str) -> DataFrame:
@@ -969,7 +970,7 @@ def media_audio_metadata(spark, sf_dir: str) -> DataFrame:
             StructField("data", BinaryType(), True),
         ]
     )
-    media = spark.createDataFrame(synthetic_audio_rows(), schema)
+    media = local_frame(spark, synthetic_audio_rows(), schema)
     return audio_stream_metadata(media).orderBy("media_id")
 
 
@@ -1111,7 +1112,7 @@ def media_video_metadata(spark, sf_dir: str) -> DataFrame:
             StructField("data", BinaryType(), True),
         ]
     )
-    media = spark.createDataFrame(synthetic_video_rows(), schema)
+    media = local_frame(spark, synthetic_video_rows(), schema)
     return video_stream_metadata(media).orderBy("media_id")
 
 
@@ -1324,7 +1325,7 @@ def media_image_metadata(spark, sf_dir: str) -> DataFrame:
             StructField("data", BinaryType(), True),
         ]
     )
-    media = spark.createDataFrame(synthetic_image_rows(), schema)
+    media = local_frame(spark, synthetic_image_rows(), schema)
     return image_header_metadata(media).orderBy("media_id")
 
 
@@ -1456,7 +1457,8 @@ PHASH_SCHEMA = StructType(
 
 
 def synthetic_neardup_images(spark) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         synthetic_neardup_rows(),
         StructType(
             [
@@ -1642,7 +1644,8 @@ def synthetic_audio_neardup_rows(n_bases: int = 8) -> list[tuple]:
 
 
 def synthetic_audio_neardup(spark) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         synthetic_audio_neardup_rows(),
         StructType(
             [
@@ -1831,7 +1834,8 @@ ANIM_PHASH_SCHEMA = StructType(
 
 
 def synthetic_animation_neardup(spark) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         synthetic_animation_neardup_rows(),
         StructType(
             [
@@ -2027,7 +2031,8 @@ def media_exif_gps_audit(spark, sf_dir: str) -> DataFrame:
         strip_jpeg_exif,
     )
 
-    rows = spark.createDataFrame(
+    rows = local_frame(
+        spark,
         synthetic_exif_rows(),
         StructType(
             [
@@ -2161,7 +2166,8 @@ def media_neardup_eval(spark, sf_dir: str) -> DataFrame:
         # true-positive semi-join — unmaterialized, each family's
         # banded dedup pipeline ran twice. Fixture-bounded rows.
         pairs = materialize(fn(spark, "unused").select("id_a", "id_b"))
-        truth = spark.createDataFrame(
+        truth = local_frame(
+            spark,
             _planted_pairs(name), "id_a long, id_b long"
         )
         tp = pairs.join(F.broadcast(truth), ["id_a", "id_b"], "leftsemi")

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from parquet_extractor_spark.session import materialize
-from parquet_extractor_spark.sources.tables import load_table
+from parquet_extractor_spark.sources.tables import load_table, local_frame
 
 _MICRO = 1_000_000
 
@@ -365,7 +365,8 @@ def orders_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_amounts"))
     )
     total = digits.agg(F.sum("n_amounts").alias("total"))
-    bench = spark.createDataFrame(
+    bench = local_frame(
+        spark,
         [(d + 1, m) for d, m in enumerate(BENFORD_MICRO)],
         "digit BIGINT, benford_micro BIGINT",
     )

@@ -21,7 +21,7 @@ from parquet_extractor_spark.functions.text import (
     word_ngrams,
 )
 from parquet_extractor_spark.session import materialize
-from parquet_extractor_spark.sources.tables import load_table, spread
+from parquet_extractor_spark.sources.tables import load_table, local_frame, spread
 
 # Tiny per-language stopword lists — n-gram/stopword-heuristic language
 # ID in the spirit of fastText/langdetect baselines, small enough to be
@@ -951,7 +951,7 @@ def pii_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     do, since the synthetic documents table contains no PII at all.
     """
     del sf_dir
-    rows = spark.createDataFrame(_pii_fixture_rows(), "row_id long, text string")
+    rows = local_frame(spark, _pii_fixture_rows(), "row_id long, text string")
     # regexes via the DataFrame API (F.lit patterns), never F.expr —
     # Spark SQL string literals eat backslashes, which silently turns
     # the IPv4 regex's \. into match-any (the documented gotcha)
@@ -1183,7 +1183,8 @@ def encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_suspect) by row_id.
     """
     del sf_dir
-    rows = spark.createDataFrame(
+    rows = local_frame(
+        spark,
         _encoding_fixture_rows(), "row_id long, text string"
     )
     n_moj = F.regexp_count(F.col("text"), F.lit(_MOJIBAKE_RE))
@@ -1412,7 +1413,8 @@ def mixed_script_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     no Python); the token pass is one explode + partial-agg count
     keyed by doc — linear, no joins wider than the per-doc reduction."""
     del sf_dir
-    docs = spark.createDataFrame(
+    docs = local_frame(
+        spark,
         MIXED_SCRIPT_FIXTURE_ROWS, "doc_id bigint, text string"
     )
     toks = (

@@ -46,7 +46,7 @@ from pyspark.sql.window import Window
 from parquet_extractor_spark.functions.windows import bounded_global_window
 
 from parquet_extractor_spark.session import materialize
-from parquet_extractor_spark.sources.tables import load_table, spread
+from parquet_extractor_spark.sources.tables import load_table, local_frame, spread
 
 TOP_K = 5
 N_QUERIES = 5  # the first 5 vectors by vec_id are the query set
@@ -113,10 +113,16 @@ def _cross_const(df: DataFrame, name: str, value, sql_type: str) -> DataFrame:
     driver-bound (8-core runs ≈ 0.7× the 32-core time). Shipped as
     DATA the plan carries one ~KB broadcast relation and the scoring
     expressions reference a column; per-element arithmetic is the
-    same HOF fold, and Python floats cross createDataFrame bit-exact,
-    so values are unchanged."""
+    same HOF fold, so values are unchanged.
+
+    The 1-row relation is a JVM ``LocalRelation`` built by
+    ``local_frame``: the Python floats travel as Arrow float64, bit
+    for bit (-0.0, subnormals and infinities included). Built from a
+    Python list it was a Python-RDD scan that started a Python worker
+    on every execution of the query (≈0.3 s of ``ann_ivf``'s 0.9 s on
+    a 4-core host)."""
     spark = df.sparkSession
-    const = spark.createDataFrame([(value,)], f"{name} {sql_type}")
+    const = local_frame(spark, [(value,)], f"{name} {sql_type}")
     return df.crossJoin(F.broadcast(const))
 
 
@@ -1049,7 +1055,8 @@ def search_ivf_index(
         scored.sort(reverse=True)
         for sim, neg_cid in scored[:nprobe]:
             rows.append((qid, vec, -neg_cid))
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         rows, "query_id long, q_emb array<float>, probe_cluster int"
     )
     index = spark.table(table_name)
@@ -2109,7 +2116,8 @@ def _ivf_pq_search(
     # literals): each probe row carries its query's PQ_M × PQ_K
     # integer table, and the distance is PQ_M two-level array lookups
     # summed left-to-right — the same BIGINTs in the same order.
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [(qid, cid, adc_tables[qid]) for qid, cid in probe_rows],
         "query_id long, probe_cluster int, adc array<array<bigint>>",
     )

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from parquet_extractor_spark.functions.windows import bounded_global_window
-from parquet_extractor_spark.sources.tables import load_table
+from parquet_extractor_spark.sources.tables import load_table, local_frame
 
 SESSION_GAP_MIN = 30
 
@@ -1319,7 +1319,8 @@ def events_funnel_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # always emit one row per declared step — a step nobody reaches
     # must report 0, not vanish (and must match the oracle's scalar
     # per-step counts row for row)
-    steps = spark.createDataFrame(
+    steps = local_frame(
+        spark,
         [(i, s) for i, s in enumerate(FUNNEL_STEPS, start=1)],
         "step_idx BIGINT, step STRING",
     )
@@ -2668,7 +2669,8 @@ def events_funnel_deadline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
         )
         reached = step_rows if reached is None else reached.union(step_rows)
-    steps = spark.createDataFrame(
+    steps = local_frame(
+        spark,
         [(i, s) for i, s in enumerate(FUNNEL_STEPS, start=1)],
         "step_idx BIGINT, step STRING",
     )

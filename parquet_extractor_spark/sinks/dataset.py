@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parquet_extractor_spark.sources.tables import local_frame
+
 
 def write_dataset(
     df: DataFrame,
@@ -234,7 +236,8 @@ def file_pruning_report(
         for f in os.listdir(dataset_dir)
         if f.endswith(".parquet")
     )
-    files = spark.createDataFrame(
+    files = local_frame(
+        spark,
         [(p,) for p in paths], "path string"
     ).repartition(max(1, min(len(paths), 32)))
 
@@ -269,7 +272,8 @@ def file_pruning_report(
             yield _pd.DataFrame({"file_min": mins, "file_max": maxs})
 
     stats = files.mapInPandas(_minmax, schema)
-    probe_df = spark.createDataFrame(
+    probe_df = local_frame(
+        spark,
         list(probes), "probe_lo BIGINT, probe_hi BIGINT"
     )
     hit = (_F.col("file_min") <= _F.col("probe_hi")) & (

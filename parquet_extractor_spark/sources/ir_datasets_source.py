@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 from parquet_extractor_spark.constants import MAX_DOCS
+from parquet_extractor_spark.sources.tables import local_frame
 
 try:  # pragma: no cover - not installed in this environment
     import ir_datasets  # type: ignore
@@ -60,7 +61,7 @@ def docs_iter_to_df(
     (min(limit, MAX_DOCS), api.py:395-397)."""
     cap = min(limit or MAX_DOCS, MAX_DOCS)
     rows = [_doc_to_row(d) for d in islice(iter(docs), cap)]
-    return spark.createDataFrame(rows, DOC_SCHEMA)
+    return local_frame(spark, rows, DOC_SCHEMA)
 
 
 def load_wikir(

@@ -4,15 +4,18 @@ Lazy ``spark.read.parquet`` scans (SURVEY.md §2.1 S1) — Catalyst gets
 column pruning and predicate pushdown for free; nothing is materialized
 until an action runs. At cluster scale the same call distributes file
 splits across executors (``spark.sql.files.maxPartitionBytes`` governs
-split size).
+split size). Driver-side Python rows become a frame through
+:func:`local_frame` only.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType
 
 TABLES = (
     "region",
@@ -53,6 +56,37 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # ~175 ms of duplicated planning per call — r12 measured).
         df._sg_scan_stats = stats[:2]
     return df
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: StructType | str
+) -> DataFrame:
+    """Driver-side rows as a JVM ``LocalRelation``: the one way this
+    package turns Python values into a frame.
+
+    ``spark.createDataFrame(<list>)`` plans a Python-RDD scan
+    (``Scan ExistingRDD``): every execution starts a Python worker to
+    unpickle the rows, a fixed ≈0.2–0.3 s per job on a 4-core host
+    even for a 1-row constant. Handing Spark a ``pyarrow.Table`` typed
+    by the Spark schema instead ships the rows once, at plan time, as
+    Arrow batches; execution then stays in the JVM. ``rows`` are
+    positional (tuples, lists or ``Row``s); ``schema`` is a
+    ``StructType`` or a DDL string, and the frame's schema is exactly
+    that of ``createDataFrame(rows, schema)``, as are its values
+    (doubles bit for bit, NULLs, nested arrays/structs, maps).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 # Inferred parquet SCHEMAS keyed by (path, bytes, files, max mtime):

@@ -41,6 +41,7 @@ from parquet_extractor_spark.constants import (
     FETCH_DELAY_S,
     MAX_CRAWL_ARTICLES,
 )
+from parquet_extractor_spark.sources.tables import local_frame
 
 FETCH_PARALLELISM = 1  # politeness: single fetch lane (api.py:938)
 
@@ -89,7 +90,7 @@ def category_titles(
     for cat in categories:
         for title, ns in list_members(cat):
             rows.append((title, cat, ns))
-    df = spark.createDataFrame(rows, TITLE_SCHEMA)
+    df = local_frame(spark, rows, TITLE_SCHEMA)
     return (
         df.filter(F.col("namespace") == 0)  # articles only (api.py:675)
         .dropDuplicates(["title"])  # U1 cross-category dedup

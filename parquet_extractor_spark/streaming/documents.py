@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 
 from parquet_extractor_spark.operators.quality import quality_columns
 from parquet_extractor_spark.session import materialize, query_scope
+from parquet_extractor_spark.sources.tables import local_frame
 from parquet_extractor_spark.streaming import drain, epoch_sink
 
 MIN_QUALITY = 0.3  # same gate as pipelines.MIN_QUALITY
@@ -592,7 +593,8 @@ def run_novelty_stream(
                 novel = grams
             novel = materialize(novel)
             n_novel = novel.count()
-            report = spark.createDataFrame(
+            report = local_frame(
+                spark,
                 [(n_docs, n_grams, n_novel)],
                 "n_docs BIGINT, batch_grams BIGINT, novel_grams BIGINT",
             )

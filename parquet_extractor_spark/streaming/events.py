@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from parquet_extractor_spark.session import materialize
+from parquet_extractor_spark.sources.tables import local_frame
 from parquet_extractor_spark.streaming import drain
 
 # Physical schema of events.parquet (file streams require an explicit
@@ -366,7 +367,8 @@ def run_enriched_stream(
     and the batch joins.
     """
     events = read_events_stream(spark, sf_dir)
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         list(EVENT_CATEGORIES.items()), "event_type string, category string"
     )
     enriched = (

@@ -31,13 +31,14 @@ def _rows(df) -> list[tuple]:
 def test_scope_frees_what_it_cached_and_nothing_else(spark, sf_small):
     """A library caller's scope frees every block its query cached on
     exit, and leaves a block cached outside the scope alone."""
-    from parquet_extractor_spark.operators.textprep import tfidf_top_terms
+    from parquet_extractor_spark.operators.corpus_index import pmi_top_pairs
 
+    release_cached(spark)  # a clean session: no earlier test's copy of the query's blocks
     outside = materialize(_counts(spark, 1000, 7))
     outside.count()
     before = _rdds(spark)
     with query_scope(spark):
-        rows = tfidf_top_terms(spark, sf_small).collect()
+        rows = pmi_top_pairs(spark, sf_small).collect()
         assert _rdds(spark) - before, "the query should cache a block"
     assert rows
     assert _rdds(spark) == before

@@ -434,6 +434,54 @@ def test_caching_lives_only_in_materialize():
     )
 
 
+def test_driver_rows_go_through_local_frame():
+    """Driver-side rows become a frame only through
+    sources.tables.local_frame, which plans a JVM LocalRelation. A
+    list handed to ``createDataFrame`` plans a Python-RDD scan that
+    starts a Python worker on every execution, so outside
+    ``local_frame`` no package file may mention ``createDataFrame(``
+    (docstrings included), and ``local_frame`` holds exactly one
+    ``createDataFrame`` call."""
+    import ast
+    import os
+    import re
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "parquet_extractor_spark",
+    )
+    home = os.path.join(root, "sources", "tables.py")
+    helper = next(
+        node
+        for node in ast.parse(open(home).read()).body
+        if isinstance(node, ast.FunctionDef) and node.name == "local_frame"
+    )
+    called = [
+        n.func.attr
+        for n in ast.walk(helper)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+    ]
+    assert called.count("createDataFrame") == 1
+
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            for lineno, line in enumerate(open(path), start=1):
+                if not re.search(r"createDataFrame\(", line):
+                    continue
+                if path == home and (
+                    helper.lineno <= lineno <= helper.end_lineno
+                ):
+                    continue
+                offenders.append(f"{path}:{lineno}")
+    assert not offenders, (
+        f"build driver-side rows with sources.tables.local_frame: {offenders}"
+    )
+
+
 def test_brand_price_rank_assoc_pair_join_is_bucketed(spark, sf_small):
     """The r10 scale contract for the pair generator: the self-join
     must key on (brand, bucket), not brand alone — a brand-only

@@ -443,3 +443,26 @@ def test_tfidf_and_pmi_build_submits_no_spark_job(spark, sf_small, jobs_in_group
         assert jobs_in_group(
             lambda: fn(spark, sf_small), f"build-{fn.__name__}"
         ) == []
+
+
+def test_tfidf_top_terms_is_one_term_shuffle(spark, sf_small, jobs_in_group):
+    """tf and df come out of one term-partitioned shuffle: no cached
+    block, at most 8 Spark jobs on a warm store (12 with the cached
+    tf + df join), and the rows still match the DuckDB oracle."""
+    import os
+    import sys
+
+    tools = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
+    )
+    sys.path.insert(0, tools)
+    from check_oracle import run_gate
+
+    tfidf_top_terms(spark, sf_small).collect()  # warm schema reads
+    df = tfidf_top_terms(spark, sf_small)
+    jobs = jobs_in_group(df.collect, "tfidf-one-shuffle")
+    assert 0 < len(jobs) <= 8
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" not in plan
+    assert "InMemoryTableScan" not in plan
+    assert not run_gate(only=("tfidf_top_terms",), sf_dir=sf_small, spark=spark)
