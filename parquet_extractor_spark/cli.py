@@ -336,20 +336,30 @@ def _run(args: argparse.Namespace, spark) -> int:
         }))
         return 0
 
-    if args.command == "pdfingest":
+    if args.command in ("pdfingest", "warcingest"):
+        from parquet_extractor_spark.sinks.dataset import write_ingested
         from parquet_extractor_spark.sources.pdf import read_pdf_docs
+        from parquet_extractor_spark.sources.warc import read_warc_docs
 
-        docs = read_pdf_docs(spark, args.directory)
+        pdf = args.command == "pdfingest"
+        rows = (read_pdf_docs if pdf else read_warc_docs)(
+            spark, args.directory
+        )
         if args.output_dir:
-            docs.write.mode("overwrite").parquet(args.output_dir)
-            ok = docs.where(docs.error.isNull()).count()
-            bad = docs.where(docs.error.isNotNull()).count()
+            m = write_ingested(
+                rows, args.output_dir, "file_name" if pdf else "path"
+            )
+            counts = (
+                {"extracted": m["ok"]}
+                if pdf
+                else {"records": m["ok"], "documents": m["with_text"]}
+            )
             print(json.dumps(
-                {"output_dir": args.output_dir, "extracted": ok,
-                 "errors": bad}
+                {"output_dir": args.output_dir, **counts,
+                 "errors": m["errors"]}
             ))
             return 0
-        for row in docs.limit(args.limit).collect():
+        for row in rows.limit(args.limit).collect():
             d = row.asDict()
             if d.get("text"):
                 d["text"] = d["text"][:160]
@@ -381,27 +391,6 @@ def _run(args: argparse.Namespace, spark) -> int:
                 args.table_dir, keep_last=args.keep_last
             )
         ))
-        return 0
-
-    if args.command == "warcingest":
-        from parquet_extractor_spark.sources.warc import read_warc_docs
-
-        recs = read_warc_docs(spark, args.directory)
-        if args.output_dir:
-            recs.write.mode("overwrite").parquet(args.output_dir)
-            ok = recs.where(recs.error.isNull()).count()
-            bad = recs.where(recs.error.isNotNull()).count()
-            docs = recs.where(recs.text.isNotNull()).count()
-            print(json.dumps(
-                {"output_dir": args.output_dir, "records": ok,
-                 "documents": docs, "errors": bad}
-            ))
-            return 0
-        for row in recs.limit(args.limit).collect():
-            d = row.asDict()
-            if d.get("text"):
-                d["text"] = d["text"][:160]
-            print(json.dumps(d, default=str))
         return 0
 
     if args.command == "train-classifier":

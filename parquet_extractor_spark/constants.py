@@ -47,3 +47,7 @@ MAX_ERRORS = 20
 # return a bounded preview, never an unbounded collect into the
 # job-status table.
 MAX_QUERY_ROWS = 1000
+
+# Entry cap for the job service's in-memory status table: past it the
+# oldest finished jobs are dropped (a running job never is).
+MAX_JOBS = 1000

@@ -15,11 +15,13 @@ status → list/download outputs. Differences by design:
 
 The in-memory ``jobs`` dict mirrors api.py:25, with the same caveats
 (process-local, non-durable) — acceptable for the driver-side control
-plane; the data plane is all Spark.
+plane; the data plane is all Spark. Unlike api.py:25 it is bounded:
+past ``MAX_JOBS`` entries the oldest finished jobs are dropped.
 """
 
 from __future__ import annotations
 
+import itertools
 import math
 import os
 import re
@@ -34,18 +36,24 @@ from pyspark.sql import SparkSession
 from parquet_extractor_spark.constants import (
     MAX_CRAWL_ARTICLES,
     MAX_DOCS,
-    MAX_ERRORS,
+    MAX_JOBS,
     MAX_QUERY_ROWS,
 )
-from parquet_extractor_spark.session import materialize, query_scope
+from parquet_extractor_spark.session import query_scope
 
 DEFAULT_PORT = 5000
+
+# The fixture directory a request reads when it names no ``sf_dir``.
+DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 jobs: dict[str, dict[str, Any]] = {}
 _jobs_lock = threading.Lock()
 
 
 def _register_job(job_type: str, params: dict[str, Any]) -> str:
+    """Add a running job to ``jobs``. Past ``MAX_JOBS`` entries, drop
+    the oldest terminal jobs (the dict keeps insertion order); a
+    running job is never dropped."""
     job_id = str(uuid.uuid4())
     with _jobs_lock:
         jobs[job_id] = {
@@ -57,16 +65,21 @@ def _register_job(job_type: str, params: dict[str, Any]) -> str:
             "result": None,
             "error": None,
         }
+        if len(jobs) > MAX_JOBS:
+            done = (k for k, j in jobs.items() if j["status"] != "running")
+            for old in list(itertools.islice(done, len(jobs) - MAX_JOBS)):
+                del jobs[old]
     return job_id
 
 
 def job_log(job_id: str, message: str) -> None:
     """Append-only progress log (api.py:412, api.py:419), capped so a
-    chatty job can't grow without bound."""
+    chatty job can't grow without bound. A no-op for a job already
+    dropped from the table (a cancelled job's thread may still run)."""
     with _jobs_lock:
-        log = jobs[job_id]["log"]
-        if len(log) < 1000:
-            log.append(message)
+        job = jobs.get(job_id)
+        if job is not None and len(job["log"]) < 1000:
+            job["log"].append(message)
 
 
 def submit_job(
@@ -81,6 +94,7 @@ def submit_job(
     while sibling jobs run on. Per-job error capture mirrors
     api.py:89-91."""
     job_id = _register_job(job_type, params or {})
+    job = jobs[job_id]
 
     def _run() -> None:
         sc = spark.sparkContext
@@ -93,15 +107,15 @@ def submit_job(
             with query_scope(spark):
                 result = fn(job_id)
             with _jobs_lock:
-                if jobs[job_id]["status"] == "running":
-                    jobs[job_id]["status"] = "completed"
-                    jobs[job_id]["result"] = result
+                if job["status"] == "running":
+                    job["status"] = "completed"
+                    job["result"] = result
         except Exception as exc:  # permissive job surface (O4)
             with _jobs_lock:
-                if jobs[job_id]["status"] == "running":
-                    jobs[job_id]["status"] = "failed"
-                    jobs[job_id]["error"] = str(exc)
-                jobs[job_id]["log"].append(traceback.format_exc()[-2000:])
+                if job["status"] == "running":
+                    job["status"] = "failed"
+                    job["error"] = str(exc)
+                job["log"].append(traceback.format_exc()[-2000:])
         # no clearJobGroup: the property is thread-local and this
         # worker thread ends here (PySpark 4 removed clearJobGroup).
 
@@ -119,23 +133,23 @@ def cancel_job(spark: SparkSession, job_id: str) -> bool:
     return True
 
 
+class ParamError(ValueError):
+    """A malformed request parameter; the app answers it with 400."""
+
+
 def resolve_subdir(output_root: str, subdir: str) -> str:
     """Resolve a client-supplied subdir strictly inside output_root.
 
     ``os.path.join(root, '../..')`` or an absolute subdir would escape
     the output root entirely (arbitrary listing/download, and writes
     via check_write_access's makedirs). Normalize with realpath and
-    require the result to stay under the root.
+    require the result to stay under the root; ParamError otherwise.
     """
     root = os.path.realpath(output_root)
     target = os.path.realpath(os.path.join(root, subdir))
     if os.path.commonpath([root, target]) != root:
-        raise ValueError(f"subdir escapes output root: {subdir!r}")
+        raise ParamError(f"subdir escapes output root: {subdir!r}")
     return target
-
-
-class ParamError(ValueError):
-    """A malformed request parameter; the app answers it with 400."""
 
 
 _INT = re.compile(r"-?[0-9]+")
@@ -222,8 +236,11 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
     GET  /api/files/<name>           — S12 download
     DELETE /api/files                — S13 cleanup (cleanup_wikir.py:22-61)
 
-    Every client-supplied ``subdir`` goes through :func:`resolve_subdir`
-    (400 on escape attempts) before touching the filesystem.
+    Every job route takes one path: validate its parameters (400 via
+    ParamError, before anything is spooled), spool its uploads, then
+    :func:`_submit` the job, which preflights the sink and removes the
+    spool when the job ends. Every client-supplied ``subdir`` goes
+    through :func:`resolve_subdir` before touching the filesystem.
 
     ``wiki_adapters`` injects the crawl's network seam: a zero-arg
     callable returning ``(list_members, fetch_page)``. Defaults to the
@@ -234,23 +251,35 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
     import shutil
     import tempfile
 
-    from flask import Flask, jsonify, request, send_from_directory
+    from flask import (
+        Flask,
+        abort,
+        jsonify,
+        make_response,
+        request,
+        send_from_directory,
+    )
     from pyspark.sql import functions as F
 
-    from parquet_extractor_spark.functions.text import zero_pad
+    from parquet_extractor_spark.functions.text import (
+        sanitize_filename,
+        zero_pad,
+    )
     from parquet_extractor_spark.operators.analyze import corpus_stats
     from parquet_extractor_spark.operators.extract import (
         extract_any_parquet,
         extract_files,
     )
-    from parquet_extractor_spark.functions.text import sanitize_filename
+    from parquet_extractor_spark.sinks.dataset import write_ingested
     from parquet_extractor_spark.sinks.markdown import write_files
     from parquet_extractor_spark.sinks.pdf import write_pdfs
     from parquet_extractor_spark.sources.cisi import (
         cisi_to_markdown,
         read_cisi,
     )
+    from parquet_extractor_spark.sources.pdf import read_pdf_docs
     from parquet_extractor_spark.sources.tables import load_table
+    from parquet_extractor_spark.sources.warc import read_warc_docs
     from parquet_extractor_spark.sources.wikipedia import (
         WIKI_CRAWL_CATEGORIES,
         crawl_category,
@@ -264,6 +293,10 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
     def _bad_param(exc: ParamError):
         return jsonify({"error": str(exc)}), 400
 
+    def _fail(status: int, message: str):
+        """Answer ``status`` with a JSON error body, from any depth."""
+        abort(make_response(jsonify({"error": message}), status))
+
     def _json_params() -> dict[str, Any]:
         """The JSON request body: an object, or {} when absent."""
         params = request.get_json(silent=True)
@@ -271,26 +304,86 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
             raise ParamError("request body must be a JSON object")
         return params or {}
 
-    def _subdir_or_400(raw: str):
-        try:
-            return resolve_subdir(output_root, raw), None
-        except ValueError as exc:
-            return None, (jsonify({"error": str(exc)}), 400)
+    def _subdir(raw: str) -> str:
+        return resolve_subdir(output_root, raw)
 
-    def _spool(tmp: str, up, generated: str) -> str:
-        """Save an upload under a server-generated spool name.
+    def _registry() -> dict:
+        """The queries() registry; 503 when it is not importable."""
+        try:
+            import __spark_entry__ as entrymod
+        except ImportError:
+            _fail(503, "query registry unavailable")
+        return entrymod.queries()
+
+    def _registered(name: str):
+        """The builder of registered query ``name``; 404 if unknown."""
+        registry = _registry()
+        if name not in registry:
+            _fail(404, f"unknown query '{name}'")
+        return registry[name]
+
+    def _spool(ups, ext: str) -> tuple[str, dict[str, str]]:
+        """Save each upload as ``upload<i><ext>`` in a new spool dir;
+        return the dir and the spool-name → client-name map.
 
         Client-supplied multipart filenames are untrusted: a name like
         ``../../x`` (or an absolute path, which os.path.join adopts
         wholesale) would escape the spool dir, and duplicate names
         would silently overwrite each other. The readers never key on
         the name (parquet/CISI get explicit paths; WARC/PDF parsing is
-        content-sniffed), so the original name is kept only as job
-        metadata by the callers.
+        content-sniffed), so the client name is kept only as metadata.
         """
-        path = os.path.join(tmp, generated)
-        up.save(path)
-        return path
+        tmp = tempfile.mkdtemp(prefix="upload_")
+        names = {}
+        for i, up in enumerate(ups):
+            name = f"upload{i}{ext}"
+            up.save(os.path.join(tmp, name))
+            names[name] = up.filename or name
+        return tmp, names
+
+    def _submit(job_type, work, params, out_dir=None, spool=None):
+        """Submit ``work(job_id)`` as a job and answer 202. The job
+        first preflights its sink ``out_dir``; whether it succeeds or
+        fails, it then removes the upload ``spool`` (api.py:93-94)."""
+
+        def _run(job_id: str) -> dict[str, Any]:
+            try:
+                if out_dir is not None:
+                    check_write_access(out_dir)
+                return work(job_id)
+            finally:
+                if spool is not None:
+                    shutil.rmtree(spool, ignore_errors=True)
+
+        job_id = submit_job(spark, job_type, _run, params)
+        return jsonify({"job_id": job_id, "status": "running"}), 202
+
+    def _ingest(job_type, read, name_col, ext, subdir, summary):
+        """An upload ingest route: spool the uploads, parse them with
+        ``read`` (PERMISSIVE: a malformed upload becomes an error row,
+        not a failed job), and write one parquet table under the
+        outputs ``subdir`` with its counts taken in that same pass.
+        The client names replace the spool names in ``name_col``; the
+        job result is ``summary`` of the counts."""
+        ups = request.files.getlist("file")
+        if not ups or all(not u.filename for u in ups):
+            raise ParamError("no file provided")
+        out_dir = _subdir(request.form.get("subdir", subdir))
+        tmp, names = _spool(ups, ext)
+
+        def _work(job_id: str) -> dict[str, Any]:
+            job_log(job_id, f"ingesting {len(ups)} uploads -> {out_dir}")
+            client = F.create_map(*[F.lit(x) for kv in names.items() for x in kv])
+            spooled = F.element_at(F.split(F.col(name_col), "/"), -1)
+            rows = read(spark, tmp).withColumn(
+                name_col, F.coalesce(client[spooled], F.col(name_col))
+            )
+            m = write_ingested(rows, out_dir, name_col)
+            job_log(job_id, f"wrote {m['ok']} rows, {m['errors']} errors")
+            return {"output_dir": out_dir, **summary(m)}
+
+        files = {"files": [u.filename for u in ups]}
+        return _submit(job_type, _work, files, out_dir, tmp)
 
     @app.get("/api/health")
     def health():
@@ -321,11 +414,7 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
 
     @app.get("/api/queries")
     def list_queries():
-        try:
-            import __spark_entry__ as entrymod
-        except ImportError:
-            return jsonify({"error": "query registry unavailable"}), 503
-        return jsonify(sorted(entrymod.queries()))
+        return jsonify(sorted(_registry()))
 
     @app.get("/api/explain/<name>")
     def explain_named_query(name: str):
@@ -337,19 +426,13 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
         small bounded driver jobs at plan-BUILD time; those run
         synchronously here. Builder failures (bad sf_dir, missing
         table) return 400, not 500."""
-        try:
-            import __spark_entry__ as entrymod
-        except ImportError:
-            return jsonify({"error": "query registry unavailable"}), 503
-        registry = entrymod.queries()
-        if name not in registry:
-            return jsonify({"error": f"unknown query '{name}'"}), 404
-        sf_dir = request.args.get("sf_dir", "/root/testdata/sf0.001")
+        build = _registered(name)
+        sf_dir = request.args.get("sf_dir", DEFAULT_SF_DIR)
         from parquet_extractor_spark.plans.explain import formatted_plan
 
         try:
             with query_scope(spark):
-                plan = formatted_plan(registry[name](spark, sf_dir))
+                plan = formatted_plan(build(spark, sf_dir))
         except Exception as exc:  # surface builder errors as client errors
             return (
                 jsonify({"error": f"{type(exc).__name__}: {exc}"[:500]}),
@@ -372,20 +455,14 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
         """Run any registered analytics query as an async job —
         the REST face of the whole queries() registry (dedup, ANN,
         quality, TPC-H, ...), not just the reference's endpoints."""
-        try:
-            import __spark_entry__ as entrymod
-        except ImportError:
-            return jsonify({"error": "query registry unavailable"}), 503
-        registry = entrymod.queries()
-        if name not in registry:
-            return jsonify({"error": f"unknown query '{name}'"}), 404
+        build = _registered(name)
         params = _json_params()
-        sf_dir = params.get("sf_dir", "/root/testdata/sf0.001")
+        sf_dir = params.get("sf_dir", DEFAULT_SF_DIR)
         limit = count_param(params, "limit", 20, MAX_QUERY_ROWS)
 
         def _work(job_id: str) -> dict[str, Any]:
             job_log(job_id, f"running {name} at {sf_dir} (limit {limit})")
-            df = registry[name](spark, sf_dir)
+            df = build(spark, sf_dir)
             rows = [
                 {
                     k: v
@@ -398,13 +475,12 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
             job_log(job_id, f"returning {len(rows)} rows")
             return {"query": name, "n_rows": len(rows), "rows": rows}
 
-        job_id = submit_job(spark, f"query:{name}", _work, params)
-        return jsonify({"job_id": job_id, "status": "running"}), 202
+        return _submit(f"query:{name}", _work, params)
 
     @app.post("/api/analyze/corpus")
     def analyze_corpus():
         params = _json_params()
-        sf_dir = params.get("sf_dir", "/root/testdata/sf0.001")
+        sf_dir = params.get("sf_dir", DEFAULT_SF_DIR)
 
         def _work(job_id: str) -> dict[str, Any]:
             job_log(job_id, f"analyzing corpus at {sf_dir}")
@@ -412,61 +488,47 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
             job_log(job_id, "aggregation complete")
             return row.asDict()
 
-        job_id = submit_job(spark, "analyze_corpus", _work, params)
-        return jsonify({"job_id": job_id, "status": "running"}), 202
+        return _submit("analyze_corpus", _work, params)
 
     @app.post("/api/extract/documents")
     def extract_documents():
         params = _json_params()
-        sf_dir = params.get("sf_dir", "/root/testdata/sf0.001")
+        sf_dir = params.get("sf_dir", DEFAULT_SF_DIR)
         n = count_param(params, "num_docs", 100, MAX_DOCS)
         seed = int_param(params, "seed", 42)
-        out_dir, err = _subdir_or_400(params.get("subdir", "markdown"))
-        if err:
-            return err
+        out_dir = _subdir(params.get("subdir", "markdown"))
 
         def _work(job_id: str) -> dict[str, Any]:
-            check_write_access(out_dir)
             job_log(job_id, f"extracting {n} docs from {sf_dir} -> {out_dir}")
             work = extract_files(spark, sf_dir, n=n, seed=seed)
             result = write_files(work, out_dir)
             job_log(job_id, f"wrote {result['written']} files")
             return result
 
-        job_id = submit_job(spark, "extract_documents", _work, params)
-        return jsonify({"job_id": job_id, "status": "running"}), 202
+        return _submit("extract_documents", _work, params, out_dir)
 
     @app.post("/api/extract/parquet")
     def extract_parquet_upload():
         """S5 (api.py:41-104): multipart upload spooled to a temp dir,
         then the arbitrary-schema extract pipeline over it."""
         if "file" not in request.files:
-            return jsonify({"error": "no file provided"}), 400
+            raise ParamError("no file provided")
         # default batch 1000 (main.py:205), capped like every job input
         n = count_param(request.form, "num_papers", 1000, MAX_DOCS)
         seed = int_param(request.form, "seed", 42)
-        out_dir, err = _subdir_or_400(request.form.get("subdir", "parquet_md"))
-        if err:
-            return err
-        tmp = tempfile.mkdtemp(prefix="upload_")
-        path = _spool(tmp, request.files["file"], "upload.parquet")
+        out_dir = _subdir(request.form.get("subdir", "parquet_md"))
+        tmp, names = _spool([request.files["file"]], ".parquet")
+        (path,) = (os.path.join(tmp, name) for name in names)
 
         def _work(job_id: str) -> dict[str, Any]:
-            try:
-                check_write_access(out_dir)
-                job_log(job_id, f"extracting {n} rows from upload -> {out_dir}")
-                work = extract_any_parquet(spark, path, n=n, seed=seed)
-                result = write_files(work, out_dir)
-                job_log(job_id, f"wrote {result['written']} files")
-                return result
-            finally:
-                # temp-spool cleanup mirrors api.py:93-94
-                shutil.rmtree(tmp, ignore_errors=True)
+            job_log(job_id, f"extracting {n} rows from upload -> {out_dir}")
+            work = extract_any_parquet(spark, path, n=n, seed=seed)
+            result = write_files(work, out_dir)
+            job_log(job_id, f"wrote {result['written']} files")
+            return result
 
-        job_id = submit_job(
-            spark, "extract_parquet", _work, {"num_papers": n, "seed": seed}
-        )
-        return jsonify({"job_id": job_id, "status": "running"}), 202
+        params = {"num_papers": n, "seed": seed}
+        return _submit("extract_parquet", _work, params, out_dir, tmp)
 
     @app.post("/api/extract/pdf")
     def extract_pdf():
@@ -474,14 +536,11 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
         documents table (the wikir→PDF flow, with the table as the
         corpus source)."""
         params = _json_params()
-        sf_dir = params.get("sf_dir", "/root/testdata/sf0.001")
+        sf_dir = params.get("sf_dir", DEFAULT_SF_DIR)
         limit = count_param(params, "limit", 100, MAX_DOCS)
-        out_dir, err = _subdir_or_400(params.get("subdir", "pdf"))
-        if err:
-            return err
+        out_dir = _subdir(params.get("subdir", "pdf"))
 
         def _work(job_id: str) -> dict[str, Any]:
-            check_write_access(out_dir)
             job_log(job_id, f"rendering {limit} PDFs from {sf_dir}")
             docs = (
                 load_table(spark, sf_dir, "documents")
@@ -502,182 +561,67 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
             job_log(job_id, f"rendered {result['written']} PDFs")
             return result
 
-        job_id = submit_job(spark, "extract_pdf", _work, params)
-        return jsonify({"job_id": job_id, "status": "running"}), 202
+        return _submit("extract_pdf", _work, params, out_dir)
 
     @app.post("/api/ingest/pdftext")
     def ingest_pdftext():
         """PDF ingestion face (beyond reference — the read side of the
-        S9 sink): one or more PDFs uploaded multipart, spooled to a
-        temp dir, extracted by sources/pdf.read_pdf_docs (PERMISSIVE —
-        malformed uploads become error rows), written as a parquet
-        document table under the outputs subdir. Same spool/cleanup
-        contract as the parquet/CISI uploads."""
-        ups = request.files.getlist("file")
-        if not ups or all(not u.filename for u in ups):
-            return jsonify({"error": "no file provided"}), 400
-        tmp = tempfile.mkdtemp(prefix="pdftext_")
-        # generated spool names; original client names survive only as
-        # display metadata, remapped into file_name after the read
-        names = {
-            f"upload{i}.pdf": (up.filename or f"upload{i}.pdf")
-            for i, up in enumerate(ups)
-        }
-        for i, up in enumerate(ups):
-            _spool(tmp, up, f"upload{i}.pdf")
-        out_dir, err = _subdir_or_400(request.form.get("subdir", "pdf_docs"))
-        if err:
-            shutil.rmtree(tmp, ignore_errors=True)
-            return err
-
-        def _work(job_id: str) -> dict[str, Any]:
-            from parquet_extractor_spark.sources.pdf import read_pdf_docs
-
-            try:
-                check_write_access(out_dir)
-                job_log(job_id, f"extracting {len(ups)} uploaded PDFs")
-                name_map = F.create_map(
-                    *[F.lit(x) for kv in names.items() for x in kv]
-                )
-                docs = materialize(
-                    read_pdf_docs(spark, tmp).withColumn(
-                        "file_name",
-                        F.coalesce(
-                            name_map[F.col("file_name")], F.col("file_name")
-                        ),
-                    )
-                )
-                docs.write.mode("overwrite").parquet(out_dir)
-                ok = docs.where(docs.error.isNull()).count()
-                bad = docs.where(docs.error.isNotNull()).count()
-                errors = [
-                    {"file": r.file_name, "error": r.error}
-                    for r in docs.where(docs.error.isNotNull())
-                    .select("file_name", "error")
-                    .collect()
-                ]
-                job_log(job_id, f"extracted {ok} PDFs, {bad} errors")
-                return {
-                    "output_dir": out_dir,
-                    "extracted": ok,
-                    "errors": bad,
-                    "error_files": errors,
-                }
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-
-        job_id = submit_job(
-            spark,
-            "ingest_pdftext",
-            _work,
-            {"files": [u.filename for u in ups]},
+        S9 sink): one or more PDFs uploaded multipart, extracted by
+        sources/pdf.read_pdf_docs, written as a parquet document table.
+        The result previews at most MAX_ERRORS error rows
+        (api.py:372,563)."""
+        return _ingest(
+            "ingest_pdftext", read_pdf_docs, "file_name", ".pdf", "pdf_docs",
+            lambda m: {
+                "extracted": m["ok"],
+                "errors": m["errors"],
+                "error_files": [
+                    {"file": f, "error": e} for f, e in m["error_rows"]
+                ],
+            },
         )
-        return jsonify({"job_id": job_id, "status": "running"}), 202
 
     @app.post("/api/ingest/warc")
     def ingest_warc():
         """WARC ingestion face (beyond reference — the Common Crawl
         input path): one or more .warc/.warc.gz files uploaded
-        multipart, spooled, parsed record-by-record by
-        sources/warc.read_warc_docs (PERMISSIVE — corrupt containers
-        and payloads become error rows), written as a parquet record
-        table under the outputs subdir."""
-        ups = request.files.getlist("file")
-        if not ups or all(not u.filename for u in ups):
-            return jsonify({"error": "no file provided"}), 400
-        tmp = tempfile.mkdtemp(prefix="warc_")
-        # generated spool names: traversal-proof, collision-proof, and
-        # always matched by read_warc_docs' *.warc* glob (a client
-        # name like "segment.gz" would otherwise be silently skipped);
-        # originals survive as display metadata remapped into path
-        names = {
-            f"upload{i}.warc": (up.filename or f"upload{i}.warc")
-            for i, up in enumerate(ups)
-        }
-        for i, up in enumerate(ups):
-            _spool(tmp, up, f"upload{i}.warc")
-        out_dir, err = _subdir_or_400(request.form.get("subdir", "warc_docs"))
-        if err:
-            shutil.rmtree(tmp, ignore_errors=True)
-            return err
-
-        def _work(job_id: str) -> dict[str, Any]:
-            from parquet_extractor_spark.sources.warc import read_warc_docs
-
-            try:
-                check_write_access(out_dir)
-                job_log(job_id, f"parsing {len(ups)} uploaded WARCs")
-                name_map = F.create_map(
-                    *[F.lit(x) for kv in names.items() for x in kv]
-                )
-                spool_base = F.element_at(
-                    F.split(F.col("path"), "/"), -1
-                )
-                recs = materialize(
-                    read_warc_docs(spark, tmp).withColumn(
-                        "path",
-                        F.coalesce(name_map[spool_base], F.col("path")),
-                    )
-                )
-                recs.write.mode("overwrite").parquet(out_dir)
-                ok = recs.where(recs.error.isNull()).count()
-                bad = recs.where(recs.error.isNotNull()).count()
-                docs = recs.where(recs.text.isNotNull()).count()
-                job_log(
-                    job_id,
-                    f"parsed {ok} records ({docs} documents), {bad} errors",
-                )
-                return {
-                    "output_dir": out_dir,
-                    "records": ok,
-                    "documents": docs,
-                    "errors": bad,
-                }
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-
-        job_id = submit_job(
-            spark,
-            "ingest_warc",
-            _work,
-            {"files": [u.filename for u in ups]},
+        multipart, parsed record-by-record by
+        sources/warc.read_warc_docs, written as a parquet record table.
+        The generated spool names always match its *.warc* glob, so a
+        client name like "segment.gz" still parses."""
+        return _ingest(
+            "ingest_warc", read_warc_docs, "path", ".warc", "warc_docs",
+            lambda m: {
+                "records": m["ok"],
+                "documents": m["with_text"],
+                "errors": m["errors"],
+            },
         )
-        return jsonify({"job_id": job_id, "status": "running"}), 202
 
     @app.post("/api/extract/cisi")
     def extract_cisi():
         """S3 face (api.py:106-165): CISI.ALL multipart upload spooled
         to a temp dir → regex split + section-parse pandas_udf →
-        file-per-row markdown sink. Same spool/cleanup contract as the
-        parquet upload above."""
+        file-per-row markdown sink."""
         if "file" not in request.files:
-            return jsonify({"error": "no file provided"}), 400
+            raise ParamError("no file provided")
         up = request.files["file"]
         if not up.filename:
-            return jsonify({"error": "no file selected"}), 400
-        tmp = tempfile.mkdtemp(prefix="cisi_")
-        path = _spool(tmp, up, "upload.cisi")
-        out_dir, err = _subdir_or_400(request.form.get("subdir", "cisi_papers"))
-        if err:
-            shutil.rmtree(tmp, ignore_errors=True)
-            return err
+            raise ParamError("no file selected")
+        out_dir = _subdir(request.form.get("subdir", "cisi_papers"))
+        tmp, names = _spool([up], ".cisi")
+        (path,) = (os.path.join(tmp, name) for name in names)
 
         def _work(job_id: str) -> dict[str, Any]:
-            try:
-                check_write_access(out_dir)
-                job_log(job_id, f"parsing CISI upload -> {out_dir}")
-                work = cisi_to_markdown(read_cisi(spark, path))
-                result = write_files(work, out_dir)
-                job_log(job_id, f"wrote {result['written']} files")
-                result["file_count"] = len(os.listdir(out_dir))
-                return result
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
+            job_log(job_id, f"parsing CISI upload -> {out_dir}")
+            work = cisi_to_markdown(read_cisi(spark, path))
+            result = write_files(work, out_dir)
+            job_log(job_id, f"wrote {result['written']} files")
+            result["file_count"] = len(os.listdir(out_dir))
+            return result
 
-        job_id = submit_job(
-            spark, "cisi", _work, {"file": up.filename, "subdir": out_dir}
-        )
-        return jsonify({"job_id": job_id, "status": "running"}), 202
+        params = {"file": up.filename, "subdir": out_dir}
+        return _submit("cisi", _work, params, out_dir, tmp)
 
     @app.post("/api/extract/wiki")
     def extract_wiki():
@@ -691,9 +635,7 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
         categories = params.get("categories") or WIKI_CRAWL_CATEGORIES
         limit = count_param(params, "limit", 200, MAX_CRAWL_ARTICLES)
         delay_s = seconds_param(params, "delay_s", 1.0)
-        out_dir, err = _subdir_or_400(params.get("subdir", "wiki_pdf"))
-        if err:
-            return err
+        out_dir = _subdir(params.get("subdir", "wiki_pdf"))
         try:
             if wiki_adapters is not None:
                 list_members, fetch_page = wiki_adapters()
@@ -704,7 +646,6 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
             return jsonify({"error": f"wiki adapters unavailable: {exc}"}), 503
 
         def _work(job_id: str) -> dict[str, Any]:
-            check_write_access(out_dir)
             job_log(
                 job_id,
                 f"crawling {len(categories)} categories (limit {limit})",
@@ -726,19 +667,12 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
             result["file_count"] = len(os.listdir(out_dir))
             return result
 
-        job_id = submit_job(
-            spark,
-            "wiki_crawl",
-            _work,
-            {"categories": categories, "limit": limit, "subdir": out_dir},
-        )
-        return jsonify({"job_id": job_id, "status": "running"}), 202
+        params = {"categories": categories, "limit": limit, "subdir": out_dir}
+        return _submit("wiki_crawl", _work, params, out_dir)
 
     @app.get("/api/files")
     def list_files():
-        target, err = _subdir_or_400(request.args.get("subdir", "markdown"))
-        if err:
-            return err
+        target = _subdir(request.args.get("subdir", "markdown"))
         if not os.path.isdir(target):
             return jsonify({"files": [], "count": 0})
         names = sorted(os.listdir(target))
@@ -757,10 +691,9 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
 
     @app.get("/api/files/<path:name>")
     def download_file(name: str):
-        target, err = _subdir_or_400(request.args.get("subdir", "markdown"))
-        if err:
-            return err
-        return send_from_directory(target, name)
+        return send_from_directory(
+            _subdir(request.args.get("subdir", "markdown")), name
+        )
 
     @app.delete("/api/files")
     def cleanup_files():
@@ -769,9 +702,7 @@ def create_app(spark: SparkSession, output_root: str, wiki_adapters=None):
         output root is a driver-local staging area; at cluster scale
         outputs live in object storage and cleanup is a lifecycle rule.
         """
-        target, err = _subdir_or_400(request.args.get("subdir", "markdown"))
-        if err:
-            return err
+        target = _subdir(request.args.get("subdir", "markdown"))
         if os.path.realpath(target) == os.path.realpath(output_root):
             return jsonify({"error": "refusing to delete output root"}), 400
         deleted, bytes_freed = 0, 0

@@ -89,10 +89,8 @@ def get_spark(
         # multi-second Janino compiles on every later run (r12
         # measured HOF-heavy queries at 2-5x their isolated cost late
         # in a sweep). Trade metaspace for compile time; single-query
-        # batch jobs are unaffected. Env-overridable for small hosts.
-        "spark.sql.codegen.cache.maxEntries": os.environ.get(
-            "SPARK_GRAFT_CODEGEN_CACHE", "4096"
-        ),
+        # batch jobs are unaffected.
+        "spark.sql.codegen.cache.maxEntries": "4096",
         # No per-call call-site capture. By default PySpark wraps every
         # Column/DataFrame API call in extra py4j round trips and a
         # Python stack walk so that a runtime error can quote the line
@@ -112,7 +110,7 @@ def get_spark(
         "spark.sql.warehouse.dir": os.environ.get(
             "SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"
         ),
-        "spark.ui.enabled": os.environ.get("SPARK_GRAFT_UI", "false"),
+        "spark.ui.enabled": "false",
     }
     if master.startswith("local"):
         # In local mode every task shares the driver JVM, whose heap

@@ -26,9 +26,10 @@ Why each knob exists at 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from parquet_extractor_spark.constants import MAX_ERRORS
 from parquet_extractor_spark.sources.tables import local_frame
 
 
@@ -57,6 +58,34 @@ def write_dataset(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(out_dir)
+
+
+def write_ingested(df: DataFrame, out_dir: str, name_col: str) -> dict:
+    """Write an ingested ``(..., text, error)`` frame as parquet and
+    count it during that same write: one Spark job, one parse of the
+    input. The counts ride on the write through ``DataFrame.observe``
+    rather than re-running the scan and parse once per ``count()``.
+
+    Returns ``ok`` (rows without error), ``errors`` (error rows),
+    ``with_text`` (rows with text) and ``error_rows``: the first
+    ``MAX_ERRORS`` ``(name, error)`` rows in sorted order, so the
+    preview does not depend on task order. Trade-off: the preview's
+    aggregate holds every error row's pair (the readers cap an error
+    at 200 chars) until the write ends, then keeps ``MAX_ERRORS``.
+    """
+    seen = Observation()
+    err = F.col("error").isNotNull()
+    pair = F.struct(F.col(name_col).alias("name"), F.col("error"))
+    df.observe(
+        seen,
+        F.count_if(~err).alias("ok"),
+        F.count_if(err).alias("errors"),
+        F.count_if(F.col("text").isNotNull()).alias("with_text"),
+        F.slice(
+            F.sort_array(F.collect_list(F.when(err, pair))), 1, MAX_ERRORS
+        ).alias("error_rows"),
+    ).write.mode("overwrite").parquet(out_dir)
+    return seen.get
 
 
 def read_dataset(spark, out_dir: str) -> DataFrame:
