@@ -401,11 +401,12 @@ def main() -> None:
 
 def _warm_trained_artifacts(spark) -> None:
     """Train (or disk-load) the shared dataset-level model artifacts
-    the persistent store serves: IVF centroids, PQ head seeds +
-    Lloyd-refined codebooks, the logreg classifier, the LM count
-    tables, the Bloom bitset. Each is bounded and deterministic; a
-    warm store turns every call into a JSON read. Defensive per-item:
-    a missing table must not kill the bench run."""
+    the persistent store serves: the head vectors (IVF centroids, PQ
+    seeds, query set), the Lloyd-refined codebooks, the logreg
+    classifier, the LM count tables, the Bloom bitset. Each is
+    bounded and deterministic; a warm store turns every call into a
+    JSON read. Defensive per-item: a missing table must not kill the
+    bench run."""
     from parquet_extractor_spark.operators import (
         classifier,
         contamination,
@@ -414,13 +415,7 @@ def _warm_trained_artifacts(spark) -> None:
     )
 
     for label, fn in (
-        ("centroids", lambda: similarity._centroid_vectors(spark, SF_DIR)),
-        (
-            "head_vectors",
-            lambda: similarity._head_vectors(
-                spark, SF_DIR, similarity.PQ_K
-            ),
-        ),
+        ("head_vectors", lambda: similarity._head_vectors(spark, SF_DIR)),
         (
             "refined_pq_books",
             lambda: similarity.refined_pq_books(spark, SF_DIR),

@@ -97,8 +97,8 @@ def _train(
     query — and persisted per (data dir, code version): the gradient
     descent is integer-deterministic, so the curve query and the
     scoring query in one sweep train the model once between them
-    (artifacts.memo_artifact)."""
-    from parquet_extractor_spark.artifacts import memo_artifact
+    (store.memo_artifact)."""
+    from parquet_extractor_spark.store import memo_artifact
 
     return memo_artifact(
         spark,

@@ -186,7 +186,7 @@ def build_bloom_bitset(
     streaming probe and decontamination_report share one build. The
     ``grams`` frame only matters on a cold build — a warm memo
     returns the identical words either way."""
-    from parquet_extractor_spark.artifacts import memo_artifact
+    from parquet_extractor_spark.store import memo_artifact
 
     def build() -> list[int]:
         g = grams if grams is not None else _all_doc_grams(spark, sf_dir)

@@ -100,15 +100,14 @@ def _pair_overlap_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetric Jaccard query and the asymmetric containment query.
     Plan shape documented on ngram_jaccard_pairs (unchanged).
 
-    MATERIALIZED via tiers.ensure_tier so the two registry consumers
+    MATERIALIZED via store.ensure_tier so the two registry consumers
     (ngram_jaccard_pairs, dedup_containment_scores — plus
     lsh_quality_eval through _ngram_pairs_tier) share ONE derivation;
     the grouped-postings persist that feeds the build is dropped as
     soon as the tier's parquet write completes, so a full-registry
     sweep no longer carries session-lifetime cached postings copies.
     """
-    from parquet_extractor_spark.artifacts import _disabled
-    from parquet_extractor_spark.tiers import ensure_tier
+    from parquet_extractor_spark.store import disabled, ensure_tier
 
     to_release: list[DataFrame] = []
 
@@ -173,7 +172,7 @@ def _pair_overlap_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise the write inside ensure_tier already consumed them. A
     # failed build leaves them to the query scope (or, unscoped, the
     # release_cached sweep).
-    if not _disabled():
+    if not disabled():
         for df in to_release:
             release(df)
     return out
@@ -430,14 +429,14 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_pairs_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The banded-LSH candidate pairs as a MATERIALIZED shared tier
-    (tiers.ensure_tier): dedup_components, dedup_graph_pagerank and
+    (store.ensure_tier): dedup_components, dedup_graph_pagerank and
     lsh_quality_eval all consume this exact pair set, and before the
     tier layer each re-ran the shingle -> MinHash -> banding pipeline
     from the raw corpus. The first consumer writes the pairs once
     (a bounded table: candidate pairs, not the corpus) and the rest
     scan the files — the "persist the dedup index" shape a 100 TB
     pipeline uses across jobs."""
-    from parquet_extractor_spark.tiers import ensure_tier
+    from parquet_extractor_spark.store import ensure_tier
 
     return ensure_tier(
         spark,
@@ -454,7 +453,7 @@ def _ngram_pairs_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ground-truth side of lsh_quality_eval and the most expensive
     tier to derive (an exact pairwise Jaccard over grouped postings).
     """
-    from parquet_extractor_spark.tiers import ensure_tier
+    from parquet_extractor_spark.store import ensure_tier
 
     return ensure_tier(
         spark,
@@ -472,7 +471,7 @@ def _components_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full (doc_id, component) labeling. The builder itself reads
     the lsh_pairs tier (nested ensure_tier — the lock is reentrant),
     so a sweep derives the pair graph exactly once end to end."""
-    from parquet_extractor_spark.tiers import ensure_tier
+    from parquet_extractor_spark.store import ensure_tier
 
     return ensure_tier(
         spark,
@@ -485,7 +484,7 @@ def _components_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _exact_keep_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-dedup survivor set (keep_doc_id per content hash) as a
     materialized shared tier for the report queries."""
-    from parquet_extractor_spark.tiers import ensure_tier
+    from parquet_extractor_spark.store import ensure_tier
 
     return ensure_tier(
         spark,
@@ -942,7 +941,7 @@ def lsh_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     precision_micro, recall_micro).
 
     Both upstream pair sets come from the MATERIALIZED tier store
-    (tiers.py): each tier is derived from the corpus at most once per
+    (store.py): each tier is derived from the corpus at most once per
     session — by this query or by whichever dedup consumer ran first
     — and re-reads here are parquet scans of a bounded pair table.
     Each tier feeds two consumers below (its own 1-row count and the
@@ -1104,7 +1103,7 @@ def dedup_reduction_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographic so the output order is the pipeline order.
 
     The exact-keep set and component labels come from the
-    MATERIALIZED tier store (tiers.py) — derived from the corpus at
+    MATERIALIZED tier store (store.py) — derived from the corpus at
     most once per dataset + code version across every dedup consumer
     (persistent tier store). The two
     per-query intermediates (per_doc token counts, exact survivors)

@@ -1522,7 +1522,7 @@ _MEDIA_TIER_DIR = "/fixtures/media-neardup"
 
 
 def _phash_tier(spark) -> DataFrame:
-    from parquet_extractor_spark.tiers import ensure_tier
+    from parquet_extractor_spark.store import ensure_tier
 
     return ensure_tier(
         spark,
@@ -1731,7 +1731,7 @@ def banded_near_dup_pairs(
 
 
 def _afp_tier(spark) -> DataFrame:
-    from parquet_extractor_spark.tiers import ensure_tier
+    from parquet_extractor_spark.store import ensure_tier
 
     return ensure_tier(
         spark,
@@ -1892,7 +1892,7 @@ def animation_phashes(media: DataFrame) -> DataFrame:
 
 
 def _anim_tier(spark) -> DataFrame:
-    from parquet_extractor_spark.tiers import ensure_tier
+    from parquet_extractor_spark.store import ensure_tier
 
     return ensure_tier(
         spark,

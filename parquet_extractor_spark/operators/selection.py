@@ -1316,7 +1316,7 @@ def lm_count_arrays(
     arrays — the "frozen reference model" artifact a scoring job
     loads at start. Persisted per (data dir, code version) like the Bloom
     bitset; bounded by construction (2 x LM_BUCKETS ints)."""
-    from parquet_extractor_spark.artifacts import memo_artifact
+    from parquet_extractor_spark.store import memo_artifact
 
     def build() -> tuple[list[int], list[int]]:
         docs = spread(load_table(spark, sf_dir, "documents"))

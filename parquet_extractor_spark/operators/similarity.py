@@ -481,33 +481,17 @@ NUM_CENTROIDS = 8
 NPROBE = 2
 
 
-def _centroid_vectors(
-    spark: SparkSession, sf_dir: str, k: int = NUM_CENTROIDS
-) -> list[list[float]]:
-    """Collect the k centroid vectors (a few KB) onto the driver —
-    they become plan-time literals, broadcast for free inside the
-    serialized expressions. Seeds are the FIRST k rows by vec_id
-    (robust to non-contiguous / non-zero-based id spaces; the oracles
-    mirror with ORDER BY vec_id LIMIT k).
-
-    Persisted per (data dir, code version, k) — every IVF-family query
-    shares one coarse quantizer, so a sweep trains it once
-    (artifacts.memo_artifact)."""
-    from parquet_extractor_spark.artifacts import memo_artifact
-
-    def build() -> list[list[float]]:
-        rows = (
-            load_table(spark, sf_dir, "embeddings")
-            .select("vec_id", "embedding")
-            .orderBy("vec_id")
-            .limit(k)
-            .collect()
-        )
-        if not rows:
-            raise ValueError("embeddings table is empty, no centroid seeds")
-        return [[float(x) for x in r.embedding] for r in rows]
-
-    return memo_artifact(spark, sf_dir, ("centroids", k), build)
+def _centroid_vectors(spark: SparkSession, sf_dir: str) -> list[list[float]]:
+    """The NUM_CENTROIDS centroid vectors as driver-side floats — they
+    become plan-time literals, broadcast for free inside the serialized
+    expressions. Seeds are the FIRST rows by vec_id (robust to
+    non-contiguous / non-zero-based id spaces; the oracles mirror with
+    ORDER BY vec_id LIMIT k), a prefix of the shared head-vector
+    artifact, so every IVF-family query shares one coarse quantizer."""
+    return [
+        [float(x) for x in r.embedding]
+        for r in _head_vectors(spark, sf_dir)[:NUM_CENTROIDS]
+    ]
 
 
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1593,7 +1577,7 @@ def kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (seeded assignment, rounded means) — memoized so the refined
     # quantizer is trained once per dataset + code version (disk-
     # persisted), not once per query or JVM
-    from parquet_extractor_spark.artifacts import memo_artifact
+    from parquet_extractor_spark.store import memo_artifact
 
     cents1 = memo_artifact(
         spark, sf_dir, ("kmeans_cents1",), train_cents1
@@ -1808,26 +1792,31 @@ ORDER BY vec_id
 """
 
 
-def _head_vectors(spark: SparkSession, sf_dir: str, k: int) -> list:
-    """One driver collect serving centroids, PQ seeds, AND the query
-    set: the first k rows by vec_id (all three are prefixes of the
-    same ordering, so one job covers them). Persisted per (data dir,
-    code version, k) — shared across the whole PQ/IVF query family."""
-    from parquet_extractor_spark.artifacts import memo_artifact
+# Centroids, PQ seeds (both book sizes) and the query set are all
+# prefixes of the same vec_id ordering: one artifact of HEAD_K rows
+# serves them, and each caller slices it.
+HEAD_K = max(NUM_CENTROIDS, PQ_K, PQ_K_REFINED, N_QUERIES)
+
+
+def _head_vectors(spark: SparkSession, sf_dir: str) -> list:
+    """The first HEAD_K embedding rows by vec_id, collected in one
+    driver job and persisted per (data dir, code version) — shared
+    across the whole PQ/IVF query family."""
+    from parquet_extractor_spark.store import memo_artifact
 
     def build() -> list:
         rows = (
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding")
             .orderBy("vec_id")
-            .limit(k)
+            .limit(HEAD_K)
             .collect()
         )
         if not rows:
             raise ValueError("embeddings table is empty")
         return rows
 
-    return memo_artifact(spark, sf_dir, ("head_vectors", k), build)
+    return memo_artifact(spark, sf_dir, ("head_vectors",), build)
 
 
 def _books_from_rows(rows: list, k: int = PQ_K) -> list[list[list[float]]]:
@@ -1919,7 +1908,7 @@ def refined_pq_books(
     query. An explicit seed bypasses the memo (the caller is doing
     its own training experiment)."""
     if seed_books is None:
-        from parquet_extractor_spark.artifacts import memo_artifact
+        from parquet_extractor_spark.store import memo_artifact
 
         return memo_artifact(
             spark,
@@ -1936,7 +1925,7 @@ def _refined_pq_books_uncached(
     seed_books: list[list[list[float]]] | None,
 ) -> list[list[list[float]]]:
     books = seed_books or _books_from_rows(
-        _head_vectors(spark, sf_dir, PQ_K_REFINED), PQ_K_REFINED
+        _head_vectors(spark, sf_dir), PQ_K_REFINED
     )
     emb = load_table(spark, sf_dir, "embeddings")
 
@@ -2165,10 +2154,8 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed codewords per subspace quantize coarsely. That gap is
     codebook TRAINING, not plan shape — see ann_ivf_pq_refined.
     """
-    head = _head_vectors(
-        spark, sf_dir, max(NUM_CENTROIDS, PQ_K, N_QUERIES)
-    )
-    cents = [[float(x) for x in r.embedding] for r in head[:NUM_CENTROIDS]]
+    head = _head_vectors(spark, sf_dir)
+    cents = _centroid_vectors(spark, sf_dir)
     books = _books_from_rows(head)
     return _ivf_pq_search(spark, sf_dir, cents, books, head[:N_QUERIES])
 
@@ -2184,12 +2171,10 @@ def ann_ivf_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan-time literals and the ADC is still PQ_M table lookups.
     Output: (query_id, neighbor_id, adc_dist_micro, rank).
     """
-    head = _head_vectors(
-        spark, sf_dir, max(NUM_CENTROIDS, PQ_K_REFINED, N_QUERIES)
-    )
-    cents = [[float(x) for x in r.embedding] for r in head[:NUM_CENTROIDS]]
+    cents = _centroid_vectors(spark, sf_dir)
     books = refined_pq_books(spark, sf_dir)
-    return _ivf_pq_search(spark, sf_dir, cents, books, head[:N_QUERIES])
+    queries = _head_vectors(spark, sf_dir)[:N_QUERIES]
+    return _ivf_pq_search(spark, sf_dir, cents, books, queries)
 
 
 
@@ -2575,6 +2560,29 @@ ORDER BY query_id, rank
 SQ8_LEVELS = 255  # 8-bit codes: 0..255
 
 
+def _dim_ranges(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[float], list[float]]:
+    """Per-dimension (mins, maxs) of the embeddings in one partial+final
+    aggregate: the trained model of both SQ8 (the ranges) and BQ (their
+    midpoints), persisted per (data dir, code version)."""
+    from parquet_extractor_spark.store import memo_artifact
+
+    def build() -> tuple[list[float], list[float]]:
+        aggs = []
+        for d in range(1, EMB_DIM + 1):
+            e = F.element_at("embedding", d).cast("double")
+            aggs.append(F.min(e).alias(f"mn{d}"))
+            aggs.append(F.max(e).alias(f"mx{d}"))
+        row = load_table(spark, sf_dir, "embeddings").agg(*aggs).collect()[0]
+        return (
+            [float(row[f"mn{d}"]) for d in range(1, EMB_DIM + 1)],
+            [float(row[f"mx{d}"]) for d in range(1, EMB_DIM + 1)],
+        )
+
+    return memo_artifact(spark, sf_dir, ("sq8_minmax",), build)
+
+
 def sq8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar (per-dimension) 8-bit quantization of the embedding
     corpus — the third vector-compression family next to PQ
@@ -2601,26 +2609,7 @@ def sq8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQ8_CODES_SQL term for term.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-
-    def train_ranges() -> tuple[list[float], list[float]]:
-        aggs = []
-        for d in range(1, EMB_DIM + 1):
-            e = F.element_at("embedding", d).cast("double")
-            aggs.append(F.min(e).alias(f"mn{d}"))
-            aggs.append(F.max(e).alias(f"mx{d}"))
-        row = emb.agg(*aggs).collect()[0]
-        return (
-            [float(row[f"mn{d}"]) for d in range(1, EMB_DIM + 1)],
-            [float(row[f"mx{d}"]) for d in range(1, EMB_DIM + 1)],
-        )
-
-    # per-dimension ranges are the trained SQ8 "model": memoized per
-    # (data dir, code version) like the IVF centroids and PQ codebooks
-    from parquet_extractor_spark.artifacts import memo_artifact
-
-    mins, maxs = memo_artifact(
-        spark, sf_dir, ("sq8_minmax",), train_ranges
-    )
+    mins, maxs = _dim_ranges(spark, sf_dir)
 
     # one SQL string per projection, not EMB_DIM Column objects — the
     # pq_codes py4j-round-trip lesson. The per-dimension math is a
@@ -2916,22 +2905,7 @@ def binary_hamming_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall, the gap being what the rerank buys.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-
-    def train_thresholds() -> list[float]:
-        aggs = []
-        for d in range(1, EMB_DIM + 1):
-            e = F.element_at("embedding", d).cast("double")
-            aggs.append(F.min(e).alias(f"mn{d}"))
-            aggs.append(F.max(e).alias(f"mx{d}"))
-        row = emb.agg(*aggs).collect()[0]
-        return [
-            (float(row[f"mn{d}"]) + float(row[f"mx{d}"])) / 2.0
-            for d in range(1, EMB_DIM + 1)
-        ]
-
-    from parquet_extractor_spark.artifacts import memo_artifact
-
-    thrs = memo_artifact(spark, sf_dir, ("bq_thresholds",), train_thresholds)
+    thrs = [(mn + mx) / 2.0 for mn, mx in zip(*_dim_ranges(spark, sf_dir))]
 
     # one SQL string per packed word, not EMB_DIM Column objects — the
     # pq_codes py4j-round-trip lesson

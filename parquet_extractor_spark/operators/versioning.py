@@ -143,7 +143,7 @@ def incremental_dedup_candidates(
         band_join,
         signature_frame,
     )
-    from parquet_extractor_spark.tiers import ensure_tier
+    from parquet_extractor_spark.store import ensure_tier
 
     docs = load_table(spark, sf_dir, "documents")
     h = portable_hash64(F.col("doc_id").cast("string"))

@@ -374,7 +374,7 @@ def test_curation_reports_match_oracle_on_degenerate_docs(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from parquet_extractor_spark import tiers
+    from parquet_extractor_spark import store
     from parquet_extractor_spark.operators.contamination import (
         BENCH_MOD,
         ngram_decontamination,
@@ -412,7 +412,7 @@ def test_curation_reports_match_oracle_on_degenerate_docs(
 
     # private store: the variant's tiers must not land in the shared one
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "store"))
-    tiers.clear_tiers()
+    store.clear()
     try:
         flags = _gate_flags(spark, str(sf)).filter("f_x").collect()
         assert base["doc_id"] in {r.doc_id for r in flags}
@@ -434,5 +434,5 @@ def test_curation_reports_match_oracle_on_degenerate_docs(
             spark=spark,
         )
     finally:
-        tiers.clear_tiers()
+        store.clear()
     assert failures == []

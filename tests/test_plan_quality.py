@@ -434,6 +434,58 @@ def test_caching_lives_only_in_materialize():
     )
 
 
+def test_store_keys_are_unique_and_private_names_stay_home():
+    """Two rules for the persistent store (store.py). No package module
+    imports a ``_``-prefixed name from ``store``: its key, path, lock
+    and memo are private to it. And every ``memo_artifact`` /
+    ``ensure_tier`` call names its entry with a literal that no other
+    call site uses — two builders sharing one name share one key and
+    would serve each other's values."""
+    import ast
+    import collections
+    import os
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "parquet_extractor_spark",
+    )
+    private, sites = [], collections.defaultdict(list)
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            for n in ast.walk(ast.parse(open(path).read())):
+                if (
+                    isinstance(n, ast.ImportFrom)
+                    and (n.module or "").split(".")[-1] == "store"
+                ):
+                    private += [
+                        f"{path}:{n.lineno} {a.name}"
+                        for a in n.names
+                        if a.name.startswith("_")
+                    ]
+                if not isinstance(n, ast.Call):
+                    continue
+                fn = getattr(n.func, "id", getattr(n.func, "attr", None))
+                if fn not in ("memo_artifact", "ensure_tier"):
+                    continue
+                name = n.args[2] if len(n.args) > 2 else None
+                if isinstance(name, ast.Tuple) and name.elts:
+                    name = name.elts[0]
+                label = (
+                    name.value
+                    if isinstance(name, ast.Constant)
+                    and isinstance(name.value, str)
+                    else f"<non-literal {fn} name>"
+                )
+                sites[label].append(f"{path}:{n.lineno}")
+    assert not private, f"private store names imported: {private}"
+    assert sites, "no store call sites found"
+    shared = {k: v for k, v in sites.items() if len(v) != 1 or k[0] == "<"}
+    assert not shared, f"store names not unique literals: {shared}"
+
+
 def test_driver_rows_go_through_local_frame():
     """Driver-side rows become a frame only through
     sources.tables.local_frame, which plans a JVM LocalRelation. A

@@ -706,7 +706,7 @@ def test_pair_bucket_hash_cross_engine_property(keys, n_parts):
     assert [r[0] for r in rows] == py
 
 
-# ── artifact JSON codec round-trip (artifacts.py) ───────────────────
+# ── artifact JSON codec round-trip (store.py) ───────────────────
 #
 # The persistent store serializes trained artifacts through a tagged
 # JSON codec; a value it cannot faithfully round-trip must either be
@@ -759,7 +759,7 @@ def _same(a, b) -> bool:
 def test_artifact_codec_roundtrip_property(v):
     import json as _json
 
-    from parquet_extractor_spark.artifacts import _decode, _encode
+    from parquet_extractor_spark.store import _decode, _encode
 
     got = _decode(_json.loads(_json.dumps(_encode(v))))
     assert _same(got, v)
@@ -772,7 +772,7 @@ def test_artifact_codec_roundtrip_rows(v):
 
     import json as _json
 
-    from parquet_extractor_spark.artifacts import _decode, _encode
+    from parquet_extractor_spark.store import _decode, _encode
 
     row = Row(a=v, b=[v])
     got = _decode(_json.loads(_json.dumps(_encode(row))))
@@ -787,7 +787,7 @@ def test_artifact_codec_refuses_unexpressible():
     that would decode into a different shape."""
     import pytest as _pytest
 
-    from parquet_extractor_spark.artifacts import _encode
+    from parquet_extractor_spark.store import _encode
 
     for bad in ({"k": 1}, {1, 2}, b"bytes", object()):
         with _pytest.raises(TypeError):

@@ -1,4 +1,4 @@
-"""The shared-tier store (tiers.py) and artifact memo (artifacts.py).
+"""The persistent store (store.py): shared tiers and the artifact memo.
 
 Contract under test: a tier/artifact is derived at most once per
 (session, data dir, name); reuse returns value-identical results; the
@@ -13,21 +13,21 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from parquet_extractor_spark import artifacts, tiers
+from parquet_extractor_spark import store
 
 
 @pytest.fixture(autouse=True)
 def _fresh_registry(tmp_path, monkeypatch):
     """Each test starts and ends with empty tier/memo registries AND
     a private disk store, so cross-test order never matters and the
-    clear_tiers() purges here cannot wipe the SHARED persistent store
+    store.clear() purges here cannot wipe the SHARED persistent store
     other test modules (and a later bench) rely on."""
     monkeypatch.setenv(
         "SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "tier-store")
     )
-    tiers.clear_tiers()
+    store.clear()
     yield
-    tiers.clear_tiers()
+    store.clear()
 
 
 def test_ensure_tier_builds_once(spark, sf_small):
@@ -37,8 +37,8 @@ def test_ensure_tier_builds_once(spark, sf_small):
         calls.append(1)
         return spark.range(5).select(F.col("id").alias("n"))
 
-    a = tiers.ensure_tier(spark, sf_small, "t_unit", build)
-    b = tiers.ensure_tier(spark, sf_small, "t_unit", build)
+    a = store.ensure_tier(spark, sf_small, "t_unit", build)
+    b = store.ensure_tier(spark, sf_small, "t_unit", build)
     assert len(calls) == 1
     assert sorted(r.n for r in a.collect()) == [0, 1, 2, 3, 4]
     assert sorted(r.n for r in b.collect()) == [0, 1, 2, 3, 4]
@@ -48,7 +48,7 @@ def test_tier_key_isolates_name_and_dir(spark, sf_small, tmp_path):
     # same name, different dir -> distinct tiers; same dir, different
     # name -> distinct tiers
     d2 = str(tmp_path)
-    tiers.ensure_tier(
+    store.ensure_tier(
         spark, sf_small, "t_k", lambda: spark.range(1).select("id")
     )
     calls = []
@@ -57,15 +57,15 @@ def test_tier_key_isolates_name_and_dir(spark, sf_small, tmp_path):
         calls.append(1)
         return spark.range(2).select("id")
 
-    tiers.ensure_tier(spark, d2, "t_k", build2)
-    tiers.ensure_tier(spark, sf_small, "t_k2", build2)
+    store.ensure_tier(spark, d2, "t_k", build2)
+    store.ensure_tier(spark, sf_small, "t_k2", build2)
     assert len(calls) == 2
 
 
 def test_rewritten_fixture_invalidates_tier(spark, sf_small, tmp_path):
     """An in-place fixture rewrite mid-session must serve FRESH tier
-    results, not the cached ones: the key's dir_fingerprint
-    (count/bytes/mtime of the dir's parquet files) changes with the
+    results, not the cached ones: the key's per-table scan stats
+    (bytes/files/mtime of each parquet table) change with the
     rewrite even though applicationId and realpath do not."""
     import shutil
 
@@ -84,7 +84,7 @@ def test_rewritten_fixture_invalidates_tier(spark, sf_small, tmp_path):
             .count()
         )
 
-    n0 = tiers.ensure_tier(spark, d, "t_fresh", build).collect()[0][0]
+    n0 = store.ensure_tier(spark, d, "t_fresh", build).collect()[0][0]
 
     # rewrite the fixture in place with a different table
     shutil.copy(
@@ -95,8 +95,31 @@ def test_rewritten_fixture_invalidates_tier(spark, sf_small, tmp_path):
     # mtime explicitly so the test never depends on copy timing
     os.utime(os.path.join(d, "docs.parquet"))
 
-    n1 = tiers.ensure_tier(spark, d, "t_fresh", build).collect()[0][0]
+    n1 = store.ensure_tier(spark, d, "t_fresh", build).collect()[0][0]
     assert n0 != n1, "stale tier served after in-place fixture rewrite"
+
+
+def test_rewritten_directory_table_invalidates_tier(spark, sf_small, tmp_path):
+    """The same guarantee for a table stored as a directory
+    (``docs.parquet/part-0.parquet``, a layout load_table reads):
+    rewriting the part file in place leaves the directory's own stat
+    unchanged, so the key must cover the files inside it."""
+    import shutil
+
+    d = str(tmp_path / "fixture")
+    table = os.path.join(d, "docs.parquet")
+    part = os.path.join(table, "part-0.parquet")
+    os.makedirs(table)
+    shutil.copy(os.path.join(sf_small, "region.parquet"), part)
+
+    def build():
+        return spark.read.parquet(table).groupBy().count()
+
+    n0 = store.ensure_tier(spark, d, "t_fresh_dir", build).collect()[0][0]
+    shutil.copy(os.path.join(sf_small, "nation.parquet"), part)
+    os.utime(part)
+    n1 = store.ensure_tier(spark, d, "t_fresh_dir", build).collect()[0][0]
+    assert n0 != n1, "stale tier served after a part file was rewritten"
 
 
 def test_kill_switch_disables_both_layers(spark, sf_small, monkeypatch):
@@ -107,12 +130,12 @@ def test_kill_switch_disables_both_layers(spark, sf_small, monkeypatch):
         calls.append(1)
         return spark.range(1).select("id")
 
-    tiers.ensure_tier(spark, sf_small, "t_off", build)
-    tiers.ensure_tier(spark, sf_small, "t_off", build)
+    store.ensure_tier(spark, sf_small, "t_off", build)
+    store.ensure_tier(spark, sf_small, "t_off", build)
     assert len(calls) == 2
     vals = []
-    artifacts.memo_artifact(spark, sf_small, ("a_off",), lambda: vals.append(1))
-    artifacts.memo_artifact(spark, sf_small, ("a_off",), lambda: vals.append(1))
+    store.memo_artifact(spark, sf_small, ("a_off",), lambda: vals.append(1))
+    store.memo_artifact(spark, sf_small, ("a_off",), lambda: vals.append(1))
     assert len(vals) == 2
 
 
@@ -123,9 +146,9 @@ def test_clear_tiers_forgets(spark, sf_small):
         calls.append(1)
         return spark.range(1).select("id")
 
-    tiers.ensure_tier(spark, sf_small, "t_clear", build)
-    tiers.clear_tiers()
-    tiers.ensure_tier(spark, sf_small, "t_clear", build)
+    store.ensure_tier(spark, sf_small, "t_clear", build)
+    store.clear()
+    store.ensure_tier(spark, sf_small, "t_clear", build)
     assert len(calls) == 2
 
 
@@ -144,12 +167,12 @@ def test_warm_tier_read_submits_no_spark_job(spark, sf_small, jobs_in_group):
 def test_rewritten_tier_reads_its_new_schema(spark, sf_small):
     """The tier path is stable across a rebuild, so the cached read
     schema must follow the files, not the path."""
-    a = tiers.ensure_tier(
+    a = store.ensure_tier(
         spark, sf_small, "t_schema", lambda: spark.range(2).select("id")
     )
     assert a.columns == ["id"]
-    tiers.clear_tiers()  # isolated store: drops the tier on disk too
-    b = tiers.ensure_tier(
+    store.clear()  # isolated store: drops the tier on disk too
+    b = store.ensure_tier(
         spark,
         sf_small,
         "t_schema",
@@ -166,10 +189,10 @@ def test_memo_artifact_builds_once_and_isolates_keys(spark, sf_small):
         calls.append(1)
         return [1, 2, 3]
 
-    assert artifacts.memo_artifact(spark, sf_small, ("m", 1), build) == [1, 2, 3]
-    assert artifacts.memo_artifact(spark, sf_small, ("m", 1), build) == [1, 2, 3]
+    assert store.memo_artifact(spark, sf_small, ("m", 1), build) == [1, 2, 3]
+    assert store.memo_artifact(spark, sf_small, ("m", 1), build) == [1, 2, 3]
     assert len(calls) == 1
-    artifacts.memo_artifact(spark, sf_small, ("m", 2), build)
+    store.memo_artifact(spark, sf_small, ("m", 2), build)
     assert len(calls) == 2
 
 
@@ -184,11 +207,35 @@ def test_tier_survives_process_restart_simulated(spark, sf_small):
         calls.append(1)
         return spark.range(3).select(F.col("id").alias("n"))
 
-    tiers.ensure_tier(spark, sf_small, "t_persist", build)
-    tiers._KNOWN.clear()  # what a new process starts with
-    out = tiers.ensure_tier(spark, sf_small, "t_persist", build)
+    store.ensure_tier(spark, sf_small, "t_persist", build)
+    store._MEMO.clear()  # what a new process starts with
+    out = store.ensure_tier(spark, sf_small, "t_persist", build)
     assert len(calls) == 1
     assert sorted(r.n for r in out.collect()) == [0, 1, 2]
+
+
+def test_cold_ann_build_trains_each_artifact_once(
+    spark, sf_small, jobs_in_group
+):
+    """From an empty store, building the IVF, IVF-PQ, SQ8 and BQ
+    queries trains two artifacts: the head vectors (IVF centroids, PQ
+    seeds and query set are prefixes of one ordering) and the
+    per-dimension ranges (SQ8 uses them, BQ their midpoints). One
+    collect job for the first, the aggregate's two for the second."""
+    from parquet_extractor_spark.operators import similarity
+    from parquet_extractor_spark.sources.tables import load_table
+
+    load_table(spark, sf_small, "embeddings")  # schema read outside
+    names = ("ann_ivf", "ann_ivf_pq", "sq8_codes", "binary_hamming_recall")
+    jobs = jobs_in_group(
+        lambda: [getattr(similarity, n)(spark, sf_small) for n in names],
+        "cold-ann-build",
+    )
+    files = os.listdir(os.path.join(store.store_root(), "artifacts"))
+    assert sorted(f.split("-")[0] for f in files) == [
+        "head_vectors", "sq8_minmax",
+    ]
+    assert len(jobs) == 3
 
 
 def test_artifact_survives_process_restart_simulated(spark, sf_small):
@@ -198,9 +245,9 @@ def test_artifact_survives_process_restart_simulated(spark, sf_small):
         calls.append(1)
         return [[1.5, -2.25], [0.0, 3.0]]
 
-    a = artifacts.memo_artifact(spark, sf_small, ("m_persist",), build)
-    artifacts._MEMO.clear()  # what a new process starts with
-    b = artifacts.memo_artifact(spark, sf_small, ("m_persist",), build)
+    a = store.memo_artifact(spark, sf_small, ("m_persist",), build)
+    store._MEMO.clear()  # what a new process starts with
+    b = store.memo_artifact(spark, sf_small, ("m_persist",), build)
     assert len(calls) == 1
     assert a == b == [[1.5, -2.25], [0.0, 3.0]]
 
@@ -217,9 +264,9 @@ def test_artifact_codec_roundtrips_tuples_and_rows(spark, sf_small):
         (1, 2, 3),
         [0.3333333333333333],
     )
-    artifacts.memo_artifact(spark, sf_small, ("m_codec",), lambda: val)
-    artifacts._MEMO.clear()
-    got = artifacts.memo_artifact(
+    store.memo_artifact(spark, sf_small, ("m_codec",), lambda: val)
+    store._MEMO.clear()
+    got = store.memo_artifact(
         spark, sf_small, ("m_codec",), lambda: (_ for _ in ()).throw(
             AssertionError("disk layer missed")
         )
@@ -241,10 +288,10 @@ def test_code_change_invalidates_persisted_layers(spark, sf_small, monkeypatch):
         calls.append(1)
         return [1]
 
-    artifacts.memo_artifact(spark, sf_small, ("m_code",), build)
-    artifacts._MEMO.clear()
-    monkeypatch.setattr(artifacts, "_CODE_FP", "deadbeefdeadbeefdead")
-    artifacts.memo_artifact(spark, sf_small, ("m_code",), build)
+    store.memo_artifact(spark, sf_small, ("m_code",), build)
+    store._MEMO.clear()
+    monkeypatch.setattr(store, "_CODE_FP", "deadbeefdeadbeefdead")
+    store.memo_artifact(spark, sf_small, ("m_code",), build)
     assert len(calls) == 2
 
 
@@ -279,7 +326,7 @@ def test_tier_survives_release_cached(spark, sf_small):
         calls.append(1)
         raise AssertionError("tier rebuilt after release_cached")
 
-    df = tiers.ensure_tier(spark, sf_small, "lsh_pairs", poisoned_build)
+    df = store.ensure_tier(spark, sf_small, "lsh_pairs", poisoned_build)
     assert df.count() == first
     assert not calls
 
@@ -293,13 +340,13 @@ def test_corrupted_artifact_file_rebuilds_silently(spark, sf_small):
         calls.append(1)
         return [7, 8]
 
-    artifacts.memo_artifact(spark, sf_small, ("m_corrupt",), build)
-    k = artifacts._key(sf_small, ("m_corrupt",))
-    path = artifacts._artifact_path(k)
+    store.memo_artifact(spark, sf_small, ("m_corrupt",), build)
+    k = store._key(sf_small, ("m_corrupt",))
+    path = store._entry_path("artifacts", k)
     with open(path, "w") as fh:
         fh.write('{"__tuple__": [1,')  # torn write
-    artifacts._MEMO.clear()
-    got = artifacts.memo_artifact(spark, sf_small, ("m_corrupt",), build)
+    store._MEMO.clear()
+    got = store.memo_artifact(spark, sf_small, ("m_corrupt",), build)
     assert got == [7, 8] and len(calls) == 2
 
 
@@ -312,10 +359,10 @@ def test_orphaned_tier_tmp_dir_is_ignored(spark, sf_small):
         calls.append(1)
         return spark.range(2).select(F.col("id").alias("n"))
 
-    k = tiers._key(sf_small, "t_orphan")
-    path = tiers._tier_path(k)
+    k = store._key(sf_small, "t_orphan")
+    path = store._entry_path("tiers", k)
     os.makedirs(f"{path}.tmp.99999")  # orphan from a dead pid
-    out = tiers.ensure_tier(spark, sf_small, "t_orphan", build)
+    out = store.ensure_tier(spark, sf_small, "t_orphan", build)
     assert sorted(r.n for r in out.collect()) == [0, 1]
     assert len(calls) == 1 and os.path.isdir(path)
 
@@ -331,20 +378,20 @@ def test_verify_private_rejects_symlink_foreign_and_loose(tmp_path):
     uid = os.getuid()
     real = tmp_path / "real"
     real.mkdir(mode=0o700)
-    assert artifacts._verify_private(str(real), uid)
+    assert store._verify_private(str(real), uid)
     link = tmp_path / "link"
     link.symlink_to(real)
-    assert not artifacts._verify_private(str(link), uid)
-    assert not artifacts._verify_private(str(tmp_path / "absent"), uid)
+    assert not store._verify_private(str(link), uid)
+    assert not store._verify_private(str(tmp_path / "absent"), uid)
     f = tmp_path / "file"
     f.write_text("x")
-    assert not artifacts._verify_private(str(f), uid)
+    assert not store._verify_private(str(f), uid)
     # a loose pre-existing dir gets tightened in place
     loose = tmp_path / "loose"
     loose.mkdir(mode=0o755)
-    assert artifacts._verify_private(str(loose), uid)
+    assert store._verify_private(str(loose), uid)
     assert (os.lstat(loose).st_mode & 0o777) == 0o700
-    assert not artifacts._verify_private(str(real), uid + 1)
+    assert not store._verify_private(str(real), uid + 1)
 
 
 def test_store_gc_sweeps_orphans_and_expired_entries(tmp_path):
@@ -353,8 +400,8 @@ def test_store_gc_sweeps_orphans_and_expired_entries(tmp_path):
     root = tmp_path / "gcroot"
     for sub in ("artifacts", "tiers"):
         (root / sub).mkdir(parents=True)
-    old = artifacts.time.time() - artifacts._ENTRY_MAX_AGE_S - 10
-    tmp_old = artifacts.time.time() - artifacts._TMP_MAX_AGE_S - 10
+    old = store.time.time() - store._ENTRY_MAX_AGE_S - 10
+    tmp_old = store.time.time() - store._TMP_MAX_AGE_S - 10
     a = root / "artifacts"
     (a / "keep-fresh.json").write_text("{}")
     (a / "evict-old.json").write_text("{}")
@@ -368,11 +415,11 @@ def test_store_gc_sweeps_orphans_and_expired_entries(tmp_path):
     (t / "tier-fresh").mkdir()
     (t / "tier-x.tmp.999").mkdir()
     os.utime(t / "tier-x.tmp.999", (tmp_old, tmp_old))
-    artifacts._GC_DONE = False
+    store._GC_DONE = False
     try:
-        artifacts._gc_store(str(root))
+        store._gc_store(str(root))
     finally:
-        artifacts._GC_DONE = False
+        store._GC_DONE = False
     assert sorted(os.listdir(a)) == [
         "fresh.json.tmp.5678", "keep-fresh.json",
     ]
@@ -382,42 +429,42 @@ def test_store_gc_sweeps_orphans_and_expired_entries(tmp_path):
 def test_clear_without_isolated_dir_keeps_disk(
     spark, sf_small, monkeypatch, tmp_path
 ):
-    """clear_tiers()/clear_artifact_memo() without an isolated
+    """store.clear() without an isolated
     $SPARK_GRAFT_ARTIFACT_DIR must forget in-process state ONLY —
     the shared on-disk store (which other live processes scan) stays
     intact, and a re-request rereads it without rebuilding."""
-    store = tmp_path / "shared-store"
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(store))
+    shared = tmp_path / "shared-store"
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(shared))
     calls = []
 
     def build():
         calls.append(1)
         return spark.range(3).select(F.col("id").alias("n"))
 
-    tiers.ensure_tier(spark, sf_small, "t_keepdisk", build)
-    artifacts.memo_artifact(
+    store.ensure_tier(spark, sf_small, "t_keepdisk", build)
+    store.memo_artifact(
         spark, sf_small, ("a_keepdisk",), lambda: [1, 2]
     )
-    n_tiers = len(os.listdir(store / "tiers"))
-    n_arts = len(os.listdir(store / "artifacts"))
+    n_tiers = len(os.listdir(shared / "tiers"))
+    n_arts = len(os.listdir(shared / "artifacts"))
     assert n_tiers == 1 and n_arts == 1
     # simulate the shared-default-root situation: same store on disk,
     # but no isolating env var -> disk must survive the clear
     monkeypatch.delenv("SPARK_GRAFT_ARTIFACT_DIR")
-    monkeypatch.setattr(artifacts, "_STORE_ROOT", str(store))
-    tiers.clear_tiers()
-    assert len(os.listdir(store / "tiers")) == n_tiers
-    assert len(os.listdir(store / "artifacts")) == n_arts
-    assert not tiers._KNOWN and not artifacts._MEMO
+    monkeypatch.setattr(store, "_STORE_ROOT", str(shared))
+    store.clear()
+    assert len(os.listdir(shared / "tiers")) == n_tiers
+    assert len(os.listdir(shared / "artifacts")) == n_arts
+    assert not store._MEMO
     # and with the isolated dir back, the clear IS destructive
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(store))
-    tiers.clear_tiers()
-    assert not os.listdir(store / "tiers")
-    assert not os.listdir(store / "artifacts")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(shared))
+    store.clear()
+    assert not os.listdir(shared / "tiers")
+    assert not os.listdir(shared / "artifacts")
 
 
 def test_vanished_tier_path_rebuilds(spark, sf_small):
-    """A _KNOWN path whose directory was removed behind our back
+    """A tier whose directory was removed behind our back
     (another process's clear, GC eviction) must rebuild, not hand
     Spark a dead scan path."""
     import shutil as _sh
@@ -428,10 +475,10 @@ def test_vanished_tier_path_rebuilds(spark, sf_small):
         calls.append(1)
         return spark.range(2).select(F.col("id").alias("n"))
 
-    tiers.ensure_tier(spark, sf_small, "t_vanish", build)
-    k = tiers._key(sf_small, "t_vanish")
-    _sh.rmtree(tiers._KNOWN[k])
-    out = tiers.ensure_tier(spark, sf_small, "t_vanish", build)
+    store.ensure_tier(spark, sf_small, "t_vanish", build)
+    k = store._key(sf_small, "t_vanish")
+    _sh.rmtree(store._entry_path("tiers", k))
+    out = store.ensure_tier(spark, sf_small, "t_vanish", build)
     assert sorted(r.n for r in out.collect()) == [0, 1]
     assert len(calls) == 2
 
@@ -452,7 +499,7 @@ def test_artifact_store_cross_process_race(tmp_path):
 import os, sys
 sys.path.insert(0, %(repo)r)
 os.environ["SPARK_GRAFT_ARTIFACT_DIR"] = %(store)r
-from parquet_extractor_spark.artifacts import memo_artifact
+from parquet_extractor_spark.store import memo_artifact
 v = memo_artifact(None, %(sf)r, ("race_probe", 7), lambda: [7, (1, 2.5), "x"])
 assert v == [7, (1, 2.5), "x"], v
 print("ok")

@@ -3,8 +3,9 @@
 For each `queries()` entry, builds the DataFrame lazily at
 $SPARK_GRAFT_SF_DIR (default sf0.01) and records the plan properties
 that matter at cluster scale: scan count, pruned column counts, filter
-pushdown, join strategies, partial aggregation, and whole-stage
-codegen span count. Run after adding operators; commit the regenerated
+pushdown, join strategies, partial aggregation, whole-stage codegen
+span count, and the cached and checkpointed leaves the plan reads
+instead of a scan. Run after adding operators; commit the regenerated
 file so plan regressions show up in diffs.
 
     python tools/audit_plans.py
@@ -53,7 +54,7 @@ def main() -> None:
             df = fn(spark, SF_DIR)
             plan = formatted_plan(df)
         except Exception as exc:
-            rows.append((name, f"ERROR: {type(exc).__name__}", "", "", "", ""))
+            rows.append((name, f"ERROR: {type(exc).__name__}", "", "", "", "", ""))
             continue
         scans = read_schema_columns(df)
         scan_desc = "+".join(str(len(s)) for s in scans) or "0"
@@ -64,6 +65,18 @@ def main() -> None:
         )
         n_agg = len(re.findall(r"HashAggregate|SortAggregate|ObjectHashAggregate", plan))
         pushed = "yes" if pushed_filters(df) else "-"
+        # leaves a materialize()d frame leaves in the plan: a lazily
+        # persisted one is read by InMemoryTableScan (its parquet scan
+        # prints once however often it is read), a checkpoint by
+        # Scan ExistingRDD (no parquet scan left at all)
+        held = " ".join(
+            f"{abbr} {n}"
+            for abbr, n in (
+                ("mem", len(re.findall(r"^\(\d+\) InMemoryTableScan", plan, re.M))),
+                ("ckpt", len(re.findall(r"^\(\d+\) Scan ExistingRDD", plan, re.M))),
+            )
+            if n
+        )
         rows.append(
             (
                 name,
@@ -72,6 +85,7 @@ def main() -> None:
                 joins or "-",
                 str(n_agg),
                 str(whole_stage_codegen_ids(df)),
+                held or "-",
             )
         )
 
@@ -82,10 +96,13 @@ def main() -> None:
         "scans = parquet scans (columns read per scan); pushdown = any",
         "PushedFilters present; joins = strategy x count; aggs =",
         "aggregate operators (2 per logical agg ⇒ partial+final); wsc =",
-        "whole-stage codegen spans.",
+        "whole-stage codegen spans; cached = leaves read from a",
+        "materialized frame instead of a scan (mem = InMemoryTableScan of",
+        "a persisted frame, ckpt = Scan ExistingRDD of a checkpoint). The",
+        "scans column counts only the parquet scans left in the plan.",
         "",
-        "| query | scans | pushdown | joins | aggs | wsc |",
-        "|---|---|---|---|---|---|",
+        "| query | scans | pushdown | joins | aggs | wsc | cached |",
+        "|---|---|---|---|---|---|---|",
     ]
     for r in rows:
         out.append("| " + " | ".join(r) + " |")
