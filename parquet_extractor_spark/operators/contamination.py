@@ -138,32 +138,16 @@ BLOOM_HASHES = 3  # K
 _BLOOM_WORDS = BLOOM_BITS // 32
 
 
-def _bloom_positions_expr(gram_col, fast: bool = False) -> list:
+def _bloom_positions_expr(gram_col) -> list:
     """The K bit positions of one gram, as Column expressions:
-    pos_i = (h1 + i·h2) mod M. Default hashes are 60-bit md5 prefixes
+    pos_i = (h1 + i·h2) mod M. The hashes are 60-bit md5 prefixes
     the DuckDB twin mirrors literally (i·h2 + h1 < 2^62 — no BIGINT
-    overflow). ``fast=True`` swaps in ``F.xxhash64`` — measured ~20%
-    end-to-end at the 100× check (per-hash xxhash is ~10× cheaper but
-    the probe machinery dominates; SCALE.md) — at the price of oracle
-    parity: xxhash is
-    engine-specific, so the fast tier is verified by the superset
-    property against the exact join, which holds under ANY hash, not
-    by the DuckDB twin. pmod (not %) keeps xxhash's negative halves
-    in [0, M)."""
+    overflow)."""
     from parquet_extractor_spark.functions.text import portable_hash64
 
     g = F.col(gram_col) if isinstance(gram_col, str) else gram_col
-    if fast:
-        h1r = F.xxhash64(g)
-        h2r = F.xxhash64(F.concat(g, F.lit("#2")))
-    else:
-        h1r = portable_hash64(g)
-        h2r = portable_hash64(F.concat(g, F.lit("#2")))
-    # pre-reduce mod M before combining: (h1%M + i*(h2%M)) % M ==
-    # (h1 + i*h2) % M, so the oracle's formula is unchanged — and
-    # xxhash64's full-range values can't ANSI-overflow the BIGINT sum
-    h1 = F.pmod(h1r, F.lit(BLOOM_BITS))
-    h2 = F.pmod(h2r, F.lit(BLOOM_BITS))
+    h1 = portable_hash64(g)
+    h2 = portable_hash64(F.concat(g, F.lit("#2")))
     return [
         F.pmod(h1 + F.lit(i) * h2, F.lit(BLOOM_BITS)) for i in range(BLOOM_HASHES)
     ]
@@ -172,7 +156,6 @@ def _bloom_positions_expr(gram_col, fast: bool = False) -> list:
 def build_bloom_bitset(
     spark: SparkSession,
     sf_dir: str,
-    fast: bool = False,
     grams: DataFrame | None = None,
 ) -> list[int]:
     """The benchmark slice's Bloom bitset as _BLOOM_WORDS ints: gram
@@ -181,7 +164,7 @@ def build_bloom_bitset(
     is a fixed artifact) — then folded into words driver-side.
     ``grams`` reuses a caller-persisted (doc_id, g) frame.
 
-    Persisted per (data dir, code version, fast): the bitset is a pure
+    Persisted per (data dir, code version): the bitset is a pure
     function of the benchmark slice, so bloom_decontamination, the
     streaming probe and decontamination_report share one build. The
     ``grams`` frame only matters on a cold build — a warm memo
@@ -194,7 +177,7 @@ def build_bloom_bitset(
             g.filter((F.col("doc_id") % BENCH_MOD) == 0)
             .select(
                 F.explode(
-                    F.array(*_bloom_positions_expr("g", fast))
+                    F.array(*_bloom_positions_expr("g"))
                 ).alias("pos")
             )
             .distinct()
@@ -204,19 +187,18 @@ def build_bloom_bitset(
             words[r.pos // 32] |= 1 << (r.pos % 32)
         return words
 
-    return memo_artifact(spark, sf_dir, ("bloom_bitset", fast), build)
+    return memo_artifact(spark, sf_dir, ("bloom_bitset",), build)
 
 
-def bloom_hit_lambda(words: list[int], fast: bool = False):
+def bloom_hit_lambda(words: list[int]):
     """g -> Column membership test against the bitset literal, usable
     inside F.filter/F.aggregate lambdas (single-param callable — the
-    Spark HOF arity contract) and on plain columns. ``fast`` must
-    match the flag the bitset was built with."""
+    Spark HOF arity contract) and on plain columns."""
     bitset = F.array(*[F.lit(w) for w in words])
 
     def hit(g):
         t = None
-        for p in _bloom_positions_expr(g, fast):
+        for p in _bloom_positions_expr(g):
             test = (
                 F.getbit(
                     F.element_at(bitset, (p / 32).cast("int") + 1),
@@ -230,9 +212,7 @@ def bloom_hit_lambda(words: list[int], fast: bool = False):
     return hit
 
 
-def bloom_probe_columns(
-    docs: DataFrame, words: list[int], fast: bool = False
-) -> DataFrame:
+def bloom_probe_columns(docs: DataFrame, words: list[int]) -> DataFrame:
     """The probe as a PURE PROJECTION: per-row gram array → filter by
     the bitset test → counts. Zero shuffle, zero join, no aggregation
     state — which is why it composes onto a structured stream
@@ -243,7 +223,7 @@ def bloom_probe_columns(
     statelessness is worth that price only where state is the
     constraint."""
     gs = F.array_distinct(word_ngrams(tokenize("text"), DECONTAM_NGRAM))
-    hits = F.size(F.filter(gs, bloom_hit_lambda(words, fast)))
+    hits = F.size(F.filter(gs, bloom_hit_lambda(words)))
     return docs.select(
         "doc_id",
         F.size(gs).cast("bigint").alias("n_grams"),

@@ -19,20 +19,20 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from parquet_extractor_spark.constants import (
-    DEFAULT_SEED,
-    FRONTMATTER_VALUE_CAP,
+from parquet_extractor_spark.constants import DEFAULT_SEED, FRONTMATTER_VALUE_CAP
+from parquet_extractor_spark.functions.text import (
+    portable_hash64,
+    sanitize_filename,
+    zero_pad,
 )
-from parquet_extractor_spark.functions.text import sanitize_filename, zero_pad
+from parquet_extractor_spark.functions.windows import bounded_global_window
 from parquet_extractor_spark.resolver import resolve_roles
 from parquet_extractor_spark.sources.tables import load_table
 
 KNUTH = 2654435761  # Knuth multiplicative hash constant
 MOD = 4294967296  # 2^32
 SAMPLE_N = 100
-ROWNUM_BUCKETS_SHIFT = 27  # 2^32 / 2^27 = 32 order-preserving buckets
 
 
 def sample_key(id_col: Column, seed: int = DEFAULT_SEED) -> Column:
@@ -65,48 +65,6 @@ def sample_key_sql(id_expr: str, seed: int = DEFAULT_SEED) -> str:
     return f"(({inner}) % {MOD})"
 
 
-def global_row_number(
-    df: DataFrame, order_cols: list[str], out: str = "rn"
-) -> DataFrame:
-    """Scale-safe global row numbering in the total order of
-    ``order_cols`` (first of which must be ``_sk``).
-
-    ``Window.orderBy`` with no partitionBy collapses to a single
-    partition — fine for a 100-row sample, a driver-side chokepoint at
-    n=10M. Instead: bucket by the HIGH bits of ``_sk`` (order-
-    preserving ranges, so global order = bucket order + in-bucket
-    order), number within buckets in parallel, then add per-bucket
-    offsets carried as one broadcast map column (≤32 entries) — no
-    single-partition window anywhere, no driver collect.
-    """
-    bucket = F.shiftright(
-        F.col("_sk").cast("bigint"), ROWNUM_BUCKETS_SHIFT
-    )
-    b = df.withColumn("_bucket", bucket)
-    w = Window.partitionBy("_bucket").orderBy(*order_cols)
-    numbered = b.withColumn("_rn_local", F.row_number().over(w))
-    counts_map = (
-        b.groupBy("_bucket")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("_bucket", "_n")))
-            ).alias("_cmap")
-        )
-    )
-    offset = F.aggregate(
-        F.map_entries(F.col("_cmap")),
-        F.lit(0).cast("bigint"),
-        lambda acc, e: acc
-        + F.when(e["key"] < F.col("_bucket"), e["value"]).otherwise(0),
-    )
-    return (
-        numbered.join(F.broadcast(counts_map), how="cross")
-        .withColumn(out, (offset + F.col("_rn_local")).cast("int"))
-        .drop("_bucket", "_rn_local", "_cmap")
-    )
-
-
 def deterministic_sample(
     df: DataFrame, id_col: str, n: int, seed: int = DEFAULT_SEED
 ) -> DataFrame:
@@ -130,6 +88,47 @@ def frontmatter_entry(name: str, col: Column) -> Column:
     )
 
 
+def _markdown_rows(
+    df: DataFrame, roles, key: Column, tie: str, n: int, title: Column
+) -> DataFrame:
+    """The one Markdown row builder: the ``n`` rows of ``df`` lowest in
+    (``key``, ``tie``), numbered 1..n in that order as ``rn``, plus
+    ``filename``, ``frontmatter`` and ``body`` (main.py:63-105).
+    ``title`` may read ``rn``.
+
+    The sampled head is ``TakeOrderedAndProject``: one partition,
+    already sorted by the window's order, so numbering it with the
+    bounded global window adds no exchange and no sort. Its width is
+    the caller's n (the service caps it at MAX_DOCS)."""
+    numbered = (
+        df.withColumn("_sk", key)
+        .orderBy("_sk", tie)
+        .limit(n)
+        .withColumn("rn", F.row_number().over(bounded_global_window("_sk", tie)))
+    )
+    filename = F.concat(
+        zero_pad(F.col("rn")), F.lit("_"), sanitize_filename(title), F.lit(".md")
+    )
+    fm_lines = [frontmatter_entry(c, F.col(c)) for c in roles.metadata]
+    frontmatter = F.concat_ws("\n", F.lit("---"), *fm_lines, F.lit("---"))
+    body = F.concat(
+        frontmatter, F.lit("\n\n# "), title, F.lit("\n\n"), F.col(roles.content)
+    )
+    # withColumns reads every expression from ``numbered``, so a source
+    # column named like an output (a ``body`` content column) still
+    # feeds the body before it is replaced
+    return numbered.withColumns(
+        {"filename": filename, "frontmatter": frontmatter, "body": body}
+    )
+
+
+def _document_rows(spark: SparkSession, sf_dir: str, n: int, seed: int) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    title = F.concat(F.lit("document_"), F.col("doc_id").cast("string"))
+    key = sample_key(F.col("doc_id"), seed)
+    return _markdown_rows(docs, resolve_roles(docs), key, "doc_id", n, title)
+
+
 def extract_plan(
     spark: SparkSession,
     sf_dir: str,
@@ -140,35 +139,9 @@ def extract_plan(
     row-number → filename → frontmatter → markdown body. Returns
     (doc_id, filename, frontmatter, body_md5) — hashes instead of full
     bodies so the oracle comparison stays small."""
-    docs = load_table(spark, sf_dir, "documents")
-    roles = resolve_roles(docs)
-
-    sampled = deterministic_sample(docs, "doc_id", n, seed)
-    numbered = global_row_number(sampled, ["_sk", "doc_id"])
-
-    title = F.concat(F.lit("document_"), F.col("doc_id").cast("string"))
-    filename = F.concat(
-        zero_pad(F.col("rn")), F.lit("_"), sanitize_filename(title), F.lit(".md")
-    )
-    fm_lines = [
-        frontmatter_entry(c, F.col(c)) for c in roles.metadata
-    ]
-    frontmatter = F.concat_ws(
-        "\n", F.lit("---"), *fm_lines, F.lit("---")
-    )
-    body = F.concat(
-        frontmatter,
-        F.lit("\n\n# "),
-        title,
-        F.lit("\n\n"),
-        F.col(roles.content),
-    )
-    return numbered.select(
-        "doc_id",
-        filename.alias("filename"),
-        frontmatter.alias("frontmatter"),
-        F.md5(body).alias("body_md5"),
-    ).orderBy("doc_id")
+    rows = _document_rows(spark, sf_dir, n, seed)
+    body_md5 = F.md5("body").alias("body_md5")
+    return rows.select("doc_id", "filename", "frontmatter", body_md5).orderBy("doc_id")
 
 
 def extract_files(
@@ -178,20 +151,7 @@ def extract_files(
     seed: int = DEFAULT_SEED,
 ) -> DataFrame:
     """Like extract_plan but with the full body, for the file sink."""
-    docs = load_table(spark, sf_dir, "documents")
-    roles = resolve_roles(docs)
-    sampled = deterministic_sample(docs, "doc_id", n, seed)
-    numbered = global_row_number(sampled, ["_sk", "doc_id"])
-    title = F.concat(F.lit("document_"), F.col("doc_id").cast("string"))
-    filename = F.concat(
-        zero_pad(F.col("rn")), F.lit("_"), sanitize_filename(title), F.lit(".md")
-    )
-    fm_lines = [frontmatter_entry(c, F.col(c)) for c in roles.metadata]
-    frontmatter = F.concat_ws("\n", F.lit("---"), *fm_lines, F.lit("---"))
-    body = F.concat(
-        frontmatter, F.lit("\n\n# "), title, F.lit("\n\n"), F.col(roles.content)
-    )
-    return numbered.select(filename.alias("filename"), body.alias("body"))
+    return _document_rows(spark, sf_dir, n, seed).select("filename", "body")
 
 
 EXTRACT_PLAN_SQL = rf"""
@@ -267,29 +227,13 @@ def extract_any_parquet(
     mixed with the seed (same exact-N / seed-stable semantics as the
     fixture path). Returns (filename, body) rows for the markdown sink.
     """
-    from parquet_extractor_spark.functions.text import portable_hash64
-
     df = spark.read.parquet(parquet_path)
     roles = resolve_roles(df)
-    content = F.col(roles.content)
-
-    key = (portable_hash64(content) + F.lit(seed)) % F.lit(MOD)
-    sampled = df.withColumn("_sk", key).orderBy("_sk", roles.content).limit(n)
-    numbered = global_row_number(sampled, ["_sk", roles.content])
-
+    key = (portable_hash64(F.col(roles.content)) + F.lit(seed)) % F.lit(MOD)
+    # fallback naming parity with main.py:77-83
+    title = F.concat(F.lit("paper_"), F.col("rn").cast("string"))
     if roles.title:
-        title = F.coalesce(
-            F.nullif(F.col(roles.title).cast("string"), F.lit("")),
-            F.concat(F.lit("paper_"), F.col("rn").cast("string")),
-        )
-    else:
-        # fallback naming parity with main.py:77-83
-        title = F.concat(F.lit("paper_"), F.col("rn").cast("string"))
-
-    filename = F.concat(
-        zero_pad(F.col("rn")), F.lit("_"), sanitize_filename(title), F.lit(".md")
-    )
-    fm_lines = [frontmatter_entry(c, F.col(c)) for c in roles.metadata]
-    frontmatter = F.concat_ws("\n", F.lit("---"), *fm_lines, F.lit("---"))
-    body = F.concat(frontmatter, F.lit("\n\n# "), title, F.lit("\n\n"), content)
-    return numbered.select(filename.alias("filename"), body.alias("body"))
+        named = F.nullif(F.col(roles.title).cast("string"), F.lit(""))
+        title = F.coalesce(named, title)
+    rows = _markdown_rows(df, roles, key, roles.content, n, title)
+    return rows.select("filename", "body")

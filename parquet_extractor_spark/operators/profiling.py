@@ -456,7 +456,8 @@ def warehouse_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     separately — a NULL FK is a modeling decision, not an orphan),
     orphan rows/keys (child keys with no parent), and the orphan
     share. A loader regression that drops a dimension partition shows
-    up here before any join silently loses fact rows downstream.
+    up here before any join silently loses fact rows downstream. An
+    empty child reports a zero row: every counter and the share are 0.
 
     Shape for scale: per relationship, the child reduces FIRST to
     (key, row_count) — so the anti-join against the parent key set is
@@ -526,8 +527,10 @@ def warehouse_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_null_rows",
                 "n_orphan_rows",
                 "n_orphan_keys",
+                # an empty child has no share: 0, not a division by zero
                 F.expr(
-                    "CAST(n_orphan_rows * 1000000L div n_rows AS BIGINT)"
+                    "CAST(coalesce(n_orphan_rows * 1000000L"
+                    " div nullif(n_rows, 0), 0) AS BIGINT)"
                 ).alias("orphan_share_micro"),
             )
         )
@@ -542,23 +545,24 @@ def _warehouse_fk_audit_oracle() -> str:
     for name, child_t, child_k, parent_t, parent_k in FK_RELATIONSHIPS:
         parts.append(f"""
 SELECT '{name}' AS relationship,
-       CAST(sum(rows_) AS BIGINT) AS n_rows,
-       CAST(sum(CASE WHEN ck IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_keys,
-       CAST(sum(CASE WHEN ck IS NULL THEN rows_ ELSE 0 END) AS BIGINT)
-           AS n_null_rows,
-       CAST(sum(CASE WHEN ck IS NOT NULL AND ck NOT IN
+       CAST(coalesce(sum(rows_), 0) AS BIGINT) AS n_rows,
+       CAST(coalesce(sum(CASE WHEN ck IS NOT NULL THEN 1 ELSE 0 END), 0)
+            AS BIGINT) AS n_keys,
+       CAST(coalesce(sum(CASE WHEN ck IS NULL THEN rows_ ELSE 0 END), 0)
+            AS BIGINT) AS n_null_rows,
+       CAST(coalesce(sum(CASE WHEN ck IS NOT NULL AND ck NOT IN
                 (SELECT {parent_k} FROM {parent_t}
                  WHERE {parent_k} IS NOT NULL)
-                THEN rows_ ELSE 0 END) AS BIGINT) AS n_orphan_rows,
-       CAST(sum(CASE WHEN ck IS NOT NULL AND ck NOT IN
+                THEN rows_ ELSE 0 END), 0) AS BIGINT) AS n_orphan_rows,
+       CAST(coalesce(sum(CASE WHEN ck IS NOT NULL AND ck NOT IN
                 (SELECT {parent_k} FROM {parent_t}
                  WHERE {parent_k} IS NOT NULL)
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_orphan_keys,
-       CAST(sum(CASE WHEN ck IS NOT NULL AND ck NOT IN
+                THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_orphan_keys,
+       CAST(coalesce(sum(CASE WHEN ck IS NOT NULL AND ck NOT IN
                 (SELECT {parent_k} FROM {parent_t}
                  WHERE {parent_k} IS NOT NULL)
-                THEN rows_ ELSE 0 END) * 1000000 // sum(rows_)
+                THEN rows_ ELSE 0 END) * 1000000
+                // nullif(sum(rows_), 0), 0)
             AS BIGINT) AS orphan_share_micro
 FROM (SELECT {child_k} AS ck, count(*) AS rows_
       FROM {child_t} GROUP BY 1)""")

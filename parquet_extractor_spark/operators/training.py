@@ -48,8 +48,8 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists anywhere in the plan — each source stream packs
     independently, which is how a 100 TB corpus is packed in practice
     (per input shard). Skew bound = tokens in the largest source; for
-    a corpus with one giant source, sub-bucket doc_id ranges the same
-    way extract.global_row_number buckets its sample key.
+    a corpus with one giant source, sub-bucket doc_id ranges per
+    source.
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = docs.select(

@@ -26,7 +26,6 @@ import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, Row
-from pyspark.sql import functions as F
 
 
 def _write_rows(
@@ -80,17 +79,10 @@ def _utf8_body(row: Row) -> bytes:
     return (row["body"] or "").encode("utf-8")
 
 
-def write_files(
-    df: DataFrame,
-    out_dir: str,
-    filename_col: str = "filename",
-    body_col: str = "body",
-    skip_existing: bool = True,
-) -> dict:
-    """Write one UTF-8 file per row. Returns {"written": n,
+def write_files(df: DataFrame, out_dir: str) -> dict:
+    """Write the ``body`` of each row to ``out_dir/<filename>`` as
+    UTF-8, skipping files that already exist. Returns {"written": n,
     "skipped": n, "failed": n}, the counts of the reference's job
     result dict (api.py:87-88, api.py:369-372)."""
-    work = df.select(
-        F.col(filename_col).alias("filename"), F.col(body_col).alias("body")
-    )
-    return _write_rows(work, out_dir, _utf8_body, skip_existing)
+    work = df.select("filename", "body")
+    return _write_rows(work, out_dir, _utf8_body, skip_existing=True)

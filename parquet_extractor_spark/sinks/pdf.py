@@ -66,22 +66,12 @@ def _render_row(row: Row) -> bytes:
     return render_pdf_bytes(title, row["doc_id"] or "", content)
 
 
-def write_pdfs(
-    df: DataFrame,
-    out_dir: str,
-    filename_col: str = "filename",
-    title_col: str = "title",
-    id_col: str = "doc_id",
-    content_col: str = "content",
-) -> dict:
-    """Render one PDF per row, overwriting existing files. Returns
-    {"written": n, "failed": n}; a failed row (unsafe filename, render
-    or write error) does not abort the job."""
-    work = df.select(
-        F.col(filename_col).alias("filename"),
-        F.col(title_col).alias("title"),
-        F.col(id_col).cast("string").alias("doc_id"),
-        F.col(content_col).alias("content"),
-    )
+def write_pdfs(df: DataFrame, out_dir: str) -> dict:
+    """Render one PDF per (filename, title, doc_id, content) row,
+    overwriting existing files. Returns {"written": n, "failed": n}; a
+    failed row (unsafe filename, render or write error) does not abort
+    the job."""
+    doc_id = F.col("doc_id").cast("string").alias("doc_id")
+    work = df.select("filename", "title", doc_id, "content")
     result = _write_rows(work, out_dir, _render_row, skip_existing=False)
     return {"written": result["written"], "failed": result["failed"]}

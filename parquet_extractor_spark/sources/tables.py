@@ -144,7 +144,7 @@ def _read_parquet(spark, path: str, stats) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
-def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition to the cluster's parallelism.
 
     For CPU-heavy per-row pipelines (tokenize/shingle/hash) sitting on
@@ -160,7 +160,7 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
         # parallelism is the source's concern — pass through so batch
         # operator bodies (signature_frame etc.) compose onto streams.
         return df
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     stats = getattr(df, "_sg_scan_stats", None)
     if stats is not None:
         # Estimate the scan's split count the way Spark packs file

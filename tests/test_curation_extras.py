@@ -153,36 +153,6 @@ def test_bloom_and_countmin_hash_portability(spark):
         assert list(r.pos) == want, r.g
 
 
-def test_bloom_fast_hash_tier_keeps_superset_property(spark, sf_small):
-    """The xxhash64 production profile (no DuckDB twin possible —
-    engine-specific hash) is verified by the property that holds
-    under ANY hash family: no false negatives vs the exact join."""
-    from parquet_extractor_spark.operators.contamination import (
-        BENCH_MOD,
-        bloom_probe_columns,
-        build_bloom_bitset,
-        ngram_decontamination,
-    )
-    from parquet_extractor_spark.sources.tables import load_table, spread
-    from pyspark.sql import functions as F
-
-    words = build_bloom_bitset(spark, sf_small, fast=True)
-    docs = spread(load_table(spark, sf_small, "documents")).filter(
-        (F.col("doc_id") % BENCH_MOD) != 0
-    )
-    fast = {
-        r.doc_id: r
-        for r in bloom_probe_columns(docs, words, fast=True).collect()
-    }
-    exact = {
-        r.doc_id: r.n_shared
-        for r in ngram_decontamination(spark, sf_small).collect()
-    }
-    for doc_id, n_shared in exact.items():
-        assert fast[doc_id].flagged, f"fast-tier false negative on {doc_id}"
-        assert fast[doc_id].n_bloom_hits >= n_shared
-
-
 def test_parquet_footer_stats_metadata_only(spark, sf_small):
     """The footer fast path reports exactly what full scans report —
     and for every fixture table, not a sample."""

@@ -6,9 +6,11 @@ from pyspark.sql import functions as F
 from parquet_extractor_spark.operators.extract import (
     SAMPLE_N,
     deterministic_sample,
+    extract_any_parquet,
     extract_files,
     extract_plan,
 )
+from parquet_extractor_spark.plans.explain import formatted_plan
 from parquet_extractor_spark.sinks.markdown import write_files
 from parquet_extractor_spark.sinks.pdf import (
     _chunks,
@@ -74,7 +76,7 @@ def test_markdown_sink_counts_row_errors(spark, tmp_path):
         [("ok.md", "fine"), ("bad/../../name/x.md", "boom")],
         ["filename", "body"],
     )
-    res = write_files(df, out, skip_existing=False)
+    res = write_files(df, out)
     assert res["written"] == 1
     assert res["failed"] == 1  # per-row tolerance (api.py:344-346)
 
@@ -205,7 +207,7 @@ def test_markdown_sink_rejects_path_escaping_filenames(spark, tmp_path):
         ],
         "filename string, body string",
     )
-    result = write_files(df, str(out), skip_existing=False)
+    result = write_files(df, str(out))
     assert result["written"] == 1
     assert result["failed"] == 3
     assert sorted(os.listdir(out)) == ["ok.md"]
@@ -233,9 +235,10 @@ def test_pdf_sink_rejects_path_escaping_filenames(spark, tmp_path):
 
 
 def test_markdown_sink_is_one_pass(spark, sf_small, tmp_path, jobs_in_group):
-    """A Markdown extract job submits at most 2 Spark jobs: the
-    sample's sort-and-number plan and the writer pass. Skip-existing
-    costs no count, listing or anti-join job."""
+    """A Markdown extract job submits exactly 1 Spark job, the writer
+    pass: the sampled head is numbered inside it (no exchange, no
+    join), and skip-existing costs no count, listing or anti-join
+    job."""
     write_files(extract_files(spark, sf_small, n=15), str(tmp_path / "warm"))
     out = str(tmp_path / "md")
     result = {}
@@ -245,7 +248,31 @@ def test_markdown_sink_is_one_pass(spark, sf_small, tmp_path, jobs_in_group):
 
     jobs = jobs_in_group(_job, "markdown-sink-jobs")
     assert result == {"written": 15, "skipped": 0, "failed": 0}
-    assert len(jobs) <= 2
+    assert len(jobs) == 1
+    for df in (extract_files(spark, sf_small), extract_plan(spark, sf_small)):
+        plan = formatted_plan(df)
+        assert "TakeOrderedAndProject" in plan
+        assert "Exchange" not in plan and "Join" not in plan
+
+
+def test_uploaded_parquet_markdown_sink_is_two_jobs(
+    spark, sf_small, tmp_path, jobs_in_group
+):
+    """An uploaded-parquet Markdown extract submits exactly 2 Spark
+    jobs: the parquet footer read that infers the unknown schema, and
+    the writer pass."""
+    upload = str(tmp_path / "upload.parquet")
+    load_table(spark, sf_small, "documents").write.parquet(upload)
+    write_files(extract_any_parquet(spark, upload, n=15), str(tmp_path / "warm"))
+    out = str(tmp_path / "md")
+    result = {}
+
+    def _job():
+        result.update(write_files(extract_any_parquet(spark, upload, n=15), out))
+
+    jobs = jobs_in_group(_job, "parquet-markdown-sink-jobs")
+    assert result == {"written": 15, "skipped": 0, "failed": 0}
+    assert len(jobs) == 2
 
 
 def test_pdf_sink_is_one_pass(spark, sf_small, tmp_path, jobs_in_group):

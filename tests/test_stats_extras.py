@@ -610,6 +610,45 @@ def test_warehouse_fk_audit_planted_orphans(spark, sf_small, tmp_path):
     assert got["lineitem.orderkey->orders"].n_orphan_rows == 0
 
 
+def test_warehouse_fk_audit_empty_child_is_a_zero_row(spark, sf_small, tmp_path):
+    """Empty the supplier table in a copy of sf0.001: its
+    supplier.nationkey->nation row is 0 in every counter and in the
+    share on Spark (no division by zero) and on the DuckDB oracle (no
+    NULLs), and every lineitem supplier key is an orphan."""
+    import os
+    import sys
+
+    from parquet_extractor_spark.operators.profiling import warehouse_fk_audit
+
+    tools = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
+    )
+    sys.path.insert(0, tools)
+    from check_oracle import TABLES, run_gate
+
+    fixture = tmp_path / "sf"
+    fixture.mkdir()
+    for t in TABLES:
+        if t != "supplier":
+            os.symlink(f"{sf_small}/{t}.parquet", fixture / f"{t}.parquet")
+    duckdb.sql(
+        f"COPY (SELECT * FROM '{sf_small}/supplier.parquet' WHERE false) "
+        f"TO '{fixture}/supplier.parquet' (FORMAT PARQUET)"
+    )
+    assert not run_gate(
+        only=("warehouse_fk_audit",), sf_dir=str(fixture), spark=spark
+    )
+    got = {
+        r.relationship: r
+        for r in warehouse_fk_audit(spark, str(fixture)).collect()
+    }
+    empty = got["supplier.nationkey->nation"]
+    assert tuple(empty)[1:] == (0, 0, 0, 0, 0, 0)
+    li = got["lineitem.suppkey->supplier"]
+    assert li.n_rows > 0 and li.n_orphan_rows == li.n_rows
+    assert li.orphan_share_micro == 1_000_000
+
+
 def test_events_xmr_control_hand_computed(spark, tmp_path):
     """Stable series with a single huge spike: limits recomputed by
     hand from the moving ranges; exactly the spike day flags."""
