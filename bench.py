@@ -17,10 +17,13 @@ Three environment values, nothing else:
 * ``SPARK_GRAFT_BENCH_ONLY=a,b``: run only these queries, in bench
   order. The payload goes to a per-user, per-process temp file, never
   into the repository.
-* ``SPARK_GRAFT_BENCH_COLD_STORE=1``: disable the persistent
-  artifact/tier store, so every training and tier build is paid
-  inside the timed region. The payload is tagged ``"store": "cold"``;
-  the default is ``"warm"``.
+* ``SPARK_GRAFT_BENCH_COLD_STORE=1``: run every sample on an empty
+  artifact/tier store. The store moves to a private temp root
+  (removed at exit) and is cleared before each timed sample, so every
+  training and tier build, its write and its read-back are paid
+  inside the timed region, through the same code a service job runs.
+  The payload is tagged ``"store": "cold"``; the default is
+  ``"warm"``.
 
 Any other run writes its full payload to ``BENCH_c{cpus}_{store}.json``
 in the repository root, where ``cpus`` is the session's
@@ -51,8 +54,10 @@ codegen-cache pressure that block drops don't touch).
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
 import statistics
 import sys
 import tempfile
@@ -250,7 +255,8 @@ def _payload_path(cpus: int, store: str, only: list[str]) -> str:
 def _env() -> tuple[list[str], bool]:
     """The two run-shaping environment values: the ONLY query list
     (blank entries dropped) and whether the store is cold. A cold run
-    disables the persistent artifact/tier store for this process."""
+    points this process's store at a fresh private root, removed at
+    exit, so clearing it never touches a shared store."""
     only = [
         w.strip()
         for w in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",")
@@ -258,8 +264,22 @@ def _env() -> tuple[list[str], bool]:
     ]
     cold = os.environ.get("SPARK_GRAFT_BENCH_COLD_STORE") == "1"
     if cold:
-        os.environ["SPARK_GRAFT_NO_TIER_CACHE"] = "1"
+        root = tempfile.mkdtemp(prefix="spark-graft-cold-store-")
+        atexit.register(shutil.rmtree, root, True)
+        os.environ["SPARK_GRAFT_ARTIFACT_DIR"] = root
     return only, cold
+
+
+def _timed_attempt(spark, name: str, fn, cold: bool) -> tuple[dict, float]:
+    """One timed sample: the attempt's result and its wall seconds. A
+    cold run empties the store first, outside the timed region."""
+    if cold:
+        from parquet_extractor_spark import store
+
+        store.clear()
+    t0 = time.time()
+    res = _attempt(spark, name, fn, SF_DIR, QUERY_TIMEOUT_S)
+    return res, time.time() - t0
 
 
 def main() -> None:
@@ -288,8 +308,9 @@ def main() -> None:
     # empty store pays training here — once, labeled — instead of
     # booking it as the first consumer query's latency. A filled store
     # makes this a no-op of disk reads. A cold run skips it: the store
-    # is disabled there, so every consuming query trains inside its
-    # own timed region and a warm-up's products would be discarded.
+    # is emptied before every sample, so every consuming query trains
+    # inside its own timed region and a warm-up's products would be
+    # discarded.
     if not cold:
         t0 = time.time()
         _warm_trained_artifacts(spark)
@@ -314,8 +335,7 @@ def main() -> None:
         runs = 1 if elapsed > BUDGET_S else RUNS
         samples = []
         for _ in range(runs):
-            t0 = time.time()
-            res = _attempt(spark, name, fn, SF_DIR, QUERY_TIMEOUT_S)
+            res, secs = _timed_attempt(spark, name, fn, cold)
             if not res.get("ok"):  # error or timeout: drop the query, keep the run
                 errors[name] = res.get("err", "unknown")
                 print(f"# {name}: FAILED {errors[name]}", file=sys.stderr)
@@ -325,7 +345,7 @@ def main() -> None:
                     suspect = True
                 samples = []
                 break
-            samples.append(time.time() - t0)
+            samples.append(secs)
         # Cached intermediates (persist + localCheckpoint blocks) from
         # this query must not bleed memory pressure into the next —
         # r04 measured dedup_canonical 2.6s->6.9s by sweep position

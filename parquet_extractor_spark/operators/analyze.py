@@ -121,14 +121,19 @@ ORDER BY lang
 """
 
 
-def top_docs_by_tokens(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
-    """Top-k longest documents (SURVEY L6) — Spark plans this as
-    TakeOrderedAndProject: per-partition heaps, no global sort."""
+TOP_DOCS_K = 20
+
+
+def top_docs_by_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-TOP_DOCS_K longest documents (SURVEY L6) — Spark plans this
+    as TakeOrderedAndProject: per-partition heaps, no global sort."""
     counts = doc_token_counts(spark, sf_dir)
-    return counts.orderBy(F.desc("n_tokens"), F.asc("doc_id")).limit(k)
+    return counts.orderBy(F.desc("n_tokens"), F.asc("doc_id")).limit(
+        TOP_DOCS_K
+    )
 
 
-TOP_DOCS_BY_TOKENS_SQL = r"""
+TOP_DOCS_BY_TOKENS_SQL = rf"""
 SELECT doc_id,
        CAST(len(list_filter(
             regexp_split_to_array(
@@ -136,7 +141,7 @@ SELECT doc_id,
             x -> x != '')) AS BIGINT) AS n_tokens
 FROM documents
 ORDER BY n_tokens DESC, doc_id ASC
-LIMIT 20
+LIMIT {TOP_DOCS_K}
 """
 
 

@@ -103,7 +103,7 @@ def _train(
     return memo_artifact(
         spark,
         sf_dir,
-        ("logreg_train",),
+        "logreg_train",
         lambda: _train_uncached(spark, sf_dir),
     )
 

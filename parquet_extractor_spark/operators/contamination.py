@@ -187,7 +187,7 @@ def build_bloom_bitset(
             words[r.pos // 32] |= 1 << (r.pos % 32)
         return words
 
-    return memo_artifact(spark, sf_dir, ("bloom_bitset",), build)
+    return memo_artifact(spark, sf_dir, "bloom_bitset", build)
 
 
 def bloom_hit_lambda(words: list[int]):

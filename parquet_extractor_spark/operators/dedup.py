@@ -107,75 +107,81 @@ def _pair_overlap_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     soon as the tier's parquet write completes, so a full-registry
     sweep no longer carries session-lifetime cached postings copies.
     """
-    from parquet_extractor_spark.store import disabled, ensure_tier
+    from parquet_extractor_spark.store import ensure_tier
 
     to_release: list[DataFrame] = []
-
-    def build() -> DataFrame:
-        all_sh = _doc_shingles(spark, sf_dir)
-        hot = (
-            all_sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > MAX_SHINGLE_DF)
-            .select("shingle")
-        )
-        grouped = materialize(
-            all_sh.join(hot, "shingle", "left_anti")
-            .groupBy("shingle")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        )
-        to_release.append(grouped)
-        sizes = (
-            grouped.select(F.explode("ds").alias("doc_id"))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        pair_arr = F.flatten(
-            F.transform(
-                "ds",
-                lambda a: F.transform(
-                    "ds",
-                    lambda b: F.struct(
-                        a.alias("doc_a"),
-                        b.alias("doc_b"),
-                    ),
-                ),
-            )
-        )
-        shared = (
-            grouped.select(
-                F.explode(
-                    F.filter(pair_arr, lambda p: p.doc_a < p.doc_b)
-                ).alias("p")
-            )
-            .groupBy("p.doc_a", "p.doc_b")
-            .agg(F.count("*").alias("n_shared"))
-        )
-        return (
-            shared.join(
-                sizes.select(
-                    F.col("doc_id").alias("doc_a"), F.col("n").alias("na")
-                ),
-                "doc_a",
-            )
-            .join(
-                sizes.select(
-                    F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")
-                ),
-                "doc_b",
-            )
-        )
-
-    out = ensure_tier(spark, sf_dir, "pair_overlap", build)
-    # With the tier layer disabled the plan is returned lazily and the
-    # postings must survive for its consumers (the pre-tier behavior);
-    # otherwise the write inside ensure_tier already consumed them. A
-    # failed build leaves them to the query scope (or, unscoped, the
-    # release_cached sweep).
-    if not disabled():
-        for df in to_release:
-            release(df)
+    out = ensure_tier(
+        spark,
+        sf_dir,
+        "pair_overlap",
+        lambda: _pair_overlap_plan(spark, sf_dir, to_release),
+    )
+    # the tier's write consumed the postings (a failed build leaves
+    # them to the query scope or, unscoped, the release_cached sweep)
+    for df in to_release:
+        release(df)
     return out
+
+
+def _pair_overlap_plan(
+    spark: SparkSession, sf_dir: str, to_release: list[DataFrame]
+) -> DataFrame:
+    """The pair-overlap tier's build plan. The grouped postings it
+    persists are appended to ``to_release`` for the caller to free
+    once the plan has run."""
+    all_sh = _doc_shingles(spark, sf_dir)
+    hot = (
+        all_sh.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > MAX_SHINGLE_DF)
+        .select("shingle")
+    )
+    grouped = materialize(
+        all_sh.join(hot, "shingle", "left_anti")
+        .groupBy("shingle")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
+    )
+    to_release.append(grouped)
+    sizes = (
+        grouped.select(F.explode("ds").alias("doc_id"))
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    pair_arr = F.flatten(
+        F.transform(
+            "ds",
+            lambda a: F.transform(
+                "ds",
+                lambda b: F.struct(
+                    a.alias("doc_a"),
+                    b.alias("doc_b"),
+                ),
+            ),
+        )
+    )
+    shared = (
+        grouped.select(
+            F.explode(
+                F.filter(pair_arr, lambda p: p.doc_a < p.doc_b)
+            ).alias("p")
+        )
+        .groupBy("p.doc_a", "p.doc_b")
+        .agg(F.count("*").alias("n_shared"))
+    )
+    return (
+        shared.join(
+            sizes.select(
+                F.col("doc_id").alias("doc_a"), F.col("n").alias("na")
+            ),
+            "doc_a",
+        )
+        .join(
+            sizes.select(
+                F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")
+            ),
+            "doc_b",
+        )
+    )
 
 
 

@@ -1351,7 +1351,7 @@ def lm_count_arrays(
             cp[int(r.b)] = int(r.c)
         return cb, cp
 
-    return memo_artifact(spark, sf_dir, ("lm_counts",), build)
+    return memo_artifact(spark, sf_dir, "lm_counts", build)
 
 
 def surprisal_probe_columns(

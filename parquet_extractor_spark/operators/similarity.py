@@ -1580,7 +1580,7 @@ def kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_extractor_spark.store import memo_artifact
 
     cents1 = memo_artifact(
-        spark, sf_dir, ("kmeans_cents1",), train_cents1
+        spark, sf_dir, "kmeans_cents1", train_cents1
     )
 
     c2, d2 = argmin_cluster(cents1)
@@ -1816,7 +1816,7 @@ def _head_vectors(spark: SparkSession, sf_dir: str) -> list:
             raise ValueError("embeddings table is empty")
         return rows
 
-    return memo_artifact(spark, sf_dir, ("head_vectors",), build)
+    return memo_artifact(spark, sf_dir, "head_vectors", build)
 
 
 def _books_from_rows(rows: list, k: int = PQ_K) -> list[list[list[float]]]:
@@ -1881,7 +1881,6 @@ def _py_sqdist_micro(a: list[float], b: list[float]) -> int:
 def refined_pq_books(
     spark: SparkSession,
     sf_dir: str,
-    seed_books: list[list[list[float]]] | None = None,
 ) -> list[list[list[float]]]:
     """One distributed Lloyd step per subspace: assign every vector's
     subvectors to the nearest bootstrap codeword (map-side integer
@@ -1902,110 +1901,94 @@ def refined_pq_books(
     measure-zero coincidence band (~1e-9 per component) accepted the
     same way label_centroids accepts rounded averages.
 
-    The default-seeded training (seed_books=None) is memoized per
-    (data dir, code version): ann_ivf_pq_refined and its consumers share
-    one trained codebook instead of re-running the Lloyd pass per
-    query. An explicit seed bypasses the memo (the caller is doing
-    its own training experiment)."""
-    if seed_books is None:
-        from parquet_extractor_spark.store import memo_artifact
+    The training is memoized per (data dir, code version):
+    ann_ivf_pq_refined and its consumers share one trained codebook
+    instead of re-running the Lloyd pass per query."""
+    from parquet_extractor_spark.store import memo_artifact
 
-        return memo_artifact(
-            spark,
-            sf_dir,
-            ("refined_pq_books", PQ_K_REFINED),
-            lambda: _refined_pq_books_uncached(spark, sf_dir, None),
-        )
-    return _refined_pq_books_uncached(spark, sf_dir, seed_books)
+    def build() -> list[list[list[float]]]:
+        books = _books_from_rows(_head_vectors(spark, sf_dir), PQ_K_REFINED)
+        emb = load_table(spark, sf_dir, "embeddings")
 
-
-def _refined_pq_books_uncached(
-    spark: SparkSession,
-    sf_dir: str,
-    seed_books: list[list[list[float]]] | None,
-) -> list[list[list[float]]]:
-    books = seed_books or _books_from_rows(
-        _head_vectors(spark, sf_dir), PQ_K_REFINED
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    # ONE scan: stage each subspace's (code, subvector) as columns
-    # (the argmin is expensive and multi-referenced, so Catalyst keeps
-    # the projection boundary), then fan out (s, code, dim, v) entries
-    # from the columns and aggregate. The previous union-of-subspaces
-    # form scanned the table PQ_M times. r13: the seed codebook
-    # arrives as DATA via _cross_const (same fold per element — codes
-    # identical), and the distance arrays get their own projection so
-    # the K folds run once per row, not twice.
-    emb = _cross_const(emb, "_books", books, "array<array<array<double>>>")
-    dist_cols = [
-        F.expr(
-            f"transform(element_at(_books, {s + 1}), cw -> "
-            + _sqdist_micro_lambda_sql(_pq_sub_sql(s))
-            + ")"
-        ).alias(f"pd{s}")
-        for s in range(PQ_M)
-    ]
-    sub_cols = [
-        F.expr(_pq_sub_sql(s)).alias(f"sub{s}") for s in range(PQ_M)
-    ]
-    pre = emb.select(*dist_cols, *sub_cols)
-    staged = pre.select(
-        *[
-            (
-                F.array_position(
-                    F.col(f"pd{s}"), F.array_min(F.col(f"pd{s}"))
-                )
-                - 1
-            )
-            .cast("int")
-            .alias(f"code{s}")
+        # ONE scan: stage each subspace's (code, subvector) as columns
+        # (the argmin is expensive and multi-referenced, so Catalyst keeps
+        # the projection boundary), then fan out (s, code, dim, v) entries
+        # from the columns and aggregate. The previous union-of-subspaces
+        # form scanned the table PQ_M times. r13: the seed codebook
+        # arrives as DATA via _cross_const (same fold per element — codes
+        # identical), and the distance arrays get their own projection so
+        # the K folds run once per row, not twice.
+        emb = _cross_const(emb, "_books", books, "array<array<array<double>>>")
+        dist_cols = [
+            F.expr(
+                f"transform(element_at(_books, {s + 1}), cw -> "
+                + _sqdist_micro_lambda_sql(_pq_sub_sql(s))
+                + ")"
+            ).alias(f"pd{s}")
             for s in range(PQ_M)
-        ],
-        *[F.col(f"sub{s}") for s in range(PQ_M)],
-    )
-
-    def _entries(s: int) -> Column:
-        def one(i: Column) -> Column:
-            return F.struct(
-                F.lit(s).alias("s"),
-                F.col(f"code{s}").alias("code"),
-                i.alias("dim"),
-                F.element_at(F.col(f"sub{s}"), i + 1).alias("v"),
-            )
-
-        return F.transform(F.sequence(F.lit(0), F.lit(PQ_SUBDIM - 1)), one)
-
-    all_entries = F.flatten(F.array(*[_entries(s) for s in range(PQ_M)]))
-    rows = (
-        staged.select(F.explode(all_entries).alias("e"))
-        .select("e.s", "e.code", "e.dim", "e.v")
-        .groupBy("s", "code", "dim")
-        .agg(
-            F.floor(F.avg("v") * F.lit(1e6) + F.lit(0.5))
-            .cast("bigint")
-            .alias("m_micro")
-        )
-        .collect()
-    )
-    means = {(r.s, r.code, r.dim): int(r.m_micro) for r in rows}
-    import math
-
-    refined = []
-    for s in range(PQ_M):
-        sk = []
-        for k in range(len(books[s])):
-            cw = []
-            for dim in range(PQ_SUBDIM):
-                if (s, k, dim) in means:
-                    cw.append(means[(s, k, dim)] / 1e6)
-                else:  # empty cell: micro-quantized seed
-                    cw.append(
-                        math.floor(books[s][k][dim] * 1e6 + 0.5) / 1e6
+        ]
+        sub_cols = [
+            F.expr(_pq_sub_sql(s)).alias(f"sub{s}") for s in range(PQ_M)
+        ]
+        pre = emb.select(*dist_cols, *sub_cols)
+        staged = pre.select(
+            *[
+                (
+                    F.array_position(
+                        F.col(f"pd{s}"), F.array_min(F.col(f"pd{s}"))
                     )
-            sk.append(cw)
-        refined.append(sk)
-    return refined
+                    - 1
+                )
+                .cast("int")
+                .alias(f"code{s}")
+                for s in range(PQ_M)
+            ],
+            *[F.col(f"sub{s}") for s in range(PQ_M)],
+        )
+
+        def _entries(s: int) -> Column:
+            def one(i: Column) -> Column:
+                return F.struct(
+                    F.lit(s).alias("s"),
+                    F.col(f"code{s}").alias("code"),
+                    i.alias("dim"),
+                    F.element_at(F.col(f"sub{s}"), i + 1).alias("v"),
+                )
+
+            return F.transform(F.sequence(F.lit(0), F.lit(PQ_SUBDIM - 1)), one)
+
+        all_entries = F.flatten(F.array(*[_entries(s) for s in range(PQ_M)]))
+        rows = (
+            staged.select(F.explode(all_entries).alias("e"))
+            .select("e.s", "e.code", "e.dim", "e.v")
+            .groupBy("s", "code", "dim")
+            .agg(
+                F.floor(F.avg("v") * F.lit(1e6) + F.lit(0.5))
+                .cast("bigint")
+                .alias("m_micro")
+            )
+            .collect()
+        )
+        means = {(r.s, r.code, r.dim): int(r.m_micro) for r in rows}
+        import math
+
+        refined = []
+        for s in range(PQ_M):
+            sk = []
+            for k in range(len(books[s])):
+                cw = []
+                for dim in range(PQ_SUBDIM):
+                    if (s, k, dim) in means:
+                        cw.append(means[(s, k, dim)] / 1e6)
+                    else:  # empty cell: micro-quantized seed
+                        cw.append(
+                            math.floor(books[s][k][dim] * 1e6 + 0.5) / 1e6
+                        )
+                sk.append(cw)
+            refined.append(sk)
+        return refined
+
+    return memo_artifact(spark, sf_dir, "refined_pq_books", build)
 
 
 def _ivf_pq_search(
@@ -2580,7 +2563,7 @@ def _dim_ranges(
             [float(row[f"mx{d}"]) for d in range(1, EMB_DIM + 1)],
         )
 
-    return memo_artifact(spark, sf_dir, ("sq8_minmax",), build)
+    return memo_artifact(spark, sf_dir, "sq8_minmax", build)
 
 
 def sq8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:

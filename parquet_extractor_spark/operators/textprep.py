@@ -590,7 +590,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_train_ctes(rounds: int = BPE_TRAIN_ROUNDS) -> list[str]:
+def _bpe_train_ctes() -> list[str]:
     """The trainer's CTE chain (words, w0, then p{k}/b{k}/w{k} per
     round) — shared by the bpe_train_merges oracle and the
     bpe_encode_corpus oracle, which extends it with the encode
@@ -611,7 +611,7 @@ def _bpe_train_ctes(rounds: int = BPE_TRAIN_ROUNDS) -> list[str]:
         "range(1, length(w) + 1), i -> w[i]), '  ') || '  ' AS seq, freq"
         "\n    FROM words\n)",
     ]
-    for k in range(1, rounds + 1):
+    for k in range(1, BPE_TRAIN_ROUNDS + 1):
         ctes.append(
             f"""p{k} AS (
     SELECT syms[i] AS l, syms[i + 1] AS r, CAST(sum(freq) AS BIGINT) AS cnt
@@ -631,17 +631,17 @@ def _bpe_train_ctes(rounds: int = BPE_TRAIN_ROUNDS) -> list[str]:
     return ctes
 
 
-def _bpe_train_sql(rounds: int = BPE_TRAIN_ROUNDS) -> str:
+def _bpe_train_sql() -> str:
     """DuckDB oracle for bpe_train_merges: the identical algorithm
     with the round loop unrolled into a CTE chain — round k = pair
     counts over w{k-1}, a 1-row argmax b{k}, and one boundary-space
     replace() producing w{k}. Single-pass-equals-greedy holds for the
     same structural reason as the Spark side (see bpe_train_merges)."""
-    ctes = _bpe_train_ctes(rounds)
+    ctes = _bpe_train_ctes()
     unions = "\n    UNION ALL\n    ".join(
         f"SELECT CAST({k} AS BIGINT) AS merge_rank, l AS left_sym,"
         f" r AS right_sym, cnt AS pair_count FROM b{k}"
-        for k in range(1, rounds + 1)
+        for k in range(1, BPE_TRAIN_ROUNDS + 1)
     )
     return (
         "WITH "
@@ -653,13 +653,13 @@ def _bpe_train_sql(rounds: int = BPE_TRAIN_ROUNDS) -> str:
 BPE_TRAIN_MERGES_SQL = _bpe_train_sql()
 
 
-def _bpe_encode_sql(rounds: int = BPE_TRAIN_ROUNDS) -> str:
+def _bpe_encode_sql() -> str:
     """DuckDB oracle for bpe_encode_corpus: the trainer chain
     (_bpe_train_ctes) plus the encode — per-document symbol strings
     in the same boundary-space layout (words joined by four spaces),
     one replace() per round applied via cross join against that
     round's 1-row argmax b{k}, then the per-language roll-up."""
-    ctes = _bpe_train_ctes(rounds)
+    ctes = _bpe_train_ctes()
     ctes.append(
         r"""d0 AS (
     SELECT lang, len(toks) AS word_tokens,
@@ -677,7 +677,7 @@ def _bpe_encode_sql(rounds: int = BPE_TRAIN_ROUNDS) -> str:
     )
 )"""
     )
-    for k in range(1, rounds + 1):
+    for k in range(1, BPE_TRAIN_ROUNDS + 1):
         ctes.append(
             f"d{k} AS (\n    SELECT d.lang, d.word_tokens,"
             f" replace(d.seq, ' ' || b.l || '  ' || b.r || ' ',"
@@ -694,7 +694,7 @@ SELECT lang,
        CAST(sum(CASE WHEN seq = '' THEN 0
                 ELSE len(regexp_split_to_array(trim(seq), ' {{2,}}')) END)
             AS BIGINT) AS bpe_tokens
-FROM d{rounds}
+FROM d{BPE_TRAIN_ROUNDS}
 GROUP BY lang
 ORDER BY lang
 """
@@ -782,12 +782,12 @@ def tokenizer_fertility_by_lang(
     ).orderBy("lang")
 
 
-def _tokenizer_fertility_sql(rounds: int = BPE_TRAIN_ROUNDS) -> str:
+def _tokenizer_fertility_sql() -> str:
     """DuckDB oracle: the trainer chain + the encode chain from
     _bpe_encode_sql with UTF-8 byte counts (strlen) carried through,
     micro divisions on the aggregated BIGINT totals (// == div here:
     all operands non-negative)."""
-    ctes = _bpe_train_ctes(rounds)
+    ctes = _bpe_train_ctes()
     ctes.append(
         r"""e0 AS (
     SELECT lang, strlen(text) AS n_bytes, len(toks) AS word_tokens,
@@ -805,7 +805,7 @@ def _tokenizer_fertility_sql(rounds: int = BPE_TRAIN_ROUNDS) -> str:
     )
 )"""
     )
-    for k in range(1, rounds + 1):
+    for k in range(1, BPE_TRAIN_ROUNDS + 1):
         ctes.append(
             f"e{k} AS (\n    SELECT e.lang, e.n_bytes, e.word_tokens,"
             f" replace(e.seq, ' ' || b.l || '  ' || b.r || ' ',"
@@ -824,7 +824,7 @@ totals AS (
            CAST(sum(CASE WHEN seq = '' THEN 0
                     ELSE len(regexp_split_to_array(trim(seq), ' {{2,}}')) END)
                 AS BIGINT) AS bpe_tokens
-    FROM e{rounds}
+    FROM e{BPE_TRAIN_ROUNDS}
     GROUP BY lang
 )
 SELECT lang, docs, utf8_bytes, word_tokens, bpe_tokens,

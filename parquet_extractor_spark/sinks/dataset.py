@@ -124,7 +124,6 @@ def compact_dataset(
     spark,
     data_dir: str,
     target_file_mb: int = 256,
-    partition_by: list[str] | None = None,
 ) -> dict:
     """Small-file compaction: rewrite a parquet dataset into files of
     ~target_file_mb.
@@ -155,11 +154,7 @@ def compact_dataset(
     files_before = _count_files(data_dir)
 
     tmp = data_dir.rstrip("/") + ".compact_tmp"
-    out = df.repartition(n_files, *partition_by) if partition_by else df.coalesce(n_files)
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
+    df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
 
     backup = data_dir.rstrip("/") + ".compact_old"
     os.rename(data_dir, backup)
@@ -177,8 +172,6 @@ def write_jsonl(
     out_dir: str,
     partition_by: list[str] | None = None,
     max_records_per_file: int = 100_000,
-    compression: str | None = "gzip",
-    mode: str = "overwrite",
 ) -> None:
     """Write ``df`` as a JSON-Lines dataset — the interchange format
     LLM training loaders actually consume (one JSON object per line).
@@ -193,11 +186,11 @@ def write_jsonl(
     parallelism is one reader task per file, so max_records_per_file
     is the lever that bounds per-task work — size it deliberately.
     """
-    writer = df.write.mode(mode).option(
-        "maxRecordsPerFile", max_records_per_file
+    writer = (
+        df.write.mode("overwrite")
+        .option("maxRecordsPerFile", max_records_per_file)
+        .option("compression", "gzip")
     )
-    if compression:
-        writer = writer.option("compression", compression)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.json(out_dir)

@@ -49,9 +49,10 @@ def pdf_ready(title: str | None, content: str | None) -> tuple[str, str]:
     return title, content
 
 
-def _chunks(text: str, size: int = PDF_CHUNK_SIZE) -> list[str]:
+def _chunks(text: str) -> list[str]:
     """1000-char chunking before multi_cell render (api.py:793)."""
-    return [text[i : i + size] for i in range(0, len(text), size)] or [""]
+    n = PDF_CHUNK_SIZE
+    return [text[i : i + n] for i in range(0, len(text), n)] or [""]
 
 
 def render_pdf_bytes(title: str, doc_id: str, content: str) -> bytes:

@@ -53,9 +53,11 @@ another artifact. The trade-off is that a cold tier build and a cold
 artifact training on two service threads wait for each other, where
 each kind used to wait only for its own kind.
 
-``SPARK_GRAFT_NO_TIER_CACHE=1`` disables the store (every call
-builds) — for tests that time or plan-audit the cold path.
-``SPARK_GRAFT_ARTIFACT_DIR`` relocates its root (test isolation).
+There is one path. A cold store is an empty store: the first call
+per key builds, writes and (for a tier) reads back, exactly as a
+service job would. To time or test that path, point
+``SPARK_GRAFT_ARTIFACT_DIR`` at a private root and ``clear()`` it;
+the variable otherwise relocates the root for deployment.
 """
 
 from __future__ import annotations
@@ -82,11 +84,6 @@ _STORE_ROOT: str | None = None
 _GC_DONE = False
 _TMP_MAX_AGE_S = 3600.0  # orphaned .tmp.<pid> from crashed builds
 _ENTRY_MAX_AGE_S = 7 * 86400.0  # stale code-fp generations
-
-
-def disabled() -> bool:
-    """True when ``SPARK_GRAFT_NO_TIER_CACHE=1`` turns the store off."""
-    return os.environ.get("SPARK_GRAFT_NO_TIER_CACHE", "") == "1"
 
 
 def code_fingerprint() -> str:
@@ -220,21 +217,20 @@ def store_root() -> str:
     )
 
 
-def _key(sf_dir: str, name: str | tuple) -> tuple:
-    """(realpath, per-table scan stats, code fingerprint, *name). A
+def _key(sf_dir: str, name: str) -> tuple:
+    """(realpath, per-table scan stats, code fingerprint, name). A
     directory that does not exist keys on its path alone."""
     try:
         tables = sorted(n for n in os.listdir(sf_dir) if n.endswith(".parquet"))
     except OSError:
         tables = []
     stats = tuple((n, _scan_stats(os.path.join(sf_dir, n))) for n in tables)
-    names = name if isinstance(name, tuple) else (name,)
-    return (os.path.realpath(sf_dir), stats, code_fingerprint()) + names
+    return (os.path.realpath(sf_dir), stats, code_fingerprint(), name)
 
 
 def _entry_path(kind: str, k: tuple) -> str:
     digest = hashlib.sha256(repr(k).encode()).hexdigest()[:24]
-    slug = "".join(c if c.isalnum() or c in "-_" else "-" for c in str(k[3]))
+    slug = "".join(c if c.isalnum() or c in "-_" else "-" for c in k[3])
     d = os.path.join(store_root(), kind)
     os.makedirs(d, exist_ok=True)
     ext = ".json" if kind == "artifacts" else ""
@@ -303,12 +299,10 @@ def _save_disk(path: str, value: Any) -> None:
 
 
 def memo_artifact(
-    spark, sf_dir: str, name: tuple, build: Callable[[], Any]
+    spark, sf_dir: str, name: str, build: Callable[[], Any]
 ) -> Any:
     """Return the artifact ``name`` of ``sf_dir``, training it at most
     once per key across processes."""
-    if disabled():
-        return build()
     k = _key(sf_dir, name)
     with _LOCK:
         if k in _MEMO:
@@ -332,8 +326,6 @@ def ensure_tier(
     it on first use per key across processes. The lock serializes
     drivers, not executors: the write is a normal distributed parquet
     write of a small table."""
-    if disabled():
-        return build()
     with _LOCK:
         path = _entry_path("tiers", _key(sf_dir, name))
         if os.path.isdir(path):
@@ -355,11 +347,11 @@ def ensure_tier(
 
 
 def clear() -> None:
-    """Test hook: forget every memoized artifact, and delete every
-    entry on disk ONLY when $SPARK_GRAFT_ARTIFACT_DIR isolates the
-    store. The shared default root is never purged from here: other
-    live processes scan paths in it and a concurrent bench relies on
-    its warm state."""
+    """Empty the store: forget every memoized artifact, and delete
+    every entry on disk ONLY when $SPARK_GRAFT_ARTIFACT_DIR isolates
+    the store (tests, the bench's cold mode). The shared default root
+    is never purged from here: other live processes scan paths in it
+    and a concurrent bench relies on its warm state."""
     with _LOCK:
         _MEMO.clear()
         if not os.environ.get("SPARK_GRAFT_ARTIFACT_DIR"):

@@ -11,7 +11,42 @@ from __future__ import annotations
 
 import os
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    BinaryType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
+
 DRAIN_TIMEOUT_S = 120
+
+# binaryFile's fixed schema — streaming file sources require one
+# explicitly even when the format defines it.
+_BINARY_FILE_SCHEMA = StructType(
+    [
+        StructField("path", StringType(), False),
+        StructField("modificationTime", TimestampType(), False),
+        StructField("length", LongType(), False),
+        StructField("content", BinaryType(), True),
+    ]
+)
+
+
+def read_binary_stream(
+    spark: SparkSession, directory: str, pattern: str
+) -> DataFrame:
+    """File-source stream of (path, content) over the files in a
+    landing directory that match the glob ``pattern``."""
+    return (
+        spark.readStream.format("binaryFile")
+        .schema(_BINARY_FILE_SCHEMA)
+        .option("pathGlobFilter", pattern)
+        .load(directory)
+        .select("path", "content")
+    )
 
 
 def drain(writer, checkpoint_dir: str, name: str) -> None:

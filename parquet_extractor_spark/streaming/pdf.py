@@ -18,41 +18,13 @@ foreachBatch replay replaces its own output instead of duplicating.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    BinaryType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from parquet_extractor_spark.sources.pdf import extract_docs_frame
-from parquet_extractor_spark.streaming import drain, epoch_sink
-
-# binaryFile's fixed schema — streaming file sources require one
-# explicitly even when the format defines it.
-_BINARY_FILE_SCHEMA = StructType(
-    [
-        StructField("path", StringType(), False),
-        StructField("modificationTime", TimestampType(), False),
-        StructField("length", LongType(), False),
-        StructField("content", BinaryType(), True),
-    ]
+from parquet_extractor_spark.streaming import (
+    drain,
+    epoch_sink,
+    read_binary_stream,
 )
-
-
-def read_pdf_stream(
-    spark: SparkSession, directory: str, pattern: str = "*.pdf"
-) -> DataFrame:
-    """File-source stream over a landing directory of PDFs."""
-    return (
-        spark.readStream.format("binaryFile")
-        .schema(_BINARY_FILE_SCHEMA)
-        .option("pathGlobFilter", pattern)
-        .load(directory)
-        .select("path", "content")
-    )
 
 
 def run_pdf_ingest_stream(
@@ -65,7 +37,7 @@ def run_pdf_ingest_stream(
     into a parquet document table; returns the written
     table re-read as a batch frame (epoch appears as a partition
     column — drop it if unwanted)."""
-    docs = extract_docs_frame(read_pdf_stream(spark, pdf_dir))
+    docs = extract_docs_frame(read_binary_stream(spark, pdf_dir, "*.pdf"))
 
     drain(
         docs.writeStream.foreachBatch(epoch_sink(out_dir)),

@@ -17,39 +17,13 @@ foreachBatch replay replaces its own output instead of duplicating.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    BinaryType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from parquet_extractor_spark.sources.warc import extract_warc_frame
-from parquet_extractor_spark.streaming import drain, epoch_sink
-
-_BINARY_FILE_SCHEMA = StructType(
-    [
-        StructField("path", StringType(), False),
-        StructField("modificationTime", TimestampType(), False),
-        StructField("length", LongType(), False),
-        StructField("content", BinaryType(), True),
-    ]
+from parquet_extractor_spark.streaming import (
+    drain,
+    epoch_sink,
+    read_binary_stream,
 )
-
-
-def read_warc_stream(
-    spark: SparkSession, directory: str, pattern: str = "*.warc*"
-) -> DataFrame:
-    """File-source stream over a WARC landing directory."""
-    return (
-        spark.readStream.format("binaryFile")
-        .schema(_BINARY_FILE_SCHEMA)
-        .option("pathGlobFilter", pattern)
-        .load(directory)
-        .select("path", "content")
-    )
 
 
 def run_warc_ingest_stream(
@@ -61,7 +35,9 @@ def run_warc_ingest_stream(
     """Drain the WARC landing directory once through record parsing
     into a parquet table; returns the written table
     re-read as a batch frame (epoch appears as a partition column)."""
-    docs = extract_warc_frame(read_warc_stream(spark, warc_dir))
+    docs = extract_warc_frame(
+        read_binary_stream(spark, warc_dir, "*.warc*")
+    )
 
     drain(
         docs.writeStream.foreachBatch(epoch_sink(out_dir)),
@@ -102,7 +78,9 @@ def run_capture_dedup_stream(
         read_snapshot,
     )
 
-    records = extract_warc_frame(read_warc_stream(spark, warc_dir))
+    records = extract_warc_frame(
+        read_binary_stream(spark, warc_dir, "*.warc*")
+    )
     committed: list[int] = []
 
     def _sink(batch: DataFrame, epoch: int) -> None:

@@ -7,6 +7,7 @@ from __future__ import annotations
 import ast
 import json
 import os
+import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -108,26 +109,44 @@ def test_payload_path_one_file_per_cpus_and_store():
     assert not only.startswith(repo + os.sep)
 
 
-def test_cold_store_mode_routes_and_tags(monkeypatch):
-    """SPARK_GRAFT_BENCH_COLD_STORE=1 gives a cold run and disables the
-    persistent store; SPARK_GRAFT_BENCH_ONLY is split on commas with
-    blanks dropped."""
-    # registered so teardown removes what _env sets
-    monkeypatch.setenv("SPARK_GRAFT_NO_TIER_CACHE", "")
+def test_cold_store_mode_routes_and_tags(monkeypatch, tmp_path):
+    """SPARK_GRAFT_BENCH_COLD_STORE=1 gives a cold run on a fresh,
+    empty, private store root, and each timed sample of a cold run
+    starts from a cleared store (a warm run never clears);
+    SPARK_GRAFT_BENCH_ONLY is split on commas with blanks dropped."""
+    from parquet_extractor_spark import store
+
+    # registered so teardown restores what _env sets
+    shared = str(tmp_path / "shared-store")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", shared)
     monkeypatch.delenv("SPARK_GRAFT_BENCH_ONLY", raising=False)
     monkeypatch.delenv("SPARK_GRAFT_BENCH_COLD_STORE", raising=False)
     assert bench._env() == ([], False)
-    assert os.environ["SPARK_GRAFT_NO_TIER_CACHE"] == ""
+    assert os.environ["SPARK_GRAFT_ARTIFACT_DIR"] == shared
 
     monkeypatch.setenv("SPARK_GRAFT_BENCH_COLD_STORE", "1")
     monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY", " a, ,b")
     assert bench._env() == (["a", "b"], True)
-    assert os.environ["SPARK_GRAFT_NO_TIER_CACHE"] == "1"
+    root = os.environ["SPARK_GRAFT_ARTIFACT_DIR"]
+    try:
+        assert root != shared and not root.startswith(bench.REPO + os.sep)
+        assert os.path.isdir(root) and not os.listdir(root)
+        assert os.stat(root).st_mode & 0o077 == 0
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+    events: list[str] = []
+    monkeypatch.setattr(store, "clear", lambda: events.append("clear"))
+    monkeypatch.setattr(
+        bench, "_attempt", lambda *a: events.append("run") or {"ok": True}
+    )
+    for cold in (True, True, False, False):
+        res, secs = bench._timed_attempt(None, "q", None, cold)
+        assert res == {"ok": True} and secs >= 0
+    assert events == ["clear", "run", "clear", "run", "run", "run"]
 
     monkeypatch.setenv("SPARK_GRAFT_BENCH_COLD_STORE", "0")
-    monkeypatch.setenv("SPARK_GRAFT_NO_TIER_CACHE", "")
     assert bench._env() == (["a", "b"], False)
-    assert os.environ["SPARK_GRAFT_NO_TIER_CACHE"] == ""
 
 
 def test_bench_order_headline_then_sorted_registry():

@@ -122,14 +122,19 @@ def test_events_cube_single_scan_partial_agg(spark, sf_small):
     assert len(scans) == 1
 
 
-def test_ngram_jaccard_partial_agg(spark, sf_small, monkeypatch):
-    """Cold-path plan (tier layer disabled): the pair-overlap build
-    itself must partial-aggregate; the warm path is a parquet scan of
-    the materialized tier (exercised by test_tiers)."""
+def test_ngram_jaccard_partial_agg(spark, sf_small):
+    """The pair-overlap tier's build plan must partial-aggregate; the
+    consumers scan the materialized tier (exercised by test_tiers)."""
     from parquet_extractor_spark.operators import dedup
+    from parquet_extractor_spark.session import release
 
-    monkeypatch.setenv("SPARK_GRAFT_NO_TIER_CACHE", "1")
-    assert has_partial_aggregation(dedup.ngram_jaccard_pairs(spark, sf_small))
+    postings: list = []
+    plan = dedup._pair_overlap_plan(spark, sf_small, postings)
+    try:
+        assert has_partial_aggregation(plan)
+    finally:
+        for df in postings:
+            release(df)
 
 
 def test_q8_broadcasts_dimensions_and_prunes_fact(spark, sf_small):
@@ -438,9 +443,9 @@ def test_store_keys_are_unique_and_private_names_stay_home():
     """Two rules for the persistent store (store.py). No package module
     imports a ``_``-prefixed name from ``store``: its key, path, lock
     and memo are private to it. And every ``memo_artifact`` /
-    ``ensure_tier`` call names its entry with a literal that no other
-    call site uses — two builders sharing one name share one key and
-    would serve each other's values."""
+    ``ensure_tier`` call names its entry with a ``str`` literal that
+    no other call site uses — two builders sharing one name share one
+    key and would serve each other's values."""
     import ast
     import collections
     import os
@@ -471,8 +476,6 @@ def test_store_keys_are_unique_and_private_names_stay_home():
                 if fn not in ("memo_artifact", "ensure_tier"):
                     continue
                 name = n.args[2] if len(n.args) > 2 else None
-                if isinstance(name, ast.Tuple) and name.elts:
-                    name = name.elts[0]
                 label = (
                     name.value
                     if isinstance(name, ast.Constant)

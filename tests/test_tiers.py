@@ -1,10 +1,10 @@
 """The persistent store (store.py): shared tiers and the artifact memo.
 
 Contract under test: a tier/artifact is derived at most once per
-(session, data dir, name); reuse returns value-identical results; the
-kill switch restores the inline cold path; clearing forgets
-everything. Plus the end-to-end guarantee the layers exist for — a
-warm dedup consumer returns byte-identical rows to a cold one."""
+(session, data dir, name); reuse returns value-identical results;
+clearing forgets everything. Plus the end-to-end guarantee the layers
+exist for — a consumer of every store entry returns the same rows
+from an empty store as from a warm one."""
 
 from __future__ import annotations
 
@@ -122,23 +122,6 @@ def test_rewritten_directory_table_invalidates_tier(spark, sf_small, tmp_path):
     assert n0 != n1, "stale tier served after a part file was rewritten"
 
 
-def test_kill_switch_disables_both_layers(spark, sf_small, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_TIER_CACHE", "1")
-    calls = []
-
-    def build():
-        calls.append(1)
-        return spark.range(1).select("id")
-
-    store.ensure_tier(spark, sf_small, "t_off", build)
-    store.ensure_tier(spark, sf_small, "t_off", build)
-    assert len(calls) == 2
-    vals = []
-    store.memo_artifact(spark, sf_small, ("a_off",), lambda: vals.append(1))
-    store.memo_artifact(spark, sf_small, ("a_off",), lambda: vals.append(1))
-    assert len(vals) == 2
-
-
 def test_clear_tiers_forgets(spark, sf_small):
     calls = []
 
@@ -189,10 +172,10 @@ def test_memo_artifact_builds_once_and_isolates_keys(spark, sf_small):
         calls.append(1)
         return [1, 2, 3]
 
-    assert store.memo_artifact(spark, sf_small, ("m", 1), build) == [1, 2, 3]
-    assert store.memo_artifact(spark, sf_small, ("m", 1), build) == [1, 2, 3]
+    assert store.memo_artifact(spark, sf_small, "m1", build) == [1, 2, 3]
+    assert store.memo_artifact(spark, sf_small, "m1", build) == [1, 2, 3]
     assert len(calls) == 1
-    store.memo_artifact(spark, sf_small, ("m", 2), build)
+    store.memo_artifact(spark, sf_small, "m2", build)
     assert len(calls) == 2
 
 
@@ -245,9 +228,9 @@ def test_artifact_survives_process_restart_simulated(spark, sf_small):
         calls.append(1)
         return [[1.5, -2.25], [0.0, 3.0]]
 
-    a = store.memo_artifact(spark, sf_small, ("m_persist",), build)
+    a = store.memo_artifact(spark, sf_small, "m_persist", build)
     store._MEMO.clear()  # what a new process starts with
-    b = store.memo_artifact(spark, sf_small, ("m_persist",), build)
+    b = store.memo_artifact(spark, sf_small, "m_persist", build)
     assert len(calls) == 1
     assert a == b == [[1.5, -2.25], [0.0, 3.0]]
 
@@ -264,10 +247,10 @@ def test_artifact_codec_roundtrips_tuples_and_rows(spark, sf_small):
         (1, 2, 3),
         [0.3333333333333333],
     )
-    store.memo_artifact(spark, sf_small, ("m_codec",), lambda: val)
+    store.memo_artifact(spark, sf_small, "m_codec", lambda: val)
     store._MEMO.clear()
     got = store.memo_artifact(
-        spark, sf_small, ("m_codec",), lambda: (_ for _ in ()).throw(
+        spark, sf_small, "m_codec", lambda: (_ for _ in ()).throw(
             AssertionError("disk layer missed")
         )
     )
@@ -288,28 +271,97 @@ def test_code_change_invalidates_persisted_layers(spark, sf_small, monkeypatch):
         calls.append(1)
         return [1]
 
-    store.memo_artifact(spark, sf_small, ("m_code",), build)
+    store.memo_artifact(spark, sf_small, "m_code", build)
     store._MEMO.clear()
     monkeypatch.setattr(store, "_CODE_FP", "deadbeefdeadbeefdead")
-    store.memo_artifact(spark, sf_small, ("m_code",), build)
+    store.memo_artifact(spark, sf_small, "m_code", build)
     assert len(calls) == 2
 
 
-def test_warm_dedup_consumer_equals_cold(spark, sf_small, monkeypatch):
-    """dedup_canonical cold (no tier layer) vs warm (tiers built by a
-    prior consumer) — row-identical output, the guarantee that reuse
-    changes cost, never answers."""
+def test_warm_dedup_consumer_equals_cold(spark, sf_small):
+    """dedup_canonical on an empty store (its tiers built inside the
+    call) vs warm (tiers built by a prior consumer) — row-identical
+    output, the guarantee that reuse changes cost, never answers."""
     from parquet_extractor_spark.operators import dedup
     from parquet_extractor_spark.operators.training import dedup_canonical
 
-    monkeypatch.setenv("SPARK_GRAFT_NO_TIER_CACHE", "1")
+    store.clear()  # isolated root: the entries on disk go too
     cold = [tuple(r) for r in dedup_canonical(spark, sf_small).collect()]
-    monkeypatch.delenv("SPARK_GRAFT_NO_TIER_CACHE")
 
     # prime the tiers through a DIFFERENT consumer first
+    store.clear()
     dedup.dedup_graph_pagerank(spark, sf_small).collect()
     warm = [tuple(r) for r in dedup_canonical(spark, sf_small).collect()]
     assert warm == cold
+
+
+# One consumer per store entry: a registry query where one reads it.
+# lm_counts has no registry consumer; its reader is the stream-side
+# surprisal projection, run here on the batch documents table.
+STORE_CONSUMERS = {
+    "head_vectors": "ann_ivf",
+    "sq8_minmax": "sq8_codes",
+    "logreg_train": "train_quality_classifier",
+    "bloom_bitset": "decontamination_report",
+    "lm_counts": None,
+    "refined_pq_books": "ann_ivf_pq_refined",
+    "kmeans_cents1": "kmeans_refine",
+    "exact_keep": "dedup_reduction_report",
+    "lsh_pairs": "dedup_components",
+    "components": "dedup_canonical",
+    "pair_overlap": "dedup_ngram_jaccard",
+    "ngram_pairs": "lsh_quality_eval",
+    "v1_band_index": "incremental_dedup_candidates",
+    "image_phashes": "media_phash",
+    "audio_fingerprints": "media_audio_fingerprint",
+    "animation_phashes": "media_animation_signatures",
+}
+
+
+def _surprisal_probe(spark, sf_dir):
+    from parquet_extractor_spark.operators.selection import (
+        lm_count_arrays,
+        surprisal_probe_columns,
+    )
+    from parquet_extractor_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    return surprisal_probe_columns(docs, *lm_count_arrays(spark, sf_dir))
+
+
+@pytest.mark.parametrize("name", sorted(STORE_CONSUMERS))
+def test_store_entry_consumer_cold_equals_warm(spark, sf_small, name):
+    """A consumer of each store entry writes the entry on an empty
+    store, and a warm rerun (in-process memo dropped, as a new process
+    starts) finds it by its key: it writes nothing new and returns the
+    same rows. For an artifact this compares a freshly built value with
+    one decoded from disk; a tier is a scan of its written parquet cold
+    or warm, so for tiers the rerun checks the key lookup, and the
+    oracle check guards their answers."""
+    import __spark_entry__
+
+    query = STORE_CONSUMERS[name]
+    fn = __spark_entry__.queries()[query] if query else _surprisal_probe
+
+    def rows() -> list[str]:
+        return sorted(repr(r) for r in fn(spark, sf_small).collect())
+
+    def written() -> set[str]:
+        root = store.store_root()
+        return {
+            f"{kind}/{f}"
+            for kind in ("artifacts", "tiers")
+            if os.path.isdir(os.path.join(root, kind))
+            for f in os.listdir(os.path.join(root, kind))
+        }
+
+    store.clear()
+    cold = rows()
+    made = written()
+    assert name in {f.split("/")[1].rsplit("-", 1)[0] for f in made}
+    store._MEMO.clear()
+    assert rows() == cold
+    assert written() == made
 
 
 def test_tier_survives_release_cached(spark, sf_small):
@@ -340,13 +392,13 @@ def test_corrupted_artifact_file_rebuilds_silently(spark, sf_small):
         calls.append(1)
         return [7, 8]
 
-    store.memo_artifact(spark, sf_small, ("m_corrupt",), build)
-    k = store._key(sf_small, ("m_corrupt",))
+    store.memo_artifact(spark, sf_small, "m_corrupt", build)
+    k = store._key(sf_small, "m_corrupt")
     path = store._entry_path("artifacts", k)
     with open(path, "w") as fh:
         fh.write('{"__tuple__": [1,')  # torn write
     store._MEMO.clear()
-    got = store.memo_artifact(spark, sf_small, ("m_corrupt",), build)
+    got = store.memo_artifact(spark, sf_small, "m_corrupt", build)
     assert got == [7, 8] and len(calls) == 2
 
 
@@ -443,7 +495,7 @@ def test_clear_without_isolated_dir_keeps_disk(
 
     store.ensure_tier(spark, sf_small, "t_keepdisk", build)
     store.memo_artifact(
-        spark, sf_small, ("a_keepdisk",), lambda: [1, 2]
+        spark, sf_small, "a_keepdisk", lambda: [1, 2]
     )
     n_tiers = len(os.listdir(shared / "tiers"))
     n_arts = len(os.listdir(shared / "artifacts"))
@@ -500,7 +552,7 @@ import os, sys
 sys.path.insert(0, %(repo)r)
 os.environ["SPARK_GRAFT_ARTIFACT_DIR"] = %(store)r
 from parquet_extractor_spark.store import memo_artifact
-v = memo_artifact(None, %(sf)r, ("race_probe", 7), lambda: [7, (1, 2.5), "x"])
+v = memo_artifact(None, %(sf)r, "race_probe", lambda: [7, (1, 2.5), "x"])
 assert v == [7, (1, 2.5), "x"], v
 print("ok")
 """
