@@ -15,7 +15,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from parquet_extractor_spark.functions.text import token_count, tokenize
+from parquet_extractor_spark.functions.text import (
+    token_count,
+    tokenize,
+    tokenize_sql,
+    word_ngrams_sql,
+)
 from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table, local_frame, spread
 
@@ -31,12 +36,9 @@ def doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DOC_TOKEN_COUNTS_SQL = r"""
+DOC_TOKEN_COUNTS_SQL = rf"""
 SELECT doc_id,
-       CAST(len(list_filter(
-            regexp_split_to_array(
-                regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-            x -> x != '')) AS BIGINT) AS n_tokens
+       CAST(len({tokenize_sql('text')}) AS BIGINT) AS n_tokens
 FROM documents
 """
 
@@ -62,12 +64,9 @@ def corpus_stats(
     )
 
 
-CORPUS_STATS_SQL = r"""
+CORPUS_STATS_SQL = rf"""
 WITH counts AS (
-    SELECT CAST(len(list_filter(
-               regexp_split_to_array(
-                   regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '')) AS BIGINT) AS n_tokens
+    SELECT CAST(len({tokenize_sql('text')}) AS BIGINT) AS n_tokens
     FROM documents
 )
 SELECT count(*)                        AS document_count,
@@ -100,13 +99,10 @@ def tokens_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TOKENS_PER_LANG_SQL = r"""
+TOKENS_PER_LANG_SQL = rf"""
 WITH counts AS (
     SELECT lang,
-           CAST(len(list_filter(
-               regexp_split_to_array(
-                   regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '')) AS BIGINT) AS n_tokens
+           CAST(len({tokenize_sql('text')}) AS BIGINT) AS n_tokens
     FROM documents
 )
 SELECT lang,
@@ -135,10 +131,7 @@ def top_docs_by_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TOP_DOCS_BY_TOKENS_SQL = rf"""
 SELECT doc_id,
-       CAST(len(list_filter(
-            regexp_split_to_array(
-                regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-            x -> x != '')) AS BIGINT) AS n_tokens
+       CAST(len({tokenize_sql('text')}) AS BIGINT) AS n_tokens
 FROM documents
 ORDER BY n_tokens DESC, doc_id ASC
 LIMIT {TOP_DOCS_K}
@@ -186,12 +179,10 @@ def source_token_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SOURCE_TOKEN_KL_SQL = r"""
+SOURCE_TOKEN_KL_SQL = rf"""
 WITH tok AS (
     SELECT source,
-           unnest(list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '')) AS tok
+           unnest({tokenize_sql('text')}) AS tok
     FROM documents
 ),
 per_src AS (
@@ -530,9 +521,7 @@ def source_log_odds_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 SOURCE_LOG_ODDS_TERMS_SQL = rf"""
 WITH tok AS (
     SELECT source,
-           unnest(list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '')) AS term
+           unnest({tokenize_sql('text')}) AS term
     FROM documents
 ),
 per_src AS (
@@ -742,12 +731,10 @@ def label_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LABEL_TEXT_PROFILE_SQL = r"""
+LABEL_TEXT_PROFILE_SQL = rf"""
 WITH joined AS (
     SELECT d.doc_id, e.label, d.lang,
-           len(list_filter(regexp_split_to_array(
-               regexp_replace(lower(d.text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '')) AS n_tokens
+           len({tokenize_sql('d.text')}) AS n_tokens
     FROM documents d
     JOIN embeddings e ON e.vec_id = d.doc_id
 ),
@@ -828,12 +815,10 @@ def source_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SOURCE_NGRAM_DIVERSITY_SQL = r"""
+SOURCE_NGRAM_DIVERSITY_SQL = rf"""
 WITH toks AS (
     SELECT source,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS ts
+           {tokenize_sql('text')} AS ts
     FROM documents
 ),
 uni AS (
@@ -962,12 +947,10 @@ def corpus_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CORPUS_NOVELTY_CURVE_SQL = r"""
+CORPUS_NOVELTY_CURVE_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS ts
+           {tokenize_sql('text')} AS ts
     FROM documents
 ),
 bi AS (
@@ -1145,12 +1128,10 @@ def source_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SOURCE_BOILERPLATE_NGRAMS_SQL = r"""
+SOURCE_BOILERPLATE_NGRAMS_SQL = rf"""
 WITH toks AS (
     SELECT doc_id, source,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS ts
+           {tokenize_sql('text')} AS ts
     FROM documents
 ),
 grams AS (
@@ -1376,15 +1357,11 @@ def ngram_novelty_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 NGRAM_NOVELTY_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS tokens
+           {tokenize_sql('text')} AS tokens
     FROM documents
 ),
 grams AS (
-    SELECT doc_id, unnest(list_distinct(list_transform(
-               range(1, greatest(len(tokens) - {NOVELTY_N - 1}, sign(len(tokens))) + 1),
-               i -> array_to_string(tokens[i:i+{NOVELTY_N - 1}], ' '))))
+    SELECT doc_id, unnest(list_distinct({word_ngrams_sql('tokens', NOVELTY_N)}))
            AS gram
     FROM toks
 ),
@@ -1479,13 +1456,11 @@ def source_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SOURCE_LEXICAL_DIVERSITY_SQL = r"""
+SOURCE_LEXICAL_DIVERSITY_SQL = rf"""
 WITH tf AS (
     SELECT source, tok AS term, CAST(count(*) AS BIGINT) AS n
     FROM (
-        SELECT source, unnest(list_filter(regexp_split_to_array(
-            regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-            x -> x != '')) AS tok
+        SELECT source, unnest({tokenize_sql('text')}) AS tok
         FROM documents
     )
     GROUP BY 1, 2

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from parquet_extractor_spark.functions.text import tokenize
+from parquet_extractor_spark.functions.text import tokenize, tokenize_sql
 from parquet_extractor_spark.session import materialize, release
 from parquet_extractor_spark.sources.tables import load_table, local_frame
 
@@ -283,9 +283,7 @@ ORDER BY iteration"""
     return rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS tokens
+           {tokenize_sql('text')} AS tokens
     FROM documents
 ),
 feats AS (

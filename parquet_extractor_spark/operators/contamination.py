@@ -20,7 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_extractor_spark.functions.text import tokenize, word_ngrams
+from parquet_extractor_spark.functions.text import (
+    portable_hash64_sql,
+    tokenize,
+    tokenize_sql,
+    word_ngrams,
+    word_ngrams_sql,
+)
 from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table, spread
 
@@ -85,21 +91,13 @@ def ngram_decontamination(
 NGRAM_DECONTAMINATION_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS tokens
+           {tokenize_sql('text')} AS tokens
     FROM documents
-),
-pos AS (
-    SELECT doc_id, tokens,
-           unnest(generate_series(
-               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, sign(len(tokens))))) AS i
-    FROM toks
 ),
 grams AS (
     SELECT DISTINCT doc_id,
-           array_to_string(tokens[i:i+{DECONTAM_NGRAM - 1}], ' ') AS g
-    FROM pos
+           unnest({word_ngrams_sql('tokens', DECONTAM_NGRAM)}) AS g
+    FROM toks
 ),
 bench AS (
     SELECT DISTINCT g FROM grams WHERE doc_id % {BENCH_MOD} = 0
@@ -279,34 +277,25 @@ def bloom_decontamination(
     )
 
 
-_BLOOM_H1 = "CAST('0x' || substr(md5(g), 1, 15) AS BIGINT)"
-_BLOOM_H2 = "CAST('0x' || substr(md5(g || '#2'), 1, 15) AS BIGINT)"
 # the oracle carries the bench POSITION SET explicitly: "all K bits
 # set" ≡ "each position was set by some bench gram", which is the
 # bitset semantics without needing DuckDB to build the literal words
 _BLOOM_POS = ", ".join(
-    f"({_BLOOM_H1} + {i} * {_BLOOM_H2}) % {BLOOM_BITS}"
+    f"""({portable_hash64_sql('g')} + {i} * {portable_hash64_sql("g || '#2'")})"""
+    f" % {BLOOM_BITS}"
     for i in range(BLOOM_HASHES)
 )
 
 BLOOM_DECONTAMINATION_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS tokens
+           {tokenize_sql('text')} AS tokens
     FROM documents
-),
-pos AS (
-    SELECT doc_id, tokens,
-           unnest(generate_series(
-               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, sign(len(tokens))))) AS i
-    FROM toks
 ),
 grams AS (
     SELECT DISTINCT doc_id,
-           array_to_string(tokens[i:i+{DECONTAM_NGRAM - 1}], ' ') AS g
-    FROM pos
+           unnest({word_ngrams_sql('tokens', DECONTAM_NGRAM)}) AS g
+    FROM toks
 ),
 gram_bits AS (
     SELECT doc_id, g, unnest([{_BLOOM_POS}]) AS bitpos
@@ -381,21 +370,13 @@ def decontamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 DECONTAMINATION_REPORT_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS tokens
+           {tokenize_sql('text')} AS tokens
     FROM documents
-),
-pos AS (
-    SELECT doc_id, tokens,
-           unnest(generate_series(
-               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, sign(len(tokens))))) AS i
-    FROM toks
 ),
 grams AS (
     SELECT DISTINCT doc_id,
-           array_to_string(tokens[i:i+{DECONTAM_NGRAM - 1}], ' ') AS g
-    FROM pos
+           unnest({word_ngrams_sql('tokens', DECONTAM_NGRAM)}) AS g
+    FROM toks
 ),
 bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % {BENCH_MOD} = 0),
 corpus AS (SELECT doc_id, g FROM grams WHERE doc_id % {BENCH_MOD} <> 0),
@@ -582,8 +563,7 @@ def snapshot_contamination_gate(
 SNAPSHOT_CONTAMINATION_GATE_SQL = rf"""
 WITH hashed AS (
     SELECT doc_id, source, text,
-           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-               AS BIGINT) AS h
+           {portable_hash64_sql('CAST(doc_id AS VARCHAR)')} AS h
     FROM documents
 ),
 v2 AS (
@@ -607,38 +587,21 @@ screen AS (
 ),
 toks AS (
     SELECT doc_id, source, change_type,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS tokens
+           {tokenize_sql('text')} AS tokens
     FROM screen
-),
-pos AS (
-    SELECT doc_id, source, change_type, tokens,
-           unnest(generate_series(
-               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, sign(len(tokens))))) AS i
-    FROM toks
 ),
 grams AS (
     SELECT DISTINCT doc_id, source, change_type,
-           array_to_string(tokens[i:i+{DECONTAM_NGRAM - 1}], ' ') AS g
-    FROM pos
+           unnest({word_ngrams_sql('tokens', DECONTAM_NGRAM)}) AS g
+    FROM toks
 ),
 btoks AS (
-    SELECT list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS tokens
+    SELECT {tokenize_sql('text')} AS tokens
     FROM v2 WHERE doc_id % {BENCH_MOD} = 0
 ),
-bpos AS (
-    SELECT tokens,
-           unnest(generate_series(
-               1, greatest(len(tokens) - {DECONTAM_NGRAM - 1}, sign(len(tokens))))) AS i
-    FROM btoks
-),
 bench AS (
-    SELECT DISTINCT array_to_string(tokens[i:i+{DECONTAM_NGRAM - 1}], ' ')
-        AS g
-    FROM bpos
+    SELECT DISTINCT unnest({word_ngrams_sql('tokens', DECONTAM_NGRAM)}) AS g
+    FROM btoks
 ),
 per_doc AS (
     SELECT doc_id, source, change_type, count(*) AS n_grams

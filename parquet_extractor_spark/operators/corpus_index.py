@@ -33,7 +33,11 @@ from pyspark.sql.window import Window
 
 from parquet_extractor_spark.functions.windows import bounded_global_window
 
-from parquet_extractor_spark.functions.text import tokenize
+from parquet_extractor_spark.functions.text import (
+    portable_hash64_sql,
+    tokenize,
+    tokenize_sql,
+)
 from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table, spread
 
@@ -105,9 +109,7 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 INVERTED_INDEX_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> len(x) >= {MIN_TERM_LEN}) AS toks
+           list_filter({tokenize_sql('text')}, x -> len(x) >= {MIN_TERM_LEN}) AS toks
     FROM documents
 ),
 terms AS (
@@ -224,9 +226,9 @@ def pmi_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 PMI_TOP_PAIRS_SQL = rf"""
 WITH capped AS (
     SELECT doc_id,
-           list_sort(list_distinct(list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> len(x) >= {MIN_TERM_LEN})))[1:{PMI_CAP}] AS toks
+           list_sort(list_distinct(list_filter(
+               {tokenize_sql('text')}, x -> len(x) >= {MIN_TERM_LEN}
+           )))[1:{PMI_CAP}] AS toks
     FROM documents
 ),
 pair_lists AS (
@@ -373,9 +375,7 @@ _PHRASE_COND = " AND ".join(
 PHRASE_SEARCH_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS toks
+           {tokenize_sql('text')} AS toks
     FROM documents
 ),
 hits AS (
@@ -396,9 +396,7 @@ LIMIT {PHRASE_TOP}
 
 ZIPF_TOKEN_STATS_SQL = rf"""
 WITH terms AS (
-    SELECT unnest(list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '')) AS term
+    SELECT unnest({tokenize_sql('text')}) AS term
     FROM documents
 ),
 freq AS (
@@ -599,22 +597,14 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CM_TOKS_SQL = (
-    r"list_filter(regexp_split_to_array("
-    r"regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'), "
-    rf"x -> length(x) >= {MIN_TERM_LEN})"
-)
-_CM_POS_SQL = (
-    "CAST('0x' || substr(md5(tok || '#' || d), 1, 15) AS BIGINT) "
-    f"% {CM_WIDTH}"
-)
-
 COUNTMIN_HEAVY_HITTERS_SQL = rf"""
 WITH toks AS (
-    SELECT unnest({_CM_TOKS_SQL}) AS tok FROM documents
+    SELECT unnest(list_filter({tokenize_sql('text')}, x -> len(x) >= {MIN_TERM_LEN}))
+               AS tok
+    FROM documents
 ),
 cells AS (
-    SELECT tok, d, {_CM_POS_SQL} AS pos
+    SELECT tok, d, {portable_hash64_sql("tok || '#' || d")} % {CM_WIDTH} AS pos
     FROM toks, unnest(range(0, {CM_DEPTH})) AS u(d)
 ),
 sketch AS (
@@ -626,7 +616,8 @@ top AS (
     ORDER BY exact_cnt DESC, tok ASC LIMIT {CM_TOP}
 ),
 probes AS (
-    SELECT t.tok, t.exact_cnt, u.d, {_CM_POS_SQL.replace('tok', 't.tok')} AS pos
+    SELECT t.tok, t.exact_cnt, u.d,
+           {portable_hash64_sql("t.tok || '#' || d")} % {CM_WIDTH} AS pos
     FROM top t, unnest(range(0, {CM_DEPTH})) AS u(d)
 )
 SELECT p.tok AS token,

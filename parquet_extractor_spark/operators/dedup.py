@@ -34,8 +34,11 @@ from pyspark.sql.window import Window
 from parquet_extractor_spark.functions.text import (
     char_ngrams,
     portable_hash64,
+    portable_hash64_sql,
     tokenize,
+    tokenize_sql,
     word_ngrams,
+    word_ngrams_sql,
 )
 from parquet_extractor_spark.session import materialize, release
 from parquet_extractor_spark.sources.tables import load_table, spread
@@ -244,16 +247,12 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 NGRAM_JACCARD_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS tokens
+           {tokenize_sql('text')} AS tokens
     FROM documents
 ),
 shingled AS (
     SELECT doc_id,
-           list_distinct(list_transform(
-               range(1, greatest(len(tokens) - {NGRAM_N - 1}, sign(len(tokens))) + 1),
-               i -> array_to_string(tokens[i:i+{NGRAM_N - 1}], ' '))) AS shingles
+           list_distinct({word_ngrams_sql('tokens', NGRAM_N)}) AS shingles
     FROM toks
 ),
 exploded_all AS (
@@ -352,21 +351,17 @@ def _minhash_sql_exprs() -> str:
 MINHASH_SIGNATURES_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS tokens
+           {tokenize_sql('text')} AS tokens
     FROM documents
 ),
 shingled AS (
     SELECT doc_id,
-           list_distinct(list_transform(
-               range(1, greatest(len(tokens) - {NGRAM_N - 1}, sign(len(tokens))) + 1),
-               i -> array_to_string(tokens[i:i+{NGRAM_N - 1}], ' '))) AS shingles
+           list_distinct({word_ngrams_sql('tokens', NGRAM_N)}) AS shingles
     FROM toks
 ),
 hashed AS (
     SELECT doc_id,
-           CAST(('0x' || substr(md5(unnest(shingles)), 1, 15)) AS BIGINT)
+           {portable_hash64_sql('unnest(shingles)')}
                % {MERSENNE_P} AS h0
     FROM shingled
 )
@@ -683,14 +678,12 @@ def _simhash_oracle() -> str:
     return rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_distinct(list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '')) AS tokens
+           list_distinct({tokenize_sql('text')}) AS tokens
     FROM documents
 ),
 hashed AS (
     SELECT doc_id,
-           CAST(('0x' || substr(md5(unnest(tokens)), 1, 15)) AS BIGINT) AS h
+           {portable_hash64_sql('unnest(tokens)')} AS h
     FROM toks
 ),
 votes AS (
@@ -1151,9 +1144,7 @@ def _reduction_report_oracle() -> str:
     return rf"""
 WITH per_doc AS (
     SELECT doc_id,
-           CAST(len(list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '')) AS BIGINT) AS n_tokens
+           CAST(len({tokenize_sql('text')}) AS BIGINT) AS n_tokens
     FROM documents
 ),
 exact_keep AS (
@@ -1445,16 +1436,12 @@ def dedup_containment_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 DEDUP_CONTAINMENT_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS tokens
+           {tokenize_sql('text')} AS tokens
     FROM documents
 ),
 shingled AS (
     SELECT doc_id,
-           list_distinct(list_transform(
-               range(1, greatest(len(tokens) - {NGRAM_N - 1}, sign(len(tokens))) + 1),
-               i -> array_to_string(tokens[i:i+{NGRAM_N - 1}], ' '))) AS shingles
+           list_distinct({word_ngrams_sql('tokens', NGRAM_N)}) AS shingles
     FROM toks
 ),
 exploded_all AS (

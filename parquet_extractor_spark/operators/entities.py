@@ -48,7 +48,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from parquet_extractor_spark.functions.text import char_ngrams, tokenize
+from parquet_extractor_spark.functions.text import (
+    char_ngrams,
+    tokenize,
+    tokenize_sql,
+)
 from parquet_extractor_spark.sources.tables import load_table, local_frame
 
 ER_JACCARD_T = 0.45
@@ -321,9 +325,7 @@ WITH RECURSIVE raw(rec_id, name, city) AS (VALUES
 ),
 norm AS (
     SELECT rec_id, name,
-           array_to_string(list_sort(list_filter(regexp_split_to_array(
-               regexp_replace(lower(name), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '')), ' ') AS nm
+           array_to_string(list_sort({tokenize_sql('name')}), ' ') AS nm
     FROM raw
 ),
 grams AS (

@@ -100,6 +100,7 @@ from parquet_extractor_spark.functions.png import (  # noqa: E402
     encode_png,
     resize_nearest,
 )
+from parquet_extractor_spark.functions.text import portable_hash64  # noqa: E402
 from parquet_extractor_spark.functions.wav import (  # noqa: E402
     audio_feature,
     decode_wav,
@@ -460,9 +461,7 @@ def media_apng_frame_checksums(spark, sf_dir: str) -> DataFrame:
         F.col("width").cast("bigint").alias("width"),
         F.col("height").cast("bigint").alias("height"),
         F.length("frame").cast("bigint").alias("n_bytes"),
-        F.conv(F.substring(F.md5("frame"), 1, 15), 16, 10)
-        .cast("bigint")
-        .alias("frame_hash"),
+        portable_hash64(F.col("frame")).alias("frame_hash"),
     ).orderBy("media_id", "frame_ts_ms")
 
 
@@ -485,9 +484,7 @@ def media_gif_frame_checksums(spark, sf_dir: str) -> DataFrame:
         F.col("width").cast("bigint").alias("width"),
         F.col("height").cast("bigint").alias("height"),
         F.length("frame").cast("bigint").alias("n_bytes"),
-        F.conv(F.substring(F.md5("frame"), 1, 15), 16, 10)
-        .cast("bigint")
-        .alias("frame_hash"),
+        portable_hash64(F.col("frame")).alias("frame_hash"),
     ).orderBy("media_id", "frame_ts_ms")
 
 
@@ -657,9 +654,7 @@ def media_resize_checksums(spark, sf_dir: str) -> DataFrame:
     return resized.select(
         "media_id",
         F.length("data").cast("bigint").alias("n_bytes"),
-        F.conv(F.substring(F.md5("data"), 1, 15), 16, 10)
-        .cast("bigint")
-        .alias("bytes_hash"),
+        portable_hash64(F.col("data")).alias("bytes_hash"),
     ).orderBy("media_id")
 
 

@@ -17,8 +17,11 @@ from pyspark.sql.window import Window
 from parquet_extractor_spark.functions.text import (
     char_ngrams,
     portable_hash64,
+    portable_hash64_sql,
     tokenize,
+    tokenize_sql,
     word_ngrams,
+    word_ngrams_sql,
 )
 from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table, local_frame, spread
@@ -92,9 +95,7 @@ def _language_id_oracle() -> str:
     return rf"""
 WITH toks AS (
     SELECT doc_id, lang, text,
-           list_distinct(list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '')) AS tokens
+           list_distinct({tokenize_sql('text')}) AS tokens
     FROM documents
 ),
 scored AS (
@@ -114,6 +115,10 @@ ORDER BY doc_id
 
 
 LANGUAGE_ID_SQL = _language_id_oracle()
+
+# the curation gate on quality_score: curate, curate_stream and
+# quality_gate_kappa all keep a document at or above it
+MIN_QUALITY = 0.3
 
 
 def quality_columns(tokens: Column | None = None) -> dict[str, F.Column]:
@@ -183,9 +188,7 @@ def _quality_oracle() -> str:
 WITH base AS (
     SELECT doc_id,
            length(text) AS n_chars,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS tokens,
+           {tokenize_sql('text')} AS tokens,
            length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct,
            length(regexp_replace(text, '[^0-9]', '', 'g')) AS n_digit
     FROM documents
@@ -238,9 +241,7 @@ def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_TOKEN_COUNTS_SQL = rf"""
 SELECT doc_id,
        CAST(len(regexp_extract_all(text, '{BPE_PATTERN.replace("'", "''")}')) AS BIGINT) AS bpe_tokens,
-       CAST(len(list_filter(regexp_split_to_array(
-            regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-            x -> x != '')) AS BIGINT) AS ws_tokens
+       CAST(len({tokenize_sql('text')}) AS BIGINT) AS ws_tokens
 FROM documents
 ORDER BY doc_id
 """
@@ -307,9 +308,7 @@ WITH base AS (
     SELECT doc_id,
            greatest(CAST(len(regexp_extract_all(text, '[.!?]+'))
                     AS BIGINT), 1) AS n_sentences,
-           greatest(CAST(len(list_filter(regexp_split_to_array(
-                regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-                x -> x != '')) AS BIGINT), 1) AS n_words,
+           greatest(CAST(len({tokenize_sql('text')}) AS BIGINT), 1) AS n_words,
            CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
                 AS BIGINT) AS n_vg
     FROM documents
@@ -350,7 +349,7 @@ SELECT doc_id,
            list_transform(
                range(1, greatest(length(text) - {FINGERPRINT_NGRAM - 1}, 1) + 1),
                i -> substr(text, i, {FINGERPRINT_NGRAM})),
-           g -> CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT))) AS fingerprint
+           g -> {portable_hash64_sql('g')})) AS fingerprint
 FROM documents
 ORDER BY doc_id
 """
@@ -368,12 +367,12 @@ REDACTION_PATTERN = f"({EMAIL_PATTERN})|({PHONE_PATTERN})|({BLOCKLIST_PATTERN})"
 REDACTION_TOKEN = "[REDACTED]"
 
 
-def redact_text(col: Column | str, pattern: str = REDACTION_PATTERN) -> Column:
+def redact_text(col: Column | str) -> Column:
     """Redaction as a pure codegen'd expression — the scrubbing analog
     of the reference's sanitizers (api.py:277, api.py:324): replace
     every match with a fixed token. Map-side only; scales linearly."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, pattern, REDACTION_TOKEN)
+    return F.regexp_replace(c, REDACTION_PATTERN, REDACTION_TOKEN)
 
 
 def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -393,11 +392,15 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _REDACT_SQL_PATTERN = REDACTION_PATTERN.replace("'", "''")
+_REDACTED_TEXT_SQL = (
+    f"regexp_replace(text, '{_REDACT_SQL_PATTERN}', "
+    f"""'{REDACTION_TOKEN.replace("'", "''")}', 'g')"""
+)
 PII_REDACTION_SQL = rf"""
 SELECT doc_id,
        CAST(len(regexp_extract_all(text, '{_REDACT_SQL_PATTERN}')) AS BIGINT) AS n_hits,
-       CAST(length(regexp_replace(text, '{_REDACT_SQL_PATTERN}', '{REDACTION_TOKEN.replace("'", "''")}', 'g')) AS BIGINT) AS n_chars_after,
-       CAST(('0x' || substr(md5(regexp_replace(text, '{_REDACT_SQL_PATTERN}', '{REDACTION_TOKEN.replace("'", "''")}', 'g')), 1, 15)) AS BIGINT) AS redacted_hash
+       CAST(length({_REDACTED_TEXT_SQL}) AS BIGINT) AS n_chars_after,
+       {portable_hash64_sql(_REDACTED_TEXT_SQL)} AS redacted_hash
 FROM documents
 ORDER BY doc_id
 """
@@ -457,12 +460,10 @@ def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REPETITION_SCORES_SQL = r"""
+REPETITION_SCORES_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS tokens
+           {tokenize_sql('text')} AS tokens
     FROM documents
 ),
 uni AS (
@@ -476,13 +477,8 @@ ustat AS (
            max(c) AS top_cnt
     FROM ucnt GROUP BY 1
 ),
-bpos AS (
-    SELECT doc_id, tokens,
-           unnest(generate_series(1, greatest(len(tokens) - 1, sign(len(tokens))))) AS i
-    FROM toks
-),
 big AS (
-    SELECT doc_id, array_to_string(tokens[i:i+1], ' ') AS g FROM bpos
+    SELECT doc_id, unnest({word_ngrams_sql('tokens', 2)}) AS g FROM toks
 ),
 bcnt AS (
     SELECT doc_id, g, count(*) AS c FROM big GROUP BY 1, 2
@@ -587,9 +583,7 @@ _GOPHER_STOPLIST_SQL = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
 GOPHER_QUALITY_FLAGS_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS ts
+           {tokenize_sql('text')} AS ts
     FROM documents
 ),
 m AS (
@@ -686,7 +680,7 @@ WITH h AS (
                list_transform(
                    range(1, greatest(length(text) - {FINGERPRINT_NGRAM - 1}, 1) + 1),
                    i -> substr(text, i, {FINGERPRINT_NGRAM})),
-               g -> CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT)) AS hs
+               g -> {portable_hash64_sql('g')}) AS hs
     FROM documents
 ),
 wins AS (
@@ -734,9 +728,7 @@ def source_quality_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 SOURCE_QUALITY_SUMMARY_SQL = rf"""
 WITH toks AS (
     SELECT source,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS ts
+           {tokenize_sql('text')} AS ts
     FROM documents
 ),
 m AS (
@@ -864,16 +856,14 @@ def _quality_classifier_oracle() -> str:
     # documents); a column reference is built once.
     w_lit = "[" + ",".join(str(v) for v in _cls_weights_micro()) + "]"
     term = (
-        f"w.wv[(CAST('0x' || substr(md5(t), 1, 15) AS BIGINT) "
+        f"w.wv[({portable_hash64_sql('t')} "
         f"% {CLS_BUCKETS}) + 1]"
     )
     return rf"""
 WITH w AS (SELECT {w_lit} AS wv),
 toks AS (
     SELECT doc_id, lang,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS toks
+           {tokenize_sql('text')} AS toks
     FROM documents
 ),
 scored AS (
@@ -1589,9 +1579,7 @@ def quality_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUALITY_FILTER_ABLATION_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS ts
+           {tokenize_sql('text')} AS ts
     FROM documents
 ),
 m AS (
@@ -1715,11 +1703,7 @@ def dp_source_release(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dp_release_oracle() -> str:
     def lap_sql(tag: str, sensitivity: int) -> str:
-        h = (
-            "CAST(('0x' || substr(md5('"
-            + DP_SALT + tag
-            + "' || source), 1, 15)) AS BIGINT)"
-        )
+        h = portable_hash64_sql(f"'{DP_SALT}{tag}' || source")
         u = f"((({h} % {_DP_M}) + 0.5) / {float(_DP_M)}) - 0.5"
         b = float(sensitivity) / DP_EPSILON
         return (
@@ -1735,9 +1719,7 @@ def _dp_release_oracle() -> str:
 WITH per_source AS (
     SELECT source,
            CAST(count(*) AS BIGINT) AS n_docs_true,
-           CAST(sum(least(len(list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '')), {DP_TOKEN_CLAMP})) AS BIGINT)
+           CAST(sum(least(len({tokenize_sql('text')}), {DP_TOKEN_CLAMP})) AS BIGINT)
                AS clamped_tokens_true
     FROM documents GROUP BY source
 )
@@ -1752,11 +1734,6 @@ ORDER BY source
 
 
 DP_SOURCE_RELEASE_SQL = _dp_release_oracle()
-
-
-# ≡ pipelines.MIN_QUALITY (kept equal by test_quality_gate_kappa_*;
-# not imported to avoid the pipelines→quality import cycle)
-KAPPA_MIN_QUALITY = 0.3
 
 
 def quality_gate_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1785,7 +1762,7 @@ def quality_gate_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = quality_columns()
     g = _gopher_gate_columns()
     flags = docs.select(
-        (F.round(q["quality_score"], 2) >= F.lit(KAPPA_MIN_QUALITY))
+        (F.round(q["quality_score"], 2) >= F.lit(MIN_QUALITY))
         .cast("bigint")
         .alias("a"),
         g["keep"].cast("bigint").alias("b"),
@@ -1849,7 +1826,7 @@ def _quality_gate_kappa_oracle() -> str:
 WITH qual AS ({body(QUALITY_SCORES_SQL)}),
 goph AS ({body(GOPHER_QUALITY_FLAGS_SQL)}),
 flags AS (
-    SELECT CAST(q.quality_score >= {KAPPA_MIN_QUALITY} AS BIGINT) AS a,
+    SELECT CAST(q.quality_score >= {MIN_QUALITY} AS BIGINT) AS a,
            CAST(g.gopher_keep AS BIGINT) AS b
     FROM qual q JOIN goph g ON q.doc_id = g.doc_id
 ),
@@ -1894,7 +1871,7 @@ def per_source_quality_cutoffs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Budget-matched per-source quality cutoffs — quota curation.
-    A single global threshold (pipelines.MIN_QUALITY) keeps whatever
+    A single global threshold (MIN_QUALITY) keeps whatever
     fraction each source happens to clear, silently skewing the mix
     toward sources whose style flatters the heuristic; the quota
     variant instead finds, per source, the score cutoff that keeps

@@ -38,10 +38,15 @@ from pyspark.sql import functions as F
 from parquet_extractor_spark.functions.windows import bounded_global_window
 
 from parquet_extractor_spark.functions.text import (
+    ngram_starts_sql,
     portable_hash64,
+    portable_hash64_sql,
     tokenize,
+    tokenize_sql,
     word_ngrams,
+    word_ngrams_sql,
 )
+from parquet_extractor_spark.operators.similarity import cosine, cosine_sql
 from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table, spread
 
@@ -65,12 +70,6 @@ SPAN_SAMPLE_DOCS = 5
 # Occurrence key doc_id·BASE + pos: positions fit under BASE (docs are
 # context-length bounded), doc_ids under 2^63 / BASE ≈ 9.2e9.
 SPAN_KEY_BASE = 1_000_000_000
-
-_TOKENS_SQL = (
-    r"list_filter(regexp_split_to_array("
-    r"regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'), x -> x != '')"
-)
-_PHASH_SQL = "CAST('0x' || substr(md5({0}), 1, 15) AS BIGINT)"
 
 
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,8 +139,8 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 DSIR_IMPORTANCE_WEIGHTS_SQL = rf"""
 WITH toks AS (
     SELECT doc_id, lang,
-           {_PHASH_SQL.format('t.tok')} % {DSIR_BUCKETS} AS bucket
-    FROM documents, unnest({_TOKENS_SQL}) AS t(tok)
+           {portable_hash64_sql('t.tok')} % {DSIR_BUCKETS} AS bucket
+    FROM documents, unnest({tokenize_sql('text')}) AS t(tok)
 ),
 dist AS (
     SELECT bucket,
@@ -259,7 +258,7 @@ _TERMS_IN = ", ".join(f"'{t}'" for t in BM25_TERMS)
 BM25_DOC_SCORES_SQL = rf"""
 WITH toks AS (
     SELECT doc_id, t.tok
-    FROM documents, unnest({_TOKENS_SQL}) AS t(tok)
+    FROM documents, unnest({tokenize_sql('text')}) AS t(tok)
 ),
 dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
 stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
@@ -367,17 +366,17 @@ def lm_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 LM_BIGRAM_SURPRISAL_SQL = rf"""
 WITH toks AS (
-    SELECT doc_id, lang, {_TOKENS_SQL} AS ts FROM documents
+    SELECT doc_id, lang, {tokenize_sql('text')} AS ts FROM documents
 ),
 bigrams AS (
     SELECT doc_id, lang,
-           {_PHASH_SQL.format("(ts[i - 1] || ' ' || ts[i])")} % {LM_BUCKETS} AS bb,
-           {_PHASH_SQL.format('ts[i - 1]')} % {LM_BUCKETS} AS pb
+           {portable_hash64_sql("(ts[i - 1] || ' ' || ts[i])")} % {LM_BUCKETS} AS bb,
+           {portable_hash64_sql('ts[i - 1]')} % {LM_BUCKETS} AS pb
     FROM toks, unnest(range(2, len(ts) + 1)) AS u(i)
 ),
 uni AS (
-    SELECT {_PHASH_SQL.format('t.tok')} % {LM_BUCKETS} AS pb
-    FROM documents, unnest({_TOKENS_SQL}) AS t(tok)
+    SELECT {portable_hash64_sql('t.tok')} % {LM_BUCKETS} AS pb
+    FROM documents, unnest({tokenize_sql('text')}) AS t(tok)
 ),
 big_counts AS (SELECT bb, count(*) AS cb FROM bigrams GROUP BY bb),
 uni_counts AS (SELECT pb, count(*) AS cp FROM uni GROUP BY pb),
@@ -455,16 +454,13 @@ def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DUPLICATE_SPANS_SQL = rf"""
 WITH toks AS (
-    SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents
+    SELECT doc_id, {tokenize_sql('text')} AS ts FROM documents
 ),
 spans AS (
-    SELECT doc_id,
-           list_aggregate(ts[i:i + {SPAN_TOKENS} - 1], 'string_agg', ' ') AS span
-    FROM toks, unnest(range(1, greatest(len(ts) - {SPAN_TOKENS - 1}, sign(len(ts))) + 1))
-         AS u(i)
+    SELECT doc_id, unnest({word_ngrams_sql('ts', SPAN_TOKENS)}) AS span FROM toks
 ),
 hashed AS (
-    SELECT doc_id, span, {_PHASH_SQL.format('span')} AS span_hash FROM spans
+    SELECT doc_id, span, {portable_hash64_sql('span')} AS span_hash FROM spans
 ),
 agg AS (
     SELECT span_hash,
@@ -639,15 +635,14 @@ def span_scrubbed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SPAN_SCRUBBED_DOCS_SQL = rf"""
 WITH toks AS (
-    SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents
+    SELECT doc_id, {tokenize_sql('text')} AS ts FROM documents
 ),
 occ AS (
     SELECT doc_id, CAST(i AS BIGINT) AS pos,
-           {_PHASH_SQL.format(
+           {portable_hash64_sql(
                f"list_aggregate(ts[i:i + {SPAN_TOKENS} - 1], 'string_agg', ' ')"
            )} AS span_hash
-    FROM toks, unnest(range(1, greatest(len(ts) - {SPAN_TOKENS - 1}, sign(len(ts))) + 1))
-         AS u(i)
+    FROM toks, unnest({ngram_starts_sql('ts', SPAN_TOKENS)}) AS u(i)
 ),
 dup AS (
     SELECT span_hash,
@@ -703,8 +698,6 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     size. rrf is a sum of two exactly-representable doubles, so
     round(6) is engine-stable.
     """
-    from parquet_extractor_spark.operators.similarity import cosine
-
     lex = bm25_doc_scores(spark, sf_dir).select(
         F.col("doc_id").alias("id"), F.col("rank").alias("lex_rank")
     )
@@ -764,14 +757,7 @@ q AS (
 ),
 sims AS (
     SELECT e.vec_id AS id,
-           round(
-             list_sum(list_transform(range(1, len(e.embedding) + 1),
-                 i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(q.q_emb,
-                     x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(e.embedding,
-                     x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-           6) AS cos
+           round({cosine_sql('q.q_emb', 'e.embedding')}, 6) AS cos
     FROM embeddings e CROSS JOIN q
     WHERE e.vec_id != {HYBRID_QUERY_VEC}
 ),
@@ -922,17 +908,17 @@ def surprisal_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SURPRISAL_MIXING_WEIGHTS_SQL = rf"""
 WITH toks AS (
-    SELECT source, {_TOKENS_SQL} AS ts FROM documents
+    SELECT source, {tokenize_sql('text')} AS ts FROM documents
 ),
 bigrams AS (
     SELECT source,
-           {_PHASH_SQL.format("(ts[i - 1] || ' ' || ts[i])")} % {LM_BUCKETS} AS bb,
-           {_PHASH_SQL.format('ts[i - 1]')} % {LM_BUCKETS} AS pb
+           {portable_hash64_sql("(ts[i - 1] || ' ' || ts[i])")} % {LM_BUCKETS} AS bb,
+           {portable_hash64_sql('ts[i - 1]')} % {LM_BUCKETS} AS pb
     FROM toks, unnest(range(2, len(ts) + 1)) AS u(i)
 ),
 uni AS (
-    SELECT {_PHASH_SQL.format('t.tok')} % {LM_BUCKETS} AS pb
-    FROM documents, unnest({_TOKENS_SQL}) AS t(tok)
+    SELECT {portable_hash64_sql('t.tok')} % {LM_BUCKETS} AS pb
+    FROM documents, unnest({tokenize_sql('text')}) AS t(tok)
 ),
 big_counts AS (SELECT bb, count(*) AS cb FROM bigrams GROUP BY bb),
 uni_counts AS (SELECT pb, count(*) AS cp FROM uni GROUP BY pb),
@@ -1211,15 +1197,13 @@ def source_vocab_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SOURCE_VOCAB_KMV_JACCARD_SQL = rf"""
 WITH toks AS (
-    SELECT source, {_TOKENS_SQL} AS ts FROM documents
+    SELECT source, {tokenize_sql('text')} AS ts FROM documents
 ),
 vocab AS (
-    SELECT DISTINCT source,
-           list_aggregate(ts[i:i + 1], 'string_agg', ' ') AS tok
-    FROM toks, unnest(range(1, greatest(len(ts) - 1, sign(len(ts))) + 1)) AS u(i)
+    SELECT DISTINCT source, unnest({word_ngrams_sql('ts', 2)}) AS tok FROM toks
 ),
 hashed AS (
-    SELECT DISTINCT source, {_PHASH_SQL.format('tok')} AS h FROM vocab
+    SELECT DISTINCT source, {portable_hash64_sql('tok')} AS h FROM vocab
 ),
 sketch AS (
     SELECT source, h FROM (
@@ -1287,7 +1271,7 @@ ORDER BY e.src_a, e.src_b
 SOURCE_VOCAB_OVERLAP_SQL = rf"""
 WITH vocab AS (
     SELECT DISTINCT source, t.tok
-    FROM documents, unnest({_TOKENS_SQL}) AS t(tok)
+    FROM documents, unnest({tokenize_sql('text')}) AS t(tok)
 ),
 sizes AS (
     SELECT source, CAST(count(*) AS BIGINT) AS n FROM vocab GROUP BY source
@@ -1611,8 +1595,7 @@ def _dup_span_oracle() -> str:
         f"""SELECT doc_id, {k} AS k
 FROM (
     SELECT doc_id,
-           CAST(('0x' || substr(md5(array_to_string(
-               tokens[i:i+{k - 1}], ' ')), 1, 15)) AS BIGINT) AS gh
+           {portable_hash64_sql(f"array_to_string(tokens[i:i+{k - 1}], ' ')")} AS gh
     FROM pos WHERE len(tokens) >= {k} AND i <= len(tokens) - {k - 1}
 )
 QUALIFY count(*) OVER (PARTITION BY gh) >= 2"""
@@ -1621,9 +1604,7 @@ QUALIFY count(*) OVER (PARTITION BY gh) >= 2"""
     return rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS tokens
+           {tokenize_sql('text')} AS tokens
     FROM documents
 ),
 pos AS (

@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from parquet_extractor_spark.functions.text import portable_hash64, portable_hash64_sql
 from parquet_extractor_spark.functions.windows import bounded_global_window
 
 from parquet_extractor_spark.session import materialize
@@ -82,6 +83,16 @@ def _norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`cosine` over two list expressions."""
+    return (
+        f"list_sum(list_transform(range(1, len({a}) + 1), "
+        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))) "
+        f"/ (sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) "
+        f"* sqrt(list_sum(list_transform({b}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"
+    )
 
 
 # ── SQL-text twins of _dot/_norm/cosine for PLAN-TIME LITERAL vectors ─
@@ -249,12 +260,7 @@ WITH q AS (
 pairs AS (
     SELECT q.query_id,
            e.vec_id AS neighbor_id,
-           round(
-             list_sum(list_transform(range(1, len(e.embedding) + 1),
-                 i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(q.q_emb, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-           6) AS cosine_sim
+           round({cosine_sql('q.q_emb', 'e.embedding')}, 6) AS cosine_sim
     FROM embeddings e JOIN q ON e.vec_id != q.query_id
 ),
 ranked AS (
@@ -365,12 +371,7 @@ q AS (
 ),
 pairs AS (
     SELECT q.query_id, e.vec_id AS neighbor_id,
-           round(
-             list_sum(list_transform(range(1, {RP_DIM} + 1),
-                 i -> CAST(q.q_proj[i] AS DOUBLE) * CAST(e.proj[i] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(q.q_proj, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(e.proj, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-           6) AS proj_cosine
+           round({cosine_sql('q.q_proj', 'e.proj')}, 6) AS proj_cosine
     FROM pe e JOIN q ON e.vec_id != q.query_id
 ),
 ranked AS (
@@ -452,12 +453,7 @@ q AS (
 pairs AS (
     SELECT q.query_id,
            e.vec_id AS neighbor_id,
-           round(
-             list_sum(list_transform(range(1, len(e.embedding) + 1),
-                 i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(q.q_emb, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-           6) AS cosine_sim
+           round({cosine_sql('q.q_emb', 'e.embedding')}, 6) AS cosine_sim
     FROM emb e JOIN q ON e.bucket = q.q_bucket AND e.vec_id != q.query_id
 ),
 ranked AS (
@@ -557,15 +553,6 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(range(1, len({a}) + 1), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))) "
-        f"/ (sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) "
-        f"* sqrt(list_sum(list_transform({b}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"
-    )
-
-
 ANN_IVF_SQL = rf"""
 WITH cent AS (
     SELECT vec_id AS cid, embedding AS c_emb
@@ -574,7 +561,7 @@ WITH cent AS (
 ),
 scored AS (
     SELECT e.vec_id, e.embedding, c.cid,
-           round({_cos_sql('e.embedding', 'c.c_emb')}, 9) AS sim
+           round({cosine_sql('e.embedding', 'c.c_emb')}, 9) AS sim
     FROM embeddings e CROSS JOIN cent c
 ),
 ranked_assign AS (
@@ -592,7 +579,7 @@ probes AS (
 ),
 pairs AS (
     SELECT p.query_id, c.vec_id AS neighbor_id,
-           round({_cos_sql('p.q_emb', 'c.embedding')}, 6) AS cosine_sim
+           round({cosine_sql('p.q_emb', 'c.embedding')}, 6) AS cosine_sim
     FROM clusters c JOIN probes p
       ON c.cluster = p.probe_cluster AND c.vec_id != p.query_id
 ),
@@ -801,7 +788,7 @@ cent AS (
 ),
 scored AS (
     SELECT e.vec_id, e.embedding, c.cid,
-           round({_cos_sql('e.embedding', 'c.c_emb')}, 9) AS sim
+           round({cosine_sql('e.embedding', 'c.c_emb')}, 9) AS sim
     FROM embeddings e CROSS JOIN cent c
 ),
 ranked_assign AS (
@@ -817,7 +804,7 @@ dropped AS (
     SELECT DISTINCT b.vec_id
     FROM clusters a JOIN clusters b
       ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-    WHERE round({_cos_sql('a.embedding', 'b.embedding')}, 6)
+    WHERE round({cosine_sql('a.embedding', 'b.embedding')}, 6)
           >= {SEMDEDUP_THRESHOLD}
 )
 SELECT c.vec_id,
@@ -884,12 +871,7 @@ WITH emb AS (
 ),
 pairs AS (
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           round(
-             list_sum(list_transform(range(1, len(a.embedding) + 1),
-                 i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-           6) AS cosine_sim
+           round({cosine_sql('a.embedding', 'b.embedding')}, 6) AS cosine_sim
     FROM emb a JOIN emb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
 )
 SELECT vec_a, vec_b, cosine_sim
@@ -967,7 +949,7 @@ probes AS (
 pairs AS (
     SELECT p.query_id,
            e.vec_id AS neighbor_id,
-           round({_cos_sql('p.q_emb', 'e.embedding')}, 6) AS cosine_sim
+           round({cosine_sql('p.q_emb', 'e.embedding')}, 6) AS cosine_sim
     FROM emb e JOIN probes p
       ON e.bucket = p.probe_bucket AND e.vec_id != p.query_id
 ),
@@ -1289,8 +1271,6 @@ def embedding_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (label, n_a, n_b, centroid_cos_micro, mean_norm_a_micro,
     mean_norm_b_micro).
     """
-    from parquet_extractor_spark.functions.text import portable_hash64
-
     emb = load_table(spark, sf_dir, "embeddings")
     run = F.when(
         portable_hash64(F.col("vec_id").cast("string")) % 2 == 0, "a"
@@ -1367,11 +1347,10 @@ def embedding_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EMBEDDING_DRIFT_AUDIT_SQL = r"""
+EMBEDDING_DRIFT_AUDIT_SQL = rf"""
 WITH base AS (
     SELECT label, embedding,
-           CASE WHEN CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)),
-                    1, 15)) AS BIGINT) % 2 = 0
+           CASE WHEN {portable_hash64_sql('CAST(vec_id AS VARCHAR)')} % 2 = 0
                 THEN 'a' ELSE 'b' END AS run
     FROM embeddings
 ),
@@ -2175,7 +2154,7 @@ cw AS (
 ),
 scored AS (
     SELECT e.vec_id, e.embedding, c.cid,
-           round({_cos_sql('e.embedding', 'c.c_emb')}, 9) AS sim
+           round({cosine_sql('e.embedding', 'c.c_emb')}, 9) AS sim
     FROM embeddings e CROSS JOIN cent c
 ),
 ranked_assign AS (
@@ -2317,7 +2296,7 @@ codes1 AS (
 -- IVF side (identical to ann_ivf_pq)
 scored AS (
     SELECT e.vec_id, e.embedding, c.cid,
-           round({_cos_sql('e.embedding', 'c.c_emb')}, 9) AS sim
+           round({cosine_sql('e.embedding', 'c.c_emb')}, 9) AS sim
     FROM embeddings e CROSS JOIN cent c
 ),
 ranked_assign AS (
@@ -2444,7 +2423,7 @@ WITH bench AS (
 ),
 scored AS (
     SELECT e.vec_id, e.label,
-           round({_cos_sql('e.embedding', 'b.b_emb')}, 6) AS sim
+           round({cosine_sql('e.embedding', 'b.b_emb')}, 6) AS sim
     FROM embeddings e CROSS JOIN bench b
     WHERE e.vec_id % {DECON_BENCH_MOD} != 0
 )
@@ -2521,7 +2500,7 @@ pairs AS (
            CAST(q.q_label AS INTEGER) AS q_label,
            e.vec_id AS neighbor_id,
            CAST(e.label AS INTEGER) AS n_label,
-           round({_cos_sql('e.embedding', 'q.q_emb')}, 6) AS cosine_sim
+           round({cosine_sql('e.embedding', 'q.q_emb')}, 6) AS cosine_sim
     FROM embeddings e JOIN q ON e.label != q.q_label
 ),
 ranked AS (
@@ -3026,17 +3005,7 @@ q AS (
 ),
 pairs AS (
     SELECT q.query_id, c.vec_id AS neighbor_id,
-           round(
-               list_sum(list_transform(range(1, {EMB_DIM} + 1),
-                   i -> CAST(q.q_emb[i] AS DOUBLE)
-                        * CAST(c.embedding[i] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(range(1, {EMB_DIM} + 1),
-                      i -> CAST(q.q_emb[i] AS DOUBLE)
-                           * CAST(q.q_emb[i] AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(range(1, {EMB_DIM} + 1),
-                      i -> CAST(c.embedding[i] AS DOUBLE)
-                           * CAST(c.embedding[i] AS DOUBLE))))),
-               6) AS sim,
+           round({cosine_sql('q.q_emb', 'c.embedding')}, 6) AS sim,
            CAST(bit_count(xor(c.w0, q.qw0))
                 + bit_count(xor(c.w1, q.qw1)) AS BIGINT) AS hamming
     FROM coded c JOIN q ON c.vec_id != q.query_id

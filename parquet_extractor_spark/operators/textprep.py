@@ -14,7 +14,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from parquet_extractor_spark.functions.text import portable_hash64, tokenize
+from parquet_extractor_spark.functions.text import (
+    portable_hash64,
+    portable_hash64_sql,
+    tokenize,
+    tokenize_sql,
+)
 from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import load_table, local_frame, spread
 
@@ -67,9 +72,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOC_CHUNKS_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS toks
+           {tokenize_sql('text')} AS toks
     FROM documents
 ),
 starts AS (
@@ -152,9 +155,9 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 TFIDF_TOP_TERMS_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           unnest(list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> len(x) >= {MIN_TERM_LEN})) AS term
+           unnest(list_filter(
+               {tokenize_sql('text')}, x -> len(x) >= {MIN_TERM_LEN}
+           )) AS term
     FROM documents
 ),
 tf AS (
@@ -206,7 +209,7 @@ def stratified_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 STRATIFIED_SAMPLE_SQL = rf"""
 WITH keyed AS (
     SELECT doc_id, lang,
-           CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) AS sk
+           {portable_hash64_sql('text')} AS sk
     FROM documents
 ),
 ranked AS (
@@ -320,7 +323,7 @@ def _weighted_sql() -> str:
     return rf"""
 SELECT doc_id, lang
 FROM documents
-WHERE ((CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) % {WEIGHT_SCALE})
+WHERE (({portable_hash64_sql('text')} % {WEIGHT_SCALE})
        + {WEIGHT_SCALE}) % {WEIGHT_SCALE}
       < (CASE {cases} ELSE 0 END)
 ORDER BY doc_id
@@ -381,9 +384,7 @@ BPE_MERGE_CANDIDATES_SQL = rf"""
 WITH words AS (
     SELECT t AS w, count(*) AS freq
     FROM (
-        SELECT unnest(list_filter(regexp_split_to_array(
-            regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-            x -> x != '')) AS t
+        SELECT unnest({tokenize_sql('text')}) AS t
         FROM documents
     )
     GROUP BY 1
@@ -595,12 +596,10 @@ def _bpe_train_ctes() -> list[str]:
     round) — shared by the bpe_train_merges oracle and the
     bpe_encode_corpus oracle, which extends it with the encode
     CTEs."""
-    words = r"""words AS (
+    words = rf"""words AS (
     SELECT t AS w, count(*) AS freq
     FROM (
-        SELECT unnest(list_filter(regexp_split_to_array(
-            regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-            x -> x != '')) AS t
+        SELECT unnest({tokenize_sql('text')}) AS t
         FROM documents
     )
     GROUP BY 1
@@ -661,7 +660,7 @@ def _bpe_encode_sql() -> str:
     round's 1-row argmax b{k}, then the per-language roll-up."""
     ctes = _bpe_train_ctes()
     ctes.append(
-        r"""d0 AS (
+        rf"""d0 AS (
     SELECT lang, len(toks) AS word_tokens,
            CASE WHEN len(toks) = 0 THEN '' ELSE
                '  ' || array_to_string(list_transform(toks,
@@ -670,9 +669,7 @@ def _bpe_encode_sql() -> str:
                    '    ') || '  '
            END AS seq
     FROM (
-        SELECT lang, list_filter(regexp_split_to_array(
-            regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-            x -> x != '') AS toks
+        SELECT lang, {tokenize_sql('text')} AS toks
         FROM documents
     )
 )"""
@@ -789,7 +786,7 @@ def _tokenizer_fertility_sql() -> str:
     all operands non-negative)."""
     ctes = _bpe_train_ctes()
     ctes.append(
-        r"""e0 AS (
+        rf"""e0 AS (
     SELECT lang, strlen(text) AS n_bytes, len(toks) AS word_tokens,
            CASE WHEN len(toks) = 0 THEN '' ELSE
                '  ' || array_to_string(list_transform(toks,
@@ -798,9 +795,7 @@ def _tokenizer_fertility_sql() -> str:
                    '    ') || '  '
            END AS seq
     FROM (
-        SELECT lang, text, list_filter(regexp_split_to_array(
-            regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-            x -> x != '') AS toks
+        SELECT lang, text, {tokenize_sql('text')} AS toks
         FROM documents
     )
 )"""
@@ -879,9 +874,7 @@ def chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 CHUNK_DEDUP_SQL = rf"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS toks
+           {tokenize_sql('text')} AS toks
     FROM documents
 ),
 starts AS (

@@ -27,7 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from parquet_extractor_spark.functions.text import portable_hash64, tokenize
+from parquet_extractor_spark.functions.text import (
+    portable_hash64,
+    portable_hash64_sql,
+    tokenize,
+    tokenize_sql,
+)
 from parquet_extractor_spark.sources.tables import load_table, spread
 
 SEQ_BUDGET = 256  # tokens per packed sequence (context-window budget)
@@ -87,9 +92,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 PACK_SEQUENCES_SQL = rf"""
 WITH toks AS (
     SELECT doc_id, source,
-           CAST(len(list_filter(regexp_split_to_array(
-                regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-                x -> x != '')) AS BIGINT) AS n_tokens
+           CAST(len({tokenize_sql('text')}) AS BIGINT) AS n_tokens
     FROM documents
 ),
 running AS (
@@ -195,9 +198,7 @@ def pack_sequences_nosplit(spark: SparkSession, sf_dir: str) -> DataFrame:
 PACK_SEQUENCES_NOSPLIT_SQL = rf"""
 WITH RECURSIVE toks AS (
     SELECT doc_id, source,
-           CAST(len(list_filter(regexp_split_to_array(
-                regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-                x -> x != '')) AS BIGINT) AS n_tokens
+           CAST(len({tokenize_sql('text')}) AS BIGINT) AS n_tokens
     FROM documents
 ),
 ordered AS (
@@ -251,16 +252,21 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _split_case_sql(col: str) -> str:
+    """DuckDB twin of :func:`_split_column` parameterized on the hash
+    key — the exact salted-md5 80/10/10 rule, so any engine assigns
+    the same doc (or cluster) to the same split."""
+    h = portable_hash64_sql(f"'{SPLIT_SALT}' || CAST({col} AS VARCHAR)") + " % 100"
+    return (
+        f"CASE WHEN {h} < {TRAIN_PCT} THEN 'train' "
+        f"WHEN {h} < {TRAIN_PCT + VAL_PCT} THEN 'val' ELSE 'test' END"
+    )
+
+
 TRAIN_VAL_TEST_SPLIT_SQL = rf"""
 WITH assigned AS (
-    SELECT CASE
-             WHEN CAST(('0x' || substr(md5('{SPLIT_SALT}' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < {TRAIN_PCT} THEN 'train'
-             WHEN CAST(('0x' || substr(md5('{SPLIT_SALT}' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < {TRAIN_PCT + VAL_PCT} THEN 'val'
-             ELSE 'test'
-           END AS split,
-           CAST(len(list_filter(regexp_split_to_array(
-                regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-                x -> x != '')) AS BIGINT) AS n_tokens
+    SELECT {_split_case_sql('doc_id')} AS split,
+           CAST(len({tokenize_sql('text')}) AS BIGINT) AS n_tokens
     FROM documents
 )
 SELECT split, count(*) AS n_docs,
@@ -354,24 +360,13 @@ def _split_leakage_oracle() -> str:
     from parquet_extractor_spark.operators.dedup import MINHASH_LSH_SQL
 
     pairs_sql = MINHASH_LSH_SQL.replace("ORDER BY doc_a, doc_b", "").strip()
-    split_case = (
-        "CASE WHEN CAST(('0x' || substr(md5('"
-        + SPLIT_SALT
-        + "' || CAST({col} AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < "
-        + str(TRAIN_PCT)
-        + " THEN 'train' WHEN CAST(('0x' || substr(md5('"
-        + SPLIT_SALT
-        + "' || CAST({col} AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < "
-        + str(TRAIN_PCT + VAL_PCT)
-        + " THEN 'val' ELSE 'test' END"
-    )
     return f"""
 WITH pairs AS ({pairs_sql}),
 tagged AS (
-    SELECT least({split_case.format(col='doc_a')},
-                 {split_case.format(col='doc_b')}) AS split_lo,
-           greatest({split_case.format(col='doc_a')},
-                    {split_case.format(col='doc_b')}) AS split_hi
+    SELECT least({_split_case_sql('doc_a')},
+                 {_split_case_sql('doc_b')}) AS split_lo,
+           greatest({_split_case_sql('doc_a')},
+                    {_split_case_sql('doc_b')}) AS split_hi
     FROM pairs
 )
 SELECT split_lo, split_hi,
@@ -385,21 +380,6 @@ ORDER BY split_lo, split_hi
 
 
 SPLIT_LEAKAGE_AUDIT_SQL = _split_leakage_oracle()
-
-
-def _split_case_sql(col: str) -> str:
-    """DuckDB twin of :func:`_split_column` parameterized on the hash
-    key — the exact salted-md5 80/10/10 rule, so any engine assigns
-    the same doc (or cluster) to the same split."""
-    h = (
-        "CAST(('0x' || substr(md5('"
-        + SPLIT_SALT
-        + f"' || CAST({col} AS VARCHAR)), 1, 15)) AS BIGINT) % 100"
-    )
-    return (
-        f"CASE WHEN {h} < {TRAIN_PCT} THEN 'train' "
-        f"WHEN {h} < {TRAIN_PCT + VAL_PCT} THEN 'val' ELSE 'test' END"
-    )
 
 
 def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -506,9 +486,7 @@ WITH labels AS (
 ),
 toks AS (
     SELECT doc_id,
-           CAST(len(list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '')) AS BIGINT) AS n_tokens
+           CAST(len({tokenize_sql('text')}) AS BIGINT) AS n_tokens
     FROM documents
 ),
 assigned AS (
@@ -611,9 +589,7 @@ def _truncation_waste_oracle() -> str:
     return rf"""
 WITH toks AS (
     SELECT source,
-           CAST(len(list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '')) AS BIGINT) AS n_tokens
+           CAST(len({tokenize_sql('text')}) AS BIGINT) AS n_tokens
     FROM documents
 ),
 exploded AS (
@@ -690,12 +666,10 @@ def source_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SOURCE_MIXING_WEIGHTS_SQL = r"""
+SOURCE_MIXING_WEIGHTS_SQL = rf"""
 WITH per_source AS (
     SELECT source,
-           CAST(sum(CAST(len(list_filter(regexp_split_to_array(
-                regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-                x -> x != '')) AS BIGINT)) AS BIGINT) AS source_tokens
+           CAST(sum(CAST(len({tokenize_sql('text')}) AS BIGINT)) AS BIGINT) AS source_tokens
     FROM documents
     GROUP BY source
 ),
@@ -907,11 +881,10 @@ def shard_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SHARD_ASSIGNMENTS_SQL = rf"""
 WITH assigned AS (
-    SELECT CAST(('0x' || substr(md5('{SHARD_SALT}:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % {N_SHARDS} AS shard,
+    SELECT {portable_hash64_sql(f"'{SHARD_SALT}:' || CAST(doc_id AS VARCHAR)")}
+               % {N_SHARDS} AS shard,
            doc_id,
-           CAST(len(list_filter(regexp_split_to_array(
-                regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-                x -> x != '')) AS BIGINT) AS n_tokens
+           CAST(len({tokenize_sql('text')}) AS BIGINT) AS n_tokens
     FROM documents
 )
 SELECT shard, count(*) AS n_docs,
@@ -1001,11 +974,8 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 TOKEN_BUDGET_SAMPLE_SQL = rf"""
 WITH t AS (
     SELECT doc_id, source,
-           CAST(len(list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '')) AS BIGINT) AS n_tokens,
-           CAST('0x' || substr(md5('{MIX_SALT}' || CAST(doc_id AS VARCHAR)),
-                1, 15) AS BIGINT) AS skey
+           CAST(len({tokenize_sql('text')}) AS BIGINT) AS n_tokens,
+           {portable_hash64_sql(f"'{MIX_SALT}' || CAST(doc_id AS VARCHAR)")} AS skey
     FROM documents
 ),
 a AS (
@@ -1079,9 +1049,7 @@ def temperature_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 TEMPERATURE_MIXING_SQL = rf"""
 WITH toks AS (
     SELECT source,
-           CAST(len(list_filter(regexp_split_to_array(
-                regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-                x -> x != '')) AS BIGINT) AS n
+           CAST(len({tokenize_sql('text')}) AS BIGINT) AS n
     FROM documents
 ),
 per_source AS (
@@ -1156,9 +1124,7 @@ def length_bucketing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 LENGTH_BUCKETING_SQL = rf"""
 WITH toks AS (
-    SELECT CAST(len(list_filter(regexp_split_to_array(
-                regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-                x -> x != '')) AS BIGINT) AS n
+    SELECT CAST(len({tokenize_sql('text')}) AS BIGINT) AS n
     FROM documents
 ),
 bucketed AS (
@@ -1396,9 +1362,7 @@ def unimax_mixing_budgets(spark: SparkSession, sf_dir: str) -> DataFrame:
 UNIMAX_MIXING_BUDGETS_SQL = rf"""
 WITH toks AS (
     SELECT source,
-           CAST(len(list_filter(regexp_split_to_array(
-                regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-                x -> x != '')) AS BIGINT) AS n
+           CAST(len({tokenize_sql('text')}) AS BIGINT) AS n
     FROM documents
 ),
 per_source AS (
@@ -1567,17 +1531,16 @@ WITH mod_moves AS (
     SELECT 'mod' AS strategy,
            CAST(h % {RESHARD_FROM} != h % {RESHARD_TO} AS INT) AS moved
     FROM (
-        SELECT CAST(('0x' || substr(md5('mod-v1:' ||
-                   CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+        SELECT {portable_hash64_sql("'mod-v1:' || CAST(doc_id AS VARCHAR)")} AS h
         FROM documents
     )
 ),
 hrw_keys AS (
     SELECT doc_id, shard,
-           (CAST(('0x' || substr(md5('{RESHARD_SALT}:' ||
-                CAST(doc_id AS VARCHAR) || ':' ||
-                CAST(shard AS VARCHAR)), 1, 15)) AS BIGINT)
-            % {_HRW_CAP}) * 16 + shard AS wkey
+           ({portable_hash64_sql(
+               f"'{RESHARD_SALT}:' || CAST(doc_id AS VARCHAR) || ':' || "
+               "CAST(shard AS VARCHAR)"
+           )} % {_HRW_CAP}) * 16 + shard AS wkey
     FROM documents,
          (SELECT unnest(generate_series(0, {RESHARD_TO - 1})) AS shard)
 ),

@@ -33,7 +33,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_extractor_spark.functions.text import portable_hash64
+from parquet_extractor_spark.functions.text import (
+    portable_hash64,
+    portable_hash64_sql,
+    tokenize_sql,
+    word_ngrams_sql,
+)
 from parquet_extractor_spark.sources.tables import load_table
 
 
@@ -262,12 +267,11 @@ def scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SCD2_CUSTOMER_HISTORY_SQL = """
+SCD2_CUSTOMER_HISTORY_SQL = f"""
 WITH hashed AS (
     SELECT c_custkey, c_mktsegment,
            CAST(floor(c_acctbal * 1000000) AS BIGINT) AS acct_micro,
-           CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 15))
-               AS BIGINT) AS h
+           {portable_hash64_sql('CAST(c_custkey AS VARCHAR)')} AS h
     FROM customer
 ),
 v1 AS (
@@ -445,8 +449,7 @@ def _incremental_dedup_oracle() -> str:
     return rf"""
 WITH hashed_ids AS (
     SELECT doc_id, source, text,
-           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-               AS BIGINT) AS hid
+           {portable_hash64_sql('CAST(doc_id AS VARCHAR)')} AS hid
     FROM documents
 ),
 corpus AS (
@@ -458,22 +461,18 @@ corpus AS (
 ),
 toks AS (
     SELECT side, source, doc_id,
-           list_filter(regexp_split_to_array(
-               regexp_replace(lower(text), '[^\w\s]', ' ', 'g'), '\s+'),
-               x -> x != '') AS tokens
+           {tokenize_sql('text')} AS tokens
     FROM corpus
 ),
 shingled AS (
     SELECT side, source, doc_id,
-           list_distinct(list_transform(
-               range(1, greatest(len(tokens) - {NGRAM_N - 1}, sign(len(tokens))) + 1),
-               i -> array_to_string(tokens[i:i+{NGRAM_N - 1}], ' ')))
+           list_distinct({word_ngrams_sql('tokens', NGRAM_N)})
                AS shingles
     FROM toks
 ),
 hashed AS (
     SELECT side, source, doc_id,
-           CAST(('0x' || substr(md5(unnest(shingles)), 1, 15)) AS BIGINT)
+           {portable_hash64_sql('unnest(shingles)')}
                % {MERSENNE_P} AS h0
     FROM shingled
 ),
@@ -498,11 +497,10 @@ ORDER BY doc_new, doc_prior
 INCREMENTAL_DEDUP_SQL = _incremental_dedup_oracle()
 
 
-CORPUS_VERSION_DIFF_SQL = r"""
+CORPUS_VERSION_DIFF_SQL = rf"""
 WITH hashed AS (
     SELECT doc_id, source, text,
-           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-               AS BIGINT) AS h
+           {portable_hash64_sql('CAST(doc_id AS VARCHAR)')} AS h
     FROM documents
 ),
 v1 AS (

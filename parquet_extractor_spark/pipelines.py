@@ -24,12 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_extractor_spark.operators.quality import quality_scores
+from parquet_extractor_spark.functions.text import tokenize_sql
+from parquet_extractor_spark.operators.quality import MIN_QUALITY, quality_scores
 from parquet_extractor_spark.operators.textprep import doc_chunks
 from parquet_extractor_spark.sinks.dataset import write_dataset
 from parquet_extractor_spark.sources.tables import load_table, spread
-
-MIN_QUALITY = 0.3
 
 
 def curate(
@@ -526,7 +525,6 @@ def _funnel_oracle() -> str:
         QUALITY_CLASSIFIER_SQL,
         QUALITY_SCORES_SQL,
     )
-    from parquet_extractor_spark.operators.selection import _TOKENS_SQL
 
     def body(sql: str) -> str:
         head, _, _tail = sql.strip().rpartition("ORDER BY")
@@ -534,7 +532,7 @@ def _funnel_oracle() -> str:
 
     return f"""
 WITH toks AS (
-    SELECT doc_id, CAST(len({_TOKENS_SQL}) AS BIGINT) AS n FROM documents
+    SELECT doc_id, CAST(len({tokenize_sql('text')}) AS BIGINT) AS n FROM documents
 ),
 qual AS ({body(QUALITY_SCORES_SQL)}),
 cls AS ({body(QUALITY_CLASSIFIER_SQL)}),
@@ -633,7 +631,6 @@ def _release_manifest_oracle() -> str:
         QUALITY_CLASSIFIER_SQL,
         QUALITY_SCORES_SQL,
     )
-    from parquet_extractor_spark.operators.selection import _TOKENS_SQL
     from parquet_extractor_spark.operators.training import _split_case_sql
 
     def body(sql: str) -> str:
@@ -642,7 +639,7 @@ def _release_manifest_oracle() -> str:
 
     return f"""
 WITH toks AS (
-    SELECT doc_id, source, CAST(len({_TOKENS_SQL}) AS BIGINT) AS n
+    SELECT doc_id, source, CAST(len({tokenize_sql('text')}) AS BIGINT) AS n
     FROM documents
 ),
 qual AS ({body(QUALITY_SCORES_SQL)}),

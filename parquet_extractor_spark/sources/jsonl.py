@@ -39,11 +39,7 @@ DOCS_JSONL_SCHEMA = StructType(
 )
 
 
-def read_jsonl_docs(
-    spark: SparkSession,
-    path: str,
-    schema: StructType = DOCS_JSONL_SCHEMA,
-) -> tuple[DataFrame, DataFrame]:
+def read_jsonl_docs(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """Read a JSONL corpus permissively.
 
     Returns ``(good, errors)``: ``good`` has the document columns for
@@ -53,7 +49,7 @@ def read_jsonl_docs(
     querying it alone is disallowed on an unpersisted relation).
     """
     parsed = materialize(
-        spark.read.schema(schema)
+        spark.read.schema(DOCS_JSONL_SCHEMA)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)

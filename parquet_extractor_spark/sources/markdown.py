@@ -51,9 +51,7 @@ def parse_markdown_columns(body):
     return meta, title, content
 
 
-def read_markdown_docs(
-    spark: SparkSession, directory: str, pattern: str = "*.md"
-) -> DataFrame:
+def read_markdown_docs(spark: SparkSession, directory: str) -> DataFrame:
     """Distributed markdown ingestion: binaryFile scan → codegen'd
     frontmatter/heading/content parse. Files without a frontmatter
     block still yield a row (empty meta, whole file unmatched by the
@@ -62,7 +60,7 @@ def read_markdown_docs(
     content)."""
     files = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
+        .option("pathGlobFilter", "*.md")
         .load(directory)
         .select("path", F.decode("content", "UTF-8").alias("body"))
     )

@@ -380,16 +380,14 @@ def extract_docs_frame(files: DataFrame) -> DataFrame:
     return files.mapInPandas(_extract, schema=PDF_DOCS_SCHEMA)
 
 
-def read_pdf_docs(
-    spark: SparkSession, directory: str, pattern: str = "*.pdf"
-) -> DataFrame:
+def read_pdf_docs(spark: SparkSession, directory: str) -> DataFrame:
     """Distributed PDF ingestion: binaryFile scan → Arrow mapInPandas
     extraction. One row per file; malformed files keep their row with
     ``error`` set and NULL text (PERMISSIVE — a 100 TB crawl always
     contains garbage and one bad file must not kill the job)."""
     files = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
+        .option("pathGlobFilter", "*.pdf")
         .load(directory)
         .select("path", "content")
     )

@@ -362,15 +362,13 @@ def extract_warc_frame(files: DataFrame) -> DataFrame:
     return files.mapInPandas(_extract, schema=WARC_DOCS_SCHEMA)
 
 
-def read_warc_docs(
-    spark: SparkSession, directory: str, pattern: str = "*.warc*"
-) -> DataFrame:
+def read_warc_docs(spark: SparkSession, directory: str) -> DataFrame:
     """Distributed WARC ingestion: binaryFile scan → Arrow mapInPandas
     record parsing + text extraction. One row per record; malformed
     containers/records keep a row with ``error`` set (PERMISSIVE)."""
     files = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
+        .option("pathGlobFilter", "*.warc*")
         .load(directory)
         .select("path", "content")
     )

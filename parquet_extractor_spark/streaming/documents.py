@@ -31,12 +31,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from parquet_extractor_spark.operators.quality import quality_columns
+from parquet_extractor_spark.operators.quality import MIN_QUALITY, quality_columns
 from parquet_extractor_spark.session import materialize, query_scope
 from parquet_extractor_spark.sources.tables import local_frame
 from parquet_extractor_spark.streaming import drain, epoch_sink
-
-MIN_QUALITY = 0.3  # same gate as pipelines.MIN_QUALITY
 
 DOCS_SCHEMA = StructType(
     [
@@ -57,11 +55,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def curate_stream(
-    docs: DataFrame,
-    min_quality: float = MIN_QUALITY,
-    classifier: bool = False,
-) -> DataFrame:
+def curate_stream(docs: DataFrame, classifier: bool = False) -> DataFrame:
     """quality gate (+ optional model-based classifier gate) + exact
     content dedup, all map-side except the dedup state lookup (keyed
     by the 32-byte md5, never the text). ``classifier=True`` mirrors
@@ -71,7 +65,7 @@ def curate_stream(
     c = quality_columns()
     out = docs.withColumn(
         "quality_score", F.round(c["quality_score"], 2)
-    ).filter(F.col("quality_score") >= min_quality)
+    ).filter(F.col("quality_score") >= MIN_QUALITY)
     if classifier:
         from parquet_extractor_spark.functions.text import tokenize
         from parquet_extractor_spark.operators.quality import (

@@ -34,6 +34,9 @@ from parquet_extractor_spark.session import materialize
 from parquet_extractor_spark.sources.tables import local_frame
 from parquet_extractor_spark.streaming import drain
 
+# event-time lateness every watermarked events stream tolerates
+WATERMARK = "2 hours"
+
 # Physical schema of events.parquet (file streams require an explicit
 # schema). ts arrives either as TIMESTAMP (micros fixtures) or as a
 # nanos-long (TIMESTAMP(NANOS) fixtures read under nanosAsLong) — the
@@ -88,7 +91,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def hourly_agg(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def hourly_agg(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
     """Watermarked tumbling-window aggregation — the streaming twin of
     relational.events_hourly (same keys, same measures)."""
     return (
@@ -142,7 +145,7 @@ def run_sessionization_stream(
     built-in session_window — no custom state management needed."""
     events = read_events_stream(spark, sf_dir)
     stream = (
-        events.withWatermark("ts", "2 hours")
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
@@ -301,7 +304,7 @@ def run_view_purchase_join_stream(
             F.col("ts").alias("view_ts"),
             F.col("event_id").alias("view_event_id"),
         )
-        .withWatermark("view_ts", "2 hours")
+        .withWatermark("view_ts", WATERMARK)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -310,7 +313,7 @@ def run_view_purchase_join_stream(
             F.col("ts").alias("purchase_ts"),
             F.col("event_id").alias("purchase_event_id"),
         )
-        .withWatermark("purchase_ts", "2 hours")
+        .withWatermark("purchase_ts", WATERMARK)
     )
     joined = purchases.join(
         views,
@@ -373,7 +376,7 @@ def run_enriched_stream(
     )
     enriched = (
         events.join(F.broadcast(dim), "event_type")
-        .withWatermark("ts", "2 hours")
+        .withWatermark("ts", WATERMARK)
         .groupBy("category")
         .agg(
             F.count("*").alias("n_events"),
@@ -391,7 +394,7 @@ def run_enriched_stream(
     return spark.table(name)
 
 
-def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def dedup_stream(events: DataFrame) -> DataFrame:
     """Streaming exact dedup: keep the first occurrence of each
     (user_id, event_type, ts) within the watermark horizon — the
     streaming arm of the dedup tier (operators/dedup.py is the batch
@@ -404,7 +407,7 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     stops at-least-once upstream delivery from double-counting events
     before they ever reach the corpus.
     """
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["user_id", "event_type", "ts"]
     )
 
@@ -428,14 +431,14 @@ def run_dedup_stream(
     return spark.table(name)
 
 
-def daily_volume_agg(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def daily_volume_agg(events: DataFrame) -> DataFrame:
     """Watermarked 1-day tumbling count per event type — the
     streaming half of the XmR control chart: the stream maintains
     only the per-(type, day) counts (constant state per open window);
     the limit arithmetic runs over the drained aggregate, where the
     whole day axis is ≤ days×types rows."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
         .agg(F.count("*").cast("bigint").alias("n"))
         .select(

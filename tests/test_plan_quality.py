@@ -386,6 +386,36 @@ def test_stream_drain_protocol_lives_only_in_drain():
     )
 
 
+def test_sql_text_rules_live_only_in_their_twins():
+    """The DuckDB oracles state the tokenizer, the word n-gram window
+    and the 60-bit md5 hash only through the twins in
+    ``functions/text.py`` (tokenize_sql, ngram_starts_sql /
+    word_ngrams_sql, portable_hash64_sql), so a fix to any of these
+    rules lands in one place. Outside that module no package file may
+    contain ``regexp_replace(lower(``, ``substr(md5(`` or the window
+    bound ``sign(len(``."""
+    import os
+    import re
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "parquet_extractor_spark",
+    )
+    home = os.path.join(root, "functions", "text.py")
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in files:
+            path = os.path.join(dirpath, fname)
+            if not fname.endswith(".py") or path == home:
+                continue
+            for lineno, line in enumerate(open(path), start=1):
+                if re.search(r"regexp_replace\(lower\(|substr\(md5\(|sign\(len\(", line):
+                    offenders.append(f"{path}:{lineno}")
+    assert not offenders, (
+        f"call the SQL twins in functions/text.py: {offenders}"
+    )
+
+
 def test_caching_lives_only_in_materialize():
     """Every cached frame goes through session.materialize, which owns
     the storage level, the lazy-persist-or-truncate choice and the

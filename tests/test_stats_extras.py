@@ -387,16 +387,13 @@ def test_classifier_calibration_recomputed(spark, sf_small):
 
 def test_quality_gate_kappa_recomputed(spark, sf_small):
     """Kappa recomputed from the two independently oracle-checked
-    gate queries; the threshold constant must match the pipeline's."""
-    from parquet_extractor_spark import pipelines
+    gate queries."""
     from parquet_extractor_spark.operators.quality import (
-        KAPPA_MIN_QUALITY,
+        MIN_QUALITY,
         gopher_quality_flags,
         quality_gate_kappa,
         quality_scores,
     )
-
-    assert KAPPA_MIN_QUALITY == pipelines.MIN_QUALITY
 
     qs = {r.doc_id: r.quality_score for r in quality_scores(spark, sf_small).collect()}
     gk = {
@@ -405,9 +402,9 @@ def test_quality_gate_kappa_recomputed(spark, sf_small):
     }
     assert set(qs) == set(gk)
     n = len(qs)
-    n11 = sum(1 for d in qs if qs[d] >= KAPPA_MIN_QUALITY and gk[d])
-    n10 = sum(1 for d in qs if qs[d] >= KAPPA_MIN_QUALITY and not gk[d])
-    n01 = sum(1 for d in qs if qs[d] < KAPPA_MIN_QUALITY and gk[d])
+    n11 = sum(1 for d in qs if qs[d] >= MIN_QUALITY and gk[d])
+    n10 = sum(1 for d in qs if qs[d] >= MIN_QUALITY and not gk[d])
+    n01 = sum(1 for d in qs if qs[d] < MIN_QUALITY and gk[d])
     n00 = n - n11 - n10 - n01
     agree = n11 + n00
     chance = (n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)

@@ -1,4 +1,5 @@
 import hashlib
+import random
 import re
 
 from pyspark.sql import functions as F
@@ -7,12 +8,16 @@ from parquet_extractor_spark.functions.text import (
     char_ngrams,
     coalesce_content,
     portable_hash64,
+    portable_hash64_sql,
     sanitize_filename,
     token_count,
     tokenize,
+    tokenize_sql,
     word_ngrams,
+    word_ngrams_sql,
     zero_pad,
 )
+from parquet_extractor_spark.sources.tables import local_frame
 
 
 def _one(spark, col):
@@ -78,3 +83,80 @@ def test_portable_hash64_matches_python_md5(spark):
         got = _one(spark, portable_hash64(F.lit(s)))
         expected = int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
         assert got == expected
+
+
+NGRAM_NS = (1, 2, 3, 4, 8)
+# Non-ASCII characters whose lowercase differs by engine or leaves the
+# letter's script: dotted capital I (full vs simple mapping), sharp s,
+# a precomposed accent, a ligature, capital/final sigma, the Kelvin
+# sign (lowers to ASCII k), a titlecase digraph and a combining dot.
+PARITY_NON_ASCII = "\u0130ßéﬁΣς\u212aǅ\u0307"
+
+
+def _parity_rows():
+    """A seeded batch of generated strings plus the edge cases: empty,
+    whitespace-only, punctuation-only, the whitespace Java's ``\\s``
+    and RE2's disagree on (``\\v``), 1, n-1 and n tokens for every
+    tested n, and NULL."""
+    rng = random.Random(22)
+    pool = (
+        [chr(c) for c in range(0x20, 0x7F)]
+        + [" "] * 12
+        + ["\t", "\n"]
+        + list(PARITY_NON_ASCII) * 3
+    )
+    texts = [
+        "".join(rng.choice(pool) for _ in range(rng.randint(0, 48)))
+        for _ in range(3000)
+    ]
+    texts += ["", "   ", " \t\n \n", "!?.,;: -()", "İstanbul", "İ", "a\vb\fc\rd"]
+    for n in NGRAM_NS:
+        for k in sorted({1, n - 1, n} - {0}):
+            texts.append(" ".join(f"W{j}." for j in range(k)))
+    return [(i, t) for i, t in enumerate(texts)] + [(len(texts), None)]
+
+
+def test_sql_twins_match_spark(spark):
+    """tokenize_sql, word_ngrams_sql and portable_hash64_sql on DuckDB
+    return what tokenize, word_ngrams and portable_hash64 return on
+    Spark, row for row, over the same batch."""
+    import duckdb
+    import pandas as pd
+
+    rows = _parity_rows()
+    docs = local_frame(spark, rows, "doc_id bigint, text string")
+    toks = docs.select("doc_id", "text", tokenize("text").alias("tokens"))
+    got = {
+        r[0]: tuple(r[1:])
+        for r in toks.select(
+            "doc_id",
+            "tokens",
+            *(word_ngrams(F.col("tokens"), n) for n in NGRAM_NS),
+            portable_hash64(F.col("text")),
+        ).collect()
+    }
+    grams = ", ".join(word_ngrams_sql("tokens", n) for n in NGRAM_NS)
+    con = duckdb.connect()
+    con.register("frame", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = {
+        r[0]: tuple(r[1:])
+        for r in con.execute(
+            f"""
+            WITH t AS (
+                SELECT doc_id, text, {tokenize_sql('text')} AS tokens
+                FROM frame
+            )
+            SELECT doc_id, tokens, {grams}, {portable_hash64_sql('text')}
+            FROM t
+            """
+        ).fetchall()
+    }
+    assert got.keys() == want.keys()
+    text = dict(rows)
+    bad = [(text[d], got[d], want[d]) for d in sorted(got) if got[d] != want[d]]
+    assert not bad, f"{len(bad)} rows differ, first: {bad[:3]}"
+    # the two documented edge cases hold on both sides
+    null_id = rows[-1][0]
+    assert got[null_id] == (None,) * (len(NGRAM_NS) + 2)
+    dotted = next(d for d, t in rows if t == "İstanbul")
+    assert got[dotted][0] == ["i", "stanbul"]
