@@ -8,9 +8,12 @@ similarity search, text analysis, and streaming.
 
 Design stance (SURVEY.md §7):
 - DataFrame/Catalyst only; no RDDs, no custom Catalyst rules.
-- Python logic only where Spark lacks a builtin (PDF render, CISI
-  section parse, remote fetch), always Arrow-vectorized
-  (pandas_udf / mapInPandas / foreachPartition).
+- Python logic only where Spark lacks a builtin (CISI section parse,
+  remote fetch), always Arrow-vectorized (pandas_udf / mapInPandas).
+- Named per-row files (Markdown, PDF) are rendered and written on the
+  driver from ``toLocalIterator``: no Python worker per sink job, the
+  files land where the job service serves them, and the written /
+  skipped / failed counts are exact.
 - Behavioral caps from the reference kept as named constants
   (see parquet_extractor_spark.constants).
 """

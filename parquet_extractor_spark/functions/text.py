@@ -120,6 +120,16 @@ def char_ngrams(col: Column | str, n: int = 5) -> Column:
     )
 
 
+def char_ngrams_sql(col: str, n: int) -> str:
+    """DuckDB twin of :func:`char_ngrams` over the SQL string
+    expression ``col``; NULL text yields one NULL shingle on both
+    engines."""
+    return (
+        f"list_transform(range(1, greatest(length({col}) - {n - 1}, 1) + 1), "
+        f"i -> substr({col}, i, {n}))"
+    )
+
+
 def word_ngrams(tokens: Column, n: int = 3) -> Column:
     """Word n-gram shingles from a token array (``array<string>``),
     joined with a space. Token arrays shorter than ``n`` yield one

@@ -200,7 +200,7 @@ def seconds_param(params, key: str, default: float) -> float:
 
 def check_write_access(output_dir: str) -> None:
     """Write-access preflight (api.py:886-897): fail fast before
-    launching executors at an unwritable sink."""
+    launching the Spark job that feeds an unwritable sink."""
     os.makedirs(output_dir, exist_ok=True)
     probe = os.path.join(output_dir, "test_write.txt")
     with open(probe, "w") as fh:

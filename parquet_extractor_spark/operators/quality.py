@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 
 from parquet_extractor_spark.functions.text import (
     char_ngrams,
+    char_ngrams_sql,
     portable_hash64,
     portable_hash64_sql,
     tokenize,
@@ -346,9 +347,7 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOC_FINGERPRINTS_SQL = rf"""
 SELECT doc_id,
        list_min(list_transform(
-           list_transform(
-               range(1, greatest(length(text) - {FINGERPRINT_NGRAM - 1}, 1) + 1),
-               i -> substr(text, i, {FINGERPRINT_NGRAM})),
+           {char_ngrams_sql('text', FINGERPRINT_NGRAM)},
            g -> {portable_hash64_sql('g')})) AS fingerprint
 FROM documents
 ORDER BY doc_id
@@ -677,9 +676,7 @@ WINNOWING_FINGERPRINTS_SQL = rf"""
 WITH h AS (
     SELECT doc_id,
            list_transform(
-               list_transform(
-                   range(1, greatest(length(text) - {FINGERPRINT_NGRAM - 1}, 1) + 1),
-                   i -> substr(text, i, {FINGERPRINT_NGRAM})),
+               {char_ngrams_sql('text', FINGERPRINT_NGRAM)},
                g -> {portable_hash64_sql('g')}) AS hs
     FROM documents
 ),

@@ -10,8 +10,9 @@ lines, so the renderer is implemented directly and runs everywhere.
 Layout mirrors the reference's render loop: bold 14pt title
 (api.py:774-776), 10pt "Document ID: …" line (api.py:779-781), then
 11pt body chunks via multi_cell-style line wrapping (api.py:789-796).
-Executors call :func:`render_pdf` per row inside foreachPartition —
-no shared state, byte-deterministic output.
+The file sinks call :func:`render_pdf` per row on the driver, as
+rows arrive from ``toLocalIterator`` — no shared state,
+byte-deterministic output.
 """
 
 from __future__ import annotations

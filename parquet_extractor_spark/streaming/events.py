@@ -91,11 +91,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def hourly_agg(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
+def hourly_agg(events: DataFrame) -> DataFrame:
     """Watermarked tumbling-window aggregation — the streaming twin of
     relational.events_hourly (same keys, same measures)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
             F.count("*").alias("n_events"),

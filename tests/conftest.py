@@ -66,3 +66,46 @@ def jobs_in_group(spark):
         return list(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture()
+def stage_rdd_names(spark):
+    """``names(group)`` returns the names of every RDD in every stage
+    the job group ran, read from the session's RDD operation graphs
+    (a stage that starts a Python worker shows a ``PythonRDD``).
+
+    A job also lists the stages it skipped because an earlier job of
+    the group already wrote their shuffle output; once the status
+    store holds more stages than it retains, it evicts those skipped
+    entries first. Their RDDs ran in the earlier job's own stage, so
+    a missing entry is passed over, and at least one stage must be
+    read."""
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+
+    def names(group: str) -> set[str]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        store = sc._jsc.sc().statusStore()
+        found: set[str] = set()
+        read = 0
+
+        def walk(cluster):
+            nodes, kids = cluster.childNodes(), cluster.childClusters()
+            found.update(nodes.apply(i).name() for i in range(nodes.size()))
+            for i in range(kids.size()):
+                walk(kids.apply(i))
+
+        for jid in sc.statusTracker().getJobIdsForGroup(group):
+            stage_ids = store.job(jid).stageIds()
+            for i in range(stage_ids.size()):
+                try:
+                    graph = store.operationGraphForStage(stage_ids.apply(i))
+                except Py4JJavaError:
+                    continue
+                walk(graph.rootCluster())
+                read += 1
+        assert read
+        return found
+
+    return names

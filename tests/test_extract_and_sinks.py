@@ -20,7 +20,7 @@ from parquet_extractor_spark.sinks.pdf import (
 )
 from parquet_extractor_spark.constants import PDF_CONTENT_CAP, PDF_TITLE_CAP
 from parquet_extractor_spark.functions.text import zero_pad
-from parquet_extractor_spark.sources.tables import load_table
+from parquet_extractor_spark.sources.tables import load_table, local_frame
 
 
 def test_sample_is_deterministic_and_exact_n(spark, sf_small):
@@ -275,11 +275,9 @@ def test_uploaded_parquet_markdown_sink_is_two_jobs(
     assert len(jobs) == 2
 
 
-def test_pdf_sink_is_one_pass(spark, sf_small, tmp_path, jobs_in_group):
-    """A PDF extract job over the service's ``orderBy.limit`` frame
-    submits one Spark job: the cleanup runs in the render pass."""
-    docs = load_table(spark, sf_small, "documents").orderBy("doc_id").limit(20)
-    work = docs.select(
+def _pdf_work(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents").orderBy("doc_id").limit(20)
+    return docs.select(
         F.concat(zero_pad(F.col("doc_id")), F.lit(".pdf")).alias("filename"),
         F.concat(F.lit("Document "), F.col("doc_id").cast("string")).alias(
             "title"
@@ -287,6 +285,12 @@ def test_pdf_sink_is_one_pass(spark, sf_small, tmp_path, jobs_in_group):
         "doc_id",
         F.col("text").alias("content"),
     )
+
+
+def test_pdf_sink_is_one_pass(spark, sf_small, tmp_path, jobs_in_group):
+    """A PDF extract job over the service's ``orderBy.limit`` frame
+    submits one Spark job: the cleanup runs in the render pass."""
+    work = _pdf_work(spark, sf_small)
     write_pdfs(work, str(tmp_path / "warm"))
     result = {}
 
@@ -295,7 +299,48 @@ def test_pdf_sink_is_one_pass(spark, sf_small, tmp_path, jobs_in_group):
 
     jobs = jobs_in_group(_job, "pdf-sink-jobs")
     assert result == {"written": 20, "failed": 0}
-    assert len(jobs) <= 1
+    assert len(jobs) == 1
+
+
+def test_file_sinks_start_no_python_worker(
+    spark, sf_small, tmp_path, jobs_in_group, stage_rdd_names
+):
+    """The Markdown and PDF sinks write on the driver: no stage of
+    their Spark jobs reads a Python RDD, so no Python worker starts."""
+    sinks = {
+        "md": lambda out: write_files(extract_files(spark, sf_small, n=15), out),
+        "pdf": lambda out: write_pdfs(_pdf_work(spark, sf_small), out),
+    }
+    for kind, sink in sinks.items():
+        group = f"no-python-sink-{kind}"
+        out = str(tmp_path / kind)
+        assert jobs_in_group(lambda: sink(out), group)
+        assert len(os.listdir(out)) == {"md": 15, "pdf": 20}[kind]
+        assert "PythonRDD" not in stage_rdd_names(group)
+
+
+def test_markdown_sink_counts_exactly_across_partitions(spark, sf_small, tmp_path):
+    """A 3-partition input writes the same files, byte for byte, as
+    the 1-partition write, and each row is counted exactly once:
+    written, then skipped on a re-run, and an unsafe name failed."""
+    work = extract_files(spark, sf_small, n=15)
+    bad = local_frame(
+        spark, [("../escape.md", "bad")], "filename string, body string"
+    )
+    split = work.select("filename", "body").unionByName(bad).repartition(3)
+    assert split.rdd.getNumPartitions() == 3
+    one, three = tmp_path / "one", tmp_path / "three"
+    assert write_files(work, str(one)) == {"written": 15, "skipped": 0, "failed": 0}
+    assert write_files(split, str(three)) == {
+        "written": 15, "skipped": 0, "failed": 1
+    }
+    assert write_files(split, str(three)) == {
+        "written": 0, "skipped": 15, "failed": 1
+    }
+    names = sorted(os.listdir(one))
+    assert sorted(os.listdir(three)) == names
+    for name in names:
+        assert (three / name).read_bytes() == (one / name).read_bytes()
 
 
 def test_markdown_sink_skips_only_existing_files(spark, sf_small, tmp_path):

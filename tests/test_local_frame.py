@@ -64,43 +64,6 @@ def test_local_frame_is_a_local_relation_equal_to_the_list_path(spark, family):
     assert _exact(got.collect()) == _exact(want.collect())
 
 
-def _stage_rdd_names(spark, group: str) -> set[str]:
-    """Names of every RDD in every stage the job group ran, read from
-    the session's RDD operation graphs.
-
-    A job also lists the stages it skipped because an earlier job of
-    the group already wrote their shuffle output; once the status
-    store holds more stages than it retains, it evicts those skipped
-    entries first. Their RDDs ran in the earlier job's own stage, so
-    a missing entry is passed over, and at least one stage must be
-    read."""
-    from py4j.protocol import Py4JJavaError
-
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    store = sc._jsc.sc().statusStore()
-    names: set[str] = set()
-    read = 0
-
-    def walk(cluster):
-        nodes, kids = cluster.childNodes(), cluster.childClusters()
-        names.update(nodes.apply(i).name() for i in range(nodes.size()))
-        for i in range(kids.size()):
-            walk(kids.apply(i))
-
-    for jid in sc.statusTracker().getJobIdsForGroup(group):
-        stage_ids = store.job(jid).stageIds()
-        for i in range(stage_ids.size()):
-            try:
-                graph = store.operationGraphForStage(stage_ids.apply(i))
-            except Py4JJavaError:
-                continue
-            walk(graph.rootCluster())
-            read += 1
-    assert read
-    return names
-
-
 @pytest.mark.parametrize(
     "name",
     [
@@ -111,7 +74,9 @@ def _stage_rdd_names(spark, group: str) -> set[str]:
         "ivf_pq_recall_eval",
     ],
 )
-def test_curation_queries_run_no_python_rdd(spark, sf_small, jobs_in_group, name):
+def test_curation_queries_run_no_python_rdd(
+    spark, sf_small, jobs_in_group, stage_rdd_names, name
+):
     """Building and collecting the query runs no stage that reads a
     Python RDD, so no Python worker starts for it. This covers the
     executed plan and also the jobs whose results a build checkpoints
@@ -129,7 +94,7 @@ def test_curation_queries_run_no_python_rdd(spark, sf_small, jobs_in_group, name
 
     jobs = jobs_in_group(run, group)
     assert jobs
-    assert "PythonRDD" not in _stage_rdd_names(spark, group)
+    assert "PythonRDD" not in stage_rdd_names(group)
 
 
 def test_session_skips_call_site_capture_and_keeps_error_classes(spark):

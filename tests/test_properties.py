@@ -1,11 +1,12 @@
 """Property-based tests (hypothesis) for the pure-Python kernels.
 
-These run executor-side inside foreachPartition/mapInPandas, where a
-crash kills a task, so they get adversarial inputs rather than just
-the fixtures: the PNG codec, the PDF writer, and the portable
-sample-key arithmetic (checked against DuckDB as the second engine —
-the pure-Python big-int evaluation is the ground truth both engines
-must hit).
+These run executor-side inside mapInPandas (the PNG codec), where a
+crash kills a task, or in the driver's file-sink loop (the PDF
+writer), where a crash fails the row, so they get adversarial inputs
+rather than just the fixtures: the PNG codec, the PDF writer, and the
+portable sample-key arithmetic (checked against DuckDB as the second
+engine — the pure-Python big-int evaluation is the ground truth both
+engines must hit).
 """
 
 from __future__ import annotations

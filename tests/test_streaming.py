@@ -353,10 +353,7 @@ def test_watermark_drops_late_event_and_emits_windows_once(spark, tmp_path):
         ]
 
     def drain():
-        stream = hourly_agg(
-            spark.readStream.schema(schema).parquet(in_dir),
-            watermark="2 hours",
-        )
+        stream = hourly_agg(spark.readStream.schema(schema).parquet(in_dir))
         q = (
             stream.writeStream.format("parquet")
             .outputMode("append")

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from parquet_extractor_spark.functions.text import (
     char_ngrams,
+    char_ngrams_sql,
     coalesce_content,
     portable_hash64,
     portable_hash64_sql,
@@ -86,6 +87,7 @@ def test_portable_hash64_matches_python_md5(spark):
 
 
 NGRAM_NS = (1, 2, 3, 4, 8)
+CHAR_NGRAM_NS = (1, 5, 8)
 # Non-ASCII characters whose lowercase differs by engine or leaves the
 # letter's script: dotted capital I (full vs simple mapping), sharp s,
 # a precomposed accent, a ligature, capital/final sigma, the Kelvin
@@ -117,9 +119,10 @@ def _parity_rows():
 
 
 def test_sql_twins_match_spark(spark):
-    """tokenize_sql, word_ngrams_sql and portable_hash64_sql on DuckDB
-    return what tokenize, word_ngrams and portable_hash64 return on
-    Spark, row for row, over the same batch."""
+    """tokenize_sql, word_ngrams_sql, char_ngrams_sql and
+    portable_hash64_sql on DuckDB return what tokenize, word_ngrams,
+    char_ngrams and portable_hash64 return on Spark, row for row, over
+    the same batch."""
     import duckdb
     import pandas as pd
 
@@ -133,9 +136,11 @@ def test_sql_twins_match_spark(spark):
             "tokens",
             *(word_ngrams(F.col("tokens"), n) for n in NGRAM_NS),
             portable_hash64(F.col("text")),
+            *(char_ngrams("text", n) for n in CHAR_NGRAM_NS),
         ).collect()
     }
     grams = ", ".join(word_ngrams_sql("tokens", n) for n in NGRAM_NS)
+    chars = ", ".join(char_ngrams_sql("text", n) for n in CHAR_NGRAM_NS)
     con = duckdb.connect()
     con.register("frame", pd.DataFrame(rows, columns=["doc_id", "text"]))
     want = {
@@ -146,7 +151,8 @@ def test_sql_twins_match_spark(spark):
                 SELECT doc_id, text, {tokenize_sql('text')} AS tokens
                 FROM frame
             )
-            SELECT doc_id, tokens, {grams}, {portable_hash64_sql('text')}
+            SELECT doc_id, tokens, {grams}, {portable_hash64_sql('text')},
+                   {chars}
             FROM t
             """
         ).fetchall()
@@ -155,8 +161,12 @@ def test_sql_twins_match_spark(spark):
     text = dict(rows)
     bad = [(text[d], got[d], want[d]) for d in sorted(got) if got[d] != want[d]]
     assert not bad, f"{len(bad)} rows differ, first: {bad[:3]}"
-    # the two documented edge cases hold on both sides
+    # the documented edge cases hold on both sides
+    chars_at = len(NGRAM_NS) + 2
     null_id = rows[-1][0]
-    assert got[null_id] == (None,) * (len(NGRAM_NS) + 2)
+    assert got[null_id][:chars_at] == (None,) * chars_at
+    assert got[null_id][chars_at:] == ([None],) * len(CHAR_NGRAM_NS)
+    empty = next(d for d, t in rows if t == "")
+    assert got[empty][chars_at:] == ([""],) * len(CHAR_NGRAM_NS)
     dotted = next(d for d, t in rows if t == "İstanbul")
     assert got[dotted][0] == ["i", "stanbul"]
